@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..state import store
 from .similarity import (
     collect_pivot_rows,
     cosine_similarity,
@@ -518,7 +519,6 @@ def _rebalance_pass(
     (the serial per-list form spent ~6 jobs per hot list on fixed
     Spark overhead)."""
     import math
-    import shutil
 
     from .similarity import _round6_py
 
@@ -644,5 +644,5 @@ def _rebalance_pass(
     # write job per rebalance pass — util.write_pivot_rows)
     write_pivot_rows(pivots_path, keep_pivots.items())
     for d in doomed_dirs:
-        shutil.rmtree(d, ignore_errors=True)
+        store.remove(d)
     return len(doomed_dirs)

@@ -62,7 +62,6 @@ the suite's ANN family with the composed production shape.
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,6 +74,7 @@ from .pq import (
     load_pq_codebooks,
     pq_train,
 )
+from ..state import store
 from .similarity import collect_pivot_rows, nearest_pivot
 from .util import (
     count_parquet_rows,
@@ -490,8 +490,8 @@ def _ivfpq_stored_attrs(spark, path: str) -> list[str]:
     index, and attr-filtered probes would then drop those rows with
     no error (missing neighbors)."""
     core = {"vec_id", "list_id", "codes", "ingest_batch"}
-    versions = _ingest_base_versions(path)
-    if not versions and not glob.glob(os.path.join(path, "list_id=*")):
+    versions = store.ibase_versions(path)
+    if not versions and not store.partitions(path, "list_id"):
         return []  # nothing written yet — a plain pre-build path
     src = versions[-1][1] if versions else path
     names = _parquet_file_schema_names(src)
@@ -638,18 +638,10 @@ def append_ivfpq_index(
             ).parquet(path)
         finally:
             spark.conf.set(mode_key, old)
-        import pyarrow.parquet as _pq
-
         return sum(
-            _pq.ParquetFile(f).metadata.num_rows
-            for f in glob.glob(
-                os.path.join(
-                    path,
-                    "list_id=*",
-                    f"ingest_batch={int(batch_id)}",
-                    "*.parquet",
-                )
-            )
+            count_parquet_rows(d)
+            for b, d in store.ingest_cells(path)
+            if b == int(batch_id)
         )
     before = count_parquet_rows(path)
     enc.write.partitionBy("list_id").mode("append").parquet(path)
@@ -733,25 +725,21 @@ def _ivfpq_rebalance_pass(
     vec_col: str,
 ) -> int:
     import math
-    import shutil
 
     from .similarity import _round6_py
 
     meta = _read_ivfpq_meta(spark, path)
     residual = bool(meta.get("residual", False)) if meta else False
     versioned = bool(meta.get("versioned_ingest", False)) if meta else False
-    versions = _ingest_base_versions(path)
+    versions = store.ibase_versions(path)
     if versioned:
         if not versions:
             raise ValueError(
                 "rebalance_ivfpq_index: versioned-ingest index has no "
                 "compacted base — run compact_ivfpq_ingest first"
             )
-        live = glob.glob(os.path.join(path, "list_id=*", "ingest_batch=*"))
         w = versions[-1][2]
-        if any(
-            int(os.path.basename(p).split("=", 1)[1]) > w for p in live
-        ):
+        if any(b > w for b, _d in store.ingest_cells(path)):
             raise ValueError(
                 "rebalance_ivfpq_index: live ingest cells above the "
                 f"watermark {w} — compact them into the base first"
@@ -775,13 +763,13 @@ def _ivfpq_rebalance_pass(
     keep_pivots = {pid: vec for pid, vec in pivot_rows}
     # the row-store fetch: hot code rows keyed by vec_id pick up their
     # float vectors — the ONLY contact with floats in this module
-    store = row_store.select(
+    row_vecs = row_store.select(
         F.col(corpus_id).alias("vec_id"), F.col(vec_col).alias("vec")
     )
     members = (
         rows.where(in_values("list_id", sorted(hot)))
         .select("list_id", "vec_id", "codes")
-        .join(store, "vec_id")
+        .join(row_vecs, "vec_id")
         .localCheckpoint()
     )
     k_split = {
@@ -909,39 +897,10 @@ def _ivfpq_rebalance_pass(
     # write job per rebalance pass — util.write_pivot_rows)
     write_pivot_rows(pivots_path, keep_pivots.items())
     for L in doomed:
-        shutil.rmtree(
-            os.path.join(path, f"list_id={L}"), ignore_errors=True
-        )
+        store.remove(os.path.join(path, f"list_id={L}"))
         if versioned:
-            shutil.rmtree(
-                os.path.join(versions[-1][1], f"list_id={L}"),
-                ignore_errors=True,
-            )
+            store.remove(os.path.join(versions[-1][1], f"list_id={L}"))
     return len(doomed)
-
-
-_INGEST_MARKER = "_COMPACTED"
-
-
-def _ingest_base_versions(path: str) -> list[tuple[int, str, int]]:
-    """COMPLETE compacted ingest bases under *path* (``_ibase_v<k>``
-    dirs whose ``_COMPACTED`` marker — written LAST, carrying the
-    watermark — exists), version-ascending as (version, dir,
-    watermark). A dir whose write crashed mid-flight has no marker and
-    is invisible (dedup_state's versioned-base discipline)."""
-    out = []
-    for p in glob.glob(os.path.join(path, "_ibase_v*")):
-        marker = os.path.join(p, _INGEST_MARKER)
-        if not os.path.exists(marker):
-            continue
-        try:
-            v = int(os.path.basename(p)[len("_ibase_v"):])
-            with open(marker) as fh:
-                w = int(fh.read().strip())
-        except (ValueError, OSError):
-            continue
-        out.append((v, p, w))
-    return sorted(out)
 
 
 def ivfpq_ingest_watermark(path: str) -> int | None:
@@ -950,7 +909,7 @@ def ivfpq_ingest_watermark(path: str) -> int | None:
     of one is DROPPED by append_ivfpq_index (that drop is what keeps
     at-least-once redelivery idempotent after the fold). None if the
     index was never compacted."""
-    versions = _ingest_base_versions(path)
+    versions = store.ibase_versions(path)
     return versions[-1][2] if versions else None
 
 
@@ -964,7 +923,7 @@ def _effective_list_sizes(path: str) -> dict[int, int]:
 
     from .util import list_fileinfos
 
-    versions = _ingest_base_versions(path)
+    versions = store.ibase_versions(path)
     w = versions[-1][2] if versions else None
 
     def _accumulate(root: str, watermark, sizes: dict) -> None:
@@ -1007,13 +966,8 @@ def read_ivfpq_rows(spark: SparkSession, path: str) -> DataFrame:
     the uncompacted layout. Crash-tolerant by construction: leftover
     folded cells (a crash between marker and cleanup) sit at
     ``ingest_batch <= W`` and are filtered out, never double-read."""
-    versions = _ingest_base_versions(path)
-    # cells must actually hold data files: compaction may leave empty
-    # list_id= shells behind (their batch subdirs folded away)
-    cells_exist = bool(
-        glob.glob(os.path.join(path, "list_id=*", "ingest_batch=*"))
-        or glob.glob(os.path.join(path, "list_id=*", "*.parquet"))
-    )
+    versions = store.ibase_versions(path)
+    cells_exist = store.has_cells(path)
     cols = ["vec_id", "list_id", "codes"] + _ivfpq_stored_attrs(spark, path)
     frames = []
     if versions:
@@ -1046,23 +1000,17 @@ def compact_ivfpq_ingest(
     directory listing + footer reads dominate probe latency (the
     classic streaming small-file problem).
 
-    Crash-safe via the versioned-base discipline
-    (operators/dedup_state.py::compact_dedup_state): folded rows write
-    to a fresh ``_ibase_v<k+1>`` dir (partitioned by list_id, so probe
-    pruning is unchanged), the ``_COMPACTED`` marker — whose content
-    IS the watermark — lands only after the write completes, and
-    readers always resolve the newest COMPLETE base. A crash before
-    the marker leaves an invisible partial dir; a crash after the
-    marker but before cleanup leaves folded cells on disk that
-    read_ivfpq_rows filters out by watermark. Replay stays idempotent
+    Crash-safe via the IVFPQ base fold of state/store.py (partitioned
+    by list_id, so probe pruning is unchanged): a crash before the
+    watermark marker leaves an invisible partial base; a crash after it
+    leaves folded cells on disk that read_ivfpq_rows filters out by
+    watermark and the next fold or erasure sweeps. Replay stays idempotent
     AFTER the fold because append_ivfpq_index DROPS any batch at or
     below the persisted watermark (its rows are already in the base —
     re-appending them would double-count).
 
     Returns the number of partition cells folded away. Watermarks are
     monotone: raises if *watermark* is below the current one."""
-    import shutil
-
     meta = _read_ivfpq_meta(spark, path)
     if not (meta and meta.get("versioned_ingest")):
         raise ValueError(
@@ -1070,7 +1018,7 @@ def compact_ivfpq_ingest(
             "versioned-ingest (build with versioned_ingest=True)"
         )
     w = int(watermark)
-    versions = _ingest_base_versions(path)
+    versions = store.ibase_versions(path)
     w_prev = versions[-1][2] if versions else None
     if w_prev is not None and w < w_prev:
         raise ValueError(
@@ -1083,18 +1031,10 @@ def compact_ivfpq_ingest(
         frames.append(
             read_parquet_state(spark, versions[-1][1]).select(*cols)
         )
-    cell_dirs = [
-        p
-        for p in glob.glob(
-            os.path.join(path, "list_id=*", "ingest_batch=*")
-        )
-        if int(os.path.basename(p).split("=", 1)[1]) <= w
-        and (
-            w_prev is None
-            or int(os.path.basename(p).split("=", 1)[1]) > w_prev
-        )
-    ]
-    if cell_dirs:
+    if any(
+        b <= w and (w_prev is None or b > w_prev)
+        for b, _d in store.ingest_cells(path)
+    ):
         live = read_parquet_state(spark, path).where(
             F.col("ingest_batch") <= F.lit(w)
             if w_prev is None
@@ -1107,22 +1047,8 @@ def compact_ivfpq_ingest(
     merged = frames[0]
     for f in frames[1:]:
         merged = merged.unionByName(f)
-    nxt = (versions[-1][0] + 1) if versions else 1
-    new_base = os.path.join(path, f"_ibase_v{nxt}")
-    merged.write.partitionBy("list_id").mode("overwrite").parquet(new_base)
-    with open(os.path.join(new_base, _INGEST_MARKER), "w") as fh:
-        fh.write(str(w))  # marker LAST: version becomes visible atomically
-    for _v, p, _w in versions:
-        shutil.rmtree(p, ignore_errors=True)
-    folded = 0
-    for p in glob.glob(os.path.join(path, "list_id=*", "ingest_batch=*")):
-        if int(os.path.basename(p).split("=", 1)[1]) <= w:
-            shutil.rmtree(p, ignore_errors=True)
-            folded += 1
-    for p in glob.glob(os.path.join(path, "list_id=*")):
-        if not os.listdir(p):  # prune emptied partition shells
-            shutil.rmtree(p, ignore_errors=True)
-    return folded
+    store.fold_ibase(merged, path, w)
+    return store.sweep_cells(path, w)
 
 
 def streaming_ivfpq_ingest(
@@ -1472,14 +1398,14 @@ def _refine_rerank(
     from .similarity import cosine_similarity
 
     cand = ranked.select("query_id", "neighbor_id", *carry_cols)
-    store = refine.select(
+    refine_vecs = refine.select(
         F.col(query_id).alias("neighbor_id"), F.col(vec_col).alias("nv")
     )
     qv = queries.select(
         F.col(query_id).alias("query_id"), F.col(vec_col).alias("qv")
     )
     exact = (
-        store.join(F.broadcast(cand), "neighbor_id")
+        refine_vecs.join(F.broadcast(cand), "neighbor_id")
         .join(F.broadcast(qv), "query_id")
         .select(
             "query_id",

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.util import read_parquet_state
+from ..state.store import exists
 
 __all__ = [
     "build_bpe_state",
@@ -107,7 +108,7 @@ def read_bpe_vocab(spark, state_dir: str) -> DataFrame:
     """The frozen (sym, tok_id) table. Raises when the state was
     built without ``with_vocab=True``."""
     path = os.path.join(state_dir, _VOCAB)
-    if not os.path.isdir(path):
+    if not exists(path):
         raise ValueError(
             f"read_bpe_vocab: no persisted vocab under {state_dir} "
             "— build_bpe_state(with_vocab=True) first"
@@ -119,7 +120,7 @@ def read_bpe_merges(spark, state_dir: str) -> DataFrame:
     """The persisted rule table (step, left, right, cnt), in merge
     order. Raises a clear error when no state was ever built."""
     path = os.path.join(state_dir, _MERGES)
-    if not os.path.isdir(path):
+    if not exists(path):
         raise ValueError(
             f"read_bpe_merges: no persisted merges under {state_dir} "
             "— run build_bpe_state first"

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..state.store import guard_replay, read_latest, version_path
+
 
 def apply_changes(
     snapshot: DataFrame | None,
@@ -107,12 +109,10 @@ def snapshot_apply_incremental(
     Returns the new full state (including tombstones)."""
     import os
 
-    from .dedup_state import _latest_version, _rewrite_batch_guard
-
     spark = changes.sparkSession
     subdir = os.path.join(state_dir, "snapshot")
-    _rewrite_batch_guard(subdir, batch_id)
-    prior = _latest_version(spark, subdir, batch_id)
+    guard_replay(subdir, batch_id)
+    prior = read_latest(spark, subdir, batch_id)
     feed = (
         prior.select(changes.columns).unionByName(changes)
         if prior is not None
@@ -126,7 +126,7 @@ def snapshot_apply_incremental(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-    out = os.path.join(subdir, f"v{int(batch_id)}")
+    out = version_path(subdir, batch_id)
     state.repartition(state_partitions).write.mode("overwrite").parquet(out)
     from ..functions.util import read_parquet_state
 
@@ -144,9 +144,7 @@ def read_snapshot_state(
     tombstones dropped, bookkeeping columns removed."""
     import os
 
-    from .dedup_state import _latest_version
-
-    state = _latest_version(
+    state = read_latest(
         spark, os.path.join(state_dir, "snapshot"), 2**62
     )
     if state is None:

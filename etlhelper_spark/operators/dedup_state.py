@@ -8,23 +8,23 @@ state-store pattern (operators/ivm.py — versioned parquet state,
 replay-idempotent per batch id) applied to the dedup substrate
 (functions/dedup.py — content fingerprints and MinHash LSH bands).
 
-State layout under ``state_dir``::
+Stores under ``state_dir`` (rows per store)::
 
-    exact/batch=<id>/          (fingerprint, survivor_id, batch)
-    bands/batch=<id>/          (id, band, band_key, batch)
-    embedding_lsh/batch=<id>/  (rep_id, members, v, sigs, batch)
-    <store>/base_v<k>/         compacted appends (compact_dedup_state);
-                               readers use the newest COMPLETE version
-                               (``_COMPACTED`` marker present)
+    exact/          (fingerprint, survivor_id, batch)
+    bands/          (id, band, band_key, batch)
+    embedding_lsh/  (rep_id, members, v, sigs, batch)
+    spans/          (g, batch)
+    clusters/       (node_id, cluster_id)  rewrite store
+    exact_bloom/    (word, bits, m, k)     rewrite store
 
-All stores are APPEND-ONLY — the natural shape for dedup state,
-because a first-seen survivor never changes and band keys are
-immutable per document. Each apply writes ONLY its own ``batch=<id>``
-subdir (O(new batch), never O(corpus)) and a replayed batch id
-OVERWRITES its own subdir — idempotent under at-least-once delivery,
-the same ledger discipline as streaming_incremental_rollup. Batches
-are identified by a caller-supplied monotonically increasing integer;
-"first seen" ties inside one batch break by lowest id.
+The first four are APPEND stores (layouts and commit rules:
+state/store.py) — the natural shape for dedup state, because a
+first-seen survivor never changes and band keys are immutable per
+document. Each apply writes only its own batch append (O(new
+batch), never O(corpus)), so a replayed batch id is idempotent under
+at-least-once delivery. Batches are identified by a caller-supplied
+monotonically increasing integer; "first seen" ties inside one batch
+break by lowest id.
 
 100 TB design notes:
 
@@ -59,87 +59,25 @@ This module is that ingest loop with the dedup state made first-class.
 
 from __future__ import annotations
 
-import glob
 import os
-import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.util import in_values, read_parquet_state
+from ..state.store import (
+    append_path,
+    appends_below,
+    fold,
+    guard_replay,
+    latest_below,
+    prune,
+    read_latest,
+    read_live,
+    read_prior,
+    version_path,
+)
 from pyspark.sql.window import Window
-
-
-def _prior_batches(subdir: str, batch_id: int) -> list[str]:
-    """Paths of state appends with batch id strictly below *batch_id*
-    (replay safety: a re-run of batch N must not see N's own or any
-    later append as 'prior')."""
-    out = []
-    for p in glob.glob(os.path.join(subdir, "batch=*")):
-        try:
-            b = int(os.path.basename(p).split("=", 1)[1])
-        except ValueError:
-            continue
-        if b < batch_id:
-            out.append(p)
-    return sorted(out)
-
-
-_BASE_MARKER = "_COMPACTED"
-
-
-def _base_versions(subdir: str) -> list[tuple[int, str]]:
-    """COMPLETE compacted-base versions (``base_v<k>`` dirs carrying
-    the ``_COMPACTED`` marker, which compact_dedup_state touches only
-    after the parquet write finishes), version-ascending. A dir whose
-    write crashed mid-flight has no marker and is invisible to readers
-    — the next compaction simply overwrites it."""
-    out = []
-    for p in glob.glob(os.path.join(subdir, "base_v*")):
-        if not os.path.exists(os.path.join(p, _BASE_MARKER)):
-            continue
-        try:
-            out.append((int(os.path.basename(p)[len("base_v"):]), p))
-        except ValueError:
-            continue
-    return sorted(out)
-
-
-def _current_base(subdir: str) -> str | None:
-    """Newest complete compacted base, if any — versioned dirs first,
-    falling back to the pre-versioning legacy ``base`` layout so state
-    written by earlier releases stays readable."""
-    versions = _base_versions(subdir)
-    if versions:
-        return versions[-1][1]
-    legacy = os.path.join(subdir, "base")
-    if glob.glob(os.path.join(legacy, "*.parquet")):
-        return legacy
-    return None
-
-
-def _read_prior(spark, subdir: str, batch_id: int) -> DataFrame | None:
-    """Accumulated state strictly below *batch_id*: the newest complete
-    compacted base (if one exists — filtered on its carried batch
-    column, so a replayed batch never sees its own compacted rows) plus
-    every uncompacted append below the id."""
-    paths = _prior_batches(subdir, batch_id)
-    frames = []
-    base = _current_base(subdir)
-    if base is not None:
-        frames.append(
-            read_parquet_state(spark, base).where(
-                F.col("batch") < int(batch_id)
-            )
-        )
-    if paths:
-        frames.append(read_parquet_state(spark, *paths))
-    if not frames:
-        return None
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
 
 
 def compact_dedup_state(
@@ -165,40 +103,15 @@ def compact_dedup_state(
     same reader aggregates that make replays harmless in the first
     place.
 
-    Crash-safe via VERSIONED bases: the merged state writes to a fresh
-    ``base_v<k+1>`` dir, a ``_COMPACTED`` marker lands only after the
-    write completes, and readers always pick the newest COMPLETE
-    version — so at every instant a complete state is visible. A crash
-    before the marker leaves an invisible partial dir (overwritten by
-    the next compaction); a crash after the marker but before cleanup
-    leaves the old base/appends visible alongside the new base, which
-    readers tolerate (duplicates collapse through the reader
-    aggregates). Old base versions and folded appends are removed only
-    once the new version is complete. Returns the number of
+    Crash-safe: the append-store fold of state/store.py (a complete
+    state is visible at every instant). Returns the number of
     directories folded."""
-    import shutil
-
     subdir = os.path.join(state_dir, store)
-    batch_dirs = _prior_batches(subdir, 2**62)
-    cur = _current_base(subdir)
-    if not batch_dirs:
+    merged, appends = read_live(spark, subdir)
+    if not appends:
         return 0
-    sources = ([cur] if cur else []) + batch_dirs
-    merged = read_parquet_state(spark, *sources)
-    versions = _base_versions(subdir)
-    nxt = (versions[-1][0] + 1) if versions else 1
-    new_base = os.path.join(subdir, f"base_v{nxt}")
-    merged.repartition(state_partitions).write.mode("overwrite").parquet(
-        new_base
-    )
-    with open(os.path.join(new_base, _BASE_MARKER), "w"):
-        pass  # marker LAST: the new version becomes visible atomically
-    for _v, p in versions:
-        shutil.rmtree(p, ignore_errors=True)
-    shutil.rmtree(os.path.join(subdir, "base"), ignore_errors=True)
-    for p in batch_dirs:
-        shutil.rmtree(p, ignore_errors=True)
-    return len(batch_dirs)
+    fold(merged, subdir, appends, state_partitions)
+    return len(appends)
 
 
 def forget_from_dedup_state(
@@ -221,27 +134,19 @@ def forget_from_dedup_state(
 
     *ids* is a Python list (bounded erasure requests) or a one-column
     DataFrame of ids (bulk erasure feeds — anti-joined, never
-    collected). The rewrite reuses the versioned-compaction
-    machinery: every live row EXCEPT the forgotten survivors' writes
-    to a fresh ``base_v<k+1>``, the ``_COMPACTED`` marker lands only
-    after the write completes (a complete state visible at every
-    instant — compact_dedup_state's crash contract), then old
-    versions and appends are removed. Cost: one state scan + an
+    collected). Every live row EXCEPT the forgotten survivors' is
+    written through the same crash-safe fold as compact_dedup_state,
+    which then removes the old base and appends. Cost: one state scan + an
     O(|state|) write — the state is |distinct contents| rows, never
     the corpus. Returns the number of erased state rows."""
-    import shutil
-
     from pyspark.sql import DataFrame as _DF
 
     subdir = os.path.join(state_dir, "exact")
-    batch_dirs = _prior_batches(subdir, 2**62)
-    cur = _current_base(subdir)
-    sources = ([cur] if cur else []) + batch_dirs
-    if not sources:
+    merged, appends = read_live(spark, subdir)
+    if merged is None:
         raise ValueError(
             f"forget_from_dedup_state: no state under {subdir}"
         )
-    merged = read_parquet_state(spark, *sources)
     if isinstance(ids, _DF):
         doomed = ids.select(
             F.col(ids.columns[0]).alias("survivor_id")
@@ -256,19 +161,12 @@ def forget_from_dedup_state(
         n_forgotten = merged.where(
             in_values("survivor_id", id_list)
         ).count()
-    versions = _base_versions(subdir)
-    nxt = (versions[-1][0] + 1) if versions else 1
-    new_base = os.path.join(subdir, f"base_v{nxt}")
-    kept.select("fingerprint", "survivor_id", "batch").repartition(
-        state_partitions
-    ).write.mode("overwrite").parquet(new_base)
-    with open(os.path.join(new_base, _BASE_MARKER), "w"):
-        pass  # marker LAST: the new version becomes visible atomically
-    for _v, p in versions:
-        shutil.rmtree(p, ignore_errors=True)
-    shutil.rmtree(os.path.join(subdir, "base"), ignore_errors=True)
-    for p in batch_dirs:
-        shutil.rmtree(p, ignore_errors=True)
+    fold(
+        kept.select("fingerprint", "survivor_id", "batch"),
+        subdir,
+        appends,
+        state_partitions,
+    )
     return int(n_forgotten)
 
 
@@ -289,39 +187,9 @@ def prune_state_versions(
     redeliver (for availableNow/foreachBatch loops that is only the
     current batch, so the default suffices). Returns the number of
     version directories removed."""
-    import shutil
-
     if keep < 1:
         raise ValueError("prune_state_versions: keep must be >= 1")
-    subdir = os.path.join(state_dir, store)
-    versions = []
-    for p in glob.glob(os.path.join(subdir, "v*")):
-        m = _VERSION_RE.match(os.path.basename(p))
-        if m:
-            versions.append(
-                ((int(m.group(1)), int(m.group(2) or 0)), p)
-            )
-    versions.sort()
-    # outranked same-batch epochs prune UNCONDITIONALLY (not against
-    # *keep*): an erasure cutover v<k>.e<n> supersedes every lower
-    # epoch of batch k — a crash-window leftover v<k> is invisible to
-    # readers but physically retains the forgotten rows, so keeping
-    # it under a generous *keep* would defeat the erasure
-    newest_epoch: dict[int, int] = {}
-    for (k, e), _p in versions:
-        newest_epoch[k] = max(newest_epoch.get(k, 0), e)
-    outranked = [
-        (ke, p) for ke, p in versions if ke[1] < newest_epoch[ke[0]]
-    ]
-    ranked = [
-        (ke, p) for ke, p in versions if ke[1] == newest_epoch[ke[0]]
-    ]
-    doomed = outranked + (
-        ranked[:-keep] if keep < len(ranked) else []
-    )
-    for _, p in doomed:
-        shutil.rmtree(p, ignore_errors=True)
-    return len(doomed)
+    return prune(os.path.join(state_dir, store), keep)
 
 
 def dedup_exact_incremental(
@@ -353,13 +221,13 @@ def dedup_exact_incremental(
     spark = new_df.sparkSession
     subdir = os.path.join(state_dir, "exact")
     fps = _batch_fingerprints(new_df, id_col, text_col, normalize)
-    prior = _read_prior(spark, subdir, batch_id)
+    prior = read_prior(spark, subdir, batch_id)
     resolved, verdict = _resolve_exact(fps, prior, batch_id)
     # append ONLY unseen fingerprints, with their first-seen survivor
     resolved.where(F.col("__new_fp")).select(
         "fingerprint", "survivor_id", "batch"
     ).repartition(state_partitions).write.mode("overwrite").parquet(
-        os.path.join(subdir, f"batch={int(batch_id)}")
+        append_path(subdir, batch_id)
     )
     return verdict
 
@@ -487,8 +355,11 @@ def dedup_exact_incremental_bloom(
     subdir = os.path.join(state_dir, "exact")
     bloom_dir = os.path.join(state_dir, "exact_bloom")
     fps = _batch_fingerprints(new_df, id_col, text_col, normalize)
-    prior = _read_prior(spark, subdir, batch_id)
-    bloom = _latest_version(spark, bloom_dir, batch_id)
+    prior = read_prior(spark, subdir, batch_id)
+    bloom_v = latest_below(bloom_dir, batch_id)
+    bloom = (
+        read_parquet_state(spark, bloom_v[1]) if bloom_v is not None else None
+    )
     if bloom is not None:
         # the bitmap only means anything under the (m, k) it was built
         # with — a silent mismatch would create false NEGATIVES, so the
@@ -503,7 +374,7 @@ def dedup_exact_incremental_bloom(
     probes = _bloom_probes(
         fps.select("fingerprint").distinct(), m_bits, num_hashes
     )
-    bv = _latest_version_num(bloom_dir, batch_id)
+    bv = bloom_v[0][0] if bloom_v is not None else -1
     gap_probes = None
     if prior is not None and bloom is None:
         # FIRST bloom apply over a store built by plain-variant applies:
@@ -553,7 +424,7 @@ def dedup_exact_incremental_bloom(
     resolved.where(F.col("__new_fp")).select(
         "fingerprint", "survivor_id", "batch"
     ).repartition(state_partitions).write.mode("overwrite").parquet(
-        os.path.join(subdir, f"batch={int(batch_id)}")
+        append_path(subdir, batch_id)
     )
     # fold the batch's bits — and any bitmap-gap state rows' — into the
     # bitmap (idempotent OR — replays and already-seen fingerprints
@@ -575,20 +446,9 @@ def dedup_exact_incremental_bloom(
         F.lit(int(m_bits)).alias("m"),
         F.lit(int(num_hashes)).alias("k"),
     ).repartition(state_partitions).write.mode("overwrite").parquet(
-        os.path.join(bloom_dir, f"v{int(batch_id)}")
+        version_path(bloom_dir, batch_id)
     )
     return verdict
-
-
-def _latest_version_num(subdir: str, batch_id: int) -> int:
-    """Highest version BATCH number strictly below *batch_id*, or -1
-    (erase epochs ``v<k>.e<n>`` report their batch k; torn dirs are
-    skipped — see ``_scan_versions``)."""
-    best = -1
-    for (k, _e), _p in _scan_versions(subdir):
-        if k < batch_id:
-            best = max(best, k)
-    return best
 
 
 def _bloom_probes(
@@ -727,7 +587,7 @@ def minhash_incremental(
     ).localCheckpoint(eager=False)  # computed once at the first
     # action, reused by the other two (2 joins + append) — eager paid a
     # separate scheduler job per micro-batch
-    prior = _read_prior(spark, subdir, batch_id)
+    prior = read_prior(spark, subdir, batch_id)
     n = keys.alias("n")
     intra = (
         n.join(
@@ -756,7 +616,7 @@ def minhash_incremental(
     keys.withColumn("batch", F.lit(int(batch_id))).repartition(
         state_partitions
     ).write.mode("overwrite").parquet(
-        os.path.join(subdir, f"batch={int(batch_id)}")
+        append_path(subdir, batch_id)
     )
     return pairs.distinct()
 
@@ -894,7 +754,7 @@ def embedding_lsh_incremental(
         .dropDuplicates(["ra", "rb"]),
         reps,
     )
-    prior = _read_prior(spark, subdir, batch_id)
+    prior = read_prior(spark, subdir, batch_id)
     if prior is not None:
         cross = verified(
             nb.join(lean_buckets(prior, "rb"), ["tbl", "sig"])
@@ -908,114 +768,13 @@ def embedding_lsh_incremental(
     reps.withColumn("batch", F.lit(int(batch_id))).repartition(
         state_partitions
     ).write.mode("overwrite").parquet(
-        os.path.join(subdir, f"batch={int(batch_id)}")
+        append_path(subdir, batch_id)
     )
     # no final distinct: the three streams are disjoint by construction
     # (within-group / cross-group-same-batch / involves-an-older-member)
     # and each is internally deduped — dropDuplicates on rep pairs
     # before expansion, and every id belongs to exactly one group
     return out
-
-
-_VERSION_RE = re.compile(r"^v(\d+)(?:\.e(\d+))?$")
-
-
-def _scan_versions(subdir: str) -> list[tuple[tuple[int, int], str]]:
-    """Sorted ``((batch, erase_epoch), path)`` of a rewrite store's
-    COMPLETE version dirs: ``v<k>`` is batch *k*'s apply (epoch 0),
-    ``v<k>.e<n>`` is the *n*-th erasure cutover of that state (the
-    packing assign-store convention, shared so erasure NEVER consumes
-    a batch id — a checkpointed stream's next engine-assigned id stays
-    valid after any number of erasures). Completeness is Spark's own
-    ``_SUCCESS`` marker (packing's ``_assign_versions`` rule): a torn
-    write from a crashed apply is invisible — never read, never a
-    version that blocks the batch sequence — and is healed by the
-    overwrite of the next complete write at that version."""
-    from ..functions.util import list_fileinfos
-
-    fs, infos = list_fileinfos(subdir)
-    # pyarrow FileInfo paths are scheme-less; re-prefix so callers can
-    # hand the version path straight to spark.read.parquet
-    scheme = (
-        subdir.split("://", 1)[0] + "://" if "://" in subdir else ""
-    )
-    cand = []
-    for i in infos:
-        m = _VERSION_RE.match(i.base_name)
-        if m and not i.is_file:
-            cand.append(((int(m.group(1)), int(m.group(2) or 0)), i.path))
-    if not cand:
-        return []
-    # one BATCHED existence probe for every _SUCCESS marker (a single
-    # round trip on object stores, same syscalls locally)
-    marks = fs.get_file_info([p + "/_SUCCESS" for _ke, p in cand])
-    from pyarrow.fs import FileType
-
-    return sorted(
-        (ke, scheme + p)
-        for (ke, p), mk in zip(cand, marks)
-        if mk.type != FileType.NotFound
-    )
-
-
-def _rewrite_batch_guard(subdir: str, batch_id: int) -> None:
-    """Loud monotone-batch enforcement for the rewrite-versioned
-    stores (``v<batch>`` full rewrites: sample reservoir, frequency
-    sketch, CDC snapshot, cluster labels, golden records). Allowed:
-    an empty store, a batch id above every existing version (forward
-    progress — erasure cutovers live at ``v<k>.e<n>`` in the SAME
-    batch id space as the state they rewrote, so after erasing at
-    live version k the stream's natural next id k+1 still passes),
-    or an overwrite of the batch's OWN intact version (the
-    at-least-once replay contract — identical recompute reading only
-    versions below it; erasure is STICKY, so an own version
-    superseded by an erase epoch no longer licenses replay — the
-    rewrite would put forgotten rows back on disk). Rejected loudly:
-    a batch id at or below another version with no replayable own
-    version — the signature of (a) a replay from below an
-    erasure/prune horizon, (b) a legacy pre-epoch erasure cutover
-    (``_ERASE`` sentinel on an integer version — those DID consume a
-    batch id), or (c) an out-of-order id violating the documented
-    contract. (a) is an ack-and-skip at the source; (b) renumbers
-    above the sentinel version. Torn version dirs (no ``_SUCCESS``)
-    are invisible here (see ``_scan_versions``) — a crashed write
-    neither licenses a replay nor blocks fresh batches."""
-    versions = _scan_versions(subdir)
-    if not versions:
-        return
-    own = os.path.join(subdir, f"v{int(batch_id)}")
-    own_intact = os.path.isdir(own) and os.path.exists(
-        os.path.join(own, "_SUCCESS")
-    )
-    own_erased = os.path.exists(os.path.join(own, "_ERASE")) or any(
-        k == int(batch_id) and e > 0 for (k, e), _p in versions
-    )
-    if own_intact and not own_erased:
-        return
-    max_k = max(k for (k, _e), _p in versions)
-    if int(batch_id) <= max_k:
-        raise ValueError(
-            f"batch_id {int(batch_id)} is at or below an existing "
-            f"version of {subdir} (max batch v{max_k}) with no own "
-            "version to replay — it falls below an erasure/prune "
-            "horizon (or collides with a legacy erasure cutover); "
-            "use a batch id above every existing version"
-        )
-
-
-def _latest_version(spark, subdir: str, batch_id: int) -> DataFrame | None:
-    """Latest COMPLETE state version strictly below *batch_id* (the
-    ivm versioned-state convention — used by stores that rewrite
-    rather than append, like cluster labels). An erasure cutover
-    ``v<k>.e<n>`` outranks its source ``v<k>`` (erasure is sticky)
-    and is visible to batch k+1 exactly as v<k> was; torn dirs
-    (no ``_SUCCESS``) are skipped."""
-    versions = [
-        (ke, p) for ke, p in _scan_versions(subdir) if ke[0] < batch_id
-    ]
-    if not versions:
-        return None
-    return read_parquet_state(spark, versions[-1][1])
 
 
 def duplicate_clusters_incremental(
@@ -1059,8 +818,8 @@ def duplicate_clusters_incremental(
 
     spark = new_pairs.sparkSession
     subdir = os.path.join(state_dir, "clusters")
-    _rewrite_batch_guard(subdir, batch_id)
-    prior = _latest_version(spark, subdir, batch_id)
+    guard_replay(subdir, batch_id)
+    prior = read_latest(spark, subdir, batch_id)
     edges = (
         new_pairs.select(
             F.col(id_a).alias("a"), F.col(id_b).alias("b")
@@ -1120,7 +879,7 @@ def duplicate_clusters_incremental(
             F.col("cnode").alias("node_id"),
             F.col("nlabel").alias("cluster_id"),
         )
-    out = os.path.join(subdir, f"v{int(batch_id)}")
+    out = version_path(subdir, batch_id)
     state.repartition(state_partitions).write.mode("overwrite").parquet(out)
     return read_parquet_state(spark, out)
 
@@ -1180,7 +939,7 @@ def span_dedup_incremental(
     )
     gp = g.groupBy("g", "id").agg(F.count(F.lit(1)).alias("pos_cnt"))
     nd_batch = F.count(F.lit(1)).over(Window.partitionBy("g"))
-    prior = _read_prior(spark, subdir, batch_id)
+    prior = read_prior(spark, subdir, batch_id)
     seen = (
         prior.select("g").distinct().withColumn("__seen", F.lit(True))
         if prior is not None
@@ -1221,7 +980,7 @@ def span_dedup_incremental(
         .withColumn("batch", F.lit(int(batch_id)))
         .repartition(state_partitions)
         .write.mode("overwrite")
-        .parquet(os.path.join(subdir, f"batch={int(batch_id)}"))
+        .parquet(append_path(subdir, batch_id))
     )
     return verdict
 
@@ -1259,7 +1018,7 @@ def streaming_dedup_exact(
             batch_df, state_dir, batch_id, id_col, text_col, normalize
         )
         verdict.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={int(batch_id)}")
+            append_path(out_dir, batch_id)
         )
 
     q = (
@@ -1312,7 +1071,7 @@ def streaming_dedup_embedding(
             dim,
         )
         pairs.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={int(batch_id)}")
+            append_path(out_dir, batch_id)
         )
 
     q = (
@@ -1328,9 +1087,9 @@ def read_dedup_verdicts(spark, out_dir: str) -> DataFrame:
     """Union of all per-batch verdict partitions written by
     streaming_dedup_exact. Raises a clear ValueError when no verdict
     partitions exist (instead of the opaque empty-glob read error)."""
-    paths = glob.glob(os.path.join(out_dir, "batch=*"))
+    paths = appends_below(out_dir)
     if not paths:
         raise ValueError(
             f"read_dedup_verdicts: no verdict partitions under {out_dir}"
         )
-    return read_parquet_state(spark, *sorted(paths))
+    return read_parquet_state(spark, *paths)

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.util import read_parquet_state
-from .dedup_state import _latest_version
+from ..state.store import latest_below, read_latest, version_path
 
 __all__ = [
     "category_counts_incremental",
@@ -62,14 +62,11 @@ def _latest_version_meta(
     import pyarrow.parquet as _pq
 
     from ..functions.util import list_fileinfos
-    from .dedup_state import _scan_versions
 
-    versions = [
-        (ke, p) for ke, p in _scan_versions(subdir) if ke[0] < batch_id
-    ]
-    if not versions:
+    latest = latest_below(subdir, batch_id)
+    if latest is None:
         return None
-    vdir = versions[-1][1]
+    vdir = latest[1]
     fs, infos = list_fileinfos(vdir)
     for p in sorted(
         i.path
@@ -110,7 +107,7 @@ def histogram_incremental(
     subdir = os.path.join(state_dir, "hist")
     lo_f, hi_f, bins_i = float(lo), float(hi), int(bins)
     delta = histogram_counts(new_df, col, lo_f, hi_f, bins_i)
-    prior = _latest_version(spark, subdir, batch_id)
+    prior = read_latest(spark, subdir, batch_id)
     if prior is not None:
         meta = _latest_version_meta(subdir, batch_id, ["lo", "hi", "bins"])
         if (meta["lo"], meta["hi"], int(meta["bins"])) != (
@@ -138,10 +135,10 @@ def histogram_incremental(
         F.lit(bins_i).cast("long").alias("bins"),
     )
     state.repartition(state_partitions).write.mode("overwrite").parquet(
-        os.path.join(subdir, f"v{int(batch_id)}")
+        version_path(subdir, batch_id)
     )
     return read_parquet_state(
-        spark, os.path.join(subdir, f"v{int(batch_id)}")
+        spark, version_path(subdir, batch_id)
     )
 
 
@@ -149,7 +146,7 @@ def read_histogram_state(spark, state_dir: str, batch_id: int) -> DataFrame:
     """Newest persisted histogram state strictly below *batch_id* —
     what a replayed batch (or a drift reader) sees."""
     subdir = os.path.join(state_dir, "hist")
-    out = _latest_version(spark, subdir, batch_id)
+    out = read_latest(spark, subdir, batch_id)
     if out is None:
         raise ValueError(
             f"read_histogram_state: no state versions under {subdir}"
@@ -183,7 +180,7 @@ def category_counts_incremental(
         new_df.groupBy(F.col(col).alias("category"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    prior = _latest_version(spark, subdir, batch_id)
+    prior = read_latest(spark, subdir, batch_id)
     if prior is not None:
         meta = _latest_version_meta(subdir, batch_id, ["col"])
         if meta["col"] != col:
@@ -200,17 +197,17 @@ def category_counts_incremental(
         merged = delta
     state = merged.select("category", "cnt", F.lit(col).alias("col"))
     state.repartition(state_partitions).write.mode("overwrite").parquet(
-        os.path.join(subdir, f"v{int(batch_id)}")
+        version_path(subdir, batch_id)
     )
     return read_parquet_state(
-        spark, os.path.join(subdir, f"v{int(batch_id)}")
+        spark, version_path(subdir, batch_id)
     )
 
 
 def read_category_state(spark, state_dir: str, batch_id: int) -> DataFrame:
     """Newest persisted category state strictly below *batch_id*."""
     subdir = os.path.join(state_dir, "cats")
-    out = _latest_version(spark, subdir, batch_id)
+    out = read_latest(spark, subdir, batch_id)
     if out is None:
         raise ValueError(
             f"read_category_state: no state versions under {subdir}"
@@ -285,7 +282,7 @@ def embedding_moments_incremental(
             "embedding_moments_incremental: ragged batch — vector "
             f"sizes range {d0['dmin']}..{d0['dmax']} (must be uniform)"
         )
-    prior = _latest_version(spark, subdir, batch_id)
+    prior = read_latest(spark, subdir, batch_id)
     if d0 is None:
         # empty batch: carry the prior state forward unchanged as this
         # batch's version (the ledger stays dense); with no prior there
@@ -297,9 +294,9 @@ def embedding_moments_incremental(
             )
         prior.repartition(state_partitions).write.mode(
             "overwrite"
-        ).parquet(os.path.join(subdir, f"v{int(batch_id)}"))
+        ).parquet(version_path(subdir, batch_id))
         return read_parquet_state(
-            spark, os.path.join(subdir, f"v{int(batch_id)}")
+            spark, version_path(subdir, batch_id)
         )
     dim = int(d0["dmin"])
     delta = (
@@ -332,10 +329,10 @@ def embedding_moments_incremental(
         F.lit(dim).cast("int").alias("dim"),
     )
     state.repartition(state_partitions).write.mode("overwrite").parquet(
-        os.path.join(subdir, f"v{int(batch_id)}")
+        version_path(subdir, batch_id)
     )
     return read_parquet_state(
-        spark, os.path.join(subdir, f"v{int(batch_id)}")
+        spark, version_path(subdir, batch_id)
     )
 
 
@@ -343,7 +340,7 @@ def read_embedding_state(spark, state_dir: str, batch_id: int) -> DataFrame:
     """Newest persisted embedding-moment state strictly below
     *batch_id*."""
     subdir = os.path.join(state_dir, "emb")
-    out = _latest_version(spark, subdir, batch_id)
+    out = read_latest(spark, subdir, batch_id)
     if out is None:
         raise ValueError(
             f"read_embedding_state: no state versions under {subdir}"

@@ -16,20 +16,17 @@ under a state_dir, mapped to its erasure callable or explicitly
 waived — tests/test_store_registry.py AST-scans the package and fails
 the day a new store lands uncovered.
 
-Design per store, matching each layer's own durability discipline:
+Design per store (layouts and commit rules: state/store.py):
 
-- **Append-only dedup states** (bands / embedding_lsh / spans,
-  operators/dedup_state.py layout): the versioned-base rewrite
-  forget_from_dedup_state introduced — merge base+appends, anti-join
-  the doomed rows out, write a fresh ``base_v<k+1>``, marker LAST, so
-  a complete state is visible at every instant and a crash anywhere
-  leaves either the old or the new state, never a torn one. Cost:
-  O(state) scan+write, never the corpus.
-- **Inverted index** (operators/index_state.py): postings get the
-  same versioned rewrite; stats are RECOMPUTED from the kept postings
-  into a fresh ``v<k>.e<n>`` erase epoch (exact by construction — no
-  subtract-to-zero edge cases), so df/cf no longer count the
-  forgotten document's tokens.
+- **Append stores** (bands / embedding_lsh / spans, postings,
+  linkage): anti-join the doomed rows out of base+appends and write
+  the rest through the store's crash-safe fold. Cost: O(state)
+  scan+write, never the corpus.
+- **Rewrite stores** (golden, sample, frequency, CDC, clusters, index
+  stats): rewrite the live version into its next erase epoch and purge
+  every older version — each is a full, possibly PII-bearing copy.
+  Index stats are RECOMPUTED from the kept postings (exact by
+  construction — no subtract-to-zero edge cases).
 - **ANN / IVFPQ indexes** (functions/ann_index.py, ivfpq.py):
   partition-LOCAL anti-join rewrite — the doomed ids' lists are
   discovered with one semi-join (bounded: |ids| lists at most), only
@@ -56,20 +53,27 @@ path every production data-governance story requires.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup_state import (
-    _BASE_MARKER,
-    _base_versions,
-    _current_base,
-    _prior_batches,
-    forget_from_dedup_state,
+from ..functions.util import read_parquet_state
+from ..state.store import (
+    current_base,
+    erase_cutover,
+    exists,
+    fold,
+    has_cells,
+    ibase_versions,
+    purge_superseded,
+    read_live,
+    remove,
+    remove_empty_partitions,
+    scan_versions,
+    sweep_cells,
 )
+from .dedup_state import forget_from_dedup_state
 
 __all__ = [
     "forget_everywhere",
@@ -105,34 +109,15 @@ def _versioned_erase(
     count_fn,
     state_partitions: int = 1,
 ) -> int:
-    """forget_from_dedup_state's crash-safe rewrite, generalized:
-    merge the store's base+appends, write ``keep_fn(merged)`` to a
-    fresh ``base_v<k+1>``, marker LAST, then remove old versions and
-    folded appends. Returns ``count_fn(merged)`` (the erased count,
-    computed before the rewrite)."""
-    batch_dirs = _prior_batches(subdir, 2**62)
-    cur = _current_base(subdir)
-    sources = ([cur] if cur else []) + batch_dirs
-    if not sources:
+    """Append-store erasure: fold ``keep_fn(merged)`` over the store's
+    base+appends (state/store.py's crash-safe fold). Returns
+    ``count_fn(merged)`` (the erased count, computed before the
+    rewrite)."""
+    merged, appends = read_live(spark, subdir)
+    if merged is None:
         raise ValueError(f"_versioned_erase: no state under {subdir}")
-    from ..functions.util import read_parquet_state
-
-    merged = read_parquet_state(spark, *sources)
     n_forgotten = int(count_fn(merged))
-    kept = keep_fn(merged)
-    versions = _base_versions(subdir)
-    nxt = (versions[-1][0] + 1) if versions else 1
-    new_base = os.path.join(subdir, f"base_v{nxt}")
-    kept.repartition(state_partitions).write.mode("overwrite").parquet(
-        new_base
-    )
-    with open(os.path.join(new_base, _BASE_MARKER), "w"):
-        pass  # marker LAST: the new version becomes visible atomically
-    for _v, p in versions:
-        shutil.rmtree(p, ignore_errors=True)
-    shutil.rmtree(os.path.join(subdir, "base"), ignore_errors=True)
-    for p in batch_dirs:
-        shutil.rmtree(p, ignore_errors=True)
+    fold(keep_fn(merged), subdir, appends, state_partitions)
     return n_forgotten
 
 
@@ -295,28 +280,18 @@ def forget_from_index_state(
         state_partitions,
     )
     # stats: exact recompute from the kept postings (no subtraction
-    # edge cases), written as an ERASE EPOCH of the live version
-    # (v<k>.e<n+1>, the packing convention) so _latest_version
-    # resolves it WITHOUT consuming a batch id — a checkpointed
-    # ingest's natural next id stays valid after the erasure
-    from .dedup_state import _scan_versions
-
+    # edge cases), written as an erase epoch of the live version, so
+    # it consumes no batch id
     stats_dir = os.path.join(state_dir, "stats")
-    stats_versions = _scan_versions(stats_dir)
+    stats_versions = scan_versions(stats_dir)
     if stats_versions:
-        # newest COMPLETE base only (marker-checked) — a glob would
-        # also read a crash-orphaned partial version
-        from ..functions.util import read_parquet_state
-
-        kept = read_parquet_state(spark, _current_base(postings_dir))
+        kept = read_parquet_state(spark, current_base(postings_dir))
         recomputed = kept.groupBy("token").agg(
             F.count("*").alias("n"), F.sum("n").alias("cf")
         )
-        (k, e), _lp = stats_versions[-1]
-        out = os.path.join(stats_dir, f"v{k}.e{e + 1}")
-        recomputed.repartition(state_partitions).write.mode(
-            "overwrite"
-        ).parquet(out)
+        erase_cutover(
+            recomputed, stats_dir, stats_versions[-1][0], state_partitions
+        )
     return n
 
 
@@ -329,8 +304,6 @@ def _partition_local_erase(
     emptied entirely are deleted explicitly (dynamic overwrite cannot
     touch a partition absent from the written frame). Returns erased
     row count."""
-    from ..functions.util import read_parquet_state
-
     df = read_parquet_state(spark, data_dir)
     hit = df.join(
         F.broadcast(doomed), df["vec_id"] == doomed["__fid"], "left_semi"
@@ -368,13 +341,12 @@ def _partition_local_erase(
     for vals in affected:
         if tuple(vals) in survivors:
             continue
-        sub = os.path.join(
-            data_dir, *[f"{c}={v}" for c, v in zip(part_cols, vals)]
+        remove(
+            os.path.join(
+                data_dir, *[f"{c}={v}" for c, v in zip(part_cols, vals)]
+            )
         )
-        shutil.rmtree(sub, ignore_errors=True)
-    for p in glob.glob(os.path.join(data_dir, f"{part_cols[0]}=*")):
-        if os.path.isdir(p) and not os.listdir(p):
-            shutil.rmtree(p, ignore_errors=True)
+    remove_empty_partitions(data_dir, part_cols[0])
     return int(n_erased)
 
 
@@ -398,56 +370,28 @@ def forget_from_ivfpq_index(spark, path: str, ids) -> int:
     A forgotten document's codes are its content (PQ codes
     reconstruct an approximation of the vector), so they must go.
     Returns the number of erased code rows."""
-    from ..functions.ivfpq import (
-        _ingest_base_versions as _ivfpq_versions,
-    )
     from ..functions.ivfpq import _read_ivfpq_meta
 
     doomed = _doomed_frame(spark, ids)
     total = 0
     meta = _read_ivfpq_meta(spark, path)
     versioned = bool(meta and meta.get("versioned_ingest"))
-    versions0 = _ivfpq_versions(path)
-    if versioned and versions0:
+    versions = ibase_versions(path)
+    if versioned and versions:
         # finish any interrupted compaction cleanup first: cells at or
         # below the watermark are dead (their rows live in the base) —
         # erasing "from" them would double-count the erased rows
-        w = versions0[-1][2]
-        for p in glob.glob(
-            os.path.join(path, "list_id=*", "ingest_batch=*")
-        ):
-            if int(os.path.basename(p).split("=", 1)[1]) <= w:
-                shutil.rmtree(p, ignore_errors=True)
-        for p in glob.glob(os.path.join(path, "list_id=*")):
-            if os.path.isdir(p) and not os.listdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-    cells_exist = bool(
-        glob.glob(os.path.join(path, "list_id=*", "ingest_batch=*"))
-        or glob.glob(os.path.join(path, "list_id=*", "*.parquet"))
-    )
-    if cells_exist:
+        sweep_cells(path, versions[-1][2])
+    if has_cells(path):
         part_cols = (
             ["list_id", "ingest_batch"] if versioned else ["list_id"]
         )
         total += _partition_local_erase(spark, path, doomed, part_cols)
-    versions = _ivfpq_versions(path)
     if versions:
         total += _partition_local_erase(
             spark, versions[-1][1], doomed, ["list_id"]
         )
     return total
-
-
-def _golden_versions(subdir: str) -> list[tuple[tuple[int, int], str]]:
-    """Sorted ``((batch, erase_epoch), path)`` of a rewrite store's
-    COMPLETE versions — ``v<k>`` batch applies and ``v<k>.e<n>``
-    erasure cutovers (dedup_state._scan_versions, the shared
-    convention): erasure lives in its own epoch dimension and never
-    consumes a batch id, torn writes (no ``_SUCCESS``) are invisible
-    to readers."""
-    from .dedup_state import _scan_versions
-
-    return _scan_versions(subdir)
 
 
 def forget_from_golden_state(
@@ -491,35 +435,18 @@ def forget_from_golden_state(
     but ``n_records`` counts them, and as-if-never-ingested means the
     count must drop too. Clusters emptied of retained records vanish.
 
-    Durability: the rewritten state lands in a fresh ``v<k>.e<n>``
-    erase epoch — outside the batch-id space, so a checkpointed
-    stream's next engine-assigned id stays valid — via
-    write-to-temp + atomic rename (rename LAST — a crash leaves either
-    the old or the new state, never a torn one), then EVERY older
-    version directory is deleted — old versions still hold the
-    forgotten values on disk, so purging them is part of the erasure,
-    not housekeeping (the forget_from_dedup_state precedent). A crash
-    between rename and purge is healed by re-running: stale temp dirs
-    and superseded versions are cleaned on entry. Subsequent ingest
-    batch ids must stay above the new version (the monotone-batch
-    contract every store here has).
+    Durability: the rewrite-store erase epoch (state/store.py); every
+    older version is purged, because old versions still hold the
+    forgotten values on disk. A crash anywhere is healed by re-running.
 
     Returns the number of winner slots (cluster x field) whose
     provenance referenced a doomed id — the audit measure of PII
     actually erased."""
     from .survivorship_state import _golden_structs
 
-    subdir = os.path.join(state_dir, "golden")
-    versions = _golden_versions(subdir)
-    if not versions:
-        raise ValueError(f"no golden state at {state_dir}")
-    # heal any interrupted prior erasure: stale temp dirs and
-    # superseded (PII-bearing) older versions go first
-    _heal_and_purge_history(subdir, versions)
-    cur_v, cur_path = versions[-1]
-    from ..functions.util import read_parquet_state
-
-    state = read_parquet_state(spark, cur_path)
+    subdir, cur_v, state = _live_rewrite_store(
+        spark, state_dir, "golden", "golden state"
+    )
     doomed = _doomed_frame(spark, ids)
     win_cols = [c for c in state.columns if c.startswith("__win_")]
     exploded = state.select(
@@ -583,99 +510,24 @@ def forget_from_golden_state(
         "left_anti",
     )
     new_state = kept.unionByName(resurvived)
-    _atomic_version_cutover(
-        new_state, subdir, cur_v, cur_path, state_partitions
-    )
+    erase_cutover(new_state, subdir, cur_v, state_partitions)
     return int(n_slots)
 
 
-def _rewrite_versions(subdir: str) -> list[tuple[int, str]]:
-    """Sorted ``(version, path)`` of a rewrite-versioned store's
-    ``v<k>`` directories — the golden/sample/frequency convention:
-    every version is a COMPLETE rewrite, so only the newest is live
-    and every older one is pure (possibly PII-bearing) history."""
-    return _golden_versions(subdir)
-
-
-def _heal_and_purge_history(subdir: str, versions) -> None:
-    """Entry hygiene shared by the rewrite-versioned erasures: stale
-    temp dirs from an interrupted prior erasure go first, then every
-    SUPERSEDED version — each older ``v<k>``/``v<k>.e<n>`` is a full
-    rewrite that still holds the rows (PII included) its successor
-    replaced, so purging them is part of the erasure, not
-    housekeeping. Torn version dirs (no ``_SUCCESS`` — a crashed
-    apply's partial write) are purged too: readers already skip them,
-    and their files physically retain possibly-doomed rows."""
-    from .dedup_state import _VERSION_RE
-
-    live = versions[-1][1] if versions else None
-    complete = {p for _v, p in versions}
-    for p in glob.glob(os.path.join(subdir, ".v*.tmp")):
-        shutil.rmtree(p, ignore_errors=True)
-    for _v, p in versions[:-1]:
-        shutil.rmtree(p, ignore_errors=True)
-    for p in glob.glob(os.path.join(subdir, "v*")):
-        if (
-            p != live
-            and p not in complete
-            and _VERSION_RE.match(os.path.basename(p))
-        ):
-            shutil.rmtree(p, ignore_errors=True)
-
-
-def _atomic_version_cutover(
-    new_state: DataFrame,
-    subdir: str,
-    cur_version: tuple[int, int],
-    cur_path: str,
-    state_partitions: int,
-) -> None:
-    """Write *new_state* as an ERASE EPOCH of the live version —
-    ``v<k>.e<n+1>`` where the live state is ``v<k>``/``v<k>.e<n>``
-    (the packing assign-store convention) — via write-to-temp +
-    atomic rename (rename LAST — a crash leaves either the old or
-    the new state, never a torn one), then purge the superseded
-    version. A crash between rename and purge is healed on the next
-    erasure's entry sweep.
-
-    Erase epochs live OUTSIDE the batch-id space: a checkpointed
-    stream that last applied batch k keeps its engine-assigned next
-    id k+1 valid after any number of erasures (r11's cutover wrote
-    ``v<k+1>``, which collided with exactly that id and wedged the
-    resumed stream against ``_rewrite_batch_guard`` permanently —
-    engine batch ids cannot be renumbered). The guard still rejects
-    a REPLAY of batch k itself after an erasure at k (erasure is
-    sticky — the rewrite would resurrect forgotten rows), which is
-    the loud ack-and-skip contract, not a wedge: only already-applied
-    ids below the horizon raise. The ``_ERASE`` sentinel is kept for
-    audit and for legacy (integer-versioned) cutovers the guard must
-    still refuse to overwrite."""
-    k, e = cur_version
-    nxt = f"v{k}.e{e + 1}"
-    tmp = os.path.join(subdir, f".{nxt}.tmp")
-    new_state.repartition(state_partitions).write.mode("overwrite").parquet(
-        tmp
-    )
-    with open(os.path.join(tmp, "_ERASE"), "w"):
-        pass
-    os.rename(tmp, os.path.join(subdir, nxt))  # atomic cutover
-    shutil.rmtree(cur_path, ignore_errors=True)
-
-
 def _live_rewrite_store(spark, state_dir: str, store: str, what: str):
-    """The shared entry of every rewrite-versioned erasure: resolve
-    the store, fail loudly when empty, heal stale temps and purge
-    superseded (PII-bearing) history, read the live version. Returns
-    ``(subdir, cur_version, cur_path, state)``."""
+    """The shared entry of every rewrite-store erasure: resolve the
+    store, fail loudly when empty, purge everything but the live
+    version (older versions are full, possibly PII-bearing copies; a
+    re-run after a crash heals here), read the live version. Returns
+    ``(subdir, cur_version, state)``; the erasure then ends with
+    store.erase_cutover."""
     subdir = os.path.join(state_dir, store)
-    versions = _rewrite_versions(subdir)
+    versions = scan_versions(subdir)
     if not versions:
         raise ValueError(f"no {what} at {state_dir}")
-    _heal_and_purge_history(subdir, versions)
     cur_v, cur_path = versions[-1]
-    from ..functions.util import read_parquet_state
-
-    return subdir, cur_v, cur_path, read_parquet_state(spark, cur_path)
+    purge_superseded(subdir, cur_path)
+    return subdir, cur_v, read_parquet_state(spark, cur_path)
 
 
 def _typed_doomed(spark, values, dtype, name: str = "__fid") -> DataFrame:
@@ -735,19 +587,14 @@ def forget_from_sample_state(
       forget_from_golden_state contract. A retained feed still
       containing a doomed id is rejected loudly.
 
-    Durability is the golden convention: a fresh ``v<k>.e<n>`` erase
-    epoch (outside the batch-id space) via write-to-temp + atomic
-    rename, then EVERY older version is deleted (each one is a full
-    PII-bearing copy); stale temps and superseded versions are healed
-    on entry. Subsequent ingest batch ids continue from the engine's
-    own counter (the monotone-batch
-    contract). Returns the number of doomed rows that were present in
-    the live sample — the audit measure of winners actually erased
-    (older versions may have held more copies; they are purged
-    wholesale either way)."""
+    Durability is the golden convention (an erase epoch, every older
+    full PII-bearing copy purged). Returns the number of doomed rows
+    that were present in the live sample — the audit measure of
+    winners actually erased (older versions may have held more copies;
+    they are purged wholesale either way)."""
     from .sample_state import _es_scored
 
-    subdir, cur_v, cur_path, state = _live_rewrite_store(
+    subdir, cur_v, state = _live_rewrite_store(
         spark, state_dir, "wsample", "sample state"
     )
     doomed = _typed_doomed(
@@ -780,9 +627,7 @@ def forget_from_sample_state(
         )
     else:
         new_state = kept
-    _atomic_version_cutover(
-        new_state, subdir, cur_v, cur_path, state_partitions
-    )
+    erase_cutover(new_state, subdir, cur_v, state_partitions)
     return n_erased
 
 
@@ -807,19 +652,16 @@ def forget_from_frequency_state(
     items that later reappear re-enter as new counters — the
     re-admission contract every store here has.
 
-    Durability: a fresh ``v<k>.e<n>`` erase epoch (outside the
-    batch-id space) via write-to-temp + atomic rename, every older
-    (PII-bearing) version purged, stale temps healed on entry;
-    subsequent batch ids continue from the engine's own counter.
-    Returns the number of counter rows erased from the live state."""
-    subdir, cur_v, cur_path, state = _live_rewrite_store(
+    Durability is the golden convention. Returns the number of counter
+    rows erased from the live state."""
+    subdir, cur_v, state = _live_rewrite_store(
         spark, state_dir, "freq", "frequency state"
     )
     doomed = _typed_doomed(spark, values, state.schema["item"].dataType)
     # plain-equality joins: the NULL-item total row can never match a
     # doomed value, so the anti-join keeps it — by construction
     n_erased, kept = _split_doomed(state, doomed, "item")
-    _atomic_version_cutover(kept, subdir, cur_v, cur_path, state_partitions)
+    erase_cutover(kept, subdir, cur_v, state_partitions)
     return n_erased
 
 
@@ -841,12 +683,12 @@ def forget_from_cdc_state(
     span-store trade. *ids* as a Python list is typed from the key
     column's OWN schema (string/date keys work directly — no numeric
     coercion). Returns the number of erased state rows."""
-    subdir, cur_v, cur_path, state = _live_rewrite_store(
+    subdir, cur_v, state = _live_rewrite_store(
         spark, state_dir, "snapshot", "cdc snapshot state"
     )
     doomed = _typed_doomed(spark, ids, state.schema[key_col].dataType)
     n_erased, kept = _split_doomed(state, doomed, key_col)
-    _atomic_version_cutover(kept, subdir, cur_v, cur_path, state_partitions)
+    erase_cutover(kept, subdir, cur_v, state_partitions)
     return n_erased
 
 
@@ -871,7 +713,7 @@ def forget_from_clusters_state(
     Callers needing exact as-if-never-ingested clusters re-run
     propagation over their retained pair feed. Returns the number of
     doomed node rows erased."""
-    subdir, cur_v, cur_path, state = _live_rewrite_store(
+    subdir, cur_v, state = _live_rewrite_store(
         spark, state_dir, "clusters", "clusters state"
     )
     doomed = _typed_doomed(
@@ -894,9 +736,7 @@ def forget_from_clusters_state(
             F.coalesce("__nl", "cluster_id").alias("cluster_id"),
         )
     )
-    _atomic_version_cutover(
-        new_state, subdir, cur_v, cur_path, state_partitions
-    )
+    erase_cutover(new_state, subdir, cur_v, state_partitions)
     return n_erased
 
 
@@ -1076,23 +916,23 @@ def forget_everywhere(
     that was EXPECTED but skipped."""
     out: dict[str, int] = {}
     if dedup_state_dir is not None:
-        if os.path.isdir(os.path.join(dedup_state_dir, "exact")):
+        if exists(os.path.join(dedup_state_dir, "exact")):
             out["exact"] = forget_from_dedup_state(
                 spark, dedup_state_dir, ids, state_partitions
             )
-        if os.path.isdir(os.path.join(dedup_state_dir, "bands")):
+        if exists(os.path.join(dedup_state_dir, "bands")):
             out["bands"] = forget_from_bands_state(
                 spark, dedup_state_dir, ids, state_partitions
             )
-        if os.path.isdir(os.path.join(dedup_state_dir, "embedding_lsh")):
+        if exists(os.path.join(dedup_state_dir, "embedding_lsh")):
             out["embedding_lsh"] = forget_from_embedding_lsh_state(
                 spark, dedup_state_dir, ids, state_partitions
             )
-        if os.path.isdir(os.path.join(dedup_state_dir, "clusters")):
+        if exists(os.path.join(dedup_state_dir, "clusters")):
             out["duplicate_clusters"] = forget_from_clusters_state(
                 spark, dedup_state_dir, ids, state_partitions
             )
-        if span_docs is not None and os.path.isdir(
+        if span_docs is not None and exists(
             os.path.join(dedup_state_dir, "spans")
         ):
             out["spans"] = forget_from_span_state(
@@ -1103,7 +943,7 @@ def forget_everywhere(
                 n=span_n,
                 state_partitions=max(state_partitions, 4),
             )
-    if index_state_dir is not None and os.path.isdir(
+    if index_state_dir is not None and exists(
         os.path.join(index_state_dir, "postings")
     ):
         out["inverted_index"] = forget_from_index_state(
@@ -1113,7 +953,7 @@ def forget_everywhere(
         out[f"ivf_index_{i}"] = forget_from_ann_index(spark, p, ids)
     for i, p in enumerate(ivfpq_index_paths):
         out[f"ivfpq_index_{i}"] = forget_from_ivfpq_index(spark, p, ids)
-    if linkage_state_dir is not None and os.path.isdir(
+    if linkage_state_dir is not None and exists(
         os.path.join(linkage_state_dir, "variants")
     ):
         from .linkage_state import forget_from_linkage_state
@@ -1121,7 +961,7 @@ def forget_everywhere(
         out["linkage_index"] = forget_from_linkage_state(
             spark, linkage_state_dir, ids, state_partitions
         )
-    if golden_state_dir is not None and os.path.isdir(
+    if golden_state_dir is not None and exists(
         os.path.join(golden_state_dir, "golden")
     ):
         if golden_retained is None or not golden_spec:
@@ -1141,7 +981,7 @@ def forget_everywhere(
             state_partitions=state_partitions,
             **golden_spec,
         )
-    if pack_state_dir is not None and os.path.isdir(
+    if pack_state_dir is not None and exists(
         os.path.join(pack_state_dir, "assign")
     ):
         from .packing_state import forget_from_pack_state
@@ -1149,7 +989,7 @@ def forget_everywhere(
         out["pack_assignments"] = forget_from_pack_state(
             spark, pack_state_dir, ids, state_partitions
         )
-    if sample_state_dir is not None and os.path.isdir(
+    if sample_state_dir is not None and exists(
         os.path.join(sample_state_dir, "wsample")
     ):
         if sample_hash_col is None:
@@ -1170,7 +1010,7 @@ def forget_everywhere(
             n=sample_n,
             state_partitions=state_partitions,
         )
-    if frequency_state_dir is not None and os.path.isdir(
+    if frequency_state_dir is not None and exists(
         os.path.join(frequency_state_dir, "freq")
     ):
         if frequency_values is None:
@@ -1184,7 +1024,7 @@ def forget_everywhere(
         out["heavy_hitters"] = forget_from_frequency_state(
             spark, frequency_state_dir, frequency_values, state_partitions
         )
-    if cdc_state_dir is not None and os.path.isdir(
+    if cdc_state_dir is not None and exists(
         os.path.join(cdc_state_dir, "snapshot")
     ):
         if cdc_key_col is None:
@@ -1201,7 +1041,7 @@ def forget_everywhere(
     if (
         clusters_state_dir is not None
         and clusters_state_dir != dedup_state_dir
-        and os.path.isdir(os.path.join(clusters_state_dir, "clusters"))
+        and exists(os.path.join(clusters_state_dir, "clusters"))
     ):
         # distinct audit key: a clusters store co-located under
         # dedup_state_dir may ALSO have been erased above, and the

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.util import literal_frame
-from .dedup_state import _latest_version
+from ..state.store import guard_replay, read_latest, version_path
 
 __all__ = ["heavy_hitters_incremental", "read_frequency_state"]
 
@@ -58,11 +58,10 @@ def heavy_hitters_incremental(
     every item with true count above that slack is guaranteed present
     (property-tested with planted skew)."""
     from ..functions.util import mg_evict, mg_summaries
-    from .dedup_state import _rewrite_batch_guard
 
     spark = new_df.sparkSession
     subdir = os.path.join(state_dir, "freq")
-    _rewrite_batch_guard(subdir, batch_id)
+    guard_replay(subdir, batch_id)
     cap = int(capacity)
     summary_rows = mg_summaries(new_df, col, cap).collect()
     mg: dict = {}
@@ -72,7 +71,7 @@ def heavy_hitters_incremental(
             n_total += int(r["n_p"])
         else:
             mg[r["item"]] = mg.get(r["item"], 0) + int(r["cnt"])
-    prior = _latest_version(spark, subdir, batch_id)
+    prior = read_latest(spark, subdir, batch_id)
     if prior is not None:
         for r in prior.collect():
             if r["item"] is None:
@@ -87,7 +86,7 @@ def heavy_hitters_incremental(
         f"item {new_df.schema[col].dataType.simpleString()}, cnt long",
     ).select("item", "cnt", F.lit(n_total).alias("n_total"))
     state.repartition(state_partitions).write.mode("overwrite").parquet(
-        os.path.join(subdir, f"v{int(batch_id)}")
+        version_path(subdir, batch_id)
     )
     return state
 
@@ -96,7 +95,7 @@ def read_frequency_state(spark, state_dir: str, batch_id: int) -> DataFrame:
     """Newest persisted frequency state strictly below *batch_id* —
     the reader a downstream consumer (or a replayed batch) uses."""
     subdir = os.path.join(state_dir, "freq")
-    out = _latest_version(spark, subdir, batch_id)
+    out = read_latest(spark, subdir, batch_id)
     if out is None:
         raise ValueError(
             f"read_frequency_state: no state versions under {subdir}"

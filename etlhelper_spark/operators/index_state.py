@@ -41,7 +41,12 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup_state import _latest_version, _read_prior
+from ..state.store import (
+    append_path,
+    read_latest,
+    read_prior,
+    version_path,
+)
 
 
 def inverted_index_incremental(
@@ -77,18 +82,18 @@ def inverted_index_incremental(
     per_doc.withColumn("batch", F.lit(int(batch_id))).repartition(
         state_partitions
     ).write.mode("overwrite").parquet(
-        os.path.join(postings_dir, f"batch={int(batch_id)}")
+        append_path(postings_dir, batch_id)
     )
     partial = per_doc.groupBy("token").agg(
         F.count("*").alias("n"), F.sum("n").alias("cf")
     )
-    prior = _latest_version(spark, stats_dir, batch_id)
+    prior = read_latest(spark, stats_dir, batch_id)
     merged = (
         merge_rollup(prior, partial, ["token"])
         if prior is not None
         else partial
     )
-    out = os.path.join(stats_dir, f"v{int(batch_id)}")
+    out = version_path(stats_dir, batch_id)
     merged.repartition(state_partitions).write.mode("overwrite").parquet(out)
     from ..functions.util import read_parquet_state
 
@@ -108,7 +113,7 @@ def read_index_top(
     postings store via a broadcastable semi-join."""
     stats_dir = os.path.join(state_dir, "stats")
     postings_dir = os.path.join(state_dir, "postings")
-    stats = _latest_version(spark, stats_dir, 2**62)
+    stats = read_latest(spark, stats_dir, 2**62)
     if stats is None:
         raise ValueError("read_index_top: empty index state")
     top = (
@@ -116,9 +121,9 @@ def read_index_top(
         .limit(k)
         .select("token", F.col("n").alias("df"), "cf")
     )
-    # _read_prior unions the compacted base (if any) with the live
+    # read_prior unions the compacted base (if any) with the live
     # appends — compact_dedup_state(store="postings") stays readable
-    all_postings = _read_prior(spark, postings_dir, 2**62)
+    all_postings = read_prior(spark, postings_dir, 2**62)
     if all_postings is None:
         raise ValueError("read_index_top: empty postings store")
     postings = (

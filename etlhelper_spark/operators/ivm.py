@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.util import footer_spark_schema, read_parquet_state
+from ..functions.util import footer_spark_schema
+from ..state import store
 
 
 def rollup_partial(
@@ -113,7 +114,6 @@ def streaming_incremental_rollup(
 
     Returns the final state DataFrame; equals the batch rollup over
     all events (q163's oracle)."""
-    import glob
     import os
 
     from pyspark.sql import functions as F
@@ -145,22 +145,13 @@ def streaming_incremental_rollup(
 
     def upsert(batch_df, batch_id: int) -> None:
         partial = rollup_partial(batch_df, keys, {"value_cents": "cents"})
-        prior = [
-            int(os.path.basename(p)[1:])
-            for p in glob.glob(os.path.join(state_dir, "v*"))
-            if int(os.path.basename(p)[1:]) < batch_id
-        ]
-        if prior:
-            base = read_parquet_state(
-                batch_df.sparkSession,
-                os.path.join(state_dir, f"v{max(prior)}"),
-            )
-            merged = merge_rollup(base, partial, keys)
-        else:
-            merged = partial
+        base = store.read_latest(batch_df.sparkSession, state_dir, batch_id)
+        merged = (
+            merge_rollup(base, partial, keys) if base is not None else partial
+        )
         merged.repartition(state_partitions).write.mode(
             "overwrite"
-        ).parquet(os.path.join(state_dir, f"v{batch_id}"))
+        ).parquet(store.version_path(state_dir, batch_id))
 
     q = (
         stream.writeStream.foreachBatch(upsert)
@@ -169,13 +160,7 @@ def streaming_incremental_rollup(
         .start()
     )
     q.awaitTermination()
-    versions = [
-        int(os.path.basename(p)[1:])
-        for p in glob.glob(os.path.join(state_dir, "v*"))
-    ]
-    return read_parquet_state(
-        spark, os.path.join(state_dir, f"v{max(versions)}")
-    )
+    return store.read_latest(spark, state_dir)
 
 
 def rollup_partial_monotonic(
@@ -389,9 +374,6 @@ def streaming_cdc_rollup(
     Starts and drains an availableNow foreachBatch query; read the
     final state with ``read_rollup_state``.
     """
-    import glob
-    import os
-
     sign = F.when(F.col(op_col) == "D", F.lit(-1)).otherwise(F.lit(1))
     signed = stream.withColumn("__sign", sign)
 
@@ -405,22 +387,15 @@ def streaming_cdc_rollup(
 
     def upsert(batch_df, batch_id: int) -> None:
         partial = net_partial(batch_df)
-        prior = [
-            int(os.path.basename(p)[1:])
-            for p in glob.glob(os.path.join(state_dir, "v*"))
-            if int(os.path.basename(p)[1:]) < batch_id
-        ]
-        if prior:
-            base = read_parquet_state(
-                batch_df.sparkSession,
-                os.path.join(state_dir, f"v{max(prior)}"),
-            )
-            merged = merge_rollup(base, partial, keys, drop_zero=False)
-        else:
-            merged = partial
+        base = store.read_latest(batch_df.sparkSession, state_dir, batch_id)
+        merged = (
+            merge_rollup(base, partial, keys, drop_zero=False)
+            if base is not None
+            else partial
+        )
         merged.repartition(state_partitions).write.mode(
             "overwrite"
-        ).parquet(os.path.join(state_dir, f"v{batch_id}"))
+        ).parquet(store.version_path(state_dir, batch_id))
 
     q = (
         signed.writeStream.foreachBatch(upsert)
@@ -456,25 +431,12 @@ def sketch_rollup_incremental(
     5% of exact, q48's self-verification contract).
 
     Returns the new state (keys..., sketch binary)."""
-    import glob as _glob
-    import os
-
     spark = batch_df.sparkSession
     partial = batch_df.groupBy(*keys).agg(
         F.hll_sketch_agg(value_col).alias(sketch_col)
     )
-    versions = []
-    for p in _glob.glob(os.path.join(state_dir, "v*")):
-        try:
-            v = int(os.path.basename(p)[1:])
-        except ValueError:
-            continue
-        if v < batch_id:
-            versions.append(v)
-    if versions:
-        prior = spark.read.parquet(
-            os.path.join(state_dir, f"v{max(versions)}")
-        )
+    prior = store.read_latest(spark, state_dir, batch_id)
+    if prior is not None:
         merged = (
             prior.select(*keys, sketch_col)
             .unionByName(partial)
@@ -483,7 +445,7 @@ def sketch_rollup_incremental(
         )
     else:
         merged = partial
-    out = os.path.join(state_dir, f"v{int(batch_id)}")
+    out = store.version_path(state_dir, batch_id)
     merged.repartition(state_partitions).write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -503,16 +465,11 @@ def read_rollup_state(
     discarded — an inconsistent CDC feed (delete without its matching
     prior insert, or mismatched delete values) becomes a detectable
     error rather than silent data loss."""
-    import glob
-    import os
-
-    versions = [
-        int(os.path.basename(p)[1:])
-        for p in glob.glob(os.path.join(state_dir, "v*"))
-    ]
-    latest = read_parquet_state(
-        spark, os.path.join(state_dir, f"v{max(versions)}")
-    )
+    latest = store.read_latest(spark, state_dir)
+    if latest is None:
+        raise ValueError(
+            f"read_rollup_state: no complete rollup version under {state_dir}"
+        )
     if check_cols:
         bad = F.lit(False)
         for c in check_cols:

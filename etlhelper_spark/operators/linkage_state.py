@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.dedup import _deletion_variants
-from .dedup_state import _current_base, _prior_batches
+from ..state.store import append_path, live_sources
 
 __all__ = [
     "append_linkage_masters",
@@ -53,14 +53,6 @@ def _phonetic_dir(state_dir: str) -> str:
     return os.path.join(state_dir, "phonetic")
 
 
-def _phonetic_sources(state_dir: str) -> list[str]:
-    """Complete pieces of the phonetic key substore (same layout and
-    crash-window tolerance as _sources)."""
-    sub = _phonetic_dir(state_dir)
-    cur = _current_base(sub)
-    return ([cur] if cur else []) + _prior_batches(sub, 2**62)
-
-
 def _sources(state_dir: str) -> list[str]:
     """All complete store pieces: the newest marker-checked erased/
     compacted base (if any) plus every batch append. During the
@@ -70,9 +62,7 @@ def _sources(state_dir: str) -> list[str]:
     verification and erase counts distinct ids (the reason this store
     can use the simple resolution rather than dedup_state's carried-
     batch filtering)."""
-    sub = _variants_dir(state_dir)
-    cur = _current_base(sub)
-    return ([cur] if cur else []) + _prior_batches(sub, 2**62)
+    return live_sources(_variants_dir(state_dir))
 
 
 def _existing_dist(spark, state_dir: str) -> int | None:
@@ -136,7 +126,7 @@ def append_linkage_masters(
             f"linkage index at {state_dir} was built with max_dist="
             f"{prior}; refusing to append with max_dist={d}"
         )
-    has_phonetic = bool(_phonetic_sources(state_dir))
+    has_phonetic = bool(live_sources(_phonetic_dir(state_dir)))
     has_variants = bool(_sources(state_dir))
     if has_variants and phonetic != has_phonetic:
         raise ValueError(
@@ -157,7 +147,7 @@ def append_linkage_masters(
             F.lit(d).alias("d"),
         )
     )
-    target = os.path.join(_variants_dir(state_dir), f"batch={int(batch_id)}")
+    target = append_path(_variants_dir(state_dir), batch_id)
     rows.write.mode("overwrite").parquet(target)
     if phonetic:
         from ..functions.dedup import phonetic_key
@@ -170,7 +160,7 @@ def append_linkage_masters(
             .select("id", "s", phonetic_key(F.col("s")).alias("k"))
         )
         keys.write.mode("overwrite").parquet(
-            os.path.join(_phonetic_dir(state_dir), f"batch={int(batch_id)}")
+            append_path(_phonetic_dir(state_dir), batch_id)
         )
     return target
 
@@ -229,9 +219,8 @@ def forget_from_linkage_state(
     for master records must stop a dirty feed from LINKING to them —
     a forgotten customer whose name variants still match incoming
     records is a compliance failure (the erasure.py contract). Same
-    crash-safe versioned rewrite as every other store: merge base +
-    appends, anti-join the doomed ids out, fresh ``base_v<k+1>``,
-    marker LAST. Returns the number of variant rows erased. As with
+    crash-safe append-store fold as every other store (state/store.py).
+    Returns the number of variant rows erased. As with
     the other stores, a later REPLAY of an old master batch re-admits
     its rows — deleting the record from the upstream master source is
     the caller's half of the contract."""
@@ -249,7 +238,7 @@ def forget_from_linkage_state(
         ).count(),
         state_partitions,
     )
-    if _phonetic_sources(state_dir):
+    if live_sources(_phonetic_dir(state_dir)):
         # the phonetic substore carries the same names — a forgotten
         # master reachable by KEY is the same compliance failure as
         # one reachable by variant
@@ -329,7 +318,7 @@ def link_batch(
         return edit_pairs
     from ..functions.dedup import phonetic_key
 
-    psrc = _phonetic_sources(state_dir)
+    psrc = live_sources(_phonetic_dir(state_dir))
     if not psrc:
         raise ValueError(
             f"linkage index at {state_dir} has no phonetic substore — "

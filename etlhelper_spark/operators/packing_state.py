@@ -46,7 +46,6 @@ batches). This extends the suite's LLM-data-pipeline family
 
 from __future__ import annotations
 
-import glob
 import os
 
 import pandas as pd
@@ -56,6 +55,14 @@ from pyspark.sql import functions as F
 
 from ..functions.packing import _next_fit
 from ..functions.util import in_values, literal_frame
+from ..state.store import (
+    erase_cutover,
+    latest_below,
+    newest_epochs,
+    purge_outranked,
+    read_latest,
+    version_path,
+)
 
 __all__ = [
     "forget_from_pack_state",
@@ -72,6 +79,10 @@ _META_SCHEMA = (
 
 def _meta_path(state_dir: str) -> str:
     return os.path.join(state_dir, "meta")
+
+
+def _assign_dir(state_dir: str) -> str:
+    return os.path.join(state_dir, "assign")
 
 
 def _read_meta(state_dir: str) -> dict | None:
@@ -202,21 +213,14 @@ def pack_incremental(
         slim = slim.where(F.col("n_tokens") <= budget)
 
     cursor_dir = os.path.join(state_dir, "cursor")
-    from ..functions.util import literal_frame, read_sidecar_table
-    from .dedup_state import _scan_versions
+    from ..functions.util import read_sidecar_table
 
     # the cursor is BOUNDED (≤ n_shards rows): read the latest
     # complete version driver-side (pyarrow) and union it in as a
     # literal frame — no per-batch file-scan stage for a 32-row table
-    # (the same _scan_versions completeness/epoch rule _latest_version
-    # applies, so erase epochs and torn dirs behave identically)
-    cursor_versions = [
-        (ke, pth)
-        for ke, pth in _scan_versions(cursor_dir)
-        if ke[0] < int(batch_id)
-    ]
-    if cursor_versions:
-        ctbl = read_sidecar_table(cursor_versions[-1][1])
+    cursor_version = latest_below(cursor_dir, int(batch_id))
+    if cursor_version is not None:
+        ctbl = read_sidecar_table(cursor_version[1])
         cd = ctbl.to_pydict() if ctbl is not None else None
         if cd:
             state_rows = literal_frame(
@@ -319,12 +323,12 @@ def pack_incremental(
     # bytes are themselves the compliance failure). Checking first
     # closes the window: an erased batch's replay folds the cursor
     # only and returns the authoritative epoch's assignments.
-    assign_target = os.path.join(state_dir, "assign", f"v{int(batch_id)}")
-    epoch, authoritative = _assign_versions(state_dir).get(
+    assign_target = version_path(_assign_dir(state_dir), batch_id)
+    epoch, authoritative = newest_epochs(_assign_dir(state_dir)).get(
         int(batch_id), (0, assign_target)
     )
     folded = slim.groupBy("shard").applyInPandas(pack_shard, out_schema)
-    cursor_target = os.path.join(cursor_dir, f"v{int(batch_id)}")
+    cursor_target = version_path(cursor_dir, batch_id)
     cursor_struct = F.struct("shard", "pack_local", "fill", "started")
     if epoch == 0:
         # ONE job for the whole apply: the assignments write is the
@@ -399,73 +403,24 @@ def _write_cursor_version(target: str, rows) -> None:
     """Persist one cursor version (≤ n_shards tiny rows) DRIVER-SIDE
     via pyarrow — the per-batch Spark write job this replaces moved
     ~100 bytes through a full scheduler round trip. Layout-compatible
-    with the Spark write it replaces: one parquet data file with the
-    identical column types, ``_SUCCESS`` marker written LAST (the
-    completeness rule _scan_versions enforces), overwrite semantics
-    (clear, write data, then marker). Object-store-ready (pyarrow.fs)."""
+    with the Spark write it replaces (util.write_sidecar_table: one
+    data file with the identical column types, ``_SUCCESS`` last)."""
     import pyarrow as _pa
-    import pyarrow.parquet as _pq
 
-    from ..functions.util import parquet_fs
+    from ..functions.util import write_sidecar_table
 
-    fs, p = parquet_fs(target)
-    try:
-        fs.delete_dir(p)
-    except (FileNotFoundError, OSError):
-        pass
-    fs.create_dir(p, recursive=True)
     rows = sorted(rows)  # deterministic file bytes (collect order isn't)
-    t = _pa.table(
-        {
-            "shard": _pa.array([r[0] for r in rows], _pa.int32()),
-            "pack_local": _pa.array([r[1] for r in rows], _pa.int64()),
-            "fill": _pa.array([r[2] for r in rows], _pa.int64()),
-            "started": _pa.array([r[3] for r in rows], _pa.bool_()),
-        }
+    write_sidecar_table(
+        target,
+        _pa.table(
+            {
+                "shard": _pa.array([r[0] for r in rows], _pa.int32()),
+                "pack_local": _pa.array([r[1] for r in rows], _pa.int64()),
+                "fill": _pa.array([r[2] for r in rows], _pa.int64()),
+                "started": _pa.array([r[3] for r in rows], _pa.bool_()),
+            }
+        ),
     )
-    with fs.open_output_stream(p + "/part-00000.parquet") as f:
-        _pq.write_table(t, f)
-    with fs.open_output_stream(p + "/_SUCCESS"):
-        pass
-
-
-def _assign_versions(state_dir: str) -> dict[int, tuple[int, str]]:
-    """Newest COMPLETE erase-epoch per batch version: assignments
-    live at ``assign/v<batch>`` (epoch 0) or ``assign/v<batch>.e<n>``
-    (written by forget_from_pack_state); completeness is Spark's own
-    ``_SUCCESS`` marker, so a crashed erase write is invisible and
-    readers always see a complete set. Higher epochs win over
-    replays deliberately — erasure is sticky: an at-least-once
-    redelivery of an already-erased batch must not resurrect the
-    forgotten rows."""
-    import re
-
-    from ..functions.util import list_fileinfos
-
-    adir = os.path.join(state_dir, "assign")
-    scheme = (
-        adir.split("://", 1)[0] + "://" if "://" in adir else ""
-    )
-    fs, infos = list_fileinfos(adir)
-    cand = []
-    for i in infos:
-        m = re.match(r"v(\d+)(?:\.e(\d+))?$", i.base_name)
-        if m and not i.is_file:
-            cand.append(
-                (int(m.group(1)), int(m.group(2) or 0), i.path)
-            )
-    out: dict[int, tuple[int, str]] = {}
-    if not cand:
-        return out
-    from pyarrow.fs import FileType
-
-    marks = fs.get_file_info([p + "/_SUCCESS" for _b, _e, p in cand])
-    for (b, e, p), mk in zip(cand, marks):
-        if mk.type == FileType.NotFound:
-            continue
-        if b not in out or e > out[b][0]:
-            out[b] = (e, scheme + p)
-    return out
 
 
 def read_pack_assignments(
@@ -474,7 +429,7 @@ def read_pack_assignments(
     """Union of every persisted batch's assignments (the accumulated
     packing of the corpus so far), each batch at its newest complete
     erase epoch."""
-    versions = _assign_versions(state_dir)
+    versions = newest_epochs(_assign_dir(state_dir))
     if not versions:
         raise ValueError(f"no pack assignments under {state_dir}")
     paths = [p for _e, p in versions.values()]
@@ -508,15 +463,13 @@ def forget_from_pack_state(
     *ids* is a Python list (bounded requests) or a one-column
     DataFrame (bulk feeds — anti-joined, never collected). Each batch
     version containing doomed rows rewrites to the next erase epoch
-    ``v<batch>.e<n+1>`` (write completes, then older epochs are
-    removed — a crash leaves both, readers take the newest complete
-    one; see _assign_versions). Versions with no doomed rows are not
-    rewritten. Returns the number of erased assignment rows."""
-    import shutil
-
+    (state/store.py's rewrite-store erase cutover). Versions with no
+    doomed rows are not rewritten. Returns the number of erased
+    assignment rows."""
     from pyspark.sql import DataFrame as _DF
 
-    versions = _assign_versions(state_dir)
+    adir = _assign_dir(state_dir)
+    versions = newest_epochs(adir)
     if not versions:
         raise ValueError(
             f"forget_from_pack_state: no assignments under {state_dir}"
@@ -534,21 +487,6 @@ def forget_from_pack_state(
     else:
         doomed = None
         id_list = [int(x) for x in ids]
-    import re
-
-    def purge_outranked(batch: int, keep_path: str) -> None:
-        # exact-match the version (a "v1*" glob would also hit
-        # v10/v12); everything but keep_path goes, INCLUDING stale
-        # lower epochs a crashed or replayed write left behind —
-        # outranked dirs are invisible to readers but physically
-        # retain forgotten rows
-        for p in glob.glob(os.path.join(state_dir, "assign", "v*")):
-            m = re.match(
-                r"v(\d+)(?:\.e(\d+))?$", os.path.basename(p)
-            )
-            if m and int(m.group(1)) == batch and p != keep_path:
-                shutil.rmtree(p, ignore_errors=True)
-
     meta = _read_meta(state_dir)
     sch = (
         _assign_schema(meta["id_col"])
@@ -584,19 +522,10 @@ def forget_from_pack_state(
                 # stale outranked dirs (e.g. a replay that recreated
                 # the raw v<batch> after an earlier erase) may still
                 # hold previously-forgotten rows: purge them anyway
-                purge_outranked(batch, path)
+                purge_outranked(adir, batch, path)
                 continue
             total += n
-            target = os.path.join(
-                state_dir, "assign", f"v{batch}.e{epoch + 1}"
-            )
-            kept.repartition(state_partitions).write.mode(
-                "overwrite"
-            ).parquet(target)
-            # older epochs (and the raw v<batch>) go only after the
-            # new epoch is complete — a crash before this leaves both
-            # visible and readers take the newest
-            purge_outranked(batch, target)
+            erase_cutover(kept, adir, (batch, epoch), state_partitions)
     finally:
         if doomed is not None:
             doomed.unpersist()
@@ -671,12 +600,8 @@ def read_pack_cursor(
 ) -> DataFrame:
     """The per-shard cursor as of the newest version (strictly below
     *batch_id* when given)."""
-    from .dedup_state import _latest_version
-
     bound = int(batch_id) if batch_id is not None else 2**62
-    cur = _latest_version(
-        spark, os.path.join(state_dir, "cursor"), bound
-    )
+    cur = read_latest(spark, os.path.join(state_dir, "cursor"), bound)
     if cur is None:
         raise ValueError(f"no pack cursor under {state_dir}")
     return cur

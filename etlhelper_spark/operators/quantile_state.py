@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.util import literal_frame
-from .dedup_state import _latest_version
+from ..state.store import read_latest, version_path
 
 __all__ = [
     "quantile_sketch_incremental",
@@ -67,7 +67,7 @@ def quantile_sketch_incremental(
         ),
         F.count(F.lit(1)).alias("n"),
     ).first()
-    prior = _latest_version(spark, subdir, batch_id)
+    prior = read_latest(spark, subdir, batch_id)
     if prior is not None:
         pr = prior.first()
         if int(pr["k"]) != k_i:
@@ -101,15 +101,15 @@ def quantile_sketch_incremental(
         "sk binary, n long, k long",
     )
     state.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(subdir, f"v{int(batch_id)}")
+        version_path(subdir, batch_id)
     )
-    return spark.read.parquet(os.path.join(subdir, f"v{int(batch_id)}"))
+    return spark.read.parquet(version_path(subdir, batch_id))
 
 
 def read_quantile_state(spark, state_dir: str, batch_id: int) -> DataFrame:
     """Newest persisted quantile state strictly below *batch_id*."""
     subdir = os.path.join(state_dir, "kll")
-    out = _latest_version(spark, subdir, batch_id)
+    out = read_latest(spark, subdir, batch_id)
     if out is None:
         raise ValueError(
             f"read_quantile_state: no state versions under {subdir}"

@@ -31,7 +31,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup_state import _latest_version
+from ..state.store import guard_replay, read_latest, version_path
 
 __all__ = ["weighted_sample_incremental"]
 
@@ -71,13 +71,12 @@ def weighted_sample_incremental(
 
     Rows with weight <= 0 or NULL can never win a proportional race
     and are excluded, matching the batch sampler."""
-    from .dedup_state import _rewrite_batch_guard
 
     spark = new_df.sparkSession
     subdir = os.path.join(state_dir, "wsample")
-    _rewrite_batch_guard(subdir, batch_id)
+    guard_replay(subdir, batch_id)
     scored = _es_scored(new_df, weight_col, hash_col)
-    prior = _latest_version(spark, subdir, batch_id)
+    prior = read_latest(spark, subdir, batch_id)
     pool = scored if prior is None else scored.unionByName(prior)
     sample = (
         pool.orderBy(F.col("__es_key").desc(), F.col(hash_col).asc())
@@ -85,6 +84,6 @@ def weighted_sample_incremental(
         .localCheckpoint()  # pin before the version write below
     )
     sample.repartition(state_partitions).write.mode("overwrite").parquet(
-        os.path.join(subdir, f"v{int(batch_id)}")
+        version_path(subdir, batch_id)
     )
     return sample.drop("__es_key")

@@ -37,7 +37,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup_state import _latest_version
+from ..state.store import guard_replay, read_latest, version_path
 
 __all__ = [
     "golden_incremental",
@@ -121,11 +121,10 @@ def golden_incremental(
     (same columns, same priority map every batch) is the histogram-
     edges discipline: the ord struct's meaning must not drift between
     batches — a changed schema fails the merge join loudly."""
-    from .dedup_state import _rewrite_batch_guard
 
     spark = new_df.sparkSession
     subdir = os.path.join(state_dir, "golden")
-    _rewrite_batch_guard(subdir, int(batch_id))
+    guard_replay(subdir, int(batch_id))
     batch_state = _golden_structs(
         new_df,
         cluster_col,
@@ -135,7 +134,7 @@ def golden_incremental(
         source_col,
         source_priority,
     )
-    prior = _latest_version(spark, subdir, int(batch_id))
+    prior = read_latest(spark, subdir, int(batch_id))
     if prior is None:
         merged = batch_state
     else:
@@ -167,7 +166,7 @@ def golden_incremental(
         merged = a.join(
             b, a["cluster_id"].eqNullSafe(b["cluster_id"]), "full"
         ).select(*cols)
-    target = os.path.join(subdir, f"v{int(batch_id)}")
+    target = version_path(subdir, batch_id)
     merged.write.mode("overwrite").parquet(target)
     return target
 
@@ -200,11 +199,10 @@ def remap_golden_clusters(
     *batch_id*, overwrites ``v<batch_id>`` — an at-least-once
     redelivery recomputes the identical directory. Returns the
     version directory written."""
-    from .dedup_state import _rewrite_batch_guard
 
     subdir = os.path.join(state_dir, "golden")
-    _rewrite_batch_guard(subdir, int(batch_id))
-    state = _latest_version(spark, subdir, int(batch_id))
+    guard_replay(subdir, int(batch_id))
+    state = read_latest(spark, subdir, int(batch_id))
     if state is None:
         raise ValueError(f"no golden state at {state_dir}")
     oc, nc = mapping_df.columns[0], mapping_df.columns[1]
@@ -257,7 +255,7 @@ def remap_golden_clusters(
             for c in win_cols
         ],
     )
-    target = os.path.join(subdir, f"v{int(batch_id)}")
+    target = version_path(subdir, batch_id)
     merged.repartition(state_partitions).write.mode("overwrite").parquet(
         target
     )
@@ -322,7 +320,7 @@ def read_golden_state(spark, state_dir: str) -> DataFrame:
     """The newest golden-record state in golden_records' OUTPUT shape:
     (cluster_id, n_records, <f>, <f>__src_id[, <f>__source] per
     field) — the ord structs are internal and dropped here."""
-    state = _latest_version(spark, os.path.join(state_dir, "golden"), 2**62)
+    state = read_latest(spark, os.path.join(state_dir, "golden"), 2**62)
     if state is None:
         raise ValueError(f"no golden state at {state_dir}")
     cols = [F.col("cluster_id"), F.col("n_records")]

@@ -454,10 +454,8 @@ def test_compaction_crash_windows_never_hide_state(spark, state_dir):
     import glob
     import os
 
-    from etlhelper_spark.operators.dedup_state import (
-        _current_base,
-        compact_dedup_state,
-    )
+    from etlhelper_spark.operators.dedup_state import compact_dedup_state
+    from etlhelper_spark.state.store import current_base
 
     b0 = spark.createDataFrame(
         [(10, "alpha"), (11, "beta")], ["doc_id", "text"]
@@ -476,11 +474,11 @@ def test_compaction_crash_windows_never_hide_state(spark, state_dir):
     for p in glob.glob(os.path.join(sub, "batch=*")):
         shutil.copytree(p, debris[os.path.basename(p)])
     assert compact_dedup_state(spark, state_dir, "exact") == 2
-    assert _current_base(sub).endswith("base_v1")
+    assert current_base(sub).endswith("base_v1")
 
     # window A: markerless base_v2 (mid-write crash) is invisible
     os.makedirs(os.path.join(sub, "base_v2"), exist_ok=True)
-    assert _current_base(sub).endswith("base_v1")
+    assert current_base(sub).endswith("base_v1")
     expected = {20: (10, False), 21: (2, False), 22: (22, True)}
     b2 = spark.createDataFrame(
         [(20, "alpha"), (21, "gamma"), (22, "delta")], ["doc_id", "text"]
@@ -501,7 +499,7 @@ def test_compaction_crash_windows_never_hide_state(spark, state_dir):
     # complete base_v2, overwriting window A's markerless dir
     folded = compact_dedup_state(spark, state_dir, "exact")
     assert folded == 3  # batch=0, batch=1 (restored), batch=2
-    assert _current_base(sub).endswith("base_v2")
+    assert current_base(sub).endswith("base_v2")
     assert os.path.exists(os.path.join(sub, "base_v2", "_COMPACTED"))
     assert not os.path.exists(os.path.join(sub, "base_v1"))
     assert glob.glob(os.path.join(sub, "batch=*")) == []

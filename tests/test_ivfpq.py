@@ -384,7 +384,6 @@ def test_compact_crash_windows(spark, vecs, versioned_index):
     import shutil as sh
 
     from etlhelper_spark.functions.ivfpq import (
-        _INGEST_MARKER,
         compact_ivfpq_ingest,
         ivfpq_ingest_watermark,
     )

@@ -56,6 +56,17 @@ def _scan_module(path: str) -> set[str]:
         if not isinstance(node, ast.Call):
             continue
         fn = node.func
+        fname = getattr(fn, "attr", getattr(fn, "id", None))
+        if (
+            fname in ("version_path", "append_path")
+            and node.args
+            and isinstance(node.args[0], ast.Name)
+            and node.args[0].id == "state_dir"
+        ):
+            # state/store.py's path helpers on state_dir itself: a
+            # store rooted at the state dir (the ivm v<batch> convention)
+            stores.add("<versioned>")
+            continue
         if not (isinstance(fn, ast.Attribute) and fn.attr == "join"):
             continue
         if not node.args or len(node.args) < 2:
