@@ -84,13 +84,7 @@ class SparkConnection:
             for p in sorted(glob.glob(os.path.join(self.path, f"*.{ext}"))):
                 name = os.path.splitext(os.path.basename(p))[0]
                 validate_identifier(name)
-                if ext == "parquet":
-                    from .sources import read_parquet_table
-
-                    df = read_parquet_table(self.spark, p)
-                else:
-                    df = self._format_reader(ext).load(p)
-                df.createOrReplaceTempView(name)
+                self._load(p, ext).createOrReplaceTempView(name)
                 self._registered.add(name)
                 tables.append(name)
         return tables
@@ -111,6 +105,16 @@ class SparkConnection:
         elif fmt == "xml":
             reader = reader.option("rowTag", "row")
         return reader.format(fmt)
+
+    def _load(self, path: str, fmt: str) -> DataFrame:
+        """One table of the files backend. Parquet takes its schema from
+        the footer driver-side (sources.read_parquet_table), so the read
+        schedules no schema-inference job."""
+        if fmt == "parquet":
+            from .sources import read_parquet_table
+
+            return read_parquet_table(self.spark, path)
+        return self._format_reader(fmt).load(path)
 
     # ------------------------------------------------------------------
     # common primitives
@@ -197,13 +201,7 @@ class SparkConnection:
                 reader = reader.option(k, v)
             return reader.load()
         if self.path is not None and os.path.exists(self.table_path(table)):
-            if self.file_format == "parquet":
-                from .sources import read_parquet_table
-
-                return read_parquet_table(self.spark, self.table_path(table))
-            return self._format_reader(self.file_format).load(
-                self.table_path(table)
-            )
+            return self._load(self.table_path(table), self.file_format)
         return self.spark.table(table)
 
     def write_dataframe(
@@ -265,8 +263,8 @@ class SparkConnection:
                 writer = writer.partitionBy(*partition_by)
             writer.save(self.table_path(table))
             # refresh the temp view so subsequent queries see new data
-            self._format_reader(self.file_format).load(
-                self.table_path(table)
+            self._load(
+                self.table_path(table), self.file_format
             ).createOrReplaceTempView(table)
             self._registered.add(table)
 

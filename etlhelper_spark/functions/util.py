@@ -764,6 +764,48 @@ def parquet_schema_names(src_dir: str, max_depth: int = 2):
     return None
 
 
+def parquet_data_files(path: str):
+    """``(fs, [FileInfo…])`` of the parquet data files Spark reads for
+    *path*: a single ``.parquet`` file is its own data file; under a
+    directory, every ``*.parquet`` at any depth except where a path
+    segment below *path* starts with ``_`` or ``.`` (Spark's
+    visibility rule: ``_SUCCESS``, ``_pivots``, ``.crc`` and staging
+    dirs never count). Paths may be local or any pyarrow.fs URI."""
+    fs, p = parquet_fs(path)
+    try:
+        own = fs.get_file_info(p)
+    except OSError:
+        return fs, []
+    if own.is_file:
+        return fs, [own] if own.base_name.endswith(".parquet") else []
+    fs, infos = list_fileinfos(path, recursive=True)
+    base_len = len(str(path).rstrip("/").split("://")[-1].split("/"))
+    return fs, [
+        i
+        for i in infos
+        if i.is_file
+        and i.base_name.endswith(".parquet")
+        and not any(
+            seg.startswith(("_", "."))
+            for seg in i.path.rstrip("/").split("/")[base_len:]
+        )
+    ]
+
+
+def parquet_stamp(path: str):
+    """``(file, mtime_ns, size)`` of the newest data file of *path* (see
+    :func:`parquet_data_files`), or None when it has none — the
+    validity key for driver-side memos of a table's footer. An
+    overwrite replaces every data file and an append adds a newer one,
+    so either changes the stamp; a memo keyed on the path alone keeps
+    serving the schema of files that no longer exist."""
+    _fs, infos = parquet_data_files(path)
+    if not infos:
+        return None
+    newest = max(infos, key=lambda i: (i.mtime_ns or 0, i.path))
+    return newest.path, newest.mtime_ns, newest.size
+
+
 def footer_spark_schema(*paths: str, spark=None):
     """Spark schema of a parquet table or STATE directory, derived
     DRIVER-SIDE from the first data file's footer (pyarrow
@@ -812,28 +854,8 @@ def footer_spark_schema(*paths: str, spark=None):
         )
 
     for path in paths:
-        fs, infos = list_fileinfos(path, recursive=True)
-        base_len = len(
-            str(path).rstrip("/").split("://")[-1].split("/")
-        )
-        hits = []
-        for i in infos:
-            if not (i.is_file and i.base_name.endswith(".parquet")):
-                continue
-            rel = i.path.rstrip("/").split("/")[base_len:]
-            if any(p.startswith(("_", ".")) for p in rel):
-                continue
-            hits.append(i.path)
-        if not hits and str(path).rstrip("/").endswith(".parquet"):
-            # a single parquet FILE, not a directory (FileSelector
-            # only enumerates directories): its own footer is the
-            # schema source
-            fs2, p2 = parquet_fs(path)
-            try:
-                if fs2.get_file_info(p2).is_file:
-                    fs, hits = fs2, [p2]
-            except OSError:
-                pass
+        fs, infos = parquet_data_files(path)
+        hits = [i.path for i in infos]
         if not hits:
             continue
         with fs.open_input_file(min(hits)) as f:
@@ -888,17 +910,13 @@ def parquet_partition_counts(path: str, key: str) -> dict[int, int]:
     pyarrow.fs URI."""
     import pyarrow.parquet as _pq
 
-    fs, infos = list_fileinfos(path, recursive=True)
+    fs, infos = parquet_data_files(path)
     base_len = len(str(path).rstrip("/").split("://")[-1].split("/"))
     out: dict[int, int] = {}
     prefix = f"{key}="
     for i in infos:
-        if not (i.is_file and i.base_name.endswith(".parquet")):
-            continue
-        rel_parts = i.path.rstrip("/").split("/")[base_len:]
-        if any(p.startswith(("_", ".")) for p in rel_parts):
-            continue
-        vals = [p for p in rel_parts[:-1] if p.startswith(prefix)]
+        rel_dirs = i.path.rstrip("/").split("/")[base_len:-1]
+        vals = [p for p in rel_dirs if p.startswith(prefix)]
         if not vals:
             continue
         k = int(vals[0][len(prefix):])
@@ -916,16 +934,9 @@ def count_parquet_rows(path: str) -> int:
     count). Paths may be local or any pyarrow.fs URI."""
     import pyarrow.parquet as _pq
 
-    fs, infos = list_fileinfos(path, recursive=True)
-    base_len = len(str(path).rstrip("/").split("://")[-1].split("/"))
+    fs, infos = parquet_data_files(path)
     total = 0
     for i in infos:
-        if not (i.is_file and i.base_name.endswith(".parquet")):
-            continue
-        # hidden rule applies to every path segment BELOW the base dir
-        rel_parts = i.path.rstrip("/").split("/")[base_len:]
-        if any(p.startswith(("_", ".")) for p in rel_parts):
-            continue
         with fs.open_input_file(i.path) as f:
             total += _pq.ParquetFile(f).metadata.num_rows
     return total

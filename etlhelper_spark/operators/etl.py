@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import copy as _copy
 import logging
+import time
 from collections import namedtuple
 from itertools import chain, islice, zip_longest
 from typing import Any, Callable, Iterable, Iterator, Mapping, Sequence
@@ -33,6 +34,7 @@ from pyspark.sql import DataFrame
 from ..abort import clear_abort_event, raise_for_abort, _register_session
 from ..connect import SparkConnection
 from ..exceptions import (
+    ETLHelperError,
     ETLHelperExtractError,
     ETLHelperInsertError,
     ETLHelperQueryError,
@@ -46,6 +48,9 @@ logger = logging.getLogger("etlhelper_spark")
 #: default chunk size — fetch, insert and commit granularity
 #: (reference: etl.py:45)
 CHUNKSIZE = 5000
+
+#: longest wait for a committed write's observed row count
+_METRICS_WAIT_S = 120.0
 
 # DML statements routed to the driver-side RETURNING shim on jdbc
 # connections (Spark's JDBC query option cannot execute DML)
@@ -157,7 +162,9 @@ def iter_chunks(
     checked per chunk. The backend executes the query itself —
     distributed — before rows stream back. ``limit`` (internal; used
     by fetchone) pushes a LIMIT into the plan so the backend stops
-    early instead of computing the full result.
+    early instead of computing the full result, and the bounded result
+    arrives in one ``collect`` instead of the local iterator's socket
+    job.
     """
     clear_abort_event()
     _register_session(conn.spark)
@@ -199,9 +206,15 @@ def iter_chunks(
         df = df.limit(limit)
     create_row = row_factory(df.columns)
 
+    def spark_row_stream():
+        if limit is not None:
+            yield from df.collect()
+        else:
+            yield from df.toLocalIterator(prefetchPartitions=True)
+
     first_pass = True
     n_rows = 0
-    it = df.toLocalIterator(prefetchPartitions=True)
+    it = spark_row_stream()
     while True:
         raise_for_abort()
         try:
@@ -541,20 +554,22 @@ def load(
     Columns come from the first transformed row, peeked without
     consuming the iterator (reference chain re-attach, etl.py:545-548);
     extra columns in later rows are dropped, matching the documented
-    reference behavior. Empty/None input returns (0, 0). A DataFrame
-    input takes the fully-distributed path.
+    reference behavior. Empty/None input returns (0, 0).
+
+    A DataFrame input takes the fully-distributed path: one pass over
+    the frame (see :func:`observed_write`), with ``on_error`` called
+    once, after the write commits, with the rows the existing target
+    rejects.
     """
     validate_identifier(table)
 
     if isinstance(rows, DataFrame):
+        clear_abort_event()
+        _register_session(conn.spark)
         df = apply_transform(rows, transform)
-        n = df.count()
-        failed = 0
-        if on_error is not None:
-            df, failed = _quarantine_against_target(df, conn, table, on_error)
-        conn.write_dataframe(df, table, batchsize=chunk_size)
-        logger.info("%s rows processed in total", n)
-        return n, failed
+        return observed_write(
+            df, conn, table, on_error=on_error, batchsize=chunk_size
+        )
 
     if rows is None:
         return 0, 0
@@ -675,8 +690,13 @@ def copy_rows(
     Architecturally upgraded per SURVEY §3.3: instead of the
     reference's sequential driver-pumped chunk alternation, the
     DataFrame flows executor-side from source scan through transform to
-    the destination batch writer — partition-parallel end to end. The
-    (processed, failed) contract is preserved.
+    the destination batch writer — partition-parallel end to end, and
+    the write is the only pass over the source (see
+    :func:`observed_write`; a plain-callable transform adds its ≤100-row
+    schema sample). The (processed, failed) contract is preserved;
+    ``on_error`` is called once, after the write commits, with the rows
+    the existing target rejects — the reference's write-then-on_error
+    order per chunk (etl.py:305-320).
     """
     clear_abort_event()
     _register_session(source_conn.spark)
@@ -685,41 +705,88 @@ def copy_rows(
     table, columns = _parse_insert(insert_query)
     if columns:
         df = df.select(*columns)
-    n = df.count()
-    failed = 0
+    return observed_write(
+        df, dest_conn, table, on_error=on_error, batchsize=chunk_size
+    )
+
+
+def observed_write(
+    df: DataFrame,
+    conn: SparkConnection,
+    table: str,
+    on_error: Callable[[list[FailedRow]], None] | None = None,
+    mode: str = "append",
+    batchsize: int = CHUNKSIZE,
+) -> tuple[int, int]:
+    """Write *df* to *table* as the ONLY action on it and return
+    ``(processed, failed)``.
+
+    The row count — and, when *on_error* is set and *table* already
+    exists, the rows its schema rejects (jdbc_sink.annotate_rows: a
+    failed cast or a NOT NULL violation) — ride the write through an
+    ``Observation``, so the source scan and any Python transform run
+    once, not once per count/collect/write. Rejects are filtered out
+    of the write and passed to *on_error* as FailedRow pairs after the
+    write commits; a write that raises surfaces as an ETLHelper error
+    and never reaches *on_error*. A new table has nothing to validate
+    against and takes every row."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from .jdbc_sink import annotate_rows
+
+    target_schema = None
     if on_error is not None:
-        df, failed = _quarantine_against_target(
-            df, dest_conn, table, on_error
+        try:
+            target_schema = conn.table_dataframe(table).schema
+        except Exception:
+            pass  # new table: nothing to validate against
+    metrics = [F.count(F.lit(1)).alias("processed")]
+    if target_schema is not None:
+        df = annotate_rows(df, target_schema)
+        metrics.append(
+            F.collect_list(
+                F.when(F.col("__error").isNotNull(), F.struct(*df.columns))
+            ).alias("rejects")
         )
-    dest_conn.write_dataframe(df, table, batchsize=chunk_size)
-    logger.info("%s rows processed (%s failed)", n, failed)
-    return n, failed
-
-
-def _quarantine_against_target(
-    df: DataFrame, dest_conn: SparkConnection, table: str, on_error
-) -> tuple[DataFrame, int]:
-    """If the destination table already exists, validate rows against
-    its schema executor-side and dead-letter the rejects to on_error
-    as FailedRow pairs (reference on_error contract, etl.py:305-320,
-    distributed via jdbc_sink.validate_rows)."""
-    from .jdbc_sink import validate_rows
-
+    obs = Observation()
+    out = df.observe(obs, *metrics)
+    if target_schema is not None:
+        out = out.where(F.col("__error").isNull()).drop("__error")
     try:
-        target_schema = dest_conn.table_dataframe(table).schema
-    except Exception:
-        return df, 0  # new table: nothing to validate against
-    valid, quarantine = validate_rows(df, target_schema)
+        conn.write_dataframe(out, table, mode=mode, batchsize=batchsize)
+    except ETLHelperError:
+        raise
+    except Exception as exc:
+        raise_for_abort()
+        raise ETLHelperInsertError(
+            f"SQL insert raised an error.\n\nTable: {table}\n\n{exc}\n"
+        ) from exc
+    # Spark posts the metrics from a listener on its event bus, usually
+    # within milliseconds of the write returning; bound the wait so a
+    # dropped event cannot hang the call the way Observation.get would
+    metrics_posted = obs._jo.future()
+    deadline = time.monotonic() + _METRICS_WAIT_S
+    while not metrics_posted.isCompleted():
+        if time.monotonic() > deadline:
+            raise ETLHelperInsertError(
+                f"Write to {table} committed, but Spark did not report "
+                f"its row count within {_METRICS_WAIT_S:.0f} s"
+            )
+        time.sleep(0.002)
+    observed = obs.get
     failed_rows = [
         FailedRow(
             {k: v for k, v in row.asDict().items() if k != "__error"},
             ETLHelperInsertError(row["__error"]),
         )
-        for row in quarantine.collect()
+        for row in observed.get("rejects", [])
     ]
     if failed_rows:
         on_error(failed_rows)
-    return valid, len(failed_rows)
+    processed = observed["processed"]
+    logger.info("%s rows processed (%s failed)", processed, len(failed_rows))
+    return processed, len(failed_rows)
 
 
 def copy_table_rows(
@@ -733,7 +800,9 @@ def copy_table_rows(
     chunk_size: int = CHUNKSIZE,
 ) -> tuple[int, int]:
     """Whole-table copy; target defaults to the source name
-    (reference: etl.py:456-506)."""
+    (reference: etl.py:456-506). One pass over the source, with
+    ``on_error`` called after the write commits — as :func:`copy_rows`.
+    """
     validate_identifier(table)
     target = target or table
     validate_identifier(target)
@@ -741,10 +810,6 @@ def copy_table_rows(
     _register_session(source_conn.spark)
     df = source_conn.table_dataframe(table)
     df = apply_transform(df, transform)
-    n = df.count()
-    failed = 0
-    if on_error is not None:
-        df, failed = _quarantine_against_target(df, dest_conn, target, on_error)
-    dest_conn.write_dataframe(df, target, batchsize=chunk_size)
-    logger.info("%s rows processed in total", n)
-    return n, failed
+    return observed_write(
+        df, dest_conn, target, on_error=on_error, batchsize=chunk_size
+    )

@@ -7,11 +7,13 @@ run Python (no JVM JDBC access from a foreachPartition closure), so
 re-running per-row statements on executors is the wrong shape anyway.
 The scalable Spark-first equivalents implemented here:
 
-1. **validate_rows** — executor-side row-level dead-lettering *before*
-   the write: schema/nullability violations are split into a
-   quarantine DataFrame carrying the error reason (the distributed
-   analogue of the reference's FailedRow path, reference:
-   etl.py:48-50,342-365). Pure DataFrame ops; works on any backend.
+1. **annotate_rows / validate_rows** — executor-side row-level
+   dead-lettering: schema/nullability violations are flagged with the
+   error reason (the distributed analogue of the reference's FailedRow
+   path, reference: etl.py:48-50,342-365). The copy/load operators
+   filter them out of the write and collect them from the write's own
+   pass (``etl.observed_write``). Pure DataFrame ops; works on any
+   backend.
 
 2. **stage_and_merge** — custom-statement writes (UPDATE / upsert /
    INSERT..SELECT with expressions): the DataFrame is written
@@ -45,25 +47,22 @@ from pyspark.sql.types import StructType
 from ..connect import SparkConnection
 from ..exceptions import ETLHelperInsertError
 from ..validation import validate_identifier
+from .etl import observed_write
 
 
 # ----------------------------------------------------------------------
 # 1. executor-side row validation (distributed dead-lettering)
 # ----------------------------------------------------------------------
-def validate_rows(
-    df: DataFrame,
-    target_schema: StructType,
-) -> tuple[DataFrame, DataFrame]:
-    """Split *df* into (valid, quarantine) against *target_schema*.
+def annotate_rows(df: DataFrame, target_schema: StructType) -> DataFrame:
+    """*df* with its columns cast to *target_schema* plus an ``__error``
+    column: the reason a row would fail the write, or NULL.
 
-    A row is quarantined when a column fails to cast to the target
-    type (non-null value becomes null after cast) or violates a
-    not-null constraint. The quarantine DataFrame carries every
-    original column as string plus an ``__error`` reason column —
-    the distributed FailedRow.
-
-    Entirely JVM-side (casts + boolean algebra): no UDF, no shuffle.
-    """
+    A row fails when a column fails to cast to the target type (a
+    non-null value becomes null after the cast) or violates a not-null
+    constraint. Columns absent from the target pass through unchanged.
+    Entirely JVM-side (casts + boolean algebra): no UDF, no shuffle, no
+    job — the caller's action evaluates it in the same pass as the
+    write."""
     src_types = {f.name: f.dataType for f in df.schema.fields}
     target_fields = {f.name: f for f in target_schema.fields}
     checks = []
@@ -99,7 +98,18 @@ def validate_rows(
     error = (
         F.coalesce(*checks) if checks else F.lit(None).cast("string")
     )
-    annotated = df.select(*out_cols, error.alias("__error"))
+    return df.select(*out_cols, error.alias("__error"))
+
+
+def validate_rows(
+    df: DataFrame,
+    target_schema: StructType,
+) -> tuple[DataFrame, DataFrame]:
+    """Split *df* into (valid, quarantine) against *target_schema*
+    (see :func:`annotate_rows` for what fails a row). The quarantine
+    DataFrame carries the cast columns plus the ``__error`` reason
+    column — the distributed FailedRow."""
+    annotated = annotate_rows(df, target_schema)
     valid = annotated.where(F.col("__error").isNull()).drop("__error")
     quarantine = annotated.where(F.col("__error").isNotNull())
     return valid, quarantine
@@ -120,15 +130,18 @@ def stage_and_merge(
     run *merge_sql_template* (with ``{staging}`` substituted) as one
     driver-side statement.
 
-    Returns the row count staged. The merge statement executes in a
-    single transaction on the target database — restartable and
-    exactly-once from the target's point of view (rerunning re-stages
-    and re-merges idempotently for MERGE/ON CONFLICT statements).
+    Returns the row count staged, read from the staging write itself
+    (one pass over *df*, no separate count). The merge statement
+    executes in a single transaction on the target database —
+    restartable and exactly-once from the target's point of view
+    (rerunning re-stages and re-merges idempotently for MERGE/ON
+    CONFLICT statements).
     """
     staging = staging_table or f"etlhelper_staging_{uuid.uuid4().hex[:12]}"
     validate_identifier(staging)
-    n = df.count()
-    conn.write_dataframe(df, staging, mode="overwrite", batchsize=batchsize)
+    n, _ = observed_write(
+        df, conn, staging, mode="overwrite", batchsize=batchsize
+    )
     try:
         conn.execute_statement(merge_sql_template.format(staging=staging))
     finally:

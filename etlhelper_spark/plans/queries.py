@@ -12152,7 +12152,7 @@ def q230_chi2_vs_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q231_quarantine_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END reject accounting through the on_error quarantine
     path (reference on_error contract, etlhelper etl.py:305-320;
-    distributed here as operators/jdbc_sink.py::validate_rows — pure
+    distributed here as operators/jdbc_sink.py::annotate_rows — pure
     JVM casts + boolean algebra, no UDF, no shuffle): a copy_rows load
     with PLANTED constraint violations (event_id % 89 == 0 rows carry
     a non-numeric code against the target's int column) must (a)

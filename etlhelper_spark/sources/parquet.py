@@ -10,33 +10,35 @@ to microseconds, so downstream operators see real timestamps.
 
 from __future__ import annotations
 
-import glob
-import os
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.util import footer_spark_schema, parquet_fs, parquet_stamp
 
-@lru_cache(maxsize=512)
+
 def nanos_timestamp_columns(path: str) -> tuple[str, ...]:
     """Names of timestamp[ns] columns in a parquet file/directory."""
-    import pyarrow.parquet as pq
+    return _nanos_columns(path, parquet_stamp(path))
 
-    target = path
-    if os.path.isdir(path):
-        members = sorted(glob.glob(os.path.join(path, "*.parquet"))) or sorted(
-            glob.glob(os.path.join(path, "**/*.parquet"), recursive=True)
-        )
-        if not members:
-            return ()
-        target = members[0]
-    try:
-        schema = pq.read_schema(target)
-    except Exception:
+
+@lru_cache(maxsize=512)
+def _nanos_columns(path: str, stamp) -> tuple[str, ...]:
+    """:func:`nanos_timestamp_columns` of the table whose newest data
+    file is *stamp* (``functions.util.parquet_stamp``): the key changes
+    whenever the table's files do, so a rewritten table is re-read."""
+    if stamp is None:
         return ()
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
+    fs, _ = parquet_fs(path)
+    try:
+        with fs.open_input_file(stamp[0]) as f:
+            schema = pq.ParquetFile(f).schema_arrow
+    except Exception:
+        return ()
     return tuple(
         f.name
         for f in schema
@@ -44,28 +46,27 @@ def nanos_timestamp_columns(path: str) -> tuple[str, ...]:
     )
 
 
-_SCHEMA_CACHE: dict[str, object] = {}
+_SCHEMA_CACHE: dict[tuple, object] = {}
 
 
-def _table_spark_schema(spark: SparkSession, path: str):
-    """Driver-side footer schema for a TABLE path, memoized per path
-    under the same session-immutability contract
-    :func:`nanos_timestamp_columns` already assumes for its own cache
-    (plus conf stability: configure_session pins the timestamp confs
-    for the session's lifetime). Only resolvable schemas are cached: a
-    path that yields None (no data yet, or a type whose inference
-    needs footer metadata the conversion cannot honor — nanosecond
-    timestamps, binary) stays uncached so it is re-probed if the
-    table appears later."""
-    if path in _SCHEMA_CACHE:
-        return _SCHEMA_CACHE[path]
-    from ..functions.util import footer_spark_schema
-
-    schema = footer_spark_schema(path, spark=spark)
+def _table_spark_schema(spark: SparkSession, path: str, stamp):
+    """Driver-side footer schema for a TABLE path, memoized per
+    ``(path, stamp)`` — *stamp* names the table's newest data file with
+    its mtime and size, so an overwrite or append re-reads the footer
+    instead of serving the schema of files that are gone. The session's
+    timestamp confs are pinned by configure_session for its lifetime.
+    Only resolvable schemas are cached: a path that yields None (no
+    data yet, or a type whose inference needs footer metadata the
+    conversion cannot honor — nanosecond timestamps, binary) is
+    re-probed on every read."""
+    key = (path, stamp)
+    if key in _SCHEMA_CACHE:
+        return _SCHEMA_CACHE[key]
+    schema = footer_spark_schema(path, spark=spark) if stamp else None
     if schema is not None:
         while len(_SCHEMA_CACHE) >= 512:
             _SCHEMA_CACHE.pop(next(iter(_SCHEMA_CACHE)))
-        _SCHEMA_CACHE[path] = schema
+        _SCHEMA_CACHE[key] = schema
     return schema
 
 
@@ -91,18 +92,19 @@ def read_parquet_table(
     leave it off for stable-schema tables: at 100 TB the footer sweep
     alone touches millions of files."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    stamp = parquet_stamp(path)
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     else:
-        schema = _table_spark_schema(spark, path)
+        schema = _table_spark_schema(spark, path, stamp)
         if schema is not None:
             reader = reader.schema(schema)
     df = reader.parquet(path)
     long_cols = {
         f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"
     }
-    for col in nanos_timestamp_columns(path):
+    for col in _nanos_columns(path, stamp):
         # only convert when Spark actually surfaced the column as a
         # long: INT96 timestamps also look like timestamp[ns] to
         # pyarrow but Spark reads them natively as TIMESTAMP

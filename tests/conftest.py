@@ -32,3 +32,13 @@ def dest_conn(spark):
     d = tempfile.mkdtemp(prefix="ehs_test_")
     yield connect_files(d, spark=spark)
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture()
+def call_jobs(spark):
+    """``call_jobs()`` -> the number of Spark jobs the most recent ETL
+    call ran: each call starts its own job group (abort.py)."""
+    from etlhelper_spark import abort
+
+    tracker = spark.sparkContext.statusTracker()
+    return lambda: len(tracker.getJobIdsForGroup(abort._current_group))

@@ -176,3 +176,32 @@ def test_sidecar_dirs_invisible(spark, tmp_path):
     )
     names = [f.name for f in footer_spark_schema(p).fields]
     assert "other" not in names
+
+
+def test_rewritten_base_table_is_not_served_a_stale_schema(spark, tmp_path):
+    """The footer schema memo and the nanos-column memo are keyed on
+    the table's newest data file (name, mtime, size), not on its path:
+    replacing ``t.parquet`` with a wider file must surface the new
+    columns on the next query instead of silently dropping them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etlhelper_spark import connect_files, fetchall
+    from etlhelper_spark.sources import nanos_timestamp_columns
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [3]}), path)
+    conn = connect_files(str(tmp_path), spark=spark)
+    assert fetchall("SELECT * FROM t", conn) == [{"a": 3}]
+    assert nanos_timestamp_columns(str(path)) == ()
+
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), path)
+    assert fetchall("SELECT * FROM t", conn) == [{"a": 3, "b": "x"}]
+
+    pq.write_table(
+        pa.table({"a": [3], "ts": pa.array([10**18], pa.timestamp("ns"))}),
+        path,
+    )
+    assert nanos_timestamp_columns(str(path)) == ("ts",)
+    (row,) = fetchall("SELECT * FROM t", conn)
+    assert row["ts"].year == 2001  # a timestamp again, not raw nanos

@@ -25,6 +25,7 @@ from etlhelper_spark import connect, connect_files
 from etlhelper_spark.db_params import DbParams
 from etlhelper_spark.exceptions import ETLHelperExtractError
 from etlhelper_spark.operators import (
+    copy_rows,
     copy_table_rows,
     execute,
     executemany,
@@ -243,3 +244,122 @@ def test_streaming_exactly_once_into_derby(spark, derby_conn):
     )
     writer(batch, 0)  # batch 0 is in the ledger -> must be a no-op
     assert fetchone(count_sql, derby_conn)["n"] == n_src
+
+
+# ----------------------------------------------------------------------
+# one pass per write: counts and on_error rejects ride the write
+# ----------------------------------------------------------------------
+NATION_QTY = (
+    "SELECT n_nationkey AS id, n_name AS name, "
+    "CASE WHEN n_nationkey % 5 = 0 THEN 'n/a' "
+    "ELSE CAST(n_regionkey AS STRING) END AS qty FROM nation"
+)
+
+
+def _typed_table(derby_conn, table, key="NOT NULL"):
+    execute(
+        f'CREATE TABLE {table} ("id" BIGINT {key}, '
+        '"name" VARCHAR(32), "qty" INT)',
+        derby_conn,
+    )
+
+
+def test_copy_table_rows_into_derby_runs_one_job(src_conn, derby_conn, call_jobs):
+    assert copy_table_rows(
+        "nation", src_conn, derby_conn, target="nation_one_job"
+    ) == (25, 0)
+    assert call_jobs() == 1  # the write; its row count rides it
+    assert fetchone(
+        'SELECT count(*) AS "n" FROM nation_one_job', derby_conn
+    ) == {"n": 25}
+
+
+def test_fetchone_runs_one_job(derby_conn, call_jobs):
+    load("fetch_one_tbl", derby_conn, [{"id": i} for i in range(50)])
+    row = fetchone(
+        'SELECT "id" FROM fetch_one_tbl WHERE "id" = ?', derby_conn,
+        parameters=(7,),
+    )
+    assert row == {"id": 7}
+    assert call_jobs() == 1
+
+
+def test_copy_rows_on_error_gets_exactly_the_cast_rejects(
+    src_conn, derby_conn, call_jobs
+):
+    _typed_table(derby_conn, "nation_checked")
+    rejects = []
+
+    def upper(chunk):
+        return [{**r, "name": r["name"].upper()} for r in chunk]
+
+    result = copy_rows(
+        NATION_QTY, src_conn,
+        "INSERT INTO nation_checked (id, name, qty) VALUES (?, ?, ?)",
+        derby_conn, transform=upper, on_error=rejects.extend,
+    )
+    bad = {k for k in range(25) if k % 5 == 0}
+    assert result == (25, len(bad))
+    assert {f.row["id"]: str(f.exception) for f in rejects} == {
+        k: "cannot cast qty to int" for k in bad
+    }
+    assert call_jobs() == 2  # transform schema sample, write
+    landed = fetchall('SELECT "id" FROM nation_checked', derby_conn)
+    assert {r["id"] for r in landed} == set(range(25)) - bad
+
+
+@pytest.mark.parametrize(
+    "suffix", [" WHERE 1=0", " LIMIT 0"], ids=["where_false", "limit_0"]
+)
+def test_empty_query_copies_zero_rows(src_conn, derby_conn, suffix):
+    table = "empty_" + suffix.split()[0].lower()
+    _typed_table(derby_conn, table)
+    calls = []
+    assert copy_rows(
+        NATION_QTY + suffix, src_conn,
+        f"INSERT INTO {table} (id, name, qty) VALUES (?, ?, ?)",
+        derby_conn, on_error=calls.append,
+    ) == (0, 0)
+    assert calls == []
+
+
+def test_empty_frame_loads_zero_rows(spark, derby_conn):
+    _typed_table(derby_conn, "empty_frame")
+    calls = []
+    empty = spark.createDataFrame([], "id long, name string, qty string")
+    assert load("empty_frame", derby_conn, empty, on_error=calls.append) == (0, 0)
+    assert calls == []
+
+
+def test_rejected_write_raises_and_skips_on_error(src_conn, derby_conn):
+    from etlhelper_spark.exceptions import ETLHelperInsertError
+
+    _typed_table(derby_conn, "nation_pk", key="PRIMARY KEY")
+    execute(
+        "INSERT INTO nation_pk VALUES (3, 'TAKEN', 0)", derby_conn
+    )
+    calls = []
+    with pytest.raises(ETLHelperInsertError):
+        copy_rows(
+            NATION_QTY, src_conn,
+            "INSERT INTO nation_pk (id, name, qty) VALUES (?, ?, ?)",
+            derby_conn, on_error=calls.append,
+        )
+    # key 3 collides inside the database; the cast rejects are never
+    # reported for a write that did not commit
+    assert calls == []
+
+
+def test_stage_and_merge_counts_from_its_staging_write(spark, derby_conn):
+    from etlhelper_spark.operators import stage_and_merge
+
+    execute('CREATE TABLE merged ("id" BIGINT, "v" BIGINT)', derby_conn)
+    tracker = spark._jsc.sc().statusStore()
+    before = tracker.jobsList(None).size()
+    n = stage_and_merge(
+        spark.range(40).selectExpr("id", "id * 2 AS v"), derby_conn,
+        "INSERT INTO merged SELECT * FROM {staging}",
+    )
+    assert n == 40
+    assert tracker.jobsList(None).size() - before == 1  # the staging write
+    assert fetchone('SELECT count(*) AS "n" FROM merged', derby_conn) == {"n": 40}

@@ -12,6 +12,7 @@ from etlhelper_spark import (
     dataframe_transform,
     executemany,
     fetchall,
+    fetchone,
     generate_insert_sql,
     load,
 )
@@ -185,3 +186,143 @@ def test_generate_insert_sql_bad_table():
 
     with pytest.raises(ETLHelperBadIdentifierError):
         generate_insert_sql("bad; DROP", {"id": 1}, PG)
+
+
+# ----------------------------------------------------------------------
+# one pass per write: counts and on_error rejects ride the write
+# ----------------------------------------------------------------------
+def _typed_target(spark, dest_conn):
+    """An existing files-backend target ``sink`` to validate rows against."""
+    dest_conn.write_dataframe(
+        spark.createDataFrame([], "id long, code int, name string"), "sink"
+    )
+
+
+NATION_CODES = (
+    "SELECT n_nationkey AS id, CASE WHEN n_nationkey % 5 = 0 "
+    "THEN concat('x', n_nationkey) ELSE CAST(n_regionkey AS STRING) END "
+    "AS code, n_name AS name FROM nation"
+)
+
+
+def test_copy_table_rows_runs_one_job(src_conn, dest_conn, call_jobs):
+    assert copy_table_rows("nation", src_conn, dest_conn) == (25, 0)
+    # the files write; its row count and the view refresh add no job
+    assert call_jobs() == 1
+
+
+def test_fetchone_runs_one_job(src_conn, call_jobs):
+    row = fetchone(
+        "SELECT n_name FROM nation WHERE n_nationkey = 3", src_conn
+    )
+    assert row == {"n_name": "NATION_3"}
+    assert call_jobs() == 1
+
+
+def test_python_transform_sees_each_row_once(spark, src_conn, dest_conn, call_jobs):
+    seen = spark.sparkContext.accumulator(0)
+
+    def transform(chunk):
+        seen.add(len(chunk))
+        return [{"id": r["o_orderkey"], "code": 1, "name": r["o_orderstatus"]}
+                for r in chunk]
+
+    _typed_target(spark, dest_conn)
+    rejects = []
+    result = copy_rows(
+        "SELECT o_orderkey, o_orderstatus FROM orders", src_conn,
+        "INSERT INTO sink (id, code, name) VALUES (?, ?, ?)", dest_conn,
+        transform=transform, on_error=rejects.extend,
+    )
+    assert result == (1500, 0) and rejects == []
+    # the write's pass plus the driver-side schema sample of 100 rows
+    assert seen.value == 1500 + 100
+    assert call_jobs() == 2  # schema sample, write
+
+
+def test_on_error_gets_exactly_the_rows_failing_the_cast(spark, src_conn, dest_conn):
+    _typed_target(spark, dest_conn)
+    rejects = []
+    result = copy_rows(
+        NATION_CODES, src_conn,
+        "INSERT INTO sink (id, code, name) VALUES (?, ?, ?)", dest_conn,
+        on_error=rejects.extend,
+    )
+    bad = {k for k in range(25) if k % 5 == 0}
+    assert result == (25, len(bad))
+    assert {f.row["id"]: str(f.exception) for f in rejects} == {
+        k: "cannot cast code to int" for k in bad
+    }
+    assert all(f.row["code"] is None for f in rejects)  # the failed cast
+    landed = fetchall("SELECT id, code FROM sink", dest_conn)
+    assert {r["id"] for r in landed} == set(range(25)) - bad
+
+
+def test_on_error_gets_exactly_the_not_null_and_cast_rejects(spark, src_conn, dest_conn):
+    # parquet and JDBC targets report every column nullable; a catalog
+    # view is a target whose schema carries NOT NULL
+    spark.range(0).selectExpr(
+        "id", "CAST(NULL AS INT) AS code", "CAST(NULL AS STRING) AS name"
+    ).createOrReplaceTempView("strict_sink")
+    rejects = []
+    result = load(
+        "strict_sink", dest_conn,
+        src_conn.dataframe(NATION_CODES).selectExpr(
+            "CASE WHEN id % 10 = 1 THEN NULL ELSE id END AS id", "code", "name"
+        ),
+        on_error=rejects.extend,
+    )
+    cast_bad = {k for k in range(25) if k % 5 == 0}
+    null_bad = {k for k in range(25) if k % 10 == 1}
+    assert result == (25, len(cast_bad | null_bad))
+    assert {f.row["name"]: str(f.exception) for f in rejects} == {
+        **{f"NATION_{k}": "cannot cast code to int" for k in cast_bad},
+        **{f"NATION_{k}": "id violates NOT NULL" for k in null_bad},
+    }
+    landed = fetchall("SELECT id FROM strict_sink", dest_conn)
+    assert {r["id"] for r in landed} == set(range(25)) - cast_bad - null_bad
+
+
+@pytest.mark.parametrize(
+    "suffix", [" WHERE 1=0", " LIMIT 0"], ids=["where_false", "limit_0"]
+)
+def test_empty_query_copies_zero_rows(spark, src_conn, dest_conn, suffix):
+    _typed_target(spark, dest_conn)
+    calls = []
+    assert copy_rows(
+        NATION_CODES + suffix, src_conn,
+        "INSERT INTO sink (id, code, name) VALUES (?, ?, ?)", dest_conn,
+        on_error=calls.append,
+    ) == (0, 0)
+    assert calls == []
+
+
+def test_empty_frame_loads_zero_rows(spark, src_conn, dest_conn):
+    _typed_target(spark, dest_conn)
+    calls = []
+    empty = src_conn.dataframe(NATION_CODES).limit(0)
+    assert load("sink", dest_conn, empty, on_error=calls.append) == (0, 0)
+    assert calls == []
+
+
+def test_failed_write_raises_and_skips_on_error(spark, src_conn, dest_conn):
+    from pyspark.sql import functions as F
+
+    @dataframe_transform
+    def explode_on_row_7(df):
+        return df.withColumn(
+            "name",
+            F.when(F.col("id") == 7, F.raise_error(F.lit("boom")))
+            .otherwise(F.col("name")),
+        )
+
+    _typed_target(spark, dest_conn)
+    calls = []
+    with pytest.raises(ETLHelperInsertError, match="boom"):
+        copy_rows(
+            NATION_CODES, src_conn,
+            "INSERT INTO sink (id, code, name) VALUES (?, ?, ?)", dest_conn,
+            transform=explode_on_row_7, on_error=calls.append,
+        )
+    # rows 0, 5, ... fail the cast, but nothing was committed
+    assert calls == []
