@@ -11,7 +11,11 @@ pairs a SparkSession with a *backend*:
   ``java.sql.DriverManager`` statement (Spark has no JDBC DDL API).
 - **files** — a directory of parquet/csv/json/orc/xml tables registered as
   temp views; queries run on Spark SQL itself. This is the backend the
-  test harness and the 100 TB data-lake path use.
+  test harness and the 100 TB data-lake path use. The directory is
+  listed and probed through pyarrow.fs (functions/util.py), so it may
+  be any path that both pyarrow.fs and Spark open: a local path or a
+  URI (``file://`` is the one tested; ``s3://``, ``gs://``,
+  ``hdfs://`` take the same route).
 
 Both backends expose the same three primitives consumed by the
 operators in :mod:`etlhelper_spark.operators.etl`:
@@ -21,8 +25,8 @@ operators in :mod:`etlhelper_spark.operators.etl`:
 
 from __future__ import annotations
 
-import glob
 import os
+from contextlib import contextmanager
 from typing import Any, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -77,14 +81,24 @@ class SparkConnection:
         different directories can clobber each other's names;
         ``dataframe()`` re-registers this connection's views right
         before resolving a query to keep names pointing at *its*
-        files."""
+        files. Dot-entries are skipped, as a shell glob skips them."""
+        from .functions.util import list_fileinfos
+
         assert self.path is not None
+        _fs, infos = list_fileinfos(self.path)
+        entries = sorted(
+            i.base_name for i in infos if not i.base_name.startswith(".")
+        )
         tables: list[str] = []
         for ext in _FILE_FORMATS:
-            for p in sorted(glob.glob(os.path.join(self.path, f"*.{ext}"))):
-                name = os.path.splitext(os.path.basename(p))[0]
+            for base in entries:
+                if not base.endswith(f".{ext}"):
+                    continue
+                name = base[: -len(ext) - 1]
                 validate_identifier(name)
-                self._load(p, ext).createOrReplaceTempView(name)
+                self._load(
+                    os.path.join(self.path, base), ext
+                ).createOrReplaceTempView(name)
                 self._registered.add(name)
                 tables.append(name)
         return tables
@@ -134,19 +148,11 @@ class SparkConnection:
             self.register_tables()
         try:
             if self.kind == "jdbc":
-                assert self.db_params is not None
-                reader = (
+                return (
                     self.spark.read.format("jdbc")
-                    .option("url", self.db_params.jdbc_url())
-                    .option("query", bound)
-                    .option("fetchsize", self.jdbc_options.get("fetchsize", "5000"))
+                    .options(**self._jdbc_options(query=bound, fetchsize="5000"))
+                    .load()
                 )
-                for k, v in {
-                    **self.db_params.jdbc_properties(self.password_variable),
-                    **self.jdbc_options,
-                }.items():
-                    reader = reader.option(k, v)
-                return reader.load()
             return self.spark.sql(bound)
         except Exception as exc:
             msg = f"SQL query raised an error.\n\n{bound}\n\n{exc}\n"
@@ -172,36 +178,33 @@ class SparkConnection:
         them for large tables (a numeric/temporal indexed column)."""
         validate_identifier(table)
         if self.kind == "jdbc":
-            assert self.db_params is not None
-            reader = (
-                self.spark.read.format("jdbc")
-                .option("url", self.db_params.jdbc_url())
-                .option("dbtable", table)
-            )
+            ranges = {}
             if partition_column is not None:
                 # may arrive quoted for case-sensitive columns
                 # (Spark's JDBC writer quotes names it creates)
                 validate_identifier(partition_column.strip('"'))
-                reader = (
-                    reader.option("partitionColumn", partition_column)
-                    .option("lowerBound", str(lower_bound))
-                    .option("upperBound", str(upper_bound))
-                    .option(
-                        "numPartitions",
-                        str(
-                            num_partitions
-                            or self.spark.sparkContext.defaultParallelism
-                        ),
-                    )
-                )
-            for k, v in {
-                **self.db_params.jdbc_properties(self.password_variable),
-                **self.jdbc_options,
-            }.items():
-                reader = reader.option(k, v)
-            return reader.load()
-        if self.path is not None and os.path.exists(self.table_path(table)):
-            return self._load(self.table_path(table), self.file_format)
+                ranges = {
+                    "partitionColumn": partition_column,
+                    "lowerBound": str(lower_bound),
+                    "upperBound": str(upper_bound),
+                    "numPartitions": str(
+                        num_partitions
+                        or self.spark.sparkContext.defaultParallelism
+                    ),
+                }
+            return (
+                self.spark.read.format("jdbc")
+                .options(**self._jdbc_options(dbtable=table, **ranges))
+                .load()
+            )
+        if self.path is not None:
+            from pyarrow.fs import FileType
+
+            from .functions.util import parquet_fs
+
+            fs, p = parquet_fs(self.table_path(table))
+            if fs.get_file_info(p).type != FileType.NotFound:
+                return self._load(self.table_path(table), self.file_format)
         return self.spark.table(table)
 
     def write_dataframe(
@@ -235,20 +238,9 @@ class SparkConnection:
         for part in parts:
             validate_identifier(part)
         if self.kind == "jdbc":
-            assert self.db_params is not None
-            writer = (
-                df.write.format("jdbc")
-                .option("url", self.db_params.jdbc_url())
-                .option("dbtable", table)
-                .option("batchsize", str(batchsize))
-                .mode(mode)
-            )
-            for k, v in {
-                **self.db_params.jdbc_properties(self.password_variable),
-                **self.jdbc_options,
-            }.items():
-                writer = writer.option(k, v)
-            writer.save()
+            df.write.format("jdbc").options(
+                **self._jdbc_options(dbtable=table, batchsize=str(batchsize))
+            ).mode(mode).save()
         else:
             writer = df.write.format(self.file_format).mode(mode)
             if self.file_format == "csv":
@@ -282,22 +274,65 @@ class SparkConnection:
         bound = bind_parameters(query, parameters)
         try:
             if self.kind == "jdbc":
-                self._jdbc_execute(bound)
+                with self._jdbc_session() as conn:
+                    stmt = conn.createStatement()
+                    try:
+                        stmt.execute(bound)
+                    finally:
+                        stmt.close()
             else:
                 self.spark.sql(bound).collect()
         except Exception as exc:
             msg = f"SQL query raised an error.\n\n{bound}\n\n{exc}\n"
             raise ETLHelperQueryError(msg) from exc
 
-    def jdbc_executemany(
-        self, sql: str, chunk: list, commit: bool = True
-    ) -> None:
+    def _jdbc_options(self, **options: str) -> dict[str, str]:
+        """Spark JDBC reader/writer options: the URL, the call's own
+        *options*, then the credentials and the connection's options
+        (which override both)."""
+        assert self.db_params is not None
+        return {
+            "url": self.db_params.jdbc_url(),
+            **options,
+            **self.db_params.jdbc_properties(self.password_variable),
+            **self.jdbc_options,
+        }
+
+    @contextmanager
+    def _jdbc_session(self):
+        """A driver-side ``java.sql.Connection`` (via py4j) for the
+        statements Spark's JDBC source cannot run. autoCommit is off:
+        the block commits once on success, rolls back on error, and the
+        connection always closes. (JDBC connections open with
+        autoCommit on, and pgjdbc raises on ``commit()`` then.)"""
+        assert self.db_params is not None
+        props = self.db_params.jdbc_properties(self.password_variable)
+        conn = self.spark._jvm.java.sql.DriverManager.getConnection(
+            self.db_params.jdbc_url(),
+            props.get("user", ""),
+            props.get("password", ""),
+        )
+        try:
+            conn.setAutoCommit(False)
+            yield conn
+            conn.commit()
+        except BaseException:
+            try:
+                conn.rollback()
+            except Exception:
+                pass
+            raise
+        finally:
+            conn.close()
+
+    def jdbc_executemany(self, sql: str, chunk: list) -> None:
         """Driver-side batched statement execution for arbitrary SQL
         (UPDATE/DELETE/upsert with ``?`` placeholders) via a direct
         java.sql PreparedStatement — the pass-through path for the
         reference's 'any statement' executemany contract
         (reference: etl.py:233-339) when the statement is not an
-        INSERT the distributed writer can handle.
+        INSERT the distributed writer can handle. The chunk commits as
+        one transaction.
 
         Driver-side by design: executors run Python and cannot reach
         JVM JDBC; for bulk custom-SQL writes use
@@ -305,16 +340,7 @@ class SparkConnection:
         set-based statement) instead — this method is for modest
         row-count control statements.
         """
-        assert self.db_params is not None
-        jvm = self.spark._jvm
-        props = self.db_params.jdbc_properties(self.password_variable)
-        conn = jvm.java.sql.DriverManager.getConnection(
-            self.db_params.jdbc_url(),
-            props.get("user", ""),
-            props.get("password", ""),
-        )
-        try:
-            conn.setAutoCommit(False)
+        with self._jdbc_session() as conn:
             stmt = conn.prepareStatement(sql)
             try:
                 for row in chunk:
@@ -327,18 +353,8 @@ class SparkConnection:
                         stmt.setObject(i + 1, value)
                     stmt.addBatch()
                 stmt.executeBatch()
-                if commit:
-                    conn.commit()
             finally:
                 stmt.close()
-        except Exception:
-            try:
-                conn.rollback()
-            except Exception:
-                pass
-            raise
-        finally:
-            conn.close()
 
     def execute_returning(self, sql: str) -> tuple[list[str], list[tuple]]:
         """Run a DML statement driver-side and return the rows it
@@ -361,34 +377,22 @@ class SparkConnection:
 
         from .validation import strip_sql_noise
 
-        assert self.db_params is not None
-        jvm = self.spark._jvm
-        props = self.db_params.jdbc_properties(self.password_variable)
-        conn = jvm.java.sql.DriverManager.getConnection(
-            self.db_params.jdbc_url(),
-            props.get("user", ""),
-            props.get("password", ""),
+        # search with comments AND string literals stripped (same
+        # sanitizer as _is_dml): a `-- returning ids` comment on a
+        # plain INSERT must not reroute it off the generated-keys
+        # path, losing its ids
+        bare = strip_sql_noise(sql)
+        has_clause = _re.search(
+            r"\bRETURNING\b|\bOUTPUT\b", bare, _re.IGNORECASE
         )
-        try:
-            # JDBC connections default to autoCommit=true, and e.g.
-            # pgjdbc throws on commit() under autocommit — the exact
-            # dialect family RETURNING targets
-            conn.setAutoCommit(False)
-            # search with comments AND string literals stripped (same
-            # sanitizer as _is_dml): a `-- returning ids` comment on a
-            # plain INSERT must not reroute it off the generated-keys
-            # path, losing its ids
-            bare = strip_sql_noise(sql)
-            has_clause = _re.search(
-                r"\bRETURNING\b|\bOUTPUT\b", bare, _re.IGNORECASE
-            )
-            plain_insert = not has_clause and _re.match(
-                r"\s*INSERT\b", bare, _re.IGNORECASE
-            )
+        plain_insert = not has_clause and _re.match(
+            r"\s*INSERT\b", bare, _re.IGNORECASE
+        )
+        with self._jdbc_session() as conn:
             if plain_insert:
                 # engines without RETURNING syntax (Derby): surface
                 # the autogenerated ids via JDBC generated keys
-                key_flag = jvm.java.sql.Statement.RETURN_GENERATED_KEYS
+                key_flag = self.spark._jvm.java.sql.Statement.RETURN_GENERATED_KEYS
                 stmt = conn.prepareStatement(sql, key_flag)
                 try:
                     stmt.executeUpdate()
@@ -411,16 +415,7 @@ class SparkConnection:
                     cols, rows = self._drain_resultset(rs)
                 finally:
                     stmt.close()
-            conn.commit()
-            return cols, rows
-        except Exception:
-            try:
-                conn.rollback()
-            except Exception:
-                pass
-            raise
-        finally:
-            conn.close()
+        return cols, rows
 
     @staticmethod
     def _drain_resultset(rs) -> tuple[list[str], list[tuple]]:
@@ -445,31 +440,6 @@ class SparkConnection:
             rows.append(tuple(vals))
         rs.close()
         return cols, rows
-
-    def _jdbc_execute(self, sql: str) -> None:
-        assert self.db_params is not None
-        jvm = self.spark._jvm  # py4j gateway
-        props = self.db_params.jdbc_properties(self.password_variable)
-        conn = jvm.java.sql.DriverManager.getConnection(
-            self.db_params.jdbc_url(),
-            props.get("user", ""),
-            props.get("password", ""),
-        )
-        try:
-            stmt = conn.createStatement()
-            try:
-                stmt.execute(sql)
-                conn.commit()
-            finally:
-                stmt.close()
-        except Exception:
-            try:
-                conn.rollback()
-            except Exception:
-                pass
-            raise
-        finally:
-            conn.close()
 
 
 def connect(
@@ -502,11 +472,19 @@ def connect_files(
     file_format: str = "parquet",
     spark: SparkSession | None = None,
 ) -> SparkConnection:
-    """Open a files-backed connection over a directory of tables."""
+    """Open a files-backed connection over a directory of tables.
+    *path* may be local or a URI that both pyarrow.fs and Spark open
+    (``file://`` is tested; ``s3://``/``gs://``/``hdfs://`` take the
+    same route)."""
     from .session import get_session
 
+    from pyarrow.fs import FileType
+
+    from .functions.util import parquet_fs
+
     spark = spark or get_session()
-    if not os.path.isdir(path):
+    fs, p = parquet_fs(path)
+    if fs.get_file_info(p).type != FileType.Directory:
         raise ETLHelperConnectionError(f"No such directory: {path}")
     return SparkConnection(spark, "files", path=path, file_format=file_format)
 

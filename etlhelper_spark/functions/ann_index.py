@@ -39,25 +39,9 @@ from .util import (
     literal_frame,
     load_pivot_rows,
     parquet_partition_counts,
+    parquet_schema_names,
     write_pivot_rows,
 )
-
-
-def _data_file_schema_names(path: str) -> list[str]:
-    """Column names of ONE parquet data file under *path* (searched
-    one partition level deep), read driver-side from the footer —
-    schema discovery without a Spark job (the
-    ivfpq._parquet_file_schema_names contract), object-store-ready
-    via pyarrow.fs (VERDICT r12 #4). Raises if no data file exists:
-    an index with no data cannot be appended to."""
-    from .util import parquet_schema_names
-
-    names = parquet_schema_names(path, max_depth=1)
-    if names is None:
-        raise ValueError(
-            f"_data_file_schema_names: no parquet data file under {path}"
-        )
-    return names
 
 __all__ = [
     "adaptive_widen",
@@ -153,7 +137,11 @@ def append_ivf_index(
     # stored schema, so appends stay layout-identical automatically —
     # one data-file footer read driver-side (list_id is the partition
     # directory, never in the footer), not a tree-listing Spark read
-    names = _data_file_schema_names(path)
+    names = parquet_schema_names(path)
+    if names is None:
+        raise ValueError(
+            f"append_ivf_index: no parquet data file under {path}"
+        )
     attrs = [n for n in names if n not in ("vec_id", "vec", "list_id")]
     c = new_corpus.select(
         F.col(corpus_id).alias("vec_id"),

@@ -81,6 +81,7 @@ from .util import (
     read_parquet_state,
     in_values,
     load_pivot_rows,
+    parquet_schema_names,
     write_pivot_rows,
     write_sidecar_table,
 )
@@ -465,16 +466,6 @@ def _write_ivfpq_meta(spark, path: str, **meta) -> None:
     )
 
 
-def _parquet_file_schema_names(src_dir: str) -> list[str] | None:
-    """Column names of ONE parquet data file under *src_dir* (searched
-    up to two partition levels deep), read driver-side from the file
-    footer — schema discovery without a Spark job. Object-store-ready
-    (pyarrow.fs) with a local fallback — VERDICT r12 #4."""
-    from .util import parquet_schema_names
-
-    return parquet_schema_names(src_dir, max_depth=2)
-
-
 def _ivfpq_stored_attrs(spark, path: str) -> list[str]:
     """Covering-attribute columns of a persisted IVFPQ index,
     discovered from the stored schema (the append_ivf_index
@@ -494,7 +485,7 @@ def _ivfpq_stored_attrs(spark, path: str) -> list[str]:
     if not versions and not store.partitions(path, "list_id"):
         return []  # nothing written yet — a plain pre-build path
     src = versions[-1][1] if versions else path
-    names = _parquet_file_schema_names(src)
+    names = parquet_schema_names(src)
     if names is None:
         raise ValueError(
             f"_ivfpq_stored_attrs: index at {path} has partitions but "
@@ -504,17 +495,17 @@ def _ivfpq_stored_attrs(spark, path: str) -> list[str]:
     return [n for n in names if n not in core]
 
 
-def _read_ivfpq_meta(spark, path: str) -> dict | None:
-    """The build-time ``_meta`` sidecar as a dict, or None for an
-    index written before the sidecar existed (legacy fallbacks then
-    apply). Driver-side pyarrow read — one tiny footer+page, no Spark
-    job (this runs on EVERY append/probe; the Spark read cost ~0.3s
-    per call)."""
+def _read_ivfpq_meta(spark, path: str) -> dict:
+    """The build-time ``_meta`` sidecar as a dict. Driver-side pyarrow
+    read — one tiny footer+page, no Spark job (this runs on EVERY
+    append/probe; the Spark read cost ~0.3s per call). Raises if the
+    sidecar is missing: build_ivfpq_index writes it, so a built index
+    never lacks one."""
     from .util import read_sidecar_table
 
     tbl = read_sidecar_table(os.path.join(path, "_meta"))
     if tbl is None or tbl.num_rows == 0:
-        return None
+        raise ValueError(f"_read_ivfpq_meta: no _meta sidecar under {path}")
     return {k: v[0] for k, v in tbl.to_pydict().items()}
 
 
@@ -570,16 +561,8 @@ def append_ivfpq_index(
         # the build's own decision (sidecar) — NOT surviving codebook
         # entries, which shrink when clusters empty and could flip the
         # encode path (one-ulp tie divergence) near the 256 boundary
-        arrow = (
-            bool(meta["arrow"])
-            if meta is not None
-            else len(books) * len(books[0]) >= 256
-        )
-    versioned = (
-        bool(meta["versioned_ingest"])
-        if meta is not None
-        else "ingest_batch" in read_parquet_state(spark, path).columns
-    )
+        arrow = bool(meta["arrow"])
+    versioned = bool(meta["versioned_ingest"])
     if versioned and batch_id is None:
         raise ValueError(
             "append_ivfpq_index: index at "
@@ -594,9 +577,9 @@ def append_ivfpq_index(
             # the base copy; this drop is the post-compaction half of
             # the exactly-once contract)
             return 0
-    residual = bool(meta.get("residual", False)) if meta is not None else False
+    residual = bool(meta["residual"])
     attrs = tuple(_ivfpq_stored_attrs(spark, path))
-    if meta is not None and meta.get("opq", False):
+    if meta["opq"]:
         # frozen-artifact contract: batches rotate with the BUILD's R
         from .opq import rotate_embeddings
 
@@ -691,8 +674,7 @@ def rebalance_ivfpq_index(
             f"{path} is covering (attr_cols); the row-store re-encode "
             "path does not thread attribute columns — rebuild instead"
         )
-    _m = _read_ivfpq_meta(spark, path)
-    if _m is not None and _m.get("opq", False):
+    if _read_ivfpq_meta(spark, path)["opq"]:
         raise ValueError(
             "rebalance_ivfpq_index: index at "
             f"{path} is OPQ-rotated; the rebalance pivot recompute "
@@ -729,8 +711,8 @@ def _ivfpq_rebalance_pass(
     from .similarity import _round6_py
 
     meta = _read_ivfpq_meta(spark, path)
-    residual = bool(meta.get("residual", False)) if meta else False
-    versioned = bool(meta.get("versioned_ingest", False)) if meta else False
+    residual = bool(meta["residual"])
+    versioned = bool(meta["versioned_ingest"])
     versions = store.ibase_versions(path)
     if versioned:
         if not versions:
@@ -1011,8 +993,7 @@ def compact_ivfpq_ingest(
 
     Returns the number of partition cells folded away. Watermarks are
     monotone: raises if *watermark* is below the current one."""
-    meta = _read_ivfpq_meta(spark, path)
-    if not (meta and meta.get("versioned_ingest")):
+    if not _read_ivfpq_meta(spark, path)["versioned_ingest"]:
         raise ValueError(
             f"compact_ivfpq_ingest: index at {path} is not "
             "versioned-ingest (build with versioned_ingest=True)"
@@ -1320,12 +1301,8 @@ def query_ivfpq_index(
         pivot_rows = load_pivot_rows(os.path.join(path, "_pivots"))
         books = load_pq_codebooks(spark, path)
         meta = _read_ivfpq_meta(spark, path)
-        rotation = (
-            _read_ivfpq_rotation(path)
-            if meta is not None and meta.get("opq", False)
-            else None
-        )
-    residual = bool(meta.get("residual", False)) if meta is not None else False
+        rotation = _read_ivfpq_rotation(path) if meta["opq"] else None
+    residual = bool(meta["residual"])
     # Queries are the BOUNDED side (the contract every probe here
     # rests on), so the per-query dot tables, norms, and probe lists
     # compute DRIVER-SIDE in numpy instead of as Catalyst expressions:
@@ -1475,11 +1452,7 @@ def query_ivfpq_index_adaptive(
     nlist = len(pivot_rows)
     books = load_pq_codebooks(spark, path)
     meta = _read_ivfpq_meta(spark, path)
-    rotation = (
-        _read_ivfpq_rotation(path)
-        if meta is not None and meta.get("opq", False)
-        else None
-    )
+    rotation = _read_ivfpq_rotation(path) if meta["opq"] else None
     preloaded = (
         pivot_rows,
         books,

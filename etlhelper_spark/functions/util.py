@@ -736,32 +736,19 @@ def load_pivot_rows(path_dir: str) -> list[tuple[int, list[float]]]:
     return rows
 
 
-def parquet_schema_names(src_dir: str, max_depth: int = 2):
-    """Column names of ONE parquet data file under *src_dir* (searched
-    up to *max_depth* ``key=value`` partition levels deep, shallowest
-    level wins, lexicographically-first file within it — the historic
-    glob-pattern order), read driver-side from the file footer.
-    Returns None when no data file is found. Paths may be local or
-    any pyarrow.fs URI."""
+def parquet_schema_names(path: str):
+    """Column names of the first data file of *path* (see
+    :func:`parquet_data_files`; the file :func:`footer_spark_schema`
+    reads), from its footer driver-side. Partition columns live in
+    directory names, never in the footer. Returns None when *path*
+    has no data file. Paths may be local or any pyarrow.fs URI."""
     import pyarrow.parquet as _pq
 
-    fs, infos = list_fileinfos(src_dir, recursive=True)
-    base_len = len(str(src_dir).rstrip("/").split("://")[-1].split("/"))
-    by_depth: dict[int, list[str]] = {}
-    for i in infos:
-        if not (i.is_file and i.base_name.endswith(".parquet")):
-            continue
-        rel = i.path.rstrip("/").split("/")[base_len:]
-        if any(p.startswith(("_", ".")) for p in rel):
-            continue
-        depth = len(rel) - 1
-        if depth > max_depth or any("=" not in p for p in rel[:-1]):
-            continue
-        by_depth.setdefault(depth, []).append(i.path)
-    for depth in sorted(by_depth):
-        with fs.open_input_file(min(by_depth[depth])) as f:
-            return list(_pq.ParquetFile(f).schema_arrow.names)
-    return None
+    fs, infos = parquet_data_files(path)
+    if not infos:
+        return None
+    with fs.open_input_file(min(i.path for i in infos)) as f:
+        return list(_pq.ParquetFile(f).schema_arrow.names)
 
 
 def parquet_data_files(path: str):
@@ -792,42 +779,42 @@ def parquet_data_files(path: str):
     ]
 
 
-def parquet_stamp(path: str):
-    """``(file, mtime_ns, size)`` of the newest data file of *path* (see
-    :func:`parquet_data_files`), or None when it has none — the
-    validity key for driver-side memos of a table's footer. An
-    overwrite replaces every data file and an append adds a newer one,
-    so either changes the stamp; a memo keyed on the path alone keeps
-    serving the schema of files that no longer exist."""
-    _fs, infos = parquet_data_files(path)
-    if not infos:
-        return None
-    newest = max(infos, key=lambda i: (i.mtime_ns or 0, i.path))
-    return newest.path, newest.mtime_ns, newest.size
-
-
 def footer_spark_schema(*paths: str, spark=None):
     """Spark schema of a parquet table or STATE directory, derived
-    DRIVER-SIDE from the first data file's footer (pyarrow
-    ``schema_arrow`` → ``from_arrow_schema``) — the schema
-    ``spark.read.parquet`` would infer, without the per-call inference
-    job a bare read schedules (one job at zero information gain on
-    every state fold/probe; the packing read-back measured it at
-    ~0.1-0.2 s per call locally and strictly more on a busy cluster).
-    Exact for strings, integers, doubles, booleans, arrays, dates and
-    decimals. Returns None (callers fall back to the inferring read)
-    when no data file exists or when the schema contains a type whose
-    inference Spark bases on footer metadata or session conf the
-    conversion cannot honor: binary (binaryAsString), nanosecond
-    timestamps (nanosAsLong; INT96 also surfaces as nanos), unsigned
-    ints. Micro/milli timestamps resolve exactly — tz-aware maps to
-    TimestampType unconditionally, tz-naive follows the session's
-    inferTimestampNTZ conf — but only when *spark* is passed (the conf
-    must be read); without a session every timestamp falls back.
-    Searches *paths* in order; the first data file wins (state stores
-    are schema-uniform by construction)."""
+    DRIVER-SIDE from the first data file's footer (see
+    :func:`arrow_spark_schema`) — the schema ``spark.read.parquet``
+    would infer, without the per-call inference job a bare read
+    schedules (one job at zero information gain on every state
+    fold/probe; the packing read-back measured it at ~0.1-0.2 s per
+    call locally and strictly more on a busy cluster). Returns None
+    (callers fall back to the inferring read) when no data file exists
+    or the conversion is not exact. Searches *paths* in order; the
+    first data file wins (state stores are schema-uniform by
+    construction)."""
     import pyarrow.parquet as _pq
 
+    for path in paths:
+        fs, infos = parquet_data_files(path)
+        if not infos:
+            continue
+        with fs.open_input_file(min(i.path for i in infos)) as f:
+            return arrow_spark_schema(_pq.ParquetFile(f).schema_arrow, spark)
+    return None
+
+
+def arrow_spark_schema(arrow_schema, spark=None):
+    """The Spark schema ``spark.read.parquet`` infers for a file whose
+    footer holds *arrow_schema* (pyarrow ``schema_arrow`` →
+    ``from_arrow_schema``), or None. Exact for strings, integers,
+    doubles, booleans, arrays, dates and decimals. None when the schema
+    contains a type whose inference Spark bases on footer metadata or
+    session conf the conversion cannot honor: binary
+    (binaryAsString), nanosecond timestamps (nanosAsLong; INT96 also
+    surfaces as nanos), unsigned ints. Micro/milli timestamps resolve
+    exactly — tz-aware maps to TimestampType unconditionally, tz-naive
+    follows the session's inferTimestampNTZ conf — but only when
+    *spark* is passed (the conf must be read); without a session every
+    timestamp falls back."""
     try:
         from pyspark.sql.pandas.types import from_arrow_schema
     except ImportError:  # pragma: no cover - very old pyspark
@@ -853,33 +840,22 @@ def footer_spark_schema(*paths: str, spark=None):
             or _pa.types.is_duration(t)
         )
 
-    for path in paths:
-        fs, infos = parquet_data_files(path)
-        hits = [i.path for i in infos]
-        if not hits:
-            continue
-        with fs.open_input_file(min(hits)) as f:
-            arrow_schema = _pq.ParquetFile(f).schema_arrow
-        if any(_arrow_risky(f.type) for f in arrow_schema):
-            return None
-        prefer_ntz = False
-        if spark is not None:
-            prefer_ntz = (
-                str(
-                    spark.conf.get(
-                        "spark.sql.parquet.inferTimestampNTZ.enabled",
-                        "true",
-                    )
-                ).lower()
-                == "true"
-            )
-        try:
-            return from_arrow_schema(
-                arrow_schema, prefer_timestamp_ntz=prefer_ntz
-            )
-        except Exception:
-            return None
-    return None
+    if any(_arrow_risky(f.type) for f in arrow_schema):
+        return None
+    prefer_ntz = False
+    if spark is not None:
+        prefer_ntz = (
+            str(
+                spark.conf.get(
+                    "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+                )
+            ).lower()
+            == "true"
+        )
+    try:
+        return from_arrow_schema(arrow_schema, prefer_timestamp_ntz=prefer_ntz)
+    except Exception:
+        return None
 
 
 def read_parquet_state(spark, *paths: str):

@@ -369,14 +369,16 @@ def forget_from_ivfpq_index(spark, path: str, ids) -> int:
     compacted ``_ibase_v<k>`` base, each rewritten partition-locally.
     A forgotten document's codes are its content (PQ codes
     reconstruct an approximation of the vector), so they must go.
-    Returns the number of erased code rows."""
+    Returns the number of erased code rows (0 when *path* holds no
+    index)."""
     from ..functions.ivfpq import _read_ivfpq_meta
 
+    versions = ibase_versions(path)
+    if not versions and not has_cells(path):
+        return 0
     doomed = _doomed_frame(spark, ids)
     total = 0
-    meta = _read_ivfpq_meta(spark, path)
-    versioned = bool(meta and meta.get("versioned_ingest"))
-    versions = ibase_versions(path)
+    versioned = bool(_read_ivfpq_meta(spark, path)["versioned_ingest"])
     if versioned and versions:
         # finish any interrupted compaction cleanup first: cells at or
         # below the watermark are dead (their rows live in the base) —

@@ -8,8 +8,10 @@ domain, so predicate-based file skipping prunes nothing.  These
 operators are the scheduled-job answer: rewrite a table into
 right-sized files (compact_parquet_table) and/or lay rows out along a
 space-filling curve (clustered_rewrite) so multi-column range
-predicates touch few files.  Both use the same copy-on-write directory
-swap as merge_into_parquet — readers never see a half-rewritten table.
+predicates touch few files.  Both, and merge_into_parquet, replace
+the table through :func:`replace_table`: the new contents are staged
+in a sibling directory ``<target>.__<op>_<hex>`` and swapped in by two
+renames — readers never see a half-rewritten table.
 
 Reference parity: the reference's copy_table_rows replaces the target
 table wholesale (etlhelper/etl.py); these are that contract applied to
@@ -20,51 +22,67 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..abort import raise_for_abort
+from ..functions.util import count_parquet_rows, parquet_data_files
+from ..state.store import remove
 
 __all__ = [
     "compact_parquet_table",
     "clustered_rewrite",
     "morton_code",
+    "replace_table",
 ]
 
 _DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # matches maxPartitionBytes
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, names in os.walk(path):
-        for n in names:
-            if not n.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, n))
-    return total
+def replace_table(df: DataFrame, target_path: str, op: str) -> int:
+    """Replace the parquet table at *target_path* with *df*,
+    copy-on-write; returns the new row count (footer sum, no scan job).
 
+    *df* is written to the sibling staging directory
+    ``<target>.__<op>_<hex>`` and swapped in by two renames (target to
+    ``<target>.__pre_<op>_<hex>``, staging to target), so readers see
+    the old table or the new one, never a mix. Staging is a sibling so
+    the rename never crosses filesystems. If the swap fails the target
+    is left as it was and the staging directory is removed.
 
-def _data_files(path: str) -> list[str]:
-    out = []
-    for root, _dirs, names in os.walk(path):
-        for n in names:
-            if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                out.append(os.path.join(root, n))
-    return sorted(out)
+    The renames are the package's one local-only path operation:
+    object stores have no atomic rename, so on them a table needs a
+    manifest/table format (what Delta/Iceberg do with metadata
+    pointers) instead."""
 
+    def sibling(kind: str) -> str:
+        return target_path.rstrip("/") + f".__{kind}_{uuid.uuid4().hex[:8]}"
 
-def _swap_in(staging: str, target_path: str) -> None:
-    backup = target_path.rstrip("/") + f".__pre_compact_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, backup)
+    staging = sibling(op)
+    backup = sibling(f"pre_{op}")
     try:
-        os.rename(staging, target_path)
-    except OSError:
-        os.rename(backup, target_path)  # roll back, table untouched
+        df.write.mode("overwrite").parquet(staging)
+        # the write just committed: the footers ARE the table
+        rows = count_parquet_rows(staging)
+        os.rename(target_path, backup)
+        try:
+            os.rename(staging, target_path)
+        except OSError:
+            os.rename(backup, target_path)  # roll back, table untouched
+            raise
+    except BaseException:
+        remove(staging)
         raise
-    shutil.rmtree(backup)
+    remove(backup)
+    return rows
+
+
+def _spark_visible(path: str) -> tuple[int, int]:
+    """(data files, bytes) of the table as Spark reads it."""
+    _fs, infos = parquet_data_files(path)
+    return len(infos), sum(i.size for i in infos)
 
 
 def compact_parquet_table(
@@ -81,32 +99,26 @@ def compact_parquet_table(
     exchange sized exactly once, not a driver guess.  Optional
     ``sort_within_by`` sorts rows inside each output file (no extra
     shuffle) so per-file min/max stats tighten for single-column
-    predicates.  Returns {files_before, files_after, bytes, rows}.
+    predicates.  Returns {files_before, files_after, bytes, rows}; file
+    and byte counts cover only the data files Spark reads (never
+    ``_``/``.`` entries such as a stray ``_temporary``). The new layout
+    is staged in a sibling directory of the table (see
+    :func:`replace_table`).
     """
-    from ..functions.util import count_parquet_rows
     from ..sources import read_parquet_table
 
     raise_for_abort()
-    files_before = len(_data_files(target_path))
-    table_bytes = _dir_bytes(target_path)
+    files_before, table_bytes = _spark_visible(target_path)
     n_files = max(1, math.ceil(table_bytes / max(target_file_bytes, 1)))
 
     df = read_parquet_table(spark, target_path)
     out = df.repartition(n_files)
     if sort_within_by:
         out = out.sortWithinPartitions(*sort_within_by)
-
-    staging = os.path.join(
-        tempfile.gettempdir(), f"ehs_compact_{uuid.uuid4().hex}"
-    )
-    out.write.mode("overwrite").parquet(staging)
-    # the write just committed: the footers ARE the table (driver-side
-    # count, no listing + scan job — functions/util.count_parquet_rows)
-    rows = count_parquet_rows(staging)
-    _swap_in(staging, target_path)
+    rows = replace_table(out, target_path, "compact")
     return {
         "files_before": files_before,
-        "files_after": len(_data_files(target_path)),
+        "files_after": _spark_visible(target_path)[0],
         "bytes": table_bytes,
         "rows": rows,
     }
@@ -160,9 +172,9 @@ def clustered_rewrite(
     contiguous key ranges (disjoint hyper-rectangles), the in-file
     sort tightens row-group stats.  One shuffle total, same cost
     class as the compaction it replaces.  Returns
-    {files, rows, bounds}.
+    {files, rows, bounds}. The new layout is staged in a sibling
+    directory of the table (see :func:`replace_table`).
     """
-    from ..functions.util import count_parquet_rows
     from ..sources import read_parquet_table
 
     raise_for_abort()
@@ -175,7 +187,7 @@ def clustered_rewrite(
         (row[f"lo_{c}"], row[f"hi_{c}"]) for c in cluster_cols
     ]
 
-    table_bytes = _dir_bytes(target_path)
+    table_bytes = _spark_visible(target_path)[1]
     n_files = max(1, math.ceil(table_bytes / max(target_file_bytes, 1)))
 
     key = morton_code([F.col(c) for c in cluster_cols], bounds, bits)
@@ -185,16 +197,9 @@ def clustered_rewrite(
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
     )
-    staging = os.path.join(
-        tempfile.gettempdir(), f"ehs_zorder_{uuid.uuid4().hex}"
-    )
-    out.write.mode("overwrite").parquet(staging)
-    # the write just committed: the footers ARE the table (driver-side
-    # count, no listing + scan job — functions/util.count_parquet_rows)
-    rows = count_parquet_rows(staging)
-    _swap_in(staging, target_path)
+    rows = replace_table(out, target_path, "zorder")
     return {
-        "files": len(_data_files(target_path)),
+        "files": _spark_visible(target_path)[0],
         "rows": rows,
         "bounds": bounds,
     }

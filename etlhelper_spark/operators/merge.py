@@ -23,10 +23,6 @@ and ``s.<col>`` (source) — the same surface MERGE gives you.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import uuid
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -138,34 +134,20 @@ def merge_into_parquet(
     """MERGE ``source`` into the parquet table at ``target_path`` with
     copy-on-write atomicity; returns the post-merge row count.
 
-    Writes the merged state to a sibling staging directory, then swaps
-    directories driver-side — readers never observe a half-written
-    table (the swap is two renames on local/HDFS-style filesystems; on
-    object stores use a manifest/table format instead — this mirrors
-    what Delta/Iceberg do with metadata pointers, reference parity:
-    copy_table_rows' target-replace contract, etlhelper/etl.py).
+    Writes the merged state to the sibling staging directory
+    ``<target>.__merge_<hex>``, then swaps directories driver-side
+    (operators/maintenance.py ``replace_table``) — readers never
+    observe a half-written table, and a failed swap leaves the target
+    as it was. The swap is two renames on local/HDFS-style
+    filesystems; on object stores use a manifest/table format instead
+    — this mirrors what Delta/Iceberg do with metadata pointers
+    (reference parity: copy_table_rows' target-replace contract,
+    etlhelper/etl.py).
     """
     from ..sources import read_parquet_table
+    from .maintenance import replace_table
 
     raise_for_abort()
     target = read_parquet_table(spark, target_path)
     merged = merge_dataframes(target, source, keys, **merge_kwargs)
-
-    staging = os.path.join(
-        tempfile.gettempdir(), f"ehs_merge_{uuid.uuid4().hex}"
-    )
-    merged.write.mode("overwrite").parquet(staging)
-    # the write just committed: footer-sum count, no scan job
-    from ..functions.util import count_parquet_rows
-
-    n = count_parquet_rows(staging)
-
-    backup = target_path.rstrip("/") + f".__pre_merge_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, backup)
-    try:
-        os.rename(staging, target_path)
-    except OSError:
-        os.rename(backup, target_path)  # roll back, table untouched
-        raise
-    shutil.rmtree(backup)
-    return n
+    return replace_table(merged, target_path, "merge")

@@ -399,6 +399,16 @@ def _assign_schema(id_col: str):
     )
 
 
+def _assign_reader(spark: SparkSession, state_dir: str):
+    """``spark.read`` with the assignments' frozen schema — no
+    footer-inference job per read. The id column comes from the meta
+    sidecar, which pack_incremental writes before any assignment."""
+    meta = _read_meta(state_dir)
+    if meta is None:
+        raise ValueError(f"no packing meta sidecar under {state_dir}")
+    return spark.read.schema(_assign_schema(meta["id_col"]))
+
+
 def _write_cursor_version(target: str, rows) -> None:
     """Persist one cursor version (≤ n_shards tiny rows) DRIVER-SIDE
     via pyarrow — the per-batch Spark write job this replaces moved
@@ -433,14 +443,7 @@ def read_pack_assignments(
     if not versions:
         raise ValueError(f"no pack assignments under {state_dir}")
     paths = [p for _e, p in versions.values()]
-    meta = _read_meta(state_dir)
-    if meta and meta.get("id_col"):
-        # frozen layout: the static schema skips the footer-inference
-        # job a bare read pays per call
-        return spark.read.schema(
-            _assign_schema(meta["id_col"])
-        ).parquet(*paths)
-    return spark.read.parquet(*paths)
+    return _assign_reader(spark, state_dir).parquet(*paths)
 
 
 def forget_from_pack_state(
@@ -474,6 +477,7 @@ def forget_from_pack_state(
         raise ValueError(
             f"forget_from_pack_state: no assignments under {state_dir}"
         )
+    reader = _assign_reader(spark, state_dir)
     if isinstance(ids, _DF):
         # persist: the doomed set is probed once per batch version —
         # released in the finally (the r9 cache-hygiene rule: no
@@ -487,20 +491,10 @@ def forget_from_pack_state(
     else:
         doomed = None
         id_list = [int(x) for x in ids]
-    meta = _read_meta(state_dir)
-    sch = (
-        _assign_schema(meta["id_col"])
-        if meta and meta.get("id_col")
-        else None
-    )
     total = 0
     try:
         for batch, (epoch, path) in sorted(versions.items()):
-            cur = (
-                spark.read.schema(sch).parquet(path)
-                if sch is not None
-                else spark.read.parquet(path)
-            )
+            cur = reader.parquet(path)
             id_col = cur.columns[0]
             if doomed is not None:
                 hit = cur.join(

@@ -10,64 +10,57 @@ to microseconds, so downstream operators see real timestamps.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.util import footer_spark_schema, parquet_fs, parquet_stamp
+from ..functions.util import arrow_spark_schema, parquet_data_files
 
 
 def nanos_timestamp_columns(path: str) -> tuple[str, ...]:
     """Names of timestamp[ns] columns in a parquet file/directory."""
-    return _nanos_columns(path, parquet_stamp(path))
+    return _footer(path)[1]
 
 
-@lru_cache(maxsize=512)
-def _nanos_columns(path: str, stamp) -> tuple[str, ...]:
-    """:func:`nanos_timestamp_columns` of the table whose newest data
-    file is *stamp* (``functions.util.parquet_stamp``): the key changes
-    whenever the table's files do, so a rewritten table is re-read."""
-    if stamp is None:
-        return ()
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+_FOOTERS: dict[tuple, tuple] = {}
 
-    fs, _ = parquet_fs(path)
-    try:
-        with fs.open_input_file(stamp[0]) as f:
+
+def _footer(path: str):
+    """``(arrow schema or None, nanosecond-timestamp column names)`` of
+    the table at *path*, both from ONE footer: its first data file's,
+    the file functions/util.py ``footer_spark_schema`` reads.
+
+    Memoized per ``(path, stamp)``, where the stamp is the newest data
+    file with its mtime and size: an overwrite replaces every data file
+    and an append adds a newer one, so either re-reads the footer
+    instead of serving facts about files that are gone. One listing
+    per call; a footer open only on a miss. The memo holds no Spark
+    schema: that depends on the session's confs, and a caller without
+    a session must not decide it for the readers that have one. A
+    path with no data file yet is not memoized."""
+    fs, infos = parquet_data_files(path)
+    if not infos:
+        return None, ()
+    newest = max(infos, key=lambda i: (i.mtime_ns or 0, i.path))
+    key = (path, newest.path, newest.mtime_ns, newest.size)
+    facts = _FOOTERS.get(key)
+    if facts is None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        with fs.open_input_file(min(i.path for i in infos)) as f:
             schema = pq.ParquetFile(f).schema_arrow
-    except Exception:
-        return ()
-    return tuple(
-        f.name
-        for f in schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    )
-
-
-_SCHEMA_CACHE: dict[tuple, object] = {}
-
-
-def _table_spark_schema(spark: SparkSession, path: str, stamp):
-    """Driver-side footer schema for a TABLE path, memoized per
-    ``(path, stamp)`` — *stamp* names the table's newest data file with
-    its mtime and size, so an overwrite or append re-reads the footer
-    instead of serving the schema of files that are gone. The session's
-    timestamp confs are pinned by configure_session for its lifetime.
-    Only resolvable schemas are cached: a path that yields None (no
-    data yet, or a type whose inference needs footer metadata the
-    conversion cannot honor — nanosecond timestamps, binary) is
-    re-probed on every read."""
-    key = (path, stamp)
-    if key in _SCHEMA_CACHE:
-        return _SCHEMA_CACHE[key]
-    schema = footer_spark_schema(path, spark=spark) if stamp else None
-    if schema is not None:
-        while len(_SCHEMA_CACHE) >= 512:
-            _SCHEMA_CACHE.pop(next(iter(_SCHEMA_CACHE)))
-        _SCHEMA_CACHE[key] = schema
-    return schema
+        facts = (
+            schema,
+            tuple(
+                f.name
+                for f in schema
+                if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+            ),
+        )
+        while len(_FOOTERS) >= 512:
+            _FOOTERS.pop(next(iter(_FOOTERS)))
+        _FOOTERS[key] = facts
+    return facts
 
 
 def read_parquet_table(
@@ -78,7 +71,7 @@ def read_parquet_table(
     truncation of nanos).
 
     The schema is pre-resolved DRIVER-SIDE from one footer
-    (functions/util.py::footer_spark_schema) whenever the arrow→Spark
+    (functions/util.py::arrow_spark_schema) whenever the arrow→Spark
     mapping is exact, so the read schedules no inference job — a bare
     ``spark.read.parquet`` pays a one-task footer job per call at zero
     information gain, and every declared query re-reads its base
@@ -92,19 +85,19 @@ def read_parquet_table(
     leave it off for stable-schema tables: at 100 TB the footer sweep
     alone touches millions of files."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stamp = parquet_stamp(path)
+    arrow_schema, nanos_cols = _footer(path)
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    else:
-        schema = _table_spark_schema(spark, path, stamp)
+    elif arrow_schema is not None:
+        schema = arrow_spark_schema(arrow_schema, spark)
         if schema is not None:
             reader = reader.schema(schema)
     df = reader.parquet(path)
     long_cols = {
         f.name for f in df.schema.fields if f.dataType.simpleString() == "bigint"
     }
-    for col in _nanos_columns(path, stamp):
+    for col in nanos_cols:
         # only convert when Spark actually surfaced the column as a
         # long: INT96 timestamps also look like timestamp[ns] to
         # pyarrow but Spark reads them natively as TIMESTAMP

@@ -17,6 +17,12 @@ Reference parity: commit_chunks=True restartability
 (etlhelper/etl.py:330-336) — the reference restarts at chunk
 granularity, this restarts at micro-batch granularity with replay
 protection the reference's sequential writer doesn't need.
+
+The marker probe, the marker write and the creation of ``out_dir`` go
+through pyarrow.fs (functions/util.py ``parquet_fs``), so ``out_dir``
+may be any path that both pyarrow.fs and Spark open: a local path or a
+URI (``file://`` is the one tested; ``s3://``, ``gs://``, ``hdfs://``
+take the same route).
 """
 
 from __future__ import annotations
@@ -24,7 +30,10 @@ from __future__ import annotations
 import os
 import re
 
+from pyarrow.fs import FileType
 from pyspark.sql import DataFrame
+
+from ..functions.util import parquet_fs
 
 __all__ = [
     "exactly_once_parquet_sink",
@@ -38,14 +47,16 @@ def idempotent_batch_writer(out_dir: str):
     """Returns a foreachBatch callable writing each batch to
     ``out_dir/batch_id=N`` with marker-file commit semantics."""
 
+    fs, root = parquet_fs(out_dir)
+
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(out_dir, f"_committed_{batch_id}")
-        if os.path.exists(marker):
+        marker = f"{root.rstrip('/')}/_committed_{batch_id}"
+        if fs.get_file_info(marker).type != FileType.NotFound:
             return  # replayed batch: already durable, skip
         target = os.path.join(out_dir, f"batch_id={batch_id}")
         batch_df.write.mode("overwrite").parquet(target)
-        with open(marker, "w") as fh:
-            fh.write("ok")
+        with fs.open_output_stream(marker) as fh:
+            fh.write(b"ok")
 
     return write_batch
 
@@ -60,7 +71,8 @@ def exactly_once_parquet_sink(
     Restart-safe twice over: the checkpoint prevents RE-READING source
     data across restarts, and the idempotent writer prevents
     RE-WRITING a replayed in-flight batch within a restart."""
-    os.makedirs(out_dir, exist_ok=True)
+    fs, root = parquet_fs(out_dir)
+    fs.create_dir(root, recursive=True)
     q = (
         stream.writeStream.foreachBatch(idempotent_batch_writer(out_dir))
         .option("checkpointLocation", checkpoint_dir)

@@ -165,19 +165,24 @@ def read_events_stream(
     import os
     import tempfile
 
+    from pyarrow.fs import FileType
+
+    from ..functions.util import parquet_fs
     from ..sources import nanos_timestamp_columns
 
     path = f"{sf_dir}/events.parquet"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if os.path.isfile(path):
+    fs, local_path = parquet_fs(path)
+    if fs.get_file_info(local_path).type == FileType.File:
         # FileStreamSource requires a directory; expose the single
         # file through a symlink dir (read-only testdata untouched)
         if stream_dir is None:
             stream_dir = tempfile.mkdtemp(prefix="ehs_stream_")
         link = os.path.join(stream_dir, "events.parquet")
-        if not os.path.exists(link):
+        link_fs, link_path = parquet_fs(link)
+        if link_fs.get_file_info(link_path).type == FileType.NotFound:
             os.makedirs(stream_dir, exist_ok=True)
-            os.symlink(path, link)
+            os.symlink(local_path, link)
     elif stream_dir is None:
         stream_dir = path
     # the feed schema resolves from one footer driver-side; the bare

@@ -3,14 +3,22 @@
 #
 # Runs (1) pytest --collect-only over the whole suite (~2s; catches the
 # r8 class of failure where a bad decorator kills collection for ALL
-# tests) and (2) the full test files touched in the index / working
-# tree, so the code a commit modifies is actually executed before it
-# ships.  Usage:  scripts/preflight.sh   (then commit if exit 0)
+# tests), (2) the filesystem-layer I/O gate, and (3) the full test
+# files touched in the index / working tree, so the code a commit
+# modifies is actually executed before it ships.
+# Usage:  scripts/preflight.sh   (then commit if exit 0)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== preflight: collect-only over tests/ =="
 python -m pytest tests/ --collect-only -q >/dev/null
+
+# The filesystem-layer gate is pure AST (no Spark, under 1 s), so it
+# runs on every invocation: a library-only edit that adds a local-only
+# path call (glob, os.rename, open, ...) is caught before commit even
+# when no test file is touched.
+echo "== preflight: filesystem-layer I/O gate =="
+python -m pytest tests/test_state_io_gate.py -q -p no:cacheprovider
 
 touched=$( (git diff --name-only --diff-filter=d HEAD -- 'tests/*.py';
             git ls-files --others --exclude-standard -- 'tests/*.py') | sort -u)

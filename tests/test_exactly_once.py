@@ -103,3 +103,23 @@ def test_missing_table_matcher_rejects_missing_column_messages():
         'table "t" does not exist',
     ):
         assert _is_missing_table(Exception(msg))
+
+
+def test_file_uri_out_dir_commits_markers_in_out_dir(spark, tmp_path, monkeypatch):
+    """A ``file://`` out_dir: the batches AND their commit markers land
+    in out_dir (not in a ``./file:/...`` tree under the working
+    directory), and a replayed batch is skipped."""
+    monkeypatch.chdir(tmp_path)
+    out = tmp_path / "out"
+    uri = "file://" + str(out)
+    stream = _make_source(spark, tmp_path)
+    exactly_once_parquet_sink(stream, uri, str(tmp_path / "ckpt"))
+    batches = sorted(glob.glob(os.path.join(out, "batch_id=*")))
+    markers = sorted(glob.glob(os.path.join(out, "_committed_*")))
+    assert batches and len(markers) == len(batches)
+    assert not os.path.exists(tmp_path / "file:")
+    assert spark.read.parquet(os.path.join(out, "batch_id=*")).count() == 400
+
+    writer = idempotent_batch_writer(uri)
+    writer(spark.range(99).withColumn("v", F.lit(2)), 0)
+    assert spark.read.parquet(os.path.join(out, "batch_id=*")).count() == 400

@@ -205,3 +205,34 @@ def test_rewritten_base_table_is_not_served_a_stale_schema(spark, tmp_path):
     assert nanos_timestamp_columns(str(path)) == ("ts",)
     (row,) = fetchall("SELECT * FROM t", conn)
     assert row["ts"].year == 2001  # a timestamp again, not raw nanos
+
+
+def test_sessionless_footer_probe_leaves_reads_zero_job(spark, tmp_path):
+    """nanos_timestamp_columns takes no session. Probing a table with
+    it first, from a thread with no active Spark session, must not
+    decide the Spark schema of the table's later reads: a
+    micro-timestamp table still reads with its footer schema, no
+    inference job."""
+    import datetime
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etlhelper_spark.sources import (
+        nanos_timestamp_columns,
+        read_parquet_table,
+    )
+
+    p = str(tmp_path / "ev.parquet")
+    ts = pa.array([datetime.datetime(2024, 1, 1)], pa.timestamp("us"))
+    pq.write_table(pa.table({"ts": ts, "v": [1]}), p)
+    probed = []
+    t = threading.Thread(target=lambda: probed.append(nanos_timestamp_columns(p)))
+    t.start()
+    t.join(timeout=60)
+    assert probed == [()]
+    before = _n_jobs(spark)
+    df = read_parquet_table(spark, p)
+    assert _n_jobs(spark) == before
+    assert df.schema == spark.read.parquet(p).schema

@@ -262,3 +262,29 @@ def test_ivfpq_compact_and_forget_over_file_uri(spark, tmp_path):
     ]
     # folded cells swept; only batch 2's live cells remain
     assert cells and set(cells) == {"ingest_batch=2"}
+
+
+def test_connect_files_round_trip_over_file_uri(spark, tmp_path):
+    """connect_files on a ``file://`` URI: register, query, write a
+    table, re-read it — the files backend lists and probes its
+    directory through pyarrow.fs like the state stores."""
+    from etlhelper_spark import connect_files, fetchall
+
+    d = tmp_path / "lake"
+    spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string").write.parquet(
+        str(d / "t.parquet")
+    )
+    # a swap's sibling staging dir and a dot-entry are not tables
+    (d / "t.parquet.__merge_0123abcd").mkdir()
+    (d / ".hidden.parquet").mkdir()
+    conn = connect_files("file://" + str(d), spark=spark)
+    assert conn.register_tables() == ["t"]
+    assert fetchall("SELECT id, s FROM t ORDER BY id", conn) == [
+        {"id": 1, "s": "a"},
+        {"id": 2, "s": "b"},
+    ]
+    conn.write_dataframe(spark.createDataFrame([(3,)], "id long"), "u")
+    assert os.path.isdir(d / "u.parquet")
+    assert fetchall("SELECT id FROM u", conn) == [{"id": 3}]
+    assert sorted(r["id"] for r in fetchall("SELECT id FROM t", conn)) == [1, 2]
+    assert conn.table_dataframe("u").count() == 1

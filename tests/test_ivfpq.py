@@ -674,3 +674,21 @@ def test_compacted_probe_still_prunes_partitions(spark, vecs, versioned_index):
     assert any(
         "list_id" in ln and "IN" in ln.upper() for ln in scan_lines
     )
+
+
+def test_index_without_meta_sidecar_raises(spark, vecs, tmp_path):
+    """build_ivfpq_index always writes the ``_meta`` sidecar, so a
+    built index without one is corrupt: operators raise instead of
+    inferring the layout. A path with no index erases nothing."""
+    import os
+
+    from etlhelper_spark.operators.erasure import forget_from_ivfpq_index
+
+    d = str(tmp_path / "idx")
+    build_ivfpq_index(vecs, d, nlist=4, m_sub=4, k_codes=8, iterations=2)
+    shutil.rmtree(os.path.join(d, "_meta"))
+    with pytest.raises(ValueError, match="_meta"):
+        append_ivfpq_index(vecs.limit(5), d)
+    with pytest.raises(ValueError, match="_meta"):
+        forget_from_ivfpq_index(spark, d, [1])
+    assert forget_from_ivfpq_index(spark, str(tmp_path / "none"), [1]) == 0

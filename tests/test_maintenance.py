@@ -17,7 +17,11 @@ from etlhelper_spark.operators import (
     compact_parquet_table,
     morton_code,
 )
-from etlhelper_spark.operators.maintenance import _data_files
+from etlhelper_spark.functions.util import parquet_data_files
+
+
+def _data_files(path):
+    return sorted(i.path for i in parquet_data_files(path)[1])
 
 
 @pytest.fixture()
@@ -114,10 +118,27 @@ def test_compact_swap_preserves_data_on_failure(spark, tmp_path, monkeypatch):
 
     import etlhelper_spark.operators.maintenance as m
 
-    def boom(staging, target):
+    def boom(df, target, op):
         raise OSError("simulated rename failure")
 
-    monkeypatch.setattr(m, "_swap_in", boom)
+    monkeypatch.setattr(m, "replace_table", boom)
     with pytest.raises(OSError):
         compact_parquet_table(spark, path, target_file_bytes=1 << 30)
     assert spark.read.parquet(path).count() == 100
+
+
+def test_compact_counts_only_spark_visible_files(spark, tmp_path):
+    """A leftover ``_temporary`` part file is invisible to Spark, so it
+    must not count toward files_before or the bytes that size the
+    rewrite."""
+    path = str(tmp_path / "t")
+    spark.range(100).coalesce(1).write.parquet(path)
+    (visible,) = _data_files(path)
+    size = os.path.getsize(visible)
+    stray = os.path.join(path, "_temporary", "0")
+    os.makedirs(stray)
+    shutil.copy(visible, os.path.join(stray, os.path.basename(visible)))
+    stats = compact_parquet_table(spark, path, target_file_bytes=1 << 30)
+    assert stats["files_before"] == 1
+    assert stats["bytes"] == size
+    assert stats["rows"] == 100 == spark.read.parquet(path).count()

@@ -140,3 +140,50 @@ def test_null_delete_predicate_keeps_row(spark):
         when_not_matched_insert=False,
     )
     assert _rows(out) == [(1, 100.0)]  # id=2 deleted; id=1 KEPT + updated
+
+
+def _watch_renames(monkeypatch, fail_into=None):
+    """Record every rename; raise OSError on the one into *fail_into*
+    (the staging -> target step of the swap)."""
+    renames = []
+    real = os.rename
+
+    def rename(src, dst):
+        renames.append((str(src), str(dst)))
+        if fail_into is not None and str(dst) == fail_into and len(renames) == 2:
+            raise OSError("simulated swap failure")
+        real(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    return renames
+
+
+def test_merge_stages_beside_the_target(spark, target_source, tmp_path, monkeypatch):
+    """Staging is a sibling of the table, so the swap's rename never
+    crosses filesystems (a temp dir on another mount fails with EXDEV)."""
+    target, source = target_source
+    path = str(tmp_path / "tbl")
+    target.write.parquet(path)
+    renames = _watch_renames(monkeypatch)
+    assert merge_into_parquet(spark, path, source, ["id"]) == 4
+    (_, backup), (staging, into) = renames[:2]
+    assert into == path
+    assert os.path.dirname(staging) == os.path.dirname(path)
+    assert os.path.basename(staging).startswith("tbl.__merge_")
+    assert os.path.basename(backup).startswith("tbl.__pre_merge_")
+    assert os.listdir(tmp_path) == ["tbl"]
+
+
+def test_merge_failed_swap_leaves_target_intact(
+    spark, target_source, tmp_path, monkeypatch
+):
+    target, source = target_source
+    path = str(tmp_path / "tbl")
+    target.write.parquet(path)
+    _watch_renames(monkeypatch, fail_into=path)
+    with pytest.raises(OSError, match="simulated"):
+        merge_into_parquet(spark, path, source, ["id"])
+    monkeypatch.undo()
+    assert _rows(spark.read.parquet(path)) == _rows(target)
+    # rolled back, and the staging directory is gone
+    assert os.listdir(tmp_path) == ["tbl"]

@@ -1,10 +1,13 @@
-"""Every state and index module does its path I/O through
-etlhelper_spark/state/store.py (pyarrow.fs), so the object-storage
-claim holds on every state path. This AST gate fails on a local-only
-call — ``glob.*``, ``os.rename``, ``os.listdir``, ``os.walk``,
-``os.path.exists``/``isdir``, builtin ``open``, ``shutil.rmtree`` — in
-state/ or in the state/index modules of operators/ and functions/.
-Those calls return nothing (or silently do nothing) on a ``file://``,
+"""Every module does its path I/O through the pyarrow.fs helpers of
+etlhelper_spark/functions/util.py (``parquet_fs``, ``list_fileinfos``,
+``parquet_data_files``) — the state and index modules through
+etlhelper_spark/state/store.py, which sits on them — so the
+object-storage claim holds on every path. This AST gate fails on a
+local-only call — ``glob.*``, ``os.rename``, ``os.listdir``,
+``os.walk``, ``os.path.exists``/``isdir``, builtin ``open``,
+``shutil.rmtree`` — anywhere in the package except the query bodies
+of plans/queries.py and the one table swap in ``EXCLUDED``. Those
+calls return nothing (or silently do nothing) on a ``file://``,
 ``s3://`` or ``gs://`` URI."""
 
 from __future__ import annotations
@@ -37,15 +40,19 @@ STATE_MODULES = [
     "functions/ivfpq.py",
 ]
 
-# modules of operators/ and functions/ outside the gate, with the reason
+# the one function outside the gate (``<module>::<function>``), with
+# the reason
 EXCLUDED = {
-    "operators/maintenance.py": (
-        "table compaction swaps a whole parquet table with os.rename "
-        "and rolls back on failure; moving table swaps onto pyarrow.fs "
-        "is a separate decision (object stores have no atomic rename)"
+    "operators/maintenance.py::replace_table": (
+        "the table swap of compaction, Z-order rewrites and MERGE: two "
+        "os.rename calls with a rollback; moving table swaps onto "
+        "pyarrow.fs is a separate decision (object stores have no "
+        "atomic rename)"
     ),
-    "operators/merge.py": "the same table swap as maintenance.py",
 }
+
+# query bodies, swept with the split of plans/queries.py
+UNGATED_MODULES = {"plans/queries.py"}
 
 BANNED_ATTRS = {
     ("os", "rename"),
@@ -57,13 +64,31 @@ BANNED_ATTRS = {
 }
 
 
+def _excluded_functions(path: str) -> set[str]:
+    rel = os.path.relpath(path, PKG)
+    return {
+        key.split("::")[1] for key in EXCLUDED if key.split("::")[0] == rel
+    }
+
+
+def _calls(tree: ast.AST, skip: set[str]):
+    """Every call in *tree* outside the functions named in *skip*."""
+    for node in ast.iter_child_nodes(tree):
+        if (
+            isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and node.name in skip
+        ):
+            continue
+        if isinstance(node, ast.Call):
+            yield node
+        yield from _calls(node, skip)
+
+
 def _violations(path: str) -> list[str]:
     with open(path) as f:
         tree = ast.parse(f.read())
     out = []
-    for node in ast.walk(tree):
-        if not isinstance(node, ast.Call):
-            continue
+    for node in _calls(tree, _excluded_functions(path)):
         fn = node.func
         if isinstance(fn, ast.Name) and fn.id == "open":
             out.append(f"{path}:{node.lineno}: open()")
@@ -105,5 +130,26 @@ def test_gate_covers_every_module_doing_path_io():
                     "(and move the I/O to state/store.py) or to "
                     "EXCLUDED with its reason"
                 )
-    for rel, reason in EXCLUDED.items():
-        assert os.path.exists(os.path.join(PKG, rel)) and len(reason) > 20
+    for key, reason in EXCLUDED.items():
+        rel, fn = key.split("::")
+        with open(os.path.join(PKG, rel)) as f:
+            defined = {
+                n.name
+                for n in ast.walk(ast.parse(f.read()))
+                if isinstance(n, ast.FunctionDef)
+            }
+        assert fn in defined and len(reason) > 20
+
+
+def test_every_module_does_io_through_the_fs_layer():
+    """The package-wide gate: every module of etlhelper_spark/ (not
+    only the state modules) except UNGATED_MODULES."""
+    bad = []
+    for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
+        if os.path.relpath(path, PKG) not in UNGATED_MODULES:
+            bad += _violations(path)
+    assert not bad, (
+        "local-only path I/O — use the pyarrow.fs helpers of "
+        "etlhelper_spark/functions/util.py (parquet_fs, list_fileinfos, "
+        "parquet_data_files) instead:\n" + "\n".join(bad)
+    )
