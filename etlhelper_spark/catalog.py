@@ -18,7 +18,9 @@ def table_info(
 
     jdbc backend: runs the dialect's catalog query (the same four
     catalog queries the reference uses — pg_catalog, all_tab_columns,
-    INFORMATION_SCHEMA, pragma_table_info). files backend: derives from
+    INFORMATION_SCHEMA, pragma_table_info) on one driver-side JDBC
+    session (``SparkConnection.driver_result``: no Spark job, one
+    fetch batch resident). files backend: derives from
     the parquet/csv schema (has_default is always False — file tables
     have no defaults). Raises if the table does not exist
     (reference: utils.py:29-32) or is ambiguous across schemas
@@ -33,10 +35,10 @@ def table_info(
         query = conn.db_params.dialect.table_info_query.format(
             table=table, schema=schema or ".*"
         )
-        rows = conn.dataframe(query).collect()
-        columns = [
-            Column(r[0], r[1], bool(r[2]), bool(r[3])) for r in rows
-        ]
+        with conn.driver_result(query) as (_names, rows):
+            columns = [
+                Column(r[0], r[1], bool(r[2]), bool(r[3])) for r in rows
+            ]
         if not columns:
             schema_table = f"{schema}.{table}" if schema else table
             raise ETLHelperQueryError(f"Table name {schema_table} not found.")

@@ -4,11 +4,19 @@ The reference's operators take a PEP-249 connection
 (reference: etlhelper/connect.py:7-19). Here a :class:`SparkConnection`
 pairs a SparkSession with a *backend*:
 
-- **jdbc** — a remote database described by DbParams; queries are pushed
-  whole to the database via the JDBC ``query``/``dbtable`` option
-  (pushdown parity with reference etl.py:95), writes go through the
-  JDBC batch writer, and DDL/DML pass-through uses a driver-side
-  ``java.sql.DriverManager`` statement (Spark has no JDBC DDL API).
+- **jdbc** — a remote database described by DbParams. Statements run
+  whole in the database (pushdown parity with reference etl.py:95).
+  Driver-bound extracts (iter_chunks, fetchone, fetchall, the DML
+  ``RETURNING`` shim, catalog.table_info) read on one driver-side JDBC
+  session (:meth:`SparkConnection.driver_result`), the reference's
+  ``cursor.execute`` + ``fetchmany`` loop: no Spark job, rows converted
+  by Spark's own JDBC read code, and one fetch batch resident in
+  Python. ``dataframe()`` and the distributed copy/load paths keep
+  Spark's JDBC read (``query``/``dbtable`` option), writes go through
+  the JDBC batch writer, and DDL/DML pass-through runs on the same
+  driver-side session (Spark has no JDBC DDL API). That session is
+  opened by Spark's JDBC connection factory with every connection
+  option, as a Spark JDBC task opens its own.
 - **files** — a directory of parquet/csv/json/orc/xml tables registered as
   temp views; queries run on Spark SQL itself. This is the backend the
   test harness and the 100 TB data-lake path use. The directory is
@@ -25,11 +33,18 @@ operators in :mod:`etlhelper_spark.operators.etl`:
 
 from __future__ import annotations
 
+import json
 import os
+import re
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
+from functools import cached_property
+from types import SimpleNamespace
 from typing import Any, Mapping, Sequence
 
+from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import _create_local_socket
 
 from .db_params import DbParams
 from .exceptions import (
@@ -38,9 +53,34 @@ from .exceptions import (
     ETLHelperQueryError,
 )
 from .parameters import bind_parameters
-from .validation import validate_identifier
+from .validation import strip_sql_noise, validate_identifier
 
 _FILE_FORMATS = ("parquet", "csv", "json", "orc", "xml")
+
+#: rows per JDBC fetch: a Spark JDBC read's ``fetchsize`` and the
+#: batch the driver-side extract path holds
+FETCH_SIZE = 5000
+
+#: the thread that prepares a driver-side result's next fetch batch
+_READ_AHEAD = ThreadPoolExecutor(1, thread_name_prefix="etlhelper-read-ahead")
+
+
+def _is_dml(sql: str) -> bool:
+    """True when *sql* is a data-modifying statement: leading keyword
+    INSERT/UPDATE/DELETE/MERGE, or a WITH query containing a
+    data-modifying CTE (PostgreSQL `WITH ins AS (INSERT ... RETURNING)
+    SELECT`). Comments and string literals are stripped first so
+    neither a leading `-- note` nor a VALUES literal containing the
+    word 'insert' can misroute the statement."""
+    bare = strip_sql_noise(sql)
+    if re.match(r"(INSERT|UPDATE|DELETE|MERGE)\b", bare, re.IGNORECASE):
+        return True
+    return bool(
+        re.match(r"WITH\b", bare, re.IGNORECASE)
+        and re.search(
+            r"\b(INSERT|UPDATE|DELETE|MERGE)\b", bare, re.IGNORECASE
+        )
+    )
 
 
 class SparkConnection:
@@ -150,7 +190,9 @@ class SparkConnection:
             if self.kind == "jdbc":
                 return (
                     self.spark.read.format("jdbc")
-                    .options(**self._jdbc_options(query=bound, fetchsize="5000"))
+                    .options(**self._jdbc_options(
+                        query=bound, fetchsize=str(FETCH_SIZE)
+                    ))
                     .load()
                 )
             return self.spark.sql(bound)
@@ -274,7 +316,7 @@ class SparkConnection:
         bound = bind_parameters(query, parameters)
         try:
             if self.kind == "jdbc":
-                with self._jdbc_session() as conn:
+                with self._jdbc_session(query=bound) as (conn, _opts, _dialect):
                     stmt = conn.createStatement()
                     try:
                         stmt.execute(bound)
@@ -298,23 +340,61 @@ class SparkConnection:
             **self.jdbc_options,
         }
 
-    @contextmanager
-    def _jdbc_session(self):
-        """A driver-side ``java.sql.Connection`` (via py4j) for the
-        statements Spark's JDBC source cannot run. autoCommit is off:
-        the block commits once on success, rolls back on error, and the
-        connection always closes. (JDBC connections open with
-        autoCommit on, and pgjdbc raises on ``commit()`` then.)"""
-        assert self.db_params is not None
-        props = self.db_params.jdbc_properties(self.password_variable)
-        conn = self.spark._jvm.java.sql.DriverManager.getConnection(
-            self.db_params.jdbc_url(),
-            props.get("user", ""),
-            props.get("password", ""),
+    @cached_property
+    def _jdbc_jvm(self) -> SimpleNamespace:
+        """The JVM entry points of the driver-side JDBC path, looked up
+        once per connection: each step of a py4j class or member lookup
+        is a round trip to the JVM."""
+        jvm = self.spark._jvm
+        jdbc = jvm.org.apache.spark.sql.execution.datasources.jdbc
+        utils = jdbc.JdbcUtils
+        result_set = jvm.java.sql.ResultSet
+        return SimpleNamespace(
+            scala_map=jvm.org.apache.spark.api.python.PythonUtils.toScalaMap,
+            JDBCOptions=jdbc.JDBCOptions,
+            dialect=jvm.org.apache.spark.sql.jdbc.JdbcDialects.get,
+            get_schema=utils.getSchema,
+            custom_schema=utils.getCustomSchema,
+            to_rows=utils.resultSetToRows,
+            resolve_table=jdbc.JDBCRDD.resolveTable,
+            java_list=jvm.scala.collection.JavaConverters.seqAsJavaList,
+            forward_only=result_set.TYPE_FORWARD_ONLY,
+            read_only=result_set.CONCUR_READ_ONLY,
+            generated_keys=jvm.java.sql.Statement.RETURN_GENERATED_KEYS,
         )
+
+    @contextmanager
+    def _jdbc_session(self, **options: str):
+        """A driver-side JDBC session (via py4j), set up as a Spark JDBC
+        read task sets up its own (``JDBCRDD.compute``): the connection
+        comes from the dialect's connection factory with every option
+        of :meth:`_jdbc_options` (driver properties, credentials,
+        ``connect(**kwargs)``), ``beforeFetch`` runs, then the
+        ``sessionInitStatement``. Yields ``(java.sql.Connection,
+        JDBCOptions, JdbcDialect)``; *options* must name the
+        ``query`` or ``dbtable`` that JDBCOptions requires.
+
+        autoCommit is off: the block commits once on success, rolls
+        back on error, and the connection always closes. (JDBC
+        connections open with autoCommit on, and pgjdbc raises on
+        ``commit()`` then.)"""
+        jvm = self._jdbc_jvm
+        params = jvm.scala_map(self._jdbc_options(**options))
+        opts = jvm.JDBCOptions(params)
+        dialect = jvm.dialect(opts.url())
+        conn = dialect.createConnectionFactory(opts).apply(-1)
         try:
             conn.setAutoCommit(False)
-            yield conn
+            dialect.beforeFetch(conn, params)
+            init = opts.sessionInitStatement()
+            if init.isDefined():
+                stmt = conn.prepareStatement(init.get())
+                try:
+                    stmt.setQueryTimeout(opts.queryTimeout())
+                    stmt.execute()
+                finally:
+                    stmt.close()
+            yield conn, opts, dialect
             conn.commit()
         except BaseException:
             try:
@@ -324,6 +404,198 @@ class SparkConnection:
             raise
         finally:
             conn.close()
+
+    @contextmanager
+    def driver_result(
+        self, sql: str, fetch_size: int = FETCH_SIZE, max_rows: int = 0
+    ):
+        """Run *sql* as given on one :meth:`_jdbc_session` and yield
+        ``(columns, rows)``, *rows* an iterator of ``pyspark.sql.Row``.
+
+        The JDBC extract path of iter_chunks/fetchone/fetchall and of
+        ``catalog.table_info``: rows are converted by the code Spark's
+        JDBC read runs (``JdbcUtils.getSchema``, then
+        ``resultSetToRows``), so values, types and NULLs are those of
+        :meth:`dataframe`, ``customSchema`` and ``preferTimestampNTZ``
+        included. Each fetch batch of *fetch_size* rows (the
+        connection's ``fetchsize`` option wins) reaches Python through
+        a local DataFrame, as ``collect()`` does: no Spark job runs,
+        Python holds one batch at a time, and the JVM reads the next
+        one ahead. *max_rows* > 0 caps the result database-side
+        (``setMaxRows``). Leaving the block closes the statement and
+        the session.
+
+        DML (see :func:`_is_dml`) is the ``INSERT ... RETURNING``
+        round-trip (reference:
+        docs/code_demos/utilities/return_autogenerated.py:5): a
+        ``RETURNING``/``OUTPUT`` clause or an UPDATE/DELETE/MERGE runs
+        via ``Statement.execute`` and yields its ResultSet, if any; a
+        plain INSERT on an engine without RETURNING syntax (Derby)
+        yields its generated keys. Its rows are read whole and the
+        session commits before the first one is yielded."""
+        if _is_dml(sql):
+            with self._jdbc_session(query=sql) as session:
+                columns, rows = self._dml_rows(session, sql)
+            yield columns, iter(rows)
+            return
+        with self._jdbc_session(
+            query=sql, fetchsize=str(fetch_size)
+        ) as session:
+            conn, opts, _dialect = session
+            jvm = self._jdbc_jvm
+            stmt = conn.prepareStatement(sql, jvm.forward_only, jvm.read_only)
+            rows = None
+            try:
+                stmt.setFetchSize(opts.fetchSize())
+                stmt.setQueryTimeout(opts.queryTimeout())
+                stmt.setMaxRows(max_rows)
+                columns, rows = self._result_rows(session, stmt.executeQuery())
+                yield columns, rows
+            finally:
+                if rows is not None:
+                    rows.close()  # waits for a batch being read ahead
+                stmt.close()
+
+    def _dml_rows(self, session, sql: str) -> tuple[list[str], list]:
+        """Execute DML on *session*; ``(columns, rows)`` it returned."""
+        conn = session[0]
+        # search with comments AND string literals stripped: a
+        # `-- returning ids` comment on a plain INSERT must not reroute
+        # it off the generated-keys path, losing its ids
+        bare = strip_sql_noise(sql)
+        generated_keys = not re.search(
+            r"\bRETURNING\b|\bOUTPUT\b", bare, re.IGNORECASE
+        ) and re.match(r"\s*INSERT\b", bare, re.IGNORECASE)
+        if generated_keys:
+            stmt = conn.prepareStatement(sql, self._jdbc_jvm.generated_keys)
+        else:
+            stmt = conn.createStatement()
+        try:
+            if generated_keys:
+                stmt.executeUpdate()
+                rs = stmt.getGeneratedKeys()
+            else:
+                rs = stmt.getResultSet() if stmt.execute(sql) else None
+            if rs is None:
+                return [], []
+            columns, rows = self._result_rows(session, rs)
+            if generated_keys:
+                # a table with no identity column yields one all-NULL
+                # dummy key row on some engines: not a real result
+                return columns, [r for r in rows if any(v is not None for v in r)]
+            return columns, list(rows)
+        finally:
+            stmt.close()
+
+    def _custom_schema(self, opts, schema):
+        """*schema* with the connection's ``customSchema`` option
+        applied, as JDBCRelation applies it to a read."""
+        custom = opts.customSchema()
+        if not custom.isDefined():
+            return schema
+        return self._jdbc_jvm.custom_schema(
+            schema, custom.get(),
+            self.spark._jsparkSession.sessionState().conf().resolver(),
+        )
+
+    def _result_rows(self, session, rs):
+        """``(columns, rows)`` of a java.sql.ResultSet read on
+        *session*, converted as Spark's JDBC read converts it (see
+        :meth:`driver_result`).
+
+        Python holds one fetch batch. While it reads that batch, the
+        JVM fetches and converts the next one and serves it on a local
+        socket (``collectToPython`` of a local DataFrame, as
+        ``DataFrame.collect`` does), driven from one shared read-ahead
+        thread."""
+        conn, opts, dialect = session
+        jvm = self._jdbc_jvm
+        # nullable and NTZ as JDBCRDD.resolveTable reads a schema
+        schema = self._custom_schema(opts, jvm.get_schema(
+            conn, rs, dialect, True, opts.preferTimestampNTZ()
+        ))
+        batches = jvm.to_rows(rs, schema, dialect).grouped(
+            opts.fetchSize() or FETCH_SIZE
+        )
+        create = self.spark._jsparkSession.createDataFrame
+        serializer = BatchedSerializer(CPickleSerializer())
+
+        def serve_next():
+            if not batches.hasNext():
+                return None
+            local = create(jvm.java_list(batches.next()), schema)
+            return _create_local_socket(local.collectToPython())
+
+        def rows():
+            pending = None
+            try:
+                served = serve_next()
+                while served is not None:
+                    pending = _READ_AHEAD.submit(serve_next)
+                    yield from list(serializer.load_stream(served))
+                    served, pending = pending.result(), None
+            finally:
+                # a batch served ahead and never read: let its writer
+                # finish before the statement closes
+                if pending is not None and pending.exception() is None:
+                    if pending.result() is not None:
+                        pending.result().read()
+
+        names = [f["name"] for f in json.loads(schema.json())["fields"]]
+        return names, rows()
+
+    def target_schema(self, table: str):
+        """The schema a write into the existing *table* is validated
+        against: the table's Spark schema, with the columns the
+        database declares NOT NULL marked non-nullable on jdbc (Spark
+        reads every JDBC column as nullable). Read on one
+        :meth:`_jdbc_session` from ``DatabaseMetaData.getColumns``: no
+        Spark job. Raises when *table* does not exist."""
+        if self.kind != "jdbc":
+            return self.table_dataframe(table).schema
+        from pyspark.sql.types import (
+            StructField,
+            StructType,
+            _parse_datatype_json_string,
+        )
+
+        for part in table.split("."):
+            validate_identifier(part)
+        with self._jdbc_session(dbtable=table) as (conn, opts, _dialect):
+            schema = self._custom_schema(
+                opts, self._jdbc_jvm.resolve_table(opts, conn)
+            )
+            not_null = self._not_null_columns(conn, table)
+        return StructType([
+            StructField(f.name, f.dataType, f.nullable and f.name not in not_null, f.metadata)
+            for f in _parse_datatype_json_string(schema.json()).fields
+        ])
+
+    @staticmethod
+    def _not_null_columns(conn, table: str) -> set[str]:
+        """Columns of *table* whose ``IS_NULLABLE`` is ``NO``. An
+        unquoted name is stored upper- or lower-cased by the database,
+        so each spelling is tried; the schema defaults to the
+        session's."""
+        schema, _, name = table.rpartition(".")
+        schema = schema or conn.getSchema()
+        md = conn.getMetaData()
+        for case in (str, str.upper, str.lower):
+            found, not_null = False, set()
+            rs = md.getColumns(None, schema and case(schema), case(name), None)
+            try:
+                while rs.next():
+                    # the name is a LIKE pattern: '_' matches any char
+                    if rs.getString("TABLE_NAME") != case(name):
+                        continue
+                    found = True
+                    if rs.getString("IS_NULLABLE") == "NO":
+                        not_null.add(rs.getString("COLUMN_NAME"))
+            finally:
+                rs.close()
+            if found:
+                return not_null
+        return set()
 
     def jdbc_executemany(self, sql: str, chunk: list) -> None:
         """Driver-side batched statement execution for arbitrary SQL
@@ -340,7 +612,7 @@ class SparkConnection:
         set-based statement) instead — this method is for modest
         row-count control statements.
         """
-        with self._jdbc_session() as conn:
+        with self._jdbc_session(query=sql) as (conn, _opts, _dialect):
             stmt = conn.prepareStatement(sql)
             try:
                 for row in chunk:
@@ -357,89 +629,13 @@ class SparkConnection:
                 stmt.close()
 
     def execute_returning(self, sql: str) -> tuple[list[str], list[tuple]]:
-        """Run a DML statement driver-side and return the rows it
-        produces — the ``INSERT ... RETURNING id`` round-trip
-        (reference: docs/code_demos/utilities/return_autogenerated.py:5,
-        via fetchone on a RETURNING statement).
-
-        Two JDBC shapes, picked from the SQL text:
-
-        - a ``RETURNING``/``OUTPUT`` clause (PostgreSQL, Oracle,
-          MSSQL): ``Statement.execute`` yields a normal ResultSet;
-        - plain INSERT on engines without RETURNING syntax (Derby):
-          ``prepareStatement(sql, RETURN_GENERATED_KEYS)`` +
-          ``getGeneratedKeys()`` surfaces the autogenerated ids.
-
-        Driver-side by design — Spark's JDBC ``query`` option cannot
-        run DML, and a RETURNING statement returns O(1) rows.
-        """
-        import re as _re
-
-        from .validation import strip_sql_noise
-
-        # search with comments AND string literals stripped (same
-        # sanitizer as _is_dml): a `-- returning ids` comment on a
-        # plain INSERT must not reroute it off the generated-keys
-        # path, losing its ids
-        bare = strip_sql_noise(sql)
-        has_clause = _re.search(
-            r"\bRETURNING\b|\bOUTPUT\b", bare, _re.IGNORECASE
-        )
-        plain_insert = not has_clause and _re.match(
-            r"\s*INSERT\b", bare, _re.IGNORECASE
-        )
-        with self._jdbc_session() as conn:
-            if plain_insert:
-                # engines without RETURNING syntax (Derby): surface
-                # the autogenerated ids via JDBC generated keys
-                key_flag = self.spark._jvm.java.sql.Statement.RETURN_GENERATED_KEYS
-                stmt = conn.prepareStatement(sql, key_flag)
-                try:
-                    stmt.executeUpdate()
-                    cols, rows = self._drain_resultset(
-                        stmt.getGeneratedKeys()
-                    )
-                    # a table with no identity column yields one all-NULL
-                    # dummy key row on some engines — not a real result
-                    rows = [r for r in rows if any(v is not None for v in r)]
-                finally:
-                    stmt.close()
-            else:
-                # RETURNING/OUTPUT clause, WITH-wrapped DML, or
-                # UPDATE/DELETE/MERGE: generic execute — drain the
-                # ResultSet if one was produced, else no rows
-                stmt = conn.createStatement()
-                try:
-                    produced = stmt.execute(sql)
-                    rs = stmt.getResultSet() if produced else None
-                    cols, rows = self._drain_resultset(rs)
-                finally:
-                    stmt.close()
-        return cols, rows
-
-    @staticmethod
-    def _drain_resultset(rs) -> tuple[list[str], list[tuple]]:
-        """Materialize a java.sql.ResultSet into (labels, row tuples).
-        py4j auto-converts primitive wrappers; anything else (e.g.
-        BigDecimal) falls back to its string form."""
-        if rs is None:
-            return [], []
-        md = rs.getMetaData()
-        n = md.getColumnCount()
-        cols = [md.getColumnLabel(i + 1) for i in range(n)]
-        rows: list[tuple] = []
-        while rs.next():
-            vals = []
-            for i in range(n):
-                v = rs.getObject(i + 1)
-                if v is not None and not isinstance(
-                    v, (bool, int, float, str, bytes, bytearray)
-                ):
-                    v = str(v)
-                vals.append(v)
-            rows.append(tuple(vals))
-        rs.close()
-        return cols, rows
+        """Run a DML statement driver-side and return
+        ``(columns, row tuples)`` it produced: the rows of a
+        ``RETURNING``/``OUTPUT`` clause, or a plain INSERT's generated
+        keys. The DML branch of :meth:`driver_result`, read whole: its
+        rows are typed as a SELECT's rows are."""
+        with self.driver_result(sql) as (columns, rows):
+            return columns, [tuple(r) for r in rows]
 
 
 def connect(

@@ -43,5 +43,11 @@ class ETLHelperHelperError(ETLHelperError):
     (reference: db_helper_factory.py)."""
 
 
+class ETLHelperAtomicSwapError(ETLHelperError):
+    """Raised when a table swap (operators.maintenance.replace_table)
+    targets a filesystem without an atomic directory rename: an object
+    store moves a directory by copy-then-delete."""
+
+
 class ETLHelperBadIdentifierError(ETLHelperError):
     """Raised for invalid SQL identifiers (reference: etl.py:642-664)."""

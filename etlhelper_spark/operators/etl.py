@@ -26,6 +26,7 @@ import copy as _copy
 import logging
 import time
 from collections import namedtuple
+from contextlib import ExitStack, contextmanager, nullcontext
 from itertools import chain, islice, zip_longest
 from typing import Any, Callable, Iterable, Iterator, Mapping, Sequence
 
@@ -51,31 +52,6 @@ CHUNKSIZE = 5000
 
 #: longest wait for a committed write's observed row count
 _METRICS_WAIT_S = 120.0
-
-# DML statements routed to the driver-side RETURNING shim on jdbc
-# connections (Spark's JDBC query option cannot execute DML)
-import re as _re
-
-from ..validation import strip_sql_noise
-
-
-def _is_dml(sql: str) -> bool:
-    """True when *sql* is a data-modifying statement: leading keyword
-    INSERT/UPDATE/DELETE/MERGE, or a WITH query containing a
-    data-modifying CTE (PostgreSQL `WITH ins AS (INSERT ... RETURNING)
-    SELECT`). Comments and string literals are stripped first so
-    neither a leading `-- note` nor a VALUES literal containing the
-    word 'insert' can misroute the statement."""
-    bare = strip_sql_noise(sql)
-    if _re.match(r"(INSERT|UPDATE|DELETE|MERGE)\b", bare, _re.IGNORECASE):
-        return True
-    return bool(
-        _re.match(r"WITH\b", bare, _re.IGNORECASE)
-        and _re.search(
-            r"\b(INSERT|UPDATE|DELETE|MERGE)\b", bare, _re.IGNORECASE
-        )
-    )
-
 
 class dataframe_transform:  # noqa: N801 - decorator-style name
     """Mark a callable as a DataFrame -> DataFrame transform (the fast
@@ -156,87 +132,86 @@ def iter_chunks(
 ) -> Iterator[Chunk]:
     """Run *select_query* and yield driver-side chunks of rows.
 
-    Parity with reference iter_chunks (etl.py:53-139): lazy, one chunk
-    resident at a time (``toLocalIterator`` streams partitions to the
-    driver), row_factory applied per row, transform per chunk, abort
-    checked per chunk. The backend executes the query itself —
-    distributed — before rows stream back. ``limit`` (internal; used
-    by fetchone) pushes a LIMIT into the plan so the backend stops
-    early instead of computing the full result, and the bounded result
-    arrives in one ``collect`` instead of the local iterator's socket
-    job.
+    Parity with reference iter_chunks (etl.py:53-139): lazy, row_factory
+    applied per row, transform per chunk, abort checked per chunk.
+
+    - jdbc: the statement runs as given on one driver-side JDBC
+      session (:meth:`SparkConnection.driver_result`), the reference's
+      ``cursor.execute`` + ``fetchmany`` loop: no Spark job runs, rows
+      are converted by Spark's JDBC read code (the same values and
+      types as ``conn.dataframe``), and one fetch batch is resident at
+      a time (the connection's ``fetchsize``, else the larger of
+      *chunk_size* and 5000 rows). DML (``INSERT ... RETURNING``, a
+      generated-key INSERT) commits before its first row is yielded.
+      Closing the generator early closes the statement and session.
+    - files: Spark SQL executes the query, distributed, and its rows
+      stream back a partition at a time (``toLocalIterator``).
+
+    ``limit`` (internal; used by fetchone) caps the result in the
+    backend: ``setMaxRows`` on jdbc, a LIMIT in the plan on files (the
+    bounded result arrives in one ``collect``).
     """
     clear_abort_event()
     _register_session(conn.spark)
     logger.info("Fetching rows (chunk_size=%s)", chunk_size)
     logger.debug("Fetching:\n\n%s\n\nwith parameters:\n\n%s\n\nagainst\n\n%r",
                  select_query, parameters, conn)
-    if conn.kind == "jdbc" and _is_dml(select_query):
-        # INSERT ... RETURNING id / OUTPUT / generated-key round-trip
-        # (reference: docs/code_demos/utilities/return_autogenerated.py)
-        # — DML cannot run through Spark's JDBC query option, so the
-        # rows come from the driver-side statement shim.
+    sql = select_query
+    if conn.kind == "jdbc":
+        from ..connect import FETCH_SIZE
         from ..parameters import bind_parameters
 
-        bound = bind_parameters(select_query, parameters)
-        try:
-            cols, rows = conn.execute_returning(bound)
-        except Exception as exc:
-            raise ETLHelperExtractError(
-                f"SQL query raised an error.\n\n{bound}\n\n{exc}\n"
-            ) from exc
-        create_row = row_factory(cols)
-        made = [create_row(r) for r in rows]
-        for start in range(0, len(made), chunk_size):
-            chunk = made[start : start + chunk_size]
+        sql = bind_parameters(select_query, parameters)
+        result = conn.driver_result(
+            sql, max(chunk_size, FETCH_SIZE), max_rows=limit or 0
+        )
+    else:
+        with _extract_errors(sql):
+            df = conn.dataframe(select_query, parameters)
+            if limit is not None:
+                df = df.limit(limit)
+                rows = iter(df.collect())
+            else:
+                rows = df.toLocalIterator(prefetchPartitions=True)
+        result = nullcontext((df.columns, rows))
+
+    with ExitStack() as stack:
+        with _extract_errors(sql):
+            columns, rows = stack.enter_context(result)
+        create_row = row_factory(columns)
+        first_pass = True
+        n_rows = 0
+        while True:
+            raise_for_abort()
+            with _extract_errors(sql):
+                fetched = list(islice(rows, chunk_size))
+            if not fetched:
+                break
+            chunk = [create_row(tuple(r)) for r in fetched]
             if transform:
                 chunk = transform(chunk)
-            if chunk:
-                yield chunk
-        logger.info("%s rows returned", len(made))
-        return
-    try:
-        df = conn.dataframe(select_query, parameters)
-    except Exception:
-        # a set abort event means our own job-group cancellation broke
-        # the plan/view setup — surface the abort, not an extract error
-        raise_for_abort()
-        raise
-    if limit is not None:
-        df = df.limit(limit)
-    create_row = row_factory(df.columns)
-
-    def spark_row_stream():
-        if limit is not None:
-            yield from df.collect()
-        else:
-            yield from df.toLocalIterator(prefetchPartitions=True)
-
-    first_pass = True
-    n_rows = 0
-    it = spark_row_stream()
-    while True:
-        raise_for_abort()
-        try:
-            spark_rows = list(islice(it, chunk_size))
-        except Exception as exc:
-            # a set abort event means the failure is our own job-group
-            # cancellation — surface it as the abort, not an extract error
-            raise_for_abort()
-            raise ETLHelperExtractError(
-                f"SQL query raised an error.\n\n{select_query}\n\n{exc}\n"
-            ) from exc
-        if not spark_rows:
-            break
-        chunk = [create_row(tuple(r)) for r in spark_rows]
-        if transform:
-            chunk = transform(chunk)
-        if first_pass:
-            logger.debug("First row: %s", chunk[0] if chunk else None)
-            first_pass = False
-        n_rows += len(spark_rows)
-        yield chunk
+            if first_pass:
+                logger.debug("First row: %s", chunk[0] if chunk else None)
+                first_pass = False
+            n_rows += len(fetched)
+            yield chunk
     logger.info("%s rows returned", n_rows)
+
+
+@contextmanager
+def _extract_errors(sql: str):
+    """Raise a fetch failure as ETLHelperExtractError, or as the abort
+    when the abort event is set (the failure is then our own job-group
+    cancellation)."""
+    try:
+        yield
+    except Exception as exc:
+        raise_for_abort()
+        if isinstance(exc, ETLHelperError):
+            raise
+        raise ETLHelperExtractError(
+            f"SQL query raised an error.\n\n{sql}\n\n{exc}\n"
+        ) from exc
 
 
 def iter_rows(
@@ -268,9 +243,12 @@ def fetchone(
     chunk_size: int = 1,
 ) -> Any | None:
     """First row or None (reference: etl.py:172-204). With no transform
-    the LIMIT 1 is pushed into the plan (the backend stops early);
-    with a transform the full stream is consulted because a transform
-    may drop rows (reference semantics)."""
+    the result is capped at one row in the backend (``setMaxRows(1)``
+    on the driver-side JDBC session, which runs no Spark job; a LIMIT 1
+    in the plan on files); with a transform the stream is consulted
+    chunk by chunk, one JDBC fetch batch resident, because a transform
+    may drop rows (reference semantics). Returning closes the JDBC
+    statement and session."""
     gen = iter_chunks(
         select_query,
         conn,
@@ -738,7 +716,7 @@ def observed_write(
     target_schema = None
     if on_error is not None:
         try:
-            target_schema = conn.table_dataframe(table).schema
+            target_schema = conn.target_schema(table)
         except Exception:
             pass  # new table: nothing to validate against
     metrics = [F.count(F.lit(1)).alias("processed")]

@@ -11,7 +11,8 @@ space-filling curve (clustered_rewrite) so multi-column range
 predicates touch few files.  Both, and merge_into_parquet, replace
 the table through :func:`replace_table`: the new contents are staged
 in a sibling directory ``<target>.__<op>_<hex>`` and swapped in by two
-renames — readers never see a half-rewritten table.
+renames through pyarrow.fs — readers never see a half-rewritten
+table.
 
 Reference parity: the reference's copy_table_rows replaces the target
 table wholesale (etlhelper/etl.py); these are that contract applied to
@@ -21,14 +22,14 @@ table layout instead of table contents.
 from __future__ import annotations
 
 import math
-import os
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..abort import raise_for_abort
-from ..functions.util import count_parquet_rows, parquet_data_files
+from ..exceptions import ETLHelperAtomicSwapError
+from ..functions.util import count_parquet_rows, parquet_data_files, parquet_fs
 from ..state.store import remove
 
 __all__ = [
@@ -40,22 +41,34 @@ __all__ = [
 
 _DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # matches maxPartitionBytes
 
+#: pyarrow filesystems whose ``move`` of a directory is one rename
+_ATOMIC_RENAME_FS = ("local", "hdfs")
+
 
 def replace_table(df: DataFrame, target_path: str, op: str) -> int:
     """Replace the parquet table at *target_path* with *df*,
     copy-on-write; returns the new row count (footer sum, no scan job).
 
     *df* is written to the sibling staging directory
-    ``<target>.__<op>_<hex>`` and swapped in by two renames (target to
-    ``<target>.__pre_<op>_<hex>``, staging to target), so readers see
-    the old table or the new one, never a mix. Staging is a sibling so
-    the rename never crosses filesystems. If the swap fails the target
-    is left as it was and the staging directory is removed.
+    ``<target>.__<op>_<hex>`` and swapped in by two moves through
+    pyarrow.fs (target to ``<target>.__pre_<op>_<hex>``, staging to
+    target), so readers see the old table or the new one, never a mix.
+    Staging is a sibling so the move never crosses filesystems. If the
+    swap fails the target is left as it was and the staging directory
+    is removed.
 
-    The renames are the package's one local-only path operation:
-    object stores have no atomic rename, so on them a table needs a
-    manifest/table format (what Delta/Iceberg do with metadata
-    pointers) instead."""
+    The moves are renames only on local and HDFS filesystems (bare
+    paths, ``file://``, ``hdfs://``). Object stores move a directory by
+    copy-then-delete, which readers can observe half done, so there
+    the swap raises :class:`~etlhelper_spark.exceptions.ETLHelperAtomicSwapError`
+    before anything is written: such a table needs a manifest/table
+    format (what Delta/Iceberg do with metadata pointers) instead."""
+    fs, target = parquet_fs(target_path)
+    if fs.type_name not in _ATOMIC_RENAME_FS:
+        raise ETLHelperAtomicSwapError(
+            f"Cannot swap the table at {target_path}: {fs.type_name} "
+            "filesystems have no atomic directory rename"
+        )
 
     def sibling(kind: str) -> str:
         return target_path.rstrip("/") + f".__{kind}_{uuid.uuid4().hex[:8]}"
@@ -66,11 +79,11 @@ def replace_table(df: DataFrame, target_path: str, op: str) -> int:
         df.write.mode("overwrite").parquet(staging)
         # the write just committed: the footers ARE the table
         rows = count_parquet_rows(staging)
-        os.rename(target_path, backup)
+        fs.move(target, parquet_fs(backup)[1])
         try:
-            os.rename(staging, target_path)
+            fs.move(parquet_fs(staging)[1], target)
         except OSError:
-            os.rename(backup, target_path)  # roll back, table untouched
+            fs.move(parquet_fs(backup)[1], target)  # roll back
             raise
     except BaseException:
         remove(staging)

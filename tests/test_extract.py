@@ -122,7 +122,7 @@ def test_is_dml_routing_edge_cases():
     """DML-shim routing: keyword detection must survive comments,
     literals, and WITH-wrapped data-modifying CTEs — and must NOT
     trigger on SELECTs whose string data mentions DML words."""
-    from etlhelper_spark.operators.etl import _is_dml
+    from etlhelper_spark.connect import _is_dml
 
     assert _is_dml("INSERT INTO t VALUES (1)")
     assert _is_dml("  update t set x = 1")

@@ -275,13 +275,15 @@ def test_copy_table_rows_into_derby_runs_one_job(src_conn, derby_conn, call_jobs
 
 
 def test_fetchone_runs_one_job(derby_conn, call_jobs):
+    """(The name predates the driver-side extract path.) A JDBC
+    fetchone reads on a driver-side session: no Spark job at all."""
     load("fetch_one_tbl", derby_conn, [{"id": i} for i in range(50)])
     row = fetchone(
         'SELECT "id" FROM fetch_one_tbl WHERE "id" = ?', derby_conn,
         parameters=(7,),
     )
     assert row == {"id": 7}
-    assert call_jobs() == 1
+    assert call_jobs() == 0
 
 
 def test_copy_rows_on_error_gets_exactly_the_cast_rejects(
@@ -363,3 +365,178 @@ def test_stage_and_merge_counts_from_its_staging_write(spark, derby_conn):
     assert n == 40
     assert tracker.jobsList(None).size() - before == 1  # the staging write
     assert fetchone('SELECT count(*) AS "n" FROM merged', derby_conn) == {"n": 40}
+
+
+# ----------------------------------------------------------------------
+# driver-side extracts: one JDBC session, Spark's own row conversion
+# ----------------------------------------------------------------------
+TYPED_COLUMNS = (
+    '"b" BIGINT, "v" VARCHAR(20), "d" DOUBLE, "p" DECIMAL(10,2), '
+    '"ts" TIMESTAMP, "dt" DATE, "bo" BOOLEAN, "c" CLOB, "s" SMALLINT, '
+    '"r" REAL, "ch" CHAR(5), "tm" TIME, "vb" VARCHAR(8) FOR BIT DATA'
+)
+
+
+@pytest.fixture(scope="module")
+def typed_table(derby_conn):
+    execute(f"CREATE TABLE typed_tbl ({TYPED_COLUMNS})", derby_conn)
+    execute(
+        "INSERT INTO typed_tbl VALUES (9007199254740993, 'x', 1.5, 1.25, "
+        "TIMESTAMP('2024-01-02 03:04:05.123456'), DATE('2024-01-02'), TRUE, "
+        "'clob', 3, 2.5, 'ab', TIME('03:04:05'), X'0102')",
+        derby_conn,
+    )
+    execute(
+        "INSERT INTO typed_tbl VALUES (NULL, NULL, NULL, NULL, NULL, NULL, "
+        "NULL, NULL, NULL, NULL, NULL, NULL, NULL)",
+        derby_conn,
+    )
+    execute(
+        "INSERT INTO typed_tbl VALUES (-1, '', -0.0, -99.99, "
+        "TIMESTAMP('1969-12-31 23:59:59'), DATE('1900-03-01'), FALSE, "
+        "'', -32768, -1.0E-3, '', TIME('00:00:00'), X'')",
+        derby_conn,
+    )
+    return "SELECT * FROM typed_tbl"
+
+
+@pytest.mark.parametrize(
+    "options", [{}, {"customSchema": "b STRING, p DOUBLE, s LONG"}],
+    ids=["spark_types", "custom_schema"],
+)
+def test_driver_rows_equal_spark_jdbc_rows(spark, derby_conn, typed_table, options):
+    from etlhelper_spark.row_factories import tuple_row_factory
+
+    conn = connect(derby_conn.db_params, spark=spark, **options)
+    spark_df = conn.dataframe(typed_table)
+    with conn.driver_result(typed_table) as (columns, rows):
+        got = [tuple(r) for r in rows]
+    assert columns == spark_df.columns
+    assert got == [tuple(r) for r in spark_df.collect()]
+    assert fetchall(typed_table, conn, row_factory=tuple_row_factory) == got
+    if options:
+        assert {type(v) for v in got[0][:4]} == {str, float}
+
+
+def test_returning_rows_are_typed_like_select_rows(derby_conn):
+    from datetime import datetime
+    from decimal import Decimal
+
+    execute(
+        "CREATE TABLE ret_typed (id INT GENERATED ALWAYS AS IDENTITY, "
+        "name VARCHAR(8), p DECIMAL(10,2), ts TIMESTAMP)",
+        derby_conn,
+    )
+    (key,) = fetchone(
+        "INSERT INTO ret_typed (name, p, ts) VALUES "
+        "('a', 1.25, TIMESTAMP('2024-01-02 03:04:05'))",
+        derby_conn,
+    ).values()
+    assert key == 1 and not isinstance(key, str)
+    expected = (Decimal("1.25"), datetime(2024, 1, 2, 3, 4, 5))
+    assert derby_conn.execute_returning("SELECT p, ts FROM ret_typed") == (
+        ["P", "TS"], [expected]
+    )
+    assert tuple(fetchone("SELECT p, ts FROM ret_typed", derby_conn).values()) == expected
+
+
+def test_driver_extracts_run_no_spark_job(spark, derby_conn, call_jobs):
+    from etlhelper_spark.catalog import table_info
+    from etlhelper_spark.operators import iter_chunks
+
+    load("zero_job_tbl", derby_conn, [{"id": i} for i in range(30)])
+    execute(
+        "CREATE TABLE zero_job_ids (id INT GENERATED ALWAYS AS IDENTITY, "
+        "name VARCHAR(8))",
+        derby_conn,
+    )
+    sql = 'SELECT "id" FROM zero_job_tbl'
+    assert fetchone(sql + ' WHERE "id" = 3', derby_conn) == {"id": 3}
+    assert call_jobs() == 0
+    assert len(fetchall(sql, derby_conn)) == 30
+    assert call_jobs() == 0
+    assert sum(map(len, iter_chunks(sql, derby_conn, chunk_size=7))) == 30
+    assert call_jobs() == 0
+    assert fetchone(
+        "INSERT INTO zero_job_ids (name) VALUES ('a')", derby_conn
+    ) is not None
+    assert call_jobs() == 0
+    # table_info starts no job group of its own: count every job
+    jobs = spark._jsc.sc().statusStore()
+    before = jobs.jobsList(None).size()
+    assert [c.name for c in table_info("zero_job_tbl", derby_conn)] == ["id"]
+    assert jobs.jobsList(None).size() == before
+
+
+def test_closing_iter_chunks_early_closes_statement_and_session(
+    derby_conn, monkeypatch
+):
+    from etlhelper_spark.operators import iter_chunks
+
+    load("early_close_tbl", derby_conn, [{"id": i} for i in range(40)])
+    opened = {}
+    result_rows = derby_conn._result_rows
+
+    def spy(session, rs):
+        opened["session"], opened["statement"] = session[0], rs.getStatement()
+        return result_rows(session, rs)
+
+    monkeypatch.setattr(derby_conn, "_result_rows", spy)
+    gen = iter_chunks('SELECT "id" FROM early_close_tbl', derby_conn, chunk_size=10)
+    assert len(next(gen)) == 10
+    assert not opened["statement"].isClosed()
+    assert not opened["session"].isClosed()
+    gen.close()
+    assert opened["statement"].isClosed()
+    assert opened["session"].isClosed()
+
+
+def test_error_mid_query_raises_extract_error(spark, derby_conn):
+    from etlhelper_spark.operators import iter_chunks
+
+    load("midq_tbl", derby_conn, [{"id": i} for i in range(100)])
+    # fetch batches of 10 rows: row 50 divides by zero in a later batch
+    conn = connect(derby_conn.db_params, spark=spark, fetchsize="10")
+    gen = iter_chunks(
+        'SELECT 100 / ("id" - 50) AS "q" FROM midq_tbl', conn, chunk_size=10
+    )
+    assert len(next(gen)) == 10
+    with pytest.raises(ETLHelperExtractError, match="divide by zero"):
+        list(gen)
+
+
+def test_abort_between_chunks(derby_conn):
+    from etlhelper_spark import abort_etlhelper_threads
+    from etlhelper_spark.exceptions import ETLHelperAbortError
+    from etlhelper_spark.operators import iter_chunks
+
+    load("abort_tbl", derby_conn, [{"id": i} for i in range(30)])
+    gen = iter_chunks('SELECT "id" FROM abort_tbl', derby_conn, chunk_size=10)
+    assert len(next(gen)) == 10
+    abort_etlhelper_threads()
+    with pytest.raises(ETLHelperAbortError):
+        next(gen)
+    # the next ETL call clears the event
+    assert len(fetchall('SELECT "id" FROM abort_tbl', derby_conn)) == 30
+
+
+def test_on_error_sees_jdbc_not_null_columns(spark, derby_conn, call_jobs):
+    """A NULL into a NOT NULL column of a Derby target reaches on_error
+    and the other rows commit (the whole write failed when every JDBC
+    column read as nullable)."""
+    execute(
+        'CREATE TABLE nn_target ("id" BIGINT NOT NULL, "name" VARCHAR(16))',
+        derby_conn,
+    )
+    rows = spark.createDataFrame(
+        [(1, "a"), (None, "b"), (3, "c")], "id long, name string"
+    )
+    rejects = []
+    assert load("nn_target", derby_conn, rows, on_error=rejects.extend) == (3, 1)
+    assert call_jobs() == 1  # the write
+    assert [(f.row, str(f.exception)) for f in rejects] == [
+        ({"id": None, "name": "b"}, "id violates NOT NULL")
+    ]
+    assert fetchall('SELECT "id" FROM nn_target ORDER BY "id"', derby_conn) == [
+        {"id": 1}, {"id": 3}
+    ]

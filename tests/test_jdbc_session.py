@@ -1,8 +1,10 @@
 """Driver-side JDBC statements (execute, executemany pass-through,
 RETURNING) run on one java.sql session with autoCommit off: commit on
-success, rollback on error, always close. Pinned with a stub py4j
-gateway whose connection behaves like pgjdbc: it opens with autoCommit
-on and raises on ``commit()`` while autoCommit is on."""
+success, rollback on error, always close. The session is opened by
+Spark's JDBC connection factory with every connection option, and runs
+the ``sessionInitStatement`` before the caller's statement. Pinned with
+a stub py4j gateway whose connection behaves like pgjdbc: it opens with
+autoCommit on and raises on ``commit()`` while autoCommit is on."""
 
 from types import SimpleNamespace
 
@@ -13,14 +15,18 @@ from etlhelper_spark.db_params import DbParams
 
 
 class _Statement:
-    def __init__(self, log, fail):
-        self.log, self.fail = log, fail
+    def __init__(self, log, fail, sql=None):
+        self.log, self.fail, self.sql = log, fail, sql
 
-    def execute(self, sql):
-        self.log.append("execute")
-        if self.fail:
+    def execute(self, sql=None):
+        # a prepared statement (the session's init statement) logs its text
+        self.log.append("execute" if sql else f"execute {self.sql}")
+        if self.fail and sql:
             raise RuntimeError("statement failed")
         return False
+
+    def setQueryTimeout(self, seconds):
+        pass
 
     def getResultSet(self):
         return None
@@ -52,7 +58,7 @@ class _PgLikeConnection:
         return _Statement(self.log, self.fail)
 
     def prepareStatement(self, sql, *flags):
-        return _Statement(self.log, self.fail)
+        return _Statement(self.log, self.fail, sql)
 
     def commit(self):
         if self.auto_commit:
@@ -66,24 +72,91 @@ class _PgLikeConnection:
         self.log.append("close")
 
 
-def _conn(monkeypatch, fail=False):
+class _Unused:
+    """JVM entry points the stubbed statements never call."""
+
+    def __getattr__(self, name):
+        return _Unused()
+
+
+class _Option:
+    def __init__(self, value):
+        self.value = value
+
+    def isDefined(self):
+        return self.value is not None
+
+    def get(self):
+        return self.value
+
+
+class _JDBCOptions:
+    """Spark's JDBCOptions over the option map, as far as the session
+    reads it."""
+
+    def __init__(self, params):
+        self.params = params
+
+    def url(self):
+        return self.params["url"]
+
+    def sessionInitStatement(self):
+        return _Option(self.params.get("sessionInitStatement"))
+
+    def queryTimeout(self):
+        return 0
+
+
+def _conn(monkeypatch, fail=False, **kwargs):
+    """A jdbc SparkConnection over the stub gateway, and the log its
+    statements write. ``opened`` in the returned namespace holds the
+    option map each session was opened with."""
     monkeypatch.setenv("STUB_PG_PASSWORD", "x")
     log = []
-    manager = SimpleNamespace(
-        getConnection=lambda *args: _PgLikeConnection(log, fail)
+    opened = []
+
+    def factory(opts):
+        def apply(_partition):
+            opened.append(opts.params)
+            return _PgLikeConnection(log, fail)
+        return SimpleNamespace(apply=apply)
+
+    dialect = SimpleNamespace(
+        createConnectionFactory=factory,
+        beforeFetch=lambda conn, params: None,
     )
-    spark = SimpleNamespace(
-        _jvm=SimpleNamespace(java=SimpleNamespace(sql=SimpleNamespace(
-            DriverManager=manager,
+    jvm = SimpleNamespace(
+        java=SimpleNamespace(sql=SimpleNamespace(
             Statement=SimpleNamespace(RETURN_GENERATED_KEYS=1),
-        )))
+            ResultSet=_Unused(),
+        )),
+        scala=_Unused(),
+        org=SimpleNamespace(apache=SimpleNamespace(spark=SimpleNamespace(
+            api=SimpleNamespace(python=SimpleNamespace(
+                PythonUtils=SimpleNamespace(toScalaMap=dict),
+            )),
+            sql=SimpleNamespace(
+                jdbc=SimpleNamespace(
+                    JdbcDialects=SimpleNamespace(get=lambda url: dialect),
+                ),
+                execution=SimpleNamespace(datasources=SimpleNamespace(
+                    jdbc=SimpleNamespace(
+                        JDBCOptions=_JDBCOptions,
+                        JdbcUtils=_Unused(),
+                        JDBCRDD=_Unused(),
+                    ),
+                )),
+            ),
+        ))),
     )
     params = DbParams(
         dbtype="PG", host="localhost", port=5432, dbname="etl", user="u"
     )
     conn = SparkConnection(
-        spark, "jdbc", db_params=params, password_variable="STUB_PG_PASSWORD"
+        SimpleNamespace(_jvm=jvm), "jdbc", db_params=params,
+        jdbc_options=kwargs, password_variable="STUB_PG_PASSWORD",
     )
+    conn.opened = opened
     return conn, log
 
 
@@ -110,3 +183,24 @@ def test_failed_statement_rolls_back_and_closes(monkeypatch):
     with pytest.raises(RuntimeError, match="batch failed"):
         conn.jdbc_executemany("UPDATE t SET a = ?", [(1,)])
     assert log == ["executeBatch", "rollback", "close"]
+
+
+def test_session_gets_every_option_and_runs_init_first(monkeypatch):
+    """The driver-side session sees what Spark's reads and writes of the
+    connection see: the dialect's driver properties, the credentials
+    and every ``connect(**kwargs)`` option; the init statement runs
+    before the caller's statement."""
+    conn, log = _conn(
+        monkeypatch, ApplicationName="etl",
+        sessionInitStatement="SET search_path TO etl",
+    )
+    conn.execute_statement("CREATE TABLE t (a INT)")
+    assert log == [
+        "execute SET search_path TO etl", "execute", "commit", "close"
+    ]
+    (options,) = conn.opened
+    assert options["url"] == "jdbc:postgresql://localhost:5432/etl"
+    assert options["query"] == "CREATE TABLE t (a INT)"
+    assert options["reWriteBatchedInserts"] == "true"  # the pg dialect's
+    assert options["ApplicationName"] == "etl"
+    assert (options["user"], options["password"]) == ("u", "x")

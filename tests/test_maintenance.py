@@ -142,3 +142,15 @@ def test_compact_counts_only_spark_visible_files(spark, tmp_path):
     assert stats["files_before"] == 1
     assert stats["bytes"] == size
     assert stats["rows"] == 100 == spark.read.parquet(path).count()
+
+
+def test_compact_over_file_uri(spark, small_files_table):
+    """Compaction over a ``file://`` table: the swap moves through
+    pyarrow.fs and leaves no staging or backup directory behind."""
+    path, n_rows = small_files_table
+    stats = compact_parquet_table(
+        spark, "file://" + path, target_file_bytes=1 << 30
+    )
+    assert (stats["files_before"], stats["files_after"]) == (16, 1)
+    assert stats["rows"] == n_rows == spark.read.parquet(path).count()
+    assert os.listdir(os.path.dirname(path)) == [os.path.basename(path)]

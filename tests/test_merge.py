@@ -143,18 +143,29 @@ def test_null_delete_predicate_keeps_row(spark):
 
 
 def _watch_renames(monkeypatch, fail_into=None):
-    """Record every rename; raise OSError on the one into *fail_into*
-    (the staging -> target step of the swap)."""
+    """Record every move of the table swap (the pyarrow.fs ``move`` of
+    operators/maintenance.py); raise OSError on the one into
+    *fail_into* (the staging -> target step of the swap)."""
+    import etlhelper_spark.operators.maintenance as m
+
     renames = []
-    real = os.rename
+    real_fs = m.parquet_fs
 
-    def rename(src, dst):
-        renames.append((str(src), str(dst)))
-        if fail_into is not None and str(dst) == fail_into and len(renames) == 2:
-            raise OSError("simulated swap failure")
-        real(src, dst)
+    class _SpyFS:
+        def __init__(self, fs):
+            self.fs, self.type_name = fs, fs.type_name
 
-    monkeypatch.setattr(os, "rename", rename)
+        def move(self, src, dst):
+            renames.append((str(src), str(dst)))
+            if fail_into is not None and str(dst) == fail_into and len(renames) == 2:
+                raise OSError("simulated swap failure")
+            self.fs.move(src, dst)
+
+    def parquet_fs(path):
+        fs, p = real_fs(path)
+        return _SpyFS(fs), p
+
+    monkeypatch.setattr(m, "parquet_fs", parquet_fs)
     return renames
 
 
@@ -187,3 +198,32 @@ def test_merge_failed_swap_leaves_target_intact(
     assert _rows(spark.read.parquet(path)) == _rows(target)
     # rolled back, and the staging directory is gone
     assert os.listdir(tmp_path) == ["tbl"]
+
+
+def test_merge_into_parquet_over_file_uri(spark, target_source, tmp_path):
+    """The swap moves through pyarrow.fs, so a ``file://`` table merges
+    like a bare path (``os.rename`` on the URI string raised
+    FileNotFoundError after the staging write)."""
+    target, source = target_source
+    path = tmp_path / "tbl"
+    target.write.parquet(str(path))
+    n = merge_into_parquet(
+        spark, path.as_uri(), source, ["id"],
+        when_matched_update={"bal": "s.new_bal"},
+        when_matched_delete="s.new_bal < 10",
+        when_not_matched_insert={"id": "s.id", "bal": "s.new_bal"},
+    )
+    assert n == 3
+    assert _rows(spark.read.parquet(str(path)).select("id", "bal")) == [
+        (1, 10.0), (2, 200.0), (4, 400.0)
+    ]
+    assert os.listdir(tmp_path) == ["tbl"]
+
+
+def test_swap_refuses_object_stores_before_writing(spark):
+    from etlhelper_spark.exceptions import ETLHelperAtomicSwapError
+    from etlhelper_spark.operators.maintenance import replace_table
+
+    df = spark.range(3)
+    with pytest.raises(ETLHelperAtomicSwapError, match="atomic"):
+        replace_table(df, "mock:///bucket/tbl", "merge")

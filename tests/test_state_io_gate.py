@@ -6,9 +6,8 @@ object-storage claim holds on every path. This AST gate fails on a
 local-only call — ``glob.*``, ``os.rename``, ``os.listdir``,
 ``os.walk``, ``os.path.exists``/``isdir``, builtin ``open``,
 ``shutil.rmtree`` — anywhere in the package except the query bodies
-of plans/queries.py and the one table swap in ``EXCLUDED``. Those
-calls return nothing (or silently do nothing) on a ``file://``,
-``s3://`` or ``gs://`` URI."""
+of plans/queries.py. Those calls return nothing (or silently do
+nothing) on a ``file://``, ``s3://`` or ``gs://`` URI."""
 
 from __future__ import annotations
 
@@ -40,16 +39,9 @@ STATE_MODULES = [
     "functions/ivfpq.py",
 ]
 
-# the one function outside the gate (``<module>::<function>``), with
-# the reason
-EXCLUDED = {
-    "operators/maintenance.py::replace_table": (
-        "the table swap of compaction, Z-order rewrites and MERGE: two "
-        "os.rename calls with a rollback; moving table swaps onto "
-        "pyarrow.fs is a separate decision (object stores have no "
-        "atomic rename)"
-    ),
-}
+# functions outside the gate (``<module>::<function>``), each with its
+# reason; none today
+EXCLUDED: dict[str, str] = {}
 
 # query bodies, swept with the split of plans/queries.py
 UNGATED_MODULES = {"plans/queries.py"}
