@@ -11,11 +11,14 @@ pairs a SparkSession with a *backend*:
   session (:meth:`SparkConnection.driver_result`), the reference's
   ``cursor.execute`` + ``fetchmany`` loop: no Spark job, rows converted
   by Spark's own JDBC read code, and one fetch batch resident in
-  Python. ``dataframe()`` and the distributed copy/load paths keep
-  Spark's JDBC read (``query``/``dbtable`` option), writes go through
-  the JDBC batch writer, and DDL/DML pass-through runs on the same
-  driver-side session (Spark has no JDBC DDL API). That session is
-  opened by Spark's JDBC connection factory with every connection
+  Python. Iterable loads (load/executemany chunks of Python rows) are
+  written on the driver too (:meth:`SparkConnection.driver_write`):
+  Spark's own JDBC table setup and setters (``JdbcUtils.savePartition``),
+  one transaction per chunk, no Spark job. ``dataframe()`` and the
+  distributed copy/load paths keep Spark's JDBC read (``query``/
+  ``dbtable`` option) and batch writer, and DDL/DML pass-through runs
+  on the driver-side session (Spark has no JDBC DDL API). That session
+  is opened by Spark's JDBC connection factory with every connection
   option, as a Spark JDBC task opens its own.
 - **files** — a directory of parquet/csv/json/orc/xml tables registered as
   temp views; queries run on Spark SQL itself. This is the backend the
@@ -38,18 +41,29 @@ import os
 import re
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
-from functools import cached_property
+from functools import cached_property, reduce
 from types import SimpleNamespace
 from typing import Any, Mapping, Sequence
 
+from pyspark.errors import PySparkValueError
 from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    StructType,
+    VariantVal,
+    _create_converter,
+    _has_nulltype,
+    _infer_schema,
+    _merge_type,
+)
+from pyspark.sql.utils import is_timestamp_ntz_preferred
 from pyspark.util import _create_local_socket
 
 from .db_params import DbParams
 from .exceptions import (
     ETLHelperConnectionError,
     ETLHelperExtractError,
+    ETLHelperInsertError,
     ETLHelperQueryError,
 )
 from .parameters import bind_parameters
@@ -81,6 +95,50 @@ def _is_dml(sql: str) -> bool:
             r"\b(INSERT|UPDATE|DELETE|MERGE)\b", bare, re.IGNORECASE
         )
     )
+
+
+def row_converter(spark: SparkSession):
+    """A function ``(rows, names=None) -> (schema, internal rows)``
+    that converts a local list of Python rows as
+    ``spark.createDataFrame(rows, names)`` converts it
+    (``SparkSession._inferSchemaFromList``, then ``_createFromLocal``):
+    schema inference, the field converter, then ``toInternal``. It
+    raises as createDataFrame raises on rows it cannot type. The
+    session's inference settings are read once, here (each is a JVM
+    round trip), so converting row by row makes no JVM call."""
+    jconf = spark._jconf
+    settings = {
+        "infer_dict_as_struct": jconf.inferDictAsStruct(),
+        "infer_array_from_first_element":
+            jconf.legacyInferArrayTypeFromFirstElement(),
+        "infer_map_from_first_pair":
+            jconf.legacyInferMapStructTypeFromFirstItem(),
+        "prefer_timestamp_ntz": is_timestamp_ntz_preferred(),
+    }
+
+    def convert(
+        rows: list, names: list[str] | None = None
+    ) -> tuple[StructType, list[tuple]]:
+        if any(isinstance(r, VariantVal) for r in rows):
+            raise PySparkValueError("Rows cannot be of type VariantVal")
+        if not rows:
+            raise PySparkValueError(
+                errorClass="CANNOT_INFER_EMPTY_SCHEMA", messageParameters={}
+            )
+        struct = reduce(
+            _merge_type, (_infer_schema(r, names, **settings) for r in rows)
+        )
+        if _has_nulltype(struct):
+            raise PySparkValueError(
+                errorClass="CANNOT_DETERMINE_TYPE", messageParameters={}
+            )
+        converter = _create_converter(struct)
+        for i, name in enumerate(names or ()):
+            struct.fields[i].name = name
+            struct.names[i] = name
+        return struct, [struct.toInternal(converter(r)) for r in rows]
+
+    return convert
 
 
 class SparkConnection:
@@ -262,23 +320,7 @@ class SparkConnection:
         executemany, etl.py:298). Files: parquet/csv/json append;
         ``partition_by`` produces hive-style partition directories so
         later reads prune partitions on those columns."""
-        # validate the FULL name — checking a stripped fragment would
-        # let '../' traversal reach the files path and unvalidated
-        # strings reach the JDBC dbtable option. JDBC accepts
-        # schema.table; the files backend maps names to file names, so
-        # only a single identifier is valid there.
-        parts = table.split(".")
-        max_parts = 2 if self.kind == "jdbc" else 1
-        if len(parts) > max_parts or "/" in table or "\\" in table:
-            from .exceptions import ETLHelperBadIdentifierError
-
-            raise ETLHelperBadIdentifierError(
-                f"Invalid table name: {table!r} (expected "
-                + ("'table' or 'schema.table')" if self.kind == "jdbc"
-                   else "a single identifier)")
-            )
-        for part in parts:
-            validate_identifier(part)
+        self._validate_target(table)
         if self.kind == "jdbc":
             df.write.format("jdbc").options(
                 **self._jdbc_options(dbtable=table, batchsize=str(batchsize))
@@ -301,6 +343,87 @@ class SparkConnection:
                 self.table_path(table), self.file_format
             ).createOrReplaceTempView(table)
             self._registered.add(table)
+
+    def _validate_target(self, table: str) -> None:
+        """Validate the FULL name of a write's target table — checking
+        a stripped fragment would let '../' traversal reach the files
+        path and unvalidated strings reach the JDBC dbtable option.
+        JDBC accepts schema.table; the files backend maps names to file
+        names, so only a single identifier is valid there."""
+        parts = table.split(".")
+        max_parts = 2 if self.kind == "jdbc" else 1
+        if len(parts) > max_parts or "/" in table or "\\" in table:
+            from .exceptions import ETLHelperBadIdentifierError
+
+            raise ETLHelperBadIdentifierError(
+                f"Invalid table name: {table!r} (expected "
+                + ("'table' or 'schema.table')" if self.kind == "jdbc"
+                   else "a single identifier)")
+            )
+        for part in parts:
+            validate_identifier(part)
+
+    def driver_write(
+        self, table: str, rows: list, names: list[str] | None = None
+    ) -> None:
+        """Append *rows* to the JDBC *table* on the driver, as one
+        transaction and with no Spark job: the iterable-load path of
+        executemany/load (reference executemany + commit per chunk,
+        etl.py:233-339).
+
+        *rows* and *names* are what ``spark.createDataFrame(rows,
+        names)`` takes, and are converted as it converts them
+        (:func:`row_converter`, then on the JVM the conversion
+        ``applySchemaToPythonRDD`` applies). Table and rows then take
+        the Append branch of Spark's JDBC writer: the table is created
+        from the inferred schema when missing, the INSERT matches the
+        existing table's columns by name, and ``JdbcUtils.savePartition``
+        binds and commits the rows with Spark's own setters, batch size
+        = the chunk. It runs here under an empty TaskContext, set only
+        around the call. Column types Spark's JDBC writer refuses raise
+        before the table is touched."""
+        self._validate_target(table)
+        struct, internal = row_converter(self.spark)(rows, names)
+        jvm = self._jdbc_jvm
+        jvm.init_unpickler()
+        schema = jvm.parse_type(struct.json())
+        # the check DataSource.planForWriting makes before a JDBC write
+        if not jvm.jdbc_writer.supportsDataType(schema):
+            raise ETLHelperInsertError(
+                "Spark's JDBC writer does not support a column type of "
+                f"{struct.simpleString()}"
+            )
+        rows_type = jvm.array_type(schema, True)
+        java_rows = jvm.unpickler().loads(CPickleSerializer().dumps(internal))
+        scala_rows = jvm.to_scala(
+            jvm.from_java(rows_type).apply(java_rows), rows_type
+        )
+        opts = jvm.JdbcOptionsInWrite(jvm.scala_map(self._jdbc_options(
+            dbtable=table, batchsize=str(len(internal))
+        )))
+        dialect = jvm.dialect(opts.url())
+        case_sensitive = jvm.conf.caseSensitiveAnalysis()
+        conn = dialect.createConnectionFactory(opts).apply(-1)
+        try:
+            if jvm.table_exists(conn, opts):
+                table_schema = jvm.schema_option(conn, opts)
+            else:
+                jvm.create_table(conn, opts.table(), schema, case_sensitive, opts)
+                table_schema = jvm.some(schema)
+        finally:
+            conn.close()
+        insert = jvm.insert_statement(
+            opts.table(), schema, table_schema, case_sensitive, dialect
+        )
+        # savePartition records its output metrics on TaskContext.get()
+        jvm.task_context.setTaskContext(jvm.task_context.empty())
+        try:
+            jvm.save_partition(
+                opts.table(), scala_rows.iterator(), schema, insert,
+                opts.batchSize(), dialect, opts.isolationLevel(), opts,
+            )
+        finally:
+            jvm.task_context.unset()
 
     def execute_statement(
         self,
@@ -344,20 +467,53 @@ class SparkConnection:
     def _jdbc_jvm(self) -> SimpleNamespace:
         """The JVM entry points of the driver-side JDBC path, looked up
         once per connection: each step of a py4j class or member lookup
-        is a round trip to the JVM."""
+        is a round trip to the JVM. Several are Spark-internal members
+        (``private[spark]``/``private[sql]`` in Scala, public in the
+        bytecode); tests/test_spark_entry_points.py pins each one."""
         jvm = self.spark._jvm
-        jdbc = jvm.org.apache.spark.sql.execution.datasources.jdbc
+        spark = jvm.org.apache.spark
+        jdbc = spark.sql.execution.datasources.jdbc
         utils = jdbc.JdbcUtils
+        python = spark.api.python
+        evaluate = spark.sql.execution.python.EvaluatePython
+        converters = spark.sql.catalyst.CatalystTypeConverters
+        session = self.spark._jsparkSession
         result_set = jvm.java.sql.ResultSet
         return SimpleNamespace(
-            scala_map=jvm.org.apache.spark.api.python.PythonUtils.toScalaMap,
+            scala_map=python.PythonUtils.toScalaMap,
             JDBCOptions=jdbc.JDBCOptions,
-            dialect=jvm.org.apache.spark.sql.jdbc.JdbcDialects.get,
+            JdbcOptionsInWrite=jdbc.JdbcOptionsInWrite,
+            dialect=spark.sql.jdbc.JdbcDialects.get,
             get_schema=utils.getSchema,
             custom_schema=utils.getCustomSchema,
-            to_rows=utils.resultSetToRows,
+            jdbc_rows=getattr(
+                getattr(jdbc, "JdbcUtils$"), "MODULE$"
+            ).resultSetToSparkInternalRows,
+            input_metrics=spark.executor.InputMetrics,
+            no_metric=jvm.scala.Option.empty(),
             resolve_table=jdbc.JDBCRDD.resolveTable,
-            java_list=jvm.scala.collection.JavaConverters.seqAsJavaList,
+            table_exists=utils.tableExists,
+            schema_option=utils.getSchemaOption,
+            create_table=utils.createTable,
+            insert_statement=utils.getInsertStatement,
+            save_partition=utils.savePartition,
+            jdbc_writer=jdbc.JdbcRelationProvider(),
+            conf=session.sessionState().conf(),
+            parse_type=session.parseDataType,
+            array_type=spark.sql.types.ArrayType,
+            some=jvm.scala.Some,
+            to_external=converters.createToScalaConverter,
+            to_catalyst=converters.createToCatalystConverter,
+            to_scala=converters.convertToScala,
+            to_java=evaluate.toJava,
+            from_java=evaluate.makeFromJava,
+            register_picklers=evaluate.registerPicklers,
+            pickler=getattr(python, "SerDeUtil$AutoBatchedPickler"),
+            serve=python.PythonRDD.serveIterator,
+            scala_iterator=jvm.scala.collection.JavaConverters.asScalaIterator,
+            init_unpickler=python.SerDeUtil.initialize,
+            unpickler=jvm.net.razorvine.pickle.Unpickler,
+            task_context=getattr(getattr(spark, "TaskContext$"), "MODULE$"),
             forward_only=result_set.TYPE_FORWARD_ONLY,
             read_only=result_set.CONCUR_READ_ONLY,
             generated_keys=jvm.java.sql.Statement.RETURN_GENERATED_KEYS,
@@ -414,16 +570,17 @@ class SparkConnection:
 
         The JDBC extract path of iter_chunks/fetchone/fetchall and of
         ``catalog.table_info``: rows are converted by the code Spark's
-        JDBC read runs (``JdbcUtils.getSchema``, then
-        ``resultSetToRows``), so values, types and NULLs are those of
-        :meth:`dataframe`, ``customSchema`` and ``preferTimestampNTZ``
-        included. Each fetch batch of *fetch_size* rows (the
-        connection's ``fetchsize`` option wins) reaches Python through
-        a local DataFrame, as ``collect()`` does: no Spark job runs,
-        Python holds one batch at a time, and the JVM reads the next
-        one ahead. *max_rows* > 0 caps the result database-side
-        (``setMaxRows``). Leaving the block closes the statement and
-        the session.
+        JDBC read task runs (``JdbcUtils.getSchema``, then the getters
+        of ``resultSetToSparkInternalRows``), so values, types and NULLs
+        are those of :meth:`dataframe`, ``customSchema`` and
+        ``preferTimestampNTZ`` included. Each fetch batch of
+        *fetch_size* rows (the connection's ``fetchsize`` option wins)
+        reaches Python through the conversion and socket ``collect()``
+        uses, with no Dataset around it: no Spark job runs or is
+        planned, Python holds one batch at a time, and the JVM reads
+        the next one ahead. *max_rows* > 0 caps the result
+        database-side (``setMaxRows``). Leaving the block closes the
+        statement and the session.
 
         DML (see :func:`_is_dml`) is the ``INSERT ... RETURNING``
         round-trip (reference:
@@ -494,8 +651,7 @@ class SparkConnection:
         if not custom.isDefined():
             return schema
         return self._jdbc_jvm.custom_schema(
-            schema, custom.get(),
-            self.spark._jsparkSession.sessionState().conf().resolver(),
+            schema, custom.get(), self._jdbc_jvm.conf.resolver()
         )
 
     def _result_rows(self, session, rs):
@@ -503,28 +659,41 @@ class SparkConnection:
         *session*, converted as Spark's JDBC read converts it (see
         :meth:`driver_result`).
 
-        Python holds one fetch batch. While it reads that batch, the
-        JVM fetches and converts the next one and serves it on a local
-        socket (``collectToPython`` of a local DataFrame, as
-        ``DataFrame.collect`` does), driven from one shared read-ahead
-        thread."""
+        Each fetch batch of Spark's JDBC rows goes to Python through
+        what ``Dataset.collectToPython`` runs on a collected result:
+        the schema's Catalyst converter, ``EvaluatePython.toJava``, the
+        batched pickler and a local socket, read as
+        ``DataFrame.collect`` reads it. No Dataset is built or planned.
+        Python holds one fetch batch; while it reads that batch, the
+        JVM fetches and converts the next one, driven from one shared
+        read-ahead thread."""
         conn, opts, dialect = session
         jvm = self._jdbc_jvm
         # nullable and NTZ as JDBCRDD.resolveTable reads a schema
         schema = self._custom_schema(opts, jvm.get_schema(
             conn, rs, dialect, True, opts.preferTimestampNTZ()
         ))
-        batches = jvm.to_rows(rs, schema, dialect).grouped(
-            opts.fetchSize() or FETCH_SIZE
-        )
-        create = self.spark._jsparkSession.createDataFrame
+        # Spark's JDBC getters, as a JDBC read task runs them; they fill
+        # one reused row, so each row is copied out as an external Row
+        rows = jvm.jdbc_rows(
+            rs, dialect, schema, jvm.input_metrics(), jvm.no_metric
+        ).map(jvm.to_external(schema))
+        batches = rows.grouped(opts.fetchSize() or FETCH_SIZE)
+        # one batch is one array of rows: a single call converts it
+        batch_type = jvm.array_type(schema, True)
+        to_catalyst = jvm.to_catalyst(batch_type)
+        binary_as_bytes = jvm.conf.pysparkBinaryAsBytes()
+        jvm.register_picklers()
         serializer = BatchedSerializer(CPickleSerializer())
 
         def serve_next():
             if not batches.hasNext():
                 return None
-            local = create(jvm.java_list(batches.next()), schema)
-            return _create_local_socket(local.collectToPython())
+            java_rows = jvm.to_java(
+                to_catalyst.apply(batches.next()), batch_type, binary_as_bytes
+            )
+            pickled = jvm.pickler(jvm.scala_iterator(java_rows.iterator()))
+            return _create_local_socket(jvm.serve(pickled, "serve-DataFrame"))
 
         def rows():
             pending = None
@@ -603,8 +772,10 @@ class SparkConnection:
         java.sql PreparedStatement — the pass-through path for the
         reference's 'any statement' executemany contract
         (reference: etl.py:233-339) when the statement is not an
-        INSERT the distributed writer can handle. The chunk commits as
-        one transaction.
+        INSERT :meth:`driver_write` can handle. It runs on
+        :meth:`_jdbc_session`, so the ``sessionInitStatement`` applies
+        (``savePartition`` opens its own connection without it). The
+        chunk commits as one transaction.
 
         Driver-side by design: executors run Python and cannot reach
         JVM JDBC; for bulk custom-SQL writes use

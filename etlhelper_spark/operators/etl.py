@@ -12,9 +12,11 @@ etlhelper/etl.py) on Spark's execution model:
   (reference: types.py:23) runs distributed via ``mapInPandas`` (one
   Arrow batch ≙ one chunk) on the copy path, and driver-side per chunk
   on the iter_* path for exact semantics parity.
-- load: batched writes through the backend's batch writer with
-  row-level error isolation (reference on_error semantics,
-  etl.py:305-320,342-365).
+- load: Python rows are written chunk by chunk, one transaction per
+  chunk (on JDBC on the driver, with Spark's own JDBC setters and no
+  Spark job), with row-level error isolation (reference on_error
+  semantics, etl.py:305-320,342-365); a DataFrame is written
+  distributed by Spark's batch writer.
 - copy: distributed read -> transform -> write; Spark turns the
   reference's sequential chunk alternation (etl.py:368-421) into
   partition-parallel pipelines.
@@ -33,7 +35,7 @@ from typing import Any, Callable, Iterable, Iterator, Mapping, Sequence
 from pyspark.sql import DataFrame
 
 from ..abort import clear_abort_event, raise_for_abort, _register_session
-from ..connect import SparkConnection
+from ..connect import SparkConnection, row_converter
 from ..exceptions import (
     ETLHelperError,
     ETLHelperExtractError,
@@ -310,21 +312,24 @@ def _chunker(
     return zip_longest(*args, fillvalue=None)
 
 
-def _rows_to_dataframe(spark, chunk: list[Any], columns: list[str] | None):
-    """Build a single-chunk DataFrame from reference-style InputRows
-    (mappings, namedtuples or plain sequences)."""
+def _chunk_data(chunk: list[Any], columns: list[str] | None):
+    """``(data, names)`` for ``spark.createDataFrame(data, names)`` from
+    reference-style InputRows (mappings, namedtuples or plain
+    sequences)."""
     first = chunk[0]
     if isinstance(first, Mapping):
-        data = [
+        return [
             {c: row.get(c) for c in columns} if columns else dict(row)
             for row in chunk
-        ]
-        return spark.createDataFrame(data)
+        ], None
     if hasattr(first, "_fields"):  # namedtuple
-        return spark.createDataFrame(chunk)
-    if columns:
-        return spark.createDataFrame([tuple(r) for r in chunk], columns)
-    return spark.createDataFrame([tuple(r) for r in chunk])
+        return chunk, None
+    return [tuple(r) for r in chunk], columns or None
+
+
+def _rows_to_dataframe(spark, chunk: list[Any], columns: list[str] | None):
+    """Build a single-chunk DataFrame from reference-style InputRows."""
+    return spark.createDataFrame(*_chunk_data(chunk, columns))
 
 
 def executemany(
@@ -346,6 +351,13 @@ def executemany(
     ``on_error`` the first failure raises ETLHelperInsertError.
     Returns ``(processed, failed)`` where processed includes failed
     rows (reference: test_etl_load.py:63-65).
+
+    On jdbc an INSERT's chunk is written on the driver
+    (:meth:`SparkConnection.driver_write`: Spark's JDBC setters, one
+    transaction, no Spark job); any other statement runs as
+    PreparedStatement batches on the driver-side session
+    (:meth:`SparkConnection.jdbc_executemany`). On files the chunk is
+    one Spark write.
     """
     clear_abort_event()
     _register_session(conn.spark)
@@ -439,25 +451,21 @@ def _write_chunk(
     chunk: list[Any],
     on_error,
 ) -> list[FailedRow]:
-    """Write one chunk; on failure with on_error, retry row-by-row and
-    collect rejects (reference _execute_by_row, etl.py:342-365).
+    """Write one chunk as one transaction; on failure with on_error,
+    retry row-by-row and collect rejects (reference _execute_by_row,
+    etl.py:342-365).
 
-    The chunk (a driver-side list, ≤ chunk_size rows) writes as ONE
-    partition: Spark's JDBC writer commits per task, so a multi-task
-    write that fails midway would leave some partitions committed —
-    and the row-level retry below would then duplicate them. One
-    partition = one transaction per chunk, the reference's
-    commit_chunks semantics exactly; bulk throughput comes from the
-    distributed `load(DataFrame)`/`copy_rows` paths, not from
-    parallelizing a single driver chunk."""
+    jdbc: :meth:`SparkConnection.driver_write` writes the chunk on the
+    driver with Spark's own JDBC setters, in one transaction and with
+    no Spark job, so a failed write leaves nothing committed for the
+    retry to write twice. files: a Spark write of the chunk as one
+    local frame. The retry first drops the rows Python cannot type
+    (the conversion the write itself runs, no frame per row), writes
+    the rest as one transaction, and only if that fails too writes
+    them one at a time, so on_error receives the genuinely failing
+    rows."""
     try:
-        # repartition(1), NOT coalesce(1): one partition = one
-        # transaction either way, but any action on an RDD-backed
-        # local frame after coalesce(1) costs ~4s of Python-worker
-        # round-trip on this stack (the r9 bisect's measured
-        # pathology); the tiny shuffle is ~0.4s
-        df = _rows_to_dataframe(conn.spark, chunk, columns).repartition(1)
-        conn.write_dataframe(df, table, mode="append", batchsize=len(chunk))
+        _append_rows(conn, table, columns, chunk)
         return []
     except Exception as exc:
         raise_for_abort()
@@ -467,30 +475,37 @@ def _write_chunk(
             ) from exc
     failed_rows: list[FailedRow] = []
     ok_rows: list[Any] = []
+    convert = row_converter(conn.spark)
     for row in chunk:
         try:
-            _rows_to_dataframe(conn.spark, [row], columns)
+            convert(*_chunk_data([row], columns))
             ok_rows.append(row)
         except Exception as row_exc:
             failed_rows.append(FailedRow(row, row_exc))
     if ok_rows:
         try:
-            df = _rows_to_dataframe(conn.spark, ok_rows, columns)
-            conn.write_dataframe(df, table, mode="append", batchsize=len(ok_rows))
+            _append_rows(conn, table, columns, ok_rows)
         except Exception:
             # a DB-side failure (constraint violation, overflow at the
-            # DB) can be caused by ONE row — write individually so
-            # on_error receives only the genuinely failing rows, like
-            # the reference's _execute_by_row (etl.py:342-365)
+            # DB) can be caused by ONE row
             for row in ok_rows:
                 try:
-                    df = _rows_to_dataframe(conn.spark, [row], columns)
-                    conn.write_dataframe(
-                        df, table, mode="append", batchsize=1
-                    )
+                    _append_rows(conn, table, columns, [row])
                 except Exception as row_exc:
                     failed_rows.append(FailedRow(row, row_exc))
     return failed_rows
+
+
+def _append_rows(
+    conn: SparkConnection, table: str, columns: list[str] | None, rows: list[Any]
+) -> None:
+    """Append *rows* to *table* in one transaction (jdbc) or one write
+    of one file (files)."""
+    if conn.kind == "jdbc":
+        conn.driver_write(table, *_chunk_data(rows, columns))
+        return
+    df = _rows_to_dataframe(conn.spark, rows, columns).repartition(1)
+    conn.write_dataframe(df, table, mode="append", batchsize=len(rows))
 
 
 def _parse_insert(query: str) -> tuple[str, list[str] | None]:
@@ -532,7 +547,11 @@ def load(
     Columns come from the first transformed row, peeked without
     consuming the iterator (reference chain re-attach, etl.py:545-548);
     extra columns in later rows are dropped, matching the documented
-    reference behavior. Empty/None input returns (0, 0).
+    reference behavior. Empty/None input returns (0, 0). Rows are
+    written by :func:`executemany`, one transaction per chunk; on jdbc
+    each chunk is written on the driver with no Spark job, and a
+    missing table is created from the first chunk's inferred schema,
+    as Spark's JDBC writer creates it.
 
     A DataFrame input takes the fully-distributed path: one pass over
     the frame (see :func:`observed_write`), with ``on_error`` called

@@ -3,9 +3,10 @@
 #
 # Runs (1) pytest --collect-only over the whole suite (~2s; catches the
 # r8 class of failure where a bad decorator kills collection for ALL
-# tests), (2) the filesystem-layer I/O gate, and (3) the full test
-# files touched in the index / working tree, so the code a commit
-# modifies is actually executed before it ships.
+# tests), (2) the filesystem-layer I/O gate, (3) the check of the
+# Spark-internal JVM members the driver-side JDBC path calls, and (4)
+# the full test files touched in the index / working tree, so the code
+# a commit modifies is actually executed before it ships.
 # Usage:  scripts/preflight.sh   (then commit if exit 0)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -19,6 +20,11 @@ python -m pytest tests/ --collect-only -q >/dev/null
 # when no test file is touched.
 echo "== preflight: filesystem-layer I/O gate =="
 python -m pytest tests/test_state_io_gate.py -q -p no:cacheprovider
+
+# The driver-side JDBC path calls Spark-internal JVM members; a pyspark
+# upgrade that changes one fails here by name (one SparkSession, ~10 s).
+echo "== preflight: Spark-internal entry points =="
+python -m pytest tests/test_spark_entry_points.py -q -p no:cacheprovider
 
 touched=$( (git diff --name-only --diff-filter=d HEAD -- 'tests/*.py';
             git ls-files --others --exclude-standard -- 'tests/*.py') | sort -u)

@@ -14,6 +14,7 @@ on a real database rather than the files backend.
 
 from __future__ import annotations
 
+import datetime
 import glob
 import os
 import shutil
@@ -540,3 +541,147 @@ def test_on_error_sees_jdbc_not_null_columns(spark, derby_conn, call_jobs):
     assert fetchall('SELECT "id" FROM nn_target ORDER BY "id"', derby_conn) == [
         {"id": 1}, {"id": 3}
     ]
+
+
+# ----------------------------------------------------------------------
+# driver-side iterable loads: Spark's JDBC setters, one transaction
+# ----------------------------------------------------------------------
+def test_on_error_retry_keeps_primary_key_rows_once(derby_conn):
+    """A chunk whose write fails on one key: on_error gets that row
+    alone, and no committed row is written twice (a multi-task retry
+    committed some rows, then wrote them again)."""
+    execute('CREATE TABLE pk_t ("id" BIGINT PRIMARY KEY)', derby_conn)
+    execute("INSERT INTO pk_t VALUES (5)", derby_conn)
+    rejects = []
+    rows = [{"id": i} for i in range(20)]
+    assert load("pk_t", derby_conn, rows, on_error=rejects.extend) == (20, 1)
+    assert [f.row for f in rejects] == [{"id": 5}]
+    got = fetchall('SELECT "id" FROM pk_t ORDER BY "id"', derby_conn)
+    assert [r["id"] for r in got] == list(range(20))
+
+
+def test_on_error_retry_writes_each_row_once(derby_conn):
+    execute('CREATE TABLE short_t ("id" BIGINT, "s" VARCHAR(4))', derby_conn)
+    rows = [{"id": i, "s": "too long" if i == 13 else "ok"} for i in range(20)]
+    rejects = []
+    assert load("short_t", derby_conn, rows, on_error=rejects.extend) == (20, 1)
+    assert [f.row["id"] for f in rejects] == [13]
+    got = fetchall('SELECT "id" FROM short_t ORDER BY "id"', derby_conn)
+    assert [r["id"] for r in got] == [i for i in range(20) if i != 13]
+
+
+@pytest.fixture()
+def new_york_time():
+    """The process's local zone set to a non-UTC zone (naive datetimes
+    convert through it), restored afterwards."""
+    import time
+
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    yield
+    if old is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
+
+
+def _spark_written(spark, conn, table, rows, names=None):
+    """*rows* appended to *table* by Spark's JDBC writer, one task."""
+    df = spark.createDataFrame(rows, names).repartition(1)
+    conn.write_dataframe(df, table, mode="append", batchsize=len(rows))
+
+
+def _read_back(conn, table):
+    return conn.target_schema(table), fetchall(
+        f'SELECT * FROM {table} ORDER BY "i"', conn
+    )
+
+
+def test_driver_write_equals_spark_writer_new_table(
+    spark, derby_conn, new_york_time
+):
+    from datetime import date, datetime, timedelta, timezone
+    from decimal import Decimal
+
+    # every scalar type Python inference yields that a JDBC table holds
+    rows = [
+        {"i": 1, "b": True, "f": 1.5, "s": "x", "by": b"\x01\x02",
+         "ba": bytearray(b"\x03"), "d": Decimal("12345.678901234567890123"),
+         "dt": date(1900, 3, 1), "ts": datetime(2024, 7, 1, 12, 0, 0, 123456),
+         "tz": datetime(2024, 1, 2, 3, 4, 5, tzinfo=timezone(timedelta(hours=5)))},
+        {"i": 2, "b": None, "f": None, "s": None, "by": None, "ba": None,
+         "d": None, "dt": None, "ts": None, "tz": None},
+        {"i": -(2**53) - 1, "b": False, "f": -0.0, "s": "", "by": b"",
+         "ba": bytearray(), "d": Decimal("-1"), "dt": date(2024, 2, 29),
+         "ts": datetime(1969, 12, 31, 23, 59, 59), "tz": None},
+    ]
+    assert load("typed_driver", derby_conn, rows) == (3, 0)
+    _spark_written(spark, derby_conn, "typed_spark", rows)
+    schema, got = _read_back(derby_conn, "typed_driver")
+    assert (schema, got) == _read_back(derby_conn, "typed_spark")
+    assert len(got) == 3 and set(got[-1].values()) == {2, None}
+
+
+@pytest.mark.parametrize(
+    "value",
+    [datetime.time(3, 4, 5), datetime.timedelta(days=1), [1, 2], {"k": 1}],
+    ids=["time", "interval", "array", "map"],
+)
+def test_unwritable_types_raise_on_both_routes(spark, derby_conn, value):
+    from etlhelper_spark.exceptions import ETLHelperInsertError
+    from etlhelper_spark.operators import load as load_rows
+
+    rows = [{"i": 1, "v": value}]
+    with pytest.raises(Exception):
+        _spark_written(spark, derby_conn, "unwritable_spark", rows)
+    with pytest.raises(ETLHelperInsertError):
+        load_rows("unwritable_driver", derby_conn, rows)
+    with pytest.raises(ETLHelperExtractError):
+        fetchall("SELECT * FROM unwritable_driver", derby_conn)
+
+
+def test_driver_write_equals_spark_writer_existing_table(spark, derby_conn):
+    """The INSERT matches the table's columns by name, whatever their
+    order in the rows; tuple rows take the statement's column list."""
+    for table in ("order_driver", "order_spark"):
+        execute(
+            f'CREATE TABLE {table} ("s" VARCHAR(8), "f" DOUBLE, '
+            '"i" BIGINT NOT NULL, "x" INT)',
+            derby_conn,
+        )
+    # (a NULL string into a Derby VARCHAR fails on both routes: Spark's
+    # Derby dialect binds it as a CLOB)
+    rows = [(1, 0.5, "a"), (2, None, "b"), (3, -2.0, "c")]
+    assert executemany(
+        'INSERT INTO order_driver ("i", "f", "s") VALUES (?, ?, ?)',
+        derby_conn, rows,
+    ) == (3, 0)
+    _spark_written(spark, derby_conn, "order_spark", rows, ["i", "f", "s"])
+    driver = _read_back(derby_conn, "order_driver")
+    assert driver == _read_back(derby_conn, "order_spark")
+    assert driver[1][0] == {"s": "a", "f": 0.5, "i": 1, "x": None}
+
+
+def test_iterable_loads_run_no_spark_job(derby_conn, call_jobs):
+    assert load("no_job_t", derby_conn, [{"id": i} for i in range(30)],
+                chunk_size=10) == (30, 0)
+    assert call_jobs() == 0
+    assert executemany(
+        'INSERT INTO no_job_t ("id") VALUES (?)', derby_conn, [(30,), (31,)]
+    ) == (2, 0)
+    assert call_jobs() == 0
+    assert fetchone('SELECT count(*) AS "n" FROM no_job_t', derby_conn) == {"n": 32}
+
+
+def test_driver_write_leaves_no_task_context(spark, derby_conn):
+    from etlhelper_spark.exceptions import ETLHelperInsertError
+
+    task_context = spark._jvm.org.apache.spark.TaskContext
+    execute('CREATE TABLE tc_t ("id" BIGINT PRIMARY KEY)', derby_conn)
+    load("tc_t", derby_conn, [{"id": 1}])
+    assert task_context.get() is None
+    with pytest.raises(ETLHelperInsertError):
+        load("tc_t", derby_conn, [{"id": 1}])  # duplicate key
+    assert task_context.get() is None

@@ -78,6 +78,16 @@ class _Unused:
     def __getattr__(self, name):
         return _Unused()
 
+    def __call__(self, *args):
+        return _Unused()
+
+
+class _Stub(SimpleNamespace):
+    """A stub namespace: the members not given are :class:`_Unused`."""
+
+    def __getattr__(self, name):
+        return _Unused()
+
 
 class _Option:
     def __init__(self, value):
@@ -125,25 +135,21 @@ def _conn(monkeypatch, fail=False, **kwargs):
         createConnectionFactory=factory,
         beforeFetch=lambda conn, params: None,
     )
-    jvm = SimpleNamespace(
-        java=SimpleNamespace(sql=SimpleNamespace(
-            Statement=SimpleNamespace(RETURN_GENERATED_KEYS=1),
-            ResultSet=_Unused(),
+    jvm = _Stub(
+        java=_Stub(sql=_Stub(
+            Statement=_Stub(RETURN_GENERATED_KEYS=1),
         )),
-        scala=_Unused(),
-        org=SimpleNamespace(apache=SimpleNamespace(spark=SimpleNamespace(
-            api=SimpleNamespace(python=SimpleNamespace(
-                PythonUtils=SimpleNamespace(toScalaMap=dict),
+        org=_Stub(apache=_Stub(spark=_Stub(
+            api=_Stub(python=_Stub(
+                PythonUtils=_Stub(toScalaMap=dict),
             )),
-            sql=SimpleNamespace(
-                jdbc=SimpleNamespace(
-                    JdbcDialects=SimpleNamespace(get=lambda url: dialect),
+            sql=_Stub(
+                jdbc=_Stub(
+                    JdbcDialects=_Stub(get=lambda url: dialect),
                 ),
-                execution=SimpleNamespace(datasources=SimpleNamespace(
-                    jdbc=SimpleNamespace(
+                execution=_Stub(datasources=_Stub(
+                    jdbc=_Stub(
                         JDBCOptions=_JDBCOptions,
-                        JdbcUtils=_Unused(),
-                        JDBCRDD=_Unused(),
                     ),
                 )),
             ),
@@ -153,7 +159,7 @@ def _conn(monkeypatch, fail=False, **kwargs):
         dbtype="PG", host="localhost", port=5432, dbname="etl", user="u"
     )
     conn = SparkConnection(
-        SimpleNamespace(_jvm=jvm), "jdbc", db_params=params,
+        _Stub(_jvm=jvm), "jdbc", db_params=params,
         jdbc_options=kwargs, password_variable="STUB_PG_PASSWORD",
     )
     conn.opened = opened
