@@ -103,9 +103,12 @@ def row_converter(spark: SparkSession):
     ``spark.createDataFrame(rows, names)`` converts it
     (``SparkSession._inferSchemaFromList``, then ``_createFromLocal``):
     schema inference, the field converter, then ``toInternal``. It
-    raises as createDataFrame raises on rows it cannot type. The
-    session's inference settings are read once, here (each is a JVM
-    round trip), so converting row by row makes no JVM call."""
+    raises as createDataFrame raises on rows it cannot type. *names*
+    may instead be a StructType to convert to, inferred elsewhere: its
+    ``infer(row, names)`` attribute is one row's schema, before the
+    merge. The session's inference settings are read once, here (each
+    is a JVM round trip), so converting row by row makes no JVM
+    call."""
     jconf = spark._jconf
     settings = {
         "infer_dict_as_struct": jconf.inferDictAsStruct(),
@@ -116,8 +119,11 @@ def row_converter(spark: SparkSession):
         "prefer_timestamp_ntz": is_timestamp_ntz_preferred(),
     }
 
+    def infer(row, names: list[str] | None = None) -> StructType:
+        return _infer_schema(row, names, **settings)
+
     def convert(
-        rows: list, names: list[str] | None = None
+        rows: list, names: list[str] | StructType | None = None
     ) -> tuple[StructType, list[tuple]]:
         if any(isinstance(r, VariantVal) for r in rows):
             raise PySparkValueError("Rows cannot be of type VariantVal")
@@ -125,9 +131,10 @@ def row_converter(spark: SparkSession):
             raise PySparkValueError(
                 errorClass="CANNOT_INFER_EMPTY_SCHEMA", messageParameters={}
             )
-        struct = reduce(
-            _merge_type, (_infer_schema(r, names, **settings) for r in rows)
-        )
+        if isinstance(names, StructType):
+            struct, names = names, None
+        else:
+            struct = reduce(_merge_type, (infer(r, names) for r in rows))
         if _has_nulltype(struct):
             raise PySparkValueError(
                 errorClass="CANNOT_DETERMINE_TYPE", messageParameters={}
@@ -138,6 +145,7 @@ def row_converter(spark: SparkSession):
             struct.names[i] = name
         return struct, [struct.toInternal(converter(r)) for r in rows]
 
+    convert.infer = infer
     return convert
 
 
@@ -364,7 +372,10 @@ class SparkConnection:
             validate_identifier(part)
 
     def driver_write(
-        self, table: str, rows: list, names: list[str] | None = None
+        self,
+        table: str,
+        rows: list,
+        names: list[str] | StructType | None = None,
     ) -> None:
         """Append *rows* to the JDBC *table* on the driver, as one
         transaction and with no Spark job: the iterable-load path of
@@ -376,7 +387,7 @@ class SparkConnection:
         (:func:`row_converter`, then on the JVM the conversion
         ``applySchemaToPythonRDD`` applies). Table and rows then take
         the Append branch of Spark's JDBC writer: the table is created
-        from the inferred schema when missing, the INSERT matches the
+        from the rows' schema when missing, the INSERT matches the
         existing table's columns by name, and ``JdbcUtils.savePartition``
         binds and commits the rows with Spark's own setters, batch size
         = the chunk. It runs here under an empty TaskContext, set only

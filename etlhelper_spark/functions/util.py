@@ -804,17 +804,29 @@ def footer_spark_schema(*paths: str, spark=None):
 
 def arrow_spark_schema(arrow_schema, spark=None):
     """The Spark schema ``spark.read.parquet`` infers for a file whose
-    footer holds *arrow_schema* (pyarrow ``schema_arrow`` →
-    ``from_arrow_schema``), or None. Exact for strings, integers,
-    doubles, booleans, arrays, dates and decimals. None when the schema
-    contains a type whose inference Spark bases on footer metadata or
-    session conf the conversion cannot honor: binary
+    footer holds *arrow_schema* (pyarrow ``schema_arrow``), or None.
+    The footer's ``org.apache.spark.sql.parquet.row.metadata`` key is
+    read first, as Spark's own inference reads it first: a file Spark
+    wrote resolves exactly, whatever its types. Other files go through
+    ``from_arrow_schema``, exact for strings, integers, doubles,
+    booleans, arrays, dates and decimals; None when a type's inference
+    follows session conf the conversion cannot honor: binary
     (binaryAsString), nanosecond timestamps (nanosAsLong; INT96 also
     surfaces as nanos), unsigned ints. Micro/milli timestamps resolve
     exactly — tz-aware maps to TimestampType unconditionally, tz-naive
     follows the session's inferTimestampNTZ conf — but only when
-    *spark* is passed (the conf must be read); without a session every
-    timestamp falls back."""
+    *spark* is passed (the conf must be read)."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    meta = arrow_schema.metadata or {}
+    try:
+        return StructType.fromJson(
+            json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+        )
+    except (KeyError, ValueError, TypeError):
+        pass  # none, or unreadable: Spark falls back to the file schema
     try:
         from pyspark.sql.pandas.types import from_arrow_schema
     except ImportError:  # pragma: no cover - very old pyspark
@@ -863,11 +875,13 @@ def read_parquet_state(spark, *paths: str):
     driver-side (:func:`footer_spark_schema`) so the read schedules
     ZERO jobs until an action needs data — the bare form pays a
     footer-inference job per call, and the state-backed operators
-    re-read their stores on every micro-batch fold. Falls back to the
-    inferring read when the schema cannot be derived exactly
-    (timestamps, empty dirs). Read semantics are otherwise identical:
-    file-source reads force nullability themselves, so downstream
-    schemas match the inferring form."""
+    re-read their stores on every micro-batch fold. The footer's Spark
+    row-metadata key is read first, so every dir Spark wrote resolves.
+    Falls back to the inferring read when the schema cannot be derived
+    (empty dirs; see :func:`arrow_spark_schema` for other writers' files).
+    Read semantics are otherwise identical: file-source reads force
+    nullability themselves, so downstream schemas match the inferring
+    form."""
     schema = footer_spark_schema(*paths, spark=spark)
     if schema is None:
         return spark.read.parquet(*paths)

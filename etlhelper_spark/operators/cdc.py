@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..state.store import guard_replay, read_latest, version_path
+from ..functions.util import read_parquet_state
+from ..state.store import commit_version, read_latest
 
 
 def apply_changes(
@@ -111,7 +112,6 @@ def snapshot_apply_incremental(
 
     spark = changes.sparkSession
     subdir = os.path.join(state_dir, "snapshot")
-    guard_replay(subdir, batch_id)
     prior = read_latest(spark, subdir, batch_id)
     feed = (
         prior.select(changes.columns).unionByName(changes)
@@ -126,11 +126,10 @@ def snapshot_apply_incremental(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-    out = version_path(subdir, batch_id)
-    state.repartition(state_partitions).write.mode("overwrite").parquet(out)
-    from ..functions.util import read_parquet_state
-
-    return read_parquet_state(changes.sparkSession, out)
+    return read_parquet_state(
+        spark,
+        commit_version(state.repartition(state_partitions), subdir, batch_id),
+    )
 
 
 def read_snapshot_state(

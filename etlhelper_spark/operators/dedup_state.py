@@ -68,14 +68,13 @@ from ..functions.util import in_values, read_parquet_state
 from ..state.store import (
     append_path,
     appends_below,
+    commit_version,
     fold,
-    guard_replay,
     latest_below,
     prune,
     read_latest,
     read_live,
     read_prior,
-    version_path,
 )
 from pyspark.sql.window import Window
 
@@ -420,15 +419,12 @@ def dedup_exact_incremental_bloom(
         gap_probes = _bloom_probes(
             uncovered.select("fingerprint").distinct(), m_bits, num_hashes
         )
-    resolved, verdict = _resolve_exact(fps, prior, batch_id)
-    resolved.where(F.col("__new_fp")).select(
-        "fingerprint", "survivor_id", "batch"
-    ).repartition(state_partitions).write.mode("overwrite").parquet(
-        append_path(subdir, batch_id)
-    )
     # fold the batch's bits — and any bitmap-gap state rows' — into the
     # bitmap (idempotent OR — replays and already-seen fingerprints
-    # re-set the same bits harmlessly)
+    # re-set the same bits harmlessly). The bitmap commits FIRST: its
+    # replay guard must reject an out-of-order id before the append
+    # lands, and a crash between the two leaves only set bits with no
+    # state rows behind them (false positives, never false negatives)
     all_probes = (
         probes.unionByName(gap_probes) if gap_probes is not None else probes
     )
@@ -440,13 +436,21 @@ def dedup_exact_incremental_bloom(
             .groupBy("word")
             .agg(F.bit_or("bits").alias("bits"))
         )
-    new_words.select(
-        "word",
-        "bits",
-        F.lit(int(m_bits)).alias("m"),
-        F.lit(int(num_hashes)).alias("k"),
+    commit_version(
+        new_words.select(
+            "word",
+            "bits",
+            F.lit(int(m_bits)).alias("m"),
+            F.lit(int(num_hashes)).alias("k"),
+        ).repartition(state_partitions),
+        bloom_dir,
+        batch_id,
+    )
+    resolved, verdict = _resolve_exact(fps, prior, batch_id)
+    resolved.where(F.col("__new_fp")).select(
+        "fingerprint", "survivor_id", "batch"
     ).repartition(state_partitions).write.mode("overwrite").parquet(
-        version_path(bloom_dir, batch_id)
+        append_path(subdir, batch_id)
     )
     return verdict
 
@@ -818,7 +822,6 @@ def duplicate_clusters_incremental(
 
     spark = new_pairs.sparkSession
     subdir = os.path.join(state_dir, "clusters")
-    guard_replay(subdir, batch_id)
     prior = read_latest(spark, subdir, batch_id)
     edges = (
         new_pairs.select(
@@ -879,9 +882,10 @@ def duplicate_clusters_incremental(
             F.col("cnode").alias("node_id"),
             F.col("nlabel").alias("cluster_id"),
         )
-    out = version_path(subdir, batch_id)
-    state.repartition(state_partitions).write.mode("overwrite").parquet(out)
-    return read_parquet_state(spark, out)
+    return read_parquet_state(
+        spark,
+        commit_version(state.repartition(state_partitions), subdir, batch_id),
+    )
 
 
 def span_dedup_incremental(

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.util import read_parquet_state
-from ..state.store import latest_below, read_latest, version_path
+from ..state.store import commit_version, latest_below, read_latest
 
 __all__ = [
     "category_counts_incremental",
@@ -134,11 +134,9 @@ def histogram_incremental(
         F.lit(hi_f).alias("hi"),
         F.lit(bins_i).cast("long").alias("bins"),
     )
-    state.repartition(state_partitions).write.mode("overwrite").parquet(
-        version_path(subdir, batch_id)
-    )
     return read_parquet_state(
-        spark, version_path(subdir, batch_id)
+        spark,
+        commit_version(state.repartition(state_partitions), subdir, batch_id),
     )
 
 
@@ -196,11 +194,9 @@ def category_counts_incremental(
     else:
         merged = delta
     state = merged.select("category", "cnt", F.lit(col).alias("col"))
-    state.repartition(state_partitions).write.mode("overwrite").parquet(
-        version_path(subdir, batch_id)
-    )
     return read_parquet_state(
-        spark, version_path(subdir, batch_id)
+        spark,
+        commit_version(state.repartition(state_partitions), subdir, batch_id),
     )
 
 
@@ -292,11 +288,11 @@ def embedding_moments_incremental(
                 "embedding_moments_incremental: empty batch and no "
                 f"prior state under {subdir}"
             )
-        prior.repartition(state_partitions).write.mode(
-            "overwrite"
-        ).parquet(version_path(subdir, batch_id))
         return read_parquet_state(
-            spark, version_path(subdir, batch_id)
+            spark,
+            commit_version(
+                prior.repartition(state_partitions), subdir, batch_id
+            ),
         )
     dim = int(d0["dmin"])
     delta = (
@@ -328,11 +324,9 @@ def embedding_moments_incremental(
         F.col("s").cast("decimal(38,10)").alias("s"),
         F.lit(dim).cast("int").alias("dim"),
     )
-    state.repartition(state_partitions).write.mode("overwrite").parquet(
-        version_path(subdir, batch_id)
-    )
     return read_parquet_state(
-        spark, version_path(subdir, batch_id)
+        spark,
+        commit_version(state.repartition(state_partitions), subdir, batch_id),
     )
 
 

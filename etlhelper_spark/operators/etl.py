@@ -33,6 +33,7 @@ from itertools import chain, islice, zip_longest
 from typing import Any, Callable, Iterable, Iterator, Mapping, Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType, _merge_type
 
 from ..abort import clear_abort_event, raise_for_abort, _register_session
 from ..connect import SparkConnection, row_converter
@@ -327,11 +328,6 @@ def _chunk_data(chunk: list[Any], columns: list[str] | None):
     return [tuple(r) for r in chunk], columns or None
 
 
-def _rows_to_dataframe(spark, chunk: list[Any], columns: list[str] | None):
-    """Build a single-chunk DataFrame from reference-style InputRows."""
-    return spark.createDataFrame(*_chunk_data(chunk, columns))
-
-
 def executemany(
     query: str,
     conn: SparkConnection,
@@ -459,11 +455,12 @@ def _write_chunk(
     driver with Spark's own JDBC setters, in one transaction and with
     no Spark job, so a failed write leaves nothing committed for the
     retry to write twice. files: a Spark write of the chunk as one
-    local frame. The retry first drops the rows Python cannot type
-    (the conversion the write itself runs, no frame per row), writes
-    the rest as one transaction, and only if that fails too writes
+    local frame. The retry types each row as the write itself would
+    (no frame per row) and merges the types into one schema, dropping
+    the rows that cannot be typed or merged; it writes the rest with
+    that schema as one transaction, and only if that fails too writes
     them one at a time, so on_error receives the genuinely failing
-    rows."""
+    rows. A row's None values take their type from the chunk."""
     try:
         _append_rows(conn, table, columns, chunk)
         return []
@@ -475,36 +472,47 @@ def _write_chunk(
             ) from exc
     failed_rows: list[FailedRow] = []
     ok_rows: list[Any] = []
-    convert = row_converter(conn.spark)
-    for row in chunk:
+    infer = row_converter(conn.spark).infer
+    data, names = _chunk_data(chunk, columns)
+    schema = None
+    for row, item in zip(chunk, data):
         try:
-            convert(*_chunk_data([row], columns))
+            t = infer(item, names)
+            schema = t if schema is None else _merge_type(schema, t)
             ok_rows.append(row)
         except Exception as row_exc:
             failed_rows.append(FailedRow(row, row_exc))
     if ok_rows:
         try:
-            _append_rows(conn, table, columns, ok_rows)
+            _append_rows(conn, table, columns, ok_rows, schema)
         except Exception:
             # a DB-side failure (constraint violation, overflow at the
             # DB) can be caused by ONE row
             for row in ok_rows:
                 try:
-                    _append_rows(conn, table, columns, [row])
+                    _append_rows(conn, table, columns, [row], schema)
                 except Exception as row_exc:
                     failed_rows.append(FailedRow(row, row_exc))
     return failed_rows
 
 
 def _append_rows(
-    conn: SparkConnection, table: str, columns: list[str] | None, rows: list[Any]
+    conn: SparkConnection,
+    table: str,
+    columns: list[str] | None,
+    rows: list[Any],
+    schema: StructType | None = None,
 ) -> None:
     """Append *rows* to *table* in one transaction (jdbc) or one write
-    of one file (files)."""
+    of one file (files), typed by *schema* when given, else inferred
+    from the rows."""
+    data, names = _chunk_data(rows, columns)
     if conn.kind == "jdbc":
-        conn.driver_write(table, *_chunk_data(rows, columns))
+        conn.driver_write(table, data, schema or names)
         return
-    df = _rows_to_dataframe(conn.spark, rows, columns).repartition(1)
+    df = conn.spark.createDataFrame(
+        data, schema or names, verifySchema=False
+    ).repartition(1)
     conn.write_dataframe(df, table, mode="append", batchsize=len(rows))
 
 

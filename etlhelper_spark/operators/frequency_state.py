@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.util import literal_frame
-from ..state.store import guard_replay, read_latest, version_path
+from ..state.store import commit_version, read_latest
 
 __all__ = ["heavy_hitters_incremental", "read_frequency_state"]
 
@@ -61,7 +61,6 @@ def heavy_hitters_incremental(
 
     spark = new_df.sparkSession
     subdir = os.path.join(state_dir, "freq")
-    guard_replay(subdir, batch_id)
     cap = int(capacity)
     summary_rows = mg_summaries(new_df, col, cap).collect()
     mg: dict = {}
@@ -85,9 +84,7 @@ def heavy_hitters_incremental(
         out_rows,
         f"item {new_df.schema[col].dataType.simpleString()}, cnt long",
     ).select("item", "cnt", F.lit(n_total).alias("n_total"))
-    state.repartition(state_partitions).write.mode("overwrite").parquet(
-        version_path(subdir, batch_id)
-    )
+    commit_version(state.repartition(state_partitions), subdir, batch_id)
     return state
 
 

@@ -41,11 +41,12 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.util import read_parquet_state
 from ..state.store import (
     append_path,
+    commit_version,
     read_latest,
     read_prior,
-    version_path,
 )
 
 
@@ -58,8 +59,8 @@ def inverted_index_incremental(
     state_partitions: int = 1,
 ) -> DataFrame:
     """Ingest a document batch into the persisted inverted index:
-    append its postings, merge its (df, cf) partial into the stats
-    state. Returns the new stats state."""
+    merge its (df, cf) partial into the stats state, then append its
+    postings. Returns the new stats state."""
     from ..functions.text import tokens_table
     from .ivm import merge_rollup
 
@@ -75,14 +76,9 @@ def inverted_index_incremental(
     per_doc = (
         tok.groupBy("token", "doc_id")
         .agg(F.count("*").alias("n"))
-        # computed once at the first action (postings append), reused
-        # by the partial aggregate — eager paid a separate job per batch
+        # computed once at the first action (stats commit), reused by
+        # the postings append — eager paid a separate job per batch
         .localCheckpoint(eager=False)
-    )
-    per_doc.withColumn("batch", F.lit(int(batch_id))).repartition(
-        state_partitions
-    ).write.mode("overwrite").parquet(
-        append_path(postings_dir, batch_id)
     )
     partial = per_doc.groupBy("token").agg(
         F.count("*").alias("n"), F.sum("n").alias("cf")
@@ -93,10 +89,16 @@ def inverted_index_incremental(
         if prior is not None
         else partial
     )
-    out = version_path(stats_dir, batch_id)
-    merged.repartition(state_partitions).write.mode("overwrite").parquet(out)
-    from ..functions.util import read_parquet_state
-
+    # the stats commit goes first: its replay guard rejects an
+    # out-of-order id before the batch's postings land
+    out = commit_version(
+        merged.repartition(state_partitions), stats_dir, batch_id
+    )
+    per_doc.withColumn("batch", F.lit(int(batch_id))).repartition(
+        state_partitions
+    ).write.mode("overwrite").parquet(
+        append_path(postings_dir, batch_id)
+    )
     return read_parquet_state(spark, out)
 
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.util import footer_spark_schema
+from ..functions.util import read_parquet_state
 from ..state import store
 
 
@@ -126,13 +126,9 @@ def streaming_incremental_rollup(
     ).repartition(source_files).write.mode("overwrite").parquet(split_dir)
 
     # the feed schema resolves from one footer driver-side (the bare
-    # read.parquet(...).schema probe pays an inference job); the
-    # fallback keeps inference for footer types it cannot decide
-    src_schema = footer_spark_schema(split_dir, spark=spark)
-    if src_schema is None:
-        src_schema = spark.read.parquet(split_dir).schema
+    # read.parquet(...).schema probe pays an inference job)
     stream = (
-        spark.readStream.schema(src_schema)
+        spark.readStream.schema(read_parquet_state(spark, split_dir).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(split_dir)
         .select(
@@ -149,9 +145,9 @@ def streaming_incremental_rollup(
         merged = (
             merge_rollup(base, partial, keys) if base is not None else partial
         )
-        merged.repartition(state_partitions).write.mode(
-            "overwrite"
-        ).parquet(store.version_path(state_dir, batch_id))
+        store.commit_version(
+            merged.repartition(state_partitions), state_dir, batch_id
+        )
 
     q = (
         stream.writeStream.foreachBatch(upsert)
@@ -393,9 +389,9 @@ def streaming_cdc_rollup(
             if base is not None
             else partial
         )
-        merged.repartition(state_partitions).write.mode(
-            "overwrite"
-        ).parquet(store.version_path(state_dir, batch_id))
+        store.commit_version(
+            merged.repartition(state_partitions), state_dir, batch_id
+        )
 
     q = (
         signed.writeStream.foreachBatch(upsert)
@@ -445,9 +441,12 @@ def sketch_rollup_incremental(
         )
     else:
         merged = partial
-    out = store.version_path(state_dir, batch_id)
-    merged.repartition(state_partitions).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    return read_parquet_state(
+        spark,
+        store.commit_version(
+            merged.repartition(state_partitions), state_dir, batch_id
+        ),
+    )
 
 
 def read_rollup_state(

@@ -24,8 +24,10 @@ crash in the window leaves assignments without their cursor version —
 the signal that the apply is incomplete and must be redelivered
 before the next batch (the same sequential-apply contract every
 versioned store here assumes; packing adds that batch k+1 genuinely
-DEPENDS on k's cursor, so out-of-order applies are rejected by
-nothing but this contract). Frozen packing parameters (budget, n_shards,
+DEPENDS on k's cursor). The assignments commit runs the store's
+replay guard, so an out-of-order id is rejected before anything is
+written; an erased batch's redelivery writes no assignments and folds
+only the cursor. Frozen packing parameters (budget, n_shards,
 oversize) persist in a meta sidecar at first apply and later applies
 validate against it loudly — a drifted budget or shard count would
 silently produce a state that matches NO single-corpus packing.
@@ -54,8 +56,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.packing import _next_fit
-from ..functions.util import in_values, literal_frame
+from ..functions.util import in_values, literal_frame, read_parquet_state
 from ..state.store import (
+    commit_version,
     erase_cutover,
     latest_below,
     newest_epochs,
@@ -323,12 +326,9 @@ def pack_incremental(
     # bytes are themselves the compliance failure). Checking first
     # closes the window: an erased batch's replay folds the cursor
     # only and returns the authoritative epoch's assignments.
-    assign_target = version_path(_assign_dir(state_dir), batch_id)
-    epoch, authoritative = newest_epochs(_assign_dir(state_dir)).get(
-        int(batch_id), (0, assign_target)
-    )
+    adir = _assign_dir(state_dir)
+    epoch, authoritative = newest_epochs(adir).get(int(batch_id), (0, None))
     folded = slim.groupBy("shard").applyInPandas(pack_shard, out_schema)
-    cursor_target = version_path(cursor_dir, batch_id)
     cursor_struct = F.struct("shard", "pack_local", "fill", "started")
     if epoch == 0:
         # ONE job for the whole apply: the assignments write is the
@@ -341,7 +341,7 @@ def pack_incremental(
         from pyspark.sql import Observation
 
         obs = Observation()
-        (
+        authoritative = commit_version(
             folded.observe(
                 obs,
                 F.collect_list(
@@ -355,9 +355,9 @@ def pack_incremental(
                 "shard",
                 "pack_id",
                 "offset",
-            )
-            .write.mode("overwrite")
-            .parquet(assign_target)
+            ),
+            adir,
+            batch_id,
         )
         cur_rows = [tuple(r) for r in obs.get["__cursors"]]
     else:
@@ -370,43 +370,8 @@ def pack_incremental(
             .select("c.*")
             .collect()
         ]
-    _write_cursor_version(cursor_target, cur_rows)
-    return spark.read.schema(
-        _assign_schema(id_col)
-    ).parquet(authoritative)
-
-
-def _assign_schema(id_col: str):
-    """The assignment versions' exact on-disk schema — passing it to
-    ``spark.read.schema`` skips the per-read footer-inference job the
-    bare ``spark.read.parquet`` pays (one scheduled job per lifecycle
-    step at zero information gain: the layout is frozen by contract)."""
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("n_tokens", LongType()),
-            StructField("shard", IntegerType()),
-            StructField("pack_id", LongType()),
-            StructField("offset", LongType()),
-        ]
-    )
-
-
-def _assign_reader(spark: SparkSession, state_dir: str):
-    """``spark.read`` with the assignments' frozen schema — no
-    footer-inference job per read. The id column comes from the meta
-    sidecar, which pack_incremental writes before any assignment."""
-    meta = _read_meta(state_dir)
-    if meta is None:
-        raise ValueError(f"no packing meta sidecar under {state_dir}")
-    return spark.read.schema(_assign_schema(meta["id_col"]))
+    _write_cursor_version(version_path(cursor_dir, batch_id), cur_rows)
+    return read_parquet_state(spark, authoritative)
 
 
 def _write_cursor_version(target: str, rows) -> None:
@@ -443,7 +408,7 @@ def read_pack_assignments(
     if not versions:
         raise ValueError(f"no pack assignments under {state_dir}")
     paths = [p for _e, p in versions.values()]
-    return _assign_reader(spark, state_dir).parquet(*paths)
+    return read_parquet_state(spark, *paths)
 
 
 def forget_from_pack_state(
@@ -477,7 +442,6 @@ def forget_from_pack_state(
         raise ValueError(
             f"forget_from_pack_state: no assignments under {state_dir}"
         )
-    reader = _assign_reader(spark, state_dir)
     if isinstance(ids, _DF):
         # persist: the doomed set is probed once per batch version —
         # released in the finally (the r9 cache-hygiene rule: no
@@ -494,7 +458,7 @@ def forget_from_pack_state(
     total = 0
     try:
         for batch, (epoch, path) in sorted(versions.items()):
-            cur = reader.parquet(path)
+            cur = read_parquet_state(spark, path)
             id_col = cur.columns[0]
             if doomed is not None:
                 hit = cur.join(

@@ -35,8 +35,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.util import literal_frame
-from ..state.store import read_latest, version_path
+from ..functions.util import literal_frame, read_parquet_state
+from ..state.store import commit_version, read_latest
 
 __all__ = [
     "quantile_sketch_incremental",
@@ -100,10 +100,9 @@ def quantile_sketch_incremental(
         [(bytes(merged_sk), n_total, k_i)],
         "sk binary, n long, k long",
     )
-    state.coalesce(1).write.mode("overwrite").parquet(
-        version_path(subdir, batch_id)
+    return read_parquet_state(
+        spark, commit_version(state.coalesce(1), subdir, batch_id)
     )
-    return spark.read.parquet(version_path(subdir, batch_id))
 
 
 def read_quantile_state(spark, state_dir: str, batch_id: int) -> DataFrame:

@@ -31,7 +31,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..state.store import guard_replay, read_latest, version_path
+from ..state.store import commit_version, read_latest
 
 __all__ = ["weighted_sample_incremental"]
 
@@ -74,7 +74,6 @@ def weighted_sample_incremental(
 
     spark = new_df.sparkSession
     subdir = os.path.join(state_dir, "wsample")
-    guard_replay(subdir, batch_id)
     scored = _es_scored(new_df, weight_col, hash_col)
     prior = read_latest(spark, subdir, batch_id)
     pool = scored if prior is None else scored.unionByName(prior)
@@ -83,7 +82,5 @@ def weighted_sample_incremental(
         .limit(int(n))
         .localCheckpoint()  # pin before the version write below
     )
-    sample.repartition(state_partitions).write.mode("overwrite").parquet(
-        version_path(subdir, batch_id)
-    )
+    commit_version(sample.repartition(state_partitions), subdir, batch_id)
     return sample.drop("__es_key")

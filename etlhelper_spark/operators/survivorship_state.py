@@ -37,7 +37,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..state.store import guard_replay, read_latest, version_path
+from ..state.store import commit_version, read_latest
 
 __all__ = [
     "golden_incremental",
@@ -124,7 +124,6 @@ def golden_incremental(
 
     spark = new_df.sparkSession
     subdir = os.path.join(state_dir, "golden")
-    guard_replay(subdir, int(batch_id))
     batch_state = _golden_structs(
         new_df,
         cluster_col,
@@ -166,9 +165,7 @@ def golden_incremental(
         merged = a.join(
             b, a["cluster_id"].eqNullSafe(b["cluster_id"]), "full"
         ).select(*cols)
-    target = version_path(subdir, batch_id)
-    merged.write.mode("overwrite").parquet(target)
-    return target
+    return commit_version(merged, subdir, batch_id)
 
 
 def remap_golden_clusters(
@@ -201,7 +198,6 @@ def remap_golden_clusters(
     version directory written."""
 
     subdir = os.path.join(state_dir, "golden")
-    guard_replay(subdir, int(batch_id))
     state = read_latest(spark, subdir, int(batch_id))
     if state is None:
         raise ValueError(f"no golden state at {state_dir}")
@@ -255,11 +251,9 @@ def remap_golden_clusters(
             for c in win_cols
         ],
     )
-    target = version_path(subdir, batch_id)
-    merged.repartition(state_partitions).write.mode("overwrite").parquet(
-        target
+    return commit_version(
+        merged.repartition(state_partitions), subdir, batch_id
     )
-    return target
 
 
 def streaming_golden(

@@ -75,9 +75,9 @@ def read_parquet_table(
     mapping is exact, so the read schedules no inference job — a bare
     ``spark.read.parquet`` pays a one-task footer job per call at zero
     information gain, and every declared query re-reads its base
-    tables on every run. Tables with timestamp columns (where
-    inference depends on footer logical-type details plus the
-    nanosAsLong conf) keep Spark's own inference.
+    tables on every run. Tables Spark did not write that hold
+    nanosecond timestamps (whose inference follows the nanosAsLong
+    conf) keep Spark's own inference.
 
     ``merge_schema=True`` reconciles schema evolution across a
     table's files (columns added over time surface as nulls in old

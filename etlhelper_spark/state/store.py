@@ -18,9 +18,12 @@ job commit; an erase epoch's is written by :func:`erase_cutover` after
 the data). Versions order by ``(k, n)``: readers take the newest
 complete one below their batch id, and an erase epoch outranks its
 source, so erasure is sticky and never consumes a batch id (a
-checkpointed stream's next engine-assigned id stays valid). A replay of
-batch k overwrites ``v<k>`` reading only versions below k;
-:func:`guard_replay` rejects ids that would rewrite history.
+checkpointed stream's next engine-assigned id stays valid).
+:func:`commit_version` is the one commit of every rewrite store: its
+replay guard rejects an id that would rewrite history before anything
+is written, and a replay of batch k overwrites ``v<k>`` reading only
+versions below k. A version reads back with the schema Spark wrote
+into its footers, so with no inference job.
 
 **Append stores** (dedup exact/bands/embedding_lsh/spans, index
 postings, linkage variants/phonetic)::
@@ -162,29 +165,33 @@ def newest_epochs(subdir: str) -> dict[int, tuple[int, str]]:
     return {k: (e, p) for (k, e), p in scan_versions(subdir)}
 
 
-def guard_replay(subdir: str, batch_id: int) -> None:
-    """Monotone-batch enforcement. Allowed: an empty store, a batch id
-    above every version, or a replay of the batch's own intact,
-    never-erased ``v<k>`` (at-least-once delivery). Rejected loudly: an
-    id at or below another version with nothing of its own to replay,
-    i.e. a replay from below an erasure/prune horizon (ack-and-skip it
-    at the source) or an out-of-order id. An own version superseded by
-    an erase epoch does not license a replay: the rewrite would put
-    forgotten rows back on disk."""
+def commit_version(df, subdir: str, batch_id: int) -> str:
+    """Write *df* (partitions sized by the caller) as batch *batch_id*'s
+    version ``v<k>`` of the rewrite store *subdir*, ``_SUCCESS`` last
+    (Spark's job commit), and return its path; the one commit of every
+    rewrite store. The replay guard runs first. Allowed: an empty
+    store, a batch id above every version, or a replay of the batch's
+    own intact, never-erased ``v<k>`` (at-least-once delivery).
+    Rejected loudly, before anything is written: an id at or below
+    another version with nothing of its own to replay, i.e. a replay
+    from below an erasure/prune horizon (ack-and-skip it at the source)
+    or an out-of-order id. An own version superseded by an erase epoch
+    does not license a replay: the rewrite would put forgotten rows
+    back on disk."""
     versions = scan_versions(subdir)
-    if not versions:
-        return
     k = int(batch_id)
-    if [e for (b, e), _p in versions if b == k] == [0]:
-        return
-    max_k = max(b for (b, _e), _p in versions)
-    if k <= max_k:
-        raise ValueError(
-            f"batch_id {k} is at or below an existing version of "
-            f"{subdir} (max batch v{max_k}) with no own version to "
-            "replay — it falls below an erasure/prune horizon; use a "
-            "batch id above every existing version"
-        )
+    if versions and [e for (b, e), _p in versions if b == k] != [0]:
+        max_k = max(b for (b, _e), _p in versions)
+        if k <= max_k:
+            raise ValueError(
+                f"batch_id {k} is at or below an existing version of "
+                f"{subdir} (max batch v{max_k}) with no own version to "
+                "replay — it falls below an erasure/prune horizon; use a "
+                "batch id above every existing version"
+            )
+    out = version_path(subdir, k)
+    df.write.mode("overwrite").parquet(out)
+    return out
 
 
 def _remove_versions(subdir: str, doomed) -> int:

@@ -167,7 +167,7 @@ def read_events_stream(
 
     from pyarrow.fs import FileType
 
-    from ..functions.util import parquet_fs
+    from ..functions.util import parquet_fs, read_parquet_state
     from ..sources import nanos_timestamp_columns
 
     path = f"{sf_dir}/events.parquet"
@@ -187,13 +187,8 @@ def read_events_stream(
         stream_dir = path
     # the feed schema resolves from one footer driver-side; the bare
     # read-then-.schema probe pays an inference job per stream setup
-    from ..functions.util import footer_spark_schema
-
-    feed_schema = footer_spark_schema(path, spark=spark)
-    if feed_schema is None:
-        feed_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(feed_schema)
+        spark.readStream.schema(read_parquet_state(spark, path).schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(stream_dir)
     )

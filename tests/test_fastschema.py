@@ -2,8 +2,11 @@
 (r13). The helper must return EXACTLY the schema Spark's own parquet
 inference would produce (including nullability) for every layout the
 state stores use, schedule no job doing it, and fall back to the
-inferring read whenever the footer cannot decide the Spark type
-(timestamps), so converting a call site can never change results.
+inferring read whenever the footer cannot decide the Spark type, so
+converting a call site can never change results. A file Spark wrote
+is decided by its footer's row metadata, whatever its types; a file
+another writer made falls back on types whose inference follows
+session conf (nanosecond timestamps, binary).
 """
 
 from __future__ import annotations
@@ -11,6 +14,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from etlhelper_spark.functions.util import (
     footer_spark_schema,
@@ -76,11 +80,18 @@ def test_multi_leaf_paths(spark, tmp_path):
 
 
 def test_timestamp_store_falls_back(spark, tmp_path):
-    p = str(tmp_path / "ts")
-    spark.sql(
-        "select timestamp'2020-01-01 00:00:00' as t, 1 as x"
-    ).write.parquet(p)
-    assert footer_spark_schema(p) is None  # inference owns timestamps
+    """A nanosecond-timestamp file another writer made carries no Spark
+    row metadata, and its Spark type depends on nanosAsLong: the read
+    keeps Spark's own inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "ts.parquet")
+    pq.write_table(
+        pa.table({"t": pa.array([10**18], pa.timestamp("ns")), "x": [1]}), p
+    )
+    assert footer_spark_schema(p) is None  # inference owns nanos
+    assert footer_spark_schema(p, spark=spark) is None
     assert read_parquet_state(spark, p).schema == spark.read.parquet(
         p
     ).schema
@@ -105,15 +116,28 @@ def test_single_file_path_resolves(spark, tmp_path):
 
 
 def test_micros_timestamps_resolve_with_session(spark, tmp_path):
-    """With the session supplied, micro-precision timestamps resolve
-    exactly: tz-aware maps to TimestampType, tz-naive follows the
-    session's inferTimestampNTZ conf — both pinned against Spark's
-    own inference. Without a session, timestamps still fall back."""
-    p = str(tmp_path / "tsus")
-    spark.sql(
-        "select timestamp'2020-01-01 00:00:00' as t, "
-        "timestamp_ntz'2020-01-02 00:00:00' as tn, 1 as x"
-    ).write.parquet(p)
+    """A file another writer made: with the session supplied,
+    micro-precision timestamps resolve exactly — tz-aware maps to
+    TimestampType, tz-naive follows the session's inferTimestampNTZ
+    conf — both pinned against Spark's own inference. Without a
+    session, timestamps still fall back."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "tsus.parquet")
+    when = datetime.datetime(2020, 1, 1)
+    pq.write_table(
+        pa.table(
+            {
+                "t": pa.array([when], pa.timestamp("us", tz="UTC")),
+                "tn": pa.array([when], pa.timestamp("us")),
+                "x": [1],
+            }
+        ),
+        p,
+    )
     assert footer_spark_schema(p) is None  # no session -> fall back
     assert footer_spark_schema(p, spark=spark) is not None
     # compare at the READ level: the file source forces nullability on
@@ -124,6 +148,49 @@ def test_micros_timestamps_resolve_with_session(spark, tmp_path):
     assert sorted(map(str, fast.collect())) == sorted(
         map(str, bare.collect())
     )
+
+
+@pytest.mark.parametrize("binary_as_string", ["false", "true"])
+def test_spark_written_footer_schema_equals_inference(
+    spark, tmp_path, binary_as_string
+):
+    """A directory Spark wrote resolves from its footer's row metadata
+    to exactly the schema Spark's inference gives, for the types the
+    arrow conversion cannot decide (binary, timestamps) and the nested
+    and annotated ones, under either binaryAsString setting."""
+    table = f"footer_matrix_{binary_as_string}"
+    src, p = str(tmp_path / "src"), str(tmp_path / "out")
+    spark.sql(
+        f"CREATE TABLE {table} (b BINARY, ts TIMESTAMP, tn TIMESTAMP_NTZ, "
+        "d DECIMAL(20, 4), dt DATE, a ARRAY<STRUCT<x: INT, y: STRING>>, "
+        f"m MAP<STRING, BIGINT>, v VARCHAR(5)) USING parquet LOCATION '{src}'"
+    )
+    try:
+        spark.sql(
+            f"INSERT INTO {table} VALUES (X'01', "
+            "timestamp'2024-01-01 01:02:03', "
+            "timestamp_ntz'2024-01-01 01:02:03', 1.5, date'2024-01-02', "
+            "array(named_struct('x', 1, 'y', 'a')), map('k', 2L), 'abc')"
+        )
+        spark.table(table).write.parquet(p)
+    finally:
+        spark.sql(f"DROP TABLE {table}")
+    key = "spark.sql.parquet.binaryAsString"
+    spark.conf.set(key, binary_as_string)
+    try:
+        bare = spark.read.parquet(p)
+        assert footer_spark_schema(p, spark=spark) == bare.schema
+        assert footer_spark_schema(p) == bare.schema
+        assert bare.schema["v"].metadata  # the VARCHAR(5) annotation
+        before = _n_jobs(spark)
+        fast = read_parquet_state(spark, p)
+        assert _n_jobs(spark) == before
+        assert fast.schema == bare.schema
+        assert sorted(map(str, fast.collect())) == sorted(
+            map(str, bare.collect())
+        )
+    finally:
+        spark.conf.unset(key)
 
 
 def test_base_table_reader_schema_and_rows_identical(spark):

@@ -570,6 +570,27 @@ def test_on_error_retry_writes_each_row_once(derby_conn):
     assert [r["id"] for r in got] == [i for i in range(20) if i != 13]
 
 
+def test_on_error_retry_types_none_values_by_their_chunk(derby_conn):
+    """After the chunk fails on a duplicate key, a row holding a None
+    is checked and written with the schema typed over the whole chunk,
+    so only the duplicate reaches on_error."""
+    execute(
+        'CREATE TABLE pk_none_t ("id" BIGINT PRIMARY KEY, "v" DOUBLE)',
+        derby_conn,
+    )
+    execute("INSERT INTO pk_none_t VALUES (1, 0.5)", derby_conn)
+    rows = [{"id": 1, "v": 1.0}, {"id": 2, "v": None}, {"id": 3, "v": 3.0}]
+    rejects = []
+    assert load("pk_none_t", derby_conn, rows, on_error=rejects.extend) == (
+        3, 1
+    )
+    assert [f.row["id"] for f in rejects] == [1]
+    got = fetchall('SELECT "id", "v" FROM pk_none_t ORDER BY "id"', derby_conn)
+    assert got == [
+        {"id": 1, "v": 0.5}, {"id": 2, "v": None}, {"id": 3, "v": 3.0}
+    ]
+
+
 @pytest.fixture()
 def new_york_time():
     """The process's local zone set to a non-UTC zone (naive datetimes

@@ -7,7 +7,15 @@ local-only call — ``glob.*``, ``os.rename``, ``os.listdir``,
 ``os.walk``, ``os.path.exists``/``isdir``, builtin ``open``,
 ``shutil.rmtree`` — anywhere in the package except the query bodies
 of plans/queries.py. Those calls return nothing (or silently do
-nothing) on a ``file://``, ``s3://`` or ``gs://`` URI."""
+nothing) on a ``file://``, ``s3://`` or ``gs://`` URI.
+
+A second gate keeps every rewrite-store version on the one commit
+path: outside state/store.py no writer (``.parquet(...)``,
+``write_sidecar_table``) may receive a ``version_path(...)`` result,
+so every version is written by ``store.commit_version``, which runs
+the replay guard first. ``.parquet`` also names Spark's reader, so a
+bare ``spark.read.parquet`` of a version trips the gate too: a version
+reads back through ``read_parquet_state``, with its footer schema."""
 
 from __future__ import annotations
 
@@ -39,9 +47,16 @@ STATE_MODULES = [
     "functions/ivfpq.py",
 ]
 
-# functions outside the gate (``<module>::<function>``), each with its
-# reason; none today
-EXCLUDED: dict[str, str] = {}
+# functions outside the gates (``<module>::<function>``), each with its
+# reason
+EXCLUDED: dict[str, str] = {
+    "operators/packing_state.py::_write_cursor_version": (
+        "the pack cursor (at most n_shards rows) is written driver-side "
+        "by pyarrow, not by a Spark job; it runs after the assignments' "
+        "commit_version in the same apply, so that commit's replay guard "
+        "covers it"
+    ),
+}
 
 # query bodies, swept with the split of plans/queries.py
 UNGATED_MODULES = {"plans/queries.py"}
@@ -145,3 +160,113 @@ def test_every_module_does_io_through_the_fs_layer():
         "etlhelper_spark/functions/util.py (parquet_fs, list_fileinfos, "
         "parquet_data_files) instead:\n" + "\n".join(bad)
     )
+
+
+# -- rewrite-store versions are written only by store.commit_version --
+
+WRITERS = {"parquet", "write_sidecar_table"}
+
+
+def _call_name(node: ast.Call):
+    return getattr(node.func, "attr", getattr(node.func, "id", None))
+
+
+def _holds_version_path(node: ast.AST, names: set[str]) -> bool:
+    if isinstance(node, ast.Call):
+        return _call_name(node) == "version_path"
+    return isinstance(node, ast.Name) and node.id in names
+
+
+def _version_path_writes(source: str, label: str, skip=()) -> list[str]:
+    """Writer calls that receive a ``version_path(...)`` result: the
+    call itself, a local name bound to it, or a parameter of a module
+    function that some call in the module passes one to."""
+    funcs = [
+        n
+        for n in ast.walk(ast.parse(source))
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    params = {f.name: [a.arg for a in f.args.args] for f in funcs}
+    held: dict[str, set[str]] = {f.name: set() for f in funcs}
+    changed = True
+    while changed:
+        changed = False
+        for f in funcs:
+            for node in ast.walk(f):
+                new: list[tuple[str, str]] = []
+                if isinstance(node, ast.Assign) and _holds_version_path(
+                    node.value, held[f.name]
+                ):
+                    new = [
+                        (f.name, t.id)
+                        for t in node.targets
+                        if isinstance(t, ast.Name)
+                    ]
+                elif isinstance(node, ast.Call) and _call_name(node) in params:
+                    callee = _call_name(node)
+                    new = [
+                        (callee, p)
+                        for p, a in zip(params[callee], node.args)
+                        if _holds_version_path(a, held[f.name])
+                    ]
+                for fn, name in new:
+                    if name not in held[fn]:
+                        held[fn].add(name)
+                        changed = True
+    out = set()
+    for f in funcs:
+        if f.name in skip:
+            continue
+        for node in ast.walk(f):
+            if (
+                isinstance(node, ast.Call)
+                and _call_name(node) in WRITERS
+                and any(
+                    _holds_version_path(a, held[f.name])
+                    for a in [*node.args, *(k.value for k in node.keywords)]
+                )
+            ):
+                out.add(f"{label}:{node.lineno}: {_call_name(node)}()")
+    return sorted(out)
+
+
+def test_only_the_store_writes_a_version_path():
+    bad = []
+    for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, PKG)
+        if rel == "state/store.py":
+            continue
+        with open(path) as f:
+            bad += _version_path_writes(
+                f.read(), rel, _excluded_functions(path)
+            )
+    assert not bad, (
+        "a rewrite-store version written outside state/store.py — "
+        "commit it with store.commit_version(df, subdir, batch_id):\n"
+        + "\n".join(bad)
+    )
+
+
+def test_version_path_gate_sees_every_route():
+    """The gate is not vacuous: a direct write, a write through a local
+    name and a write inside a helper handed the path all trip it, and
+    so does the excluded cursor write once its exclusion is lifted."""
+    src = (
+        "def direct(df, d):\n"
+        "    df.write.parquet(version_path(d, 1))\n"
+        "def named(df, d):\n"
+        "    out = store.version_path(d, 1)\n"
+        "    df.write.mode('overwrite').parquet(out)\n"
+        "def helper(target, t):\n"
+        "    write_sidecar_table(target, t)\n"
+        "def caller(d, t):\n"
+        "    helper(version_path(d, 1), t)\n"
+        "def fine(df, d):\n"
+        "    df.write.parquet(append_path(d, 1))\n"
+    )
+    assert [line.split(":")[1] for line in _version_path_writes(src, "m")] == [
+        "2", "5", "7"
+    ]
+    with open(os.path.join(PKG, "operators", "packing_state.py")) as f:
+        hits = _version_path_writes(f.read(), "packing_state")
+    assert len(hits) == 1 and len(EXCLUDED) == 1

@@ -26,6 +26,8 @@ SCAN_DIRS = [
 ]
 # the erasure module itself reads/writes stores as the erasure path
 EXCLUDE_MODULES = {"erasure"}
+# state/store.py calls that name a store dir, and that dir's argument
+STORE_DIR_ARG = {"version_path": 0, "append_path": 0, "commit_version": 1}
 
 
 def _module_constants(tree: ast.Module) -> dict[str, str]:
@@ -57,14 +59,14 @@ def _scan_module(path: str) -> set[str]:
             continue
         fn = node.func
         fname = getattr(fn, "attr", getattr(fn, "id", None))
+        pos = STORE_DIR_ARG.get(fname)
         if (
-            fname in ("version_path", "append_path")
-            and node.args
-            and isinstance(node.args[0], ast.Name)
-            and node.args[0].id == "state_dir"
+            pos is not None
+            and len(node.args) > pos
+            and isinstance(node.args[pos], ast.Name)
+            and node.args[pos].id == "state_dir"
         ):
-            # state/store.py's path helpers on state_dir itself: a
-            # store rooted at the state dir (the ivm v<batch> convention)
+            # a store rooted at the state dir (the ivm v<batch> convention)
             stores.add("<versioned>")
             continue
         if not (isinstance(fn, ast.Attribute) and fn.attr == "join"):
