@@ -5,12 +5,18 @@ each stored vector costs — together they are the standard layout of a
 suite (ann_index.py's partition-pruned probe, pq.py's ADC scorer).
 This module composes them into one persisted artifact.
 
-Layout on disk (one directory):
+Layout on disk (one directory; state/store.py owns its commit rules):
 
-- ``list_id=<L>/`` parquet partitions holding ONLY (vec_id, codes) —
-  the float payload is never stored; at m=4 subspaces over 64 dims
-  that is 16-64x smaller than the raw corpus, the difference between
-  an index that fits the page cache and one that doesn't.
+- ``list_id=<L>/ingest_batch=<b>/`` parquet cells holding ONLY
+  (vec_id, codes) — the float payload is never stored; at m=4
+  subspaces over 64 dims that is 16-64x smaller than the raw corpus,
+  the difference between an index that fits the page cache and one
+  that doesn't. The build writes ``ingest_batch=0``; each append
+  overwrites exactly its own batch's cells, so a replay is
+  idempotent.
+- ``_ibase_v<k>`` — the compacted base (compact_ivfpq_ingest),
+  partitioned by list_id, whose ``_COMPACTED`` marker holds the
+  watermark W: readers take the base plus the cells above W.
 - ``_pivots`` — the IVF coarse centroids (ann_index convention; the
   underscore hides it from the partitioned table's file listing).
 - ``_codebooks`` — the PQ codebooks (pq.py convention).
@@ -39,21 +45,14 @@ built on batch 1 and appended with batch 2 is content-identical to one
 built over the union.
 
 Known trades, inherited from the halves and shared with every real
-IVFADC deployment: (1) on the PLAIN layout, append is parquet
-mode=append — at-least-once replay duplicates a batch's codes
-(duplicate neighbor candidates at probe, never missing ones); the
-VERSIONED-INGEST layout (build_ivfpq_index(versioned_ingest=True) +
-batch-id appends / streaming_ivfpq_ingest) removes this: each batch
-overwrites exactly its own (list_id, ingest_batch) cells under
-dynamic partition overwrite, so redelivery is idempotent.
-(2) hot-list splits need the float vectors this index deliberately
-does not store — rebalance_ivfpq_index reads the hot lists' vectors
-back from the ROW STORE by vec_id (a partition-pruned id fetch),
-splits there, and rewrites ONLY those lists' codes (raw codes move
-untouched; residual codes re-encode against the new pivots).
-(3) pivots AND codebooks drift from the distribution over time —
-monitor list skew and quantization error, retrain when either
-warrants.
+IVFADC deployment: (1) hot-list splits need the float vectors this
+index deliberately does not store — rebalance_ivfpq_index reads the
+hot lists' vectors back from the ROW STORE by vec_id (a
+partition-pruned id fetch), splits there, and rewrites ONLY those
+lists' codes (raw codes move untouched; residual codes re-encode
+against the new pivots). (2) pivots AND codebooks drift from the
+distribution over time — monitor list skew and quantization error,
+retrain when either warrants.
 
 Reference parity note: the reference (a DB-API cursor wrapper,
 /root/reference/etlhelper/etl.py) has no vector search; this completes
@@ -254,7 +253,6 @@ def build_ivfpq_index(
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
     arrow: bool | None = None,
-    versioned_ingest: bool = False,
     residual: bool = False,
     attr_cols: list[str] | None = None,
     opq: bool = False,
@@ -266,8 +264,8 @@ def build_ivfpq_index(
     spherical k-means) and persist the composed index: one corpus scan
     assigns AND encodes every row (single projection — the coarse
     argmax and the m subspace argmaxes are all literal folds), writing
-    (vec_id, codes) partitioned by list_id. Returns
-    (n_vectors, nlist, n_rules_per_subspace).
+    (vec_id, codes) into the ``list_id=<L>/ingest_batch=0`` cells.
+    Returns (n_vectors, nlist, n_rules_per_subspace).
 
     *arrow* (default auto: m_sub x k_codes >= 256) routes training
     assignment and encoding through the Arrow-batched numpy argmax —
@@ -275,14 +273,11 @@ def build_ivfpq_index(
     interpreted-op-bound (58s/Lloyd round at 200k vectors, k=64 x m=8,
     vs ~3s batched); small indexes stay pure-codegen.
 
-    *versioned_ingest* adds a second partition dimension
-    ``ingest_batch`` (the build's rows land under ingest_batch=0):
-    appends then carry a batch id and overwrite EXACTLY their own
-    (list, batch) cells under dynamic partition overwrite — the
-    layout that makes streaming ingest replay-IDEMPOTENT
-    (streaming_ivfpq_ingest). Probes are unaffected: list_id stays
-    the leading partition key, so pruning is identical, and the extra
-    column is simply not selected.
+    The ``ingest_batch`` partition level is what makes appends and
+    streaming ingest replay-IDEMPOTENT (append_ivfpq_index). Probes
+    are unaffected: list_id is the leading partition key, so pruning
+    reads only the probed lists, and the batch column is never
+    selected.
 
     *residual* (the FAISS-standard IVFADC accuracy refinement) trains
     the PQ codebooks on ``vec - pivot[list_id]`` and stores residual
@@ -383,14 +378,9 @@ def build_ivfpq_index(
         residual,
         extra_cols=tuple(attr_cols or ()),
     )
-    if versioned_ingest:
-        enc.select(
-            "*", F.lit(0).alias("ingest_batch")
-        ).write.partitionBy("list_id", "ingest_batch").mode(
-            "overwrite"
-        ).parquet(path)
-    else:
-        enc.write.partitionBy("list_id").mode("overwrite").parquet(path)
+    enc.select("*", F.lit(0).alias("ingest_batch")).write.partitionBy(
+        "list_id", "ingest_batch"
+    ).mode("overwrite").parquet(path)
     # sidecars are bounded, driver-known artifacts (pivot_rows and
     # books are already collected): persist them driver-side instead
     # of paying one Spark write job + commit each (util.
@@ -424,7 +414,6 @@ def build_ivfpq_index(
         m_sub=m_sub,
         k_codes=k_codes,
         arrow=arrow,
-        versioned_ingest=bool(versioned_ingest),
         residual=residual,
         opq=opq,
     )
@@ -437,7 +426,7 @@ def build_ivfpq_index(
 def _write_ivfpq_meta(spark, path: str, **meta) -> None:
     """Persist the build-time decisions appends/probes must reuse
     (``_meta``, one row): m_sub, k_codes, the arrow encode-path
-    choice, and the versioned-ingest layout flag. Written DRIVER-SIDE
+    choice, and the residual and OPQ flags. Written DRIVER-SIDE
     (util.write_sidecar_table): one row of driver-known scalars never
     needs a Spark write job — the literal_frame form this replaces
     still paid a scheduled job + commit per build (~0.2s), and the
@@ -452,9 +441,6 @@ def _write_ivfpq_meta(spark, path: str, **meta) -> None:
                 "m_sub": _pa.array([int(meta["m_sub"])], _pa.int32()),
                 "k_codes": _pa.array([int(meta["k_codes"])], _pa.int32()),
                 "arrow": _pa.array([bool(meta["arrow"])], _pa.bool_()),
-                "versioned_ingest": _pa.array(
-                    [bool(meta["versioned_ingest"])], _pa.bool_()
-                ),
                 "residual": _pa.array(
                     [bool(meta.get("residual", False))], _pa.bool_()
                 ),
@@ -470,20 +456,20 @@ def _ivfpq_stored_attrs(spark, path: str) -> list[str]:
     """Covering-attribute columns of a persisted IVFPQ index,
     discovered from the stored schema (the append_ivf_index
     convention) — everything beyond the core (vec_id, list_id, codes)
-    layout and the versioned-ingest partition column. Empty for plain
-    indexes, so every non-covering code path is byte-identical.
-    Reads ONE parquet footer driver-side — a spark.read of the
-    partitioned table here would re-list the whole directory tree on
-    every append/probe (measured ~2s per call at 10^2 cells, growing
-    with the cell count). An index that HAS partitions or a compacted
-    base but no locatable data file raises loudly: silently returning
-    [] there would let an append write attr-less rows into a covering
-    index, and attr-filtered probes would then drop those rows with
-    no error (missing neighbors)."""
+    layout and the ingest_batch partition column. Empty for
+    non-covering indexes, so every non-covering code path is
+    byte-identical. Reads ONE parquet footer driver-side — a
+    spark.read of the partitioned table here would re-list the whole
+    directory tree on every append/probe (measured ~2s per call at
+    10^2 cells, growing with the cell count). An index that HAS
+    partitions or a compacted base but no locatable data file raises
+    loudly: silently returning [] there would let an append write
+    attr-less rows into a covering index, and attr-filtered probes
+    would then drop those rows with no error (missing neighbors)."""
     core = {"vec_id", "list_id", "codes", "ingest_batch"}
     versions = store.ibase_versions(path)
     if not versions and not store.partitions(path, "list_id"):
-        return []  # nothing written yet — a plain pre-build path
+        return []  # no rows written yet: only the frozen artifacts
     src = versions[-1][1] if versions else path
     names = parquet_schema_names(src)
     if names is None:
@@ -500,13 +486,22 @@ def _read_ivfpq_meta(spark, path: str) -> dict:
     read — one tiny footer+page, no Spark job (this runs on EVERY
     append/probe; the Spark read cost ~0.3s per call). Raises if the
     sidecar is missing: build_ivfpq_index writes it, so a built index
-    never lacks one."""
+    never lacks one. Also raises for a sidecar whose
+    ``versioned_ingest`` flag is false: earlier versions wrote that
+    flag, and false marks their plain ``list_id=<L>/`` layout, which
+    no reader here understands."""
     from .util import read_sidecar_table
 
     tbl = read_sidecar_table(os.path.join(path, "_meta"))
     if tbl is None or tbl.num_rows == 0:
         raise ValueError(f"_read_ivfpq_meta: no _meta sidecar under {path}")
-    return {k: v[0] for k, v in tbl.to_pydict().items()}
+    meta = {k: v[0] for k, v in tbl.to_pydict().items()}
+    if not meta.pop("versioned_ingest", True):
+        raise ValueError(
+            f"_read_ivfpq_meta: index at {path} is a plain-layout index "
+            "from an earlier version; rebuild it"
+        )
+    return meta
 
 
 def _read_ivfpq_rotation(path: str):
@@ -531,25 +526,25 @@ def append_ivfpq_index(
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
     arrow: bool | None = None,
-    batch_id: int | None = None,
+    *,
+    batch_id: int,
 ) -> int:
     """Encode a new batch against the FROZEN pivots + codebooks and
-    append into the existing ``list_id=`` partitions — one linear scan
-    of the batch, zero shuffle, O(batch) write of m-byte codes.
-    Content-identical to building over the union (both halves' frozen
-    contracts compose, pinned in tests). The shared trade: pivots AND
-    codebooks drift from the distribution over time — monitor list
-    skew (rebalance_ivf_index's trigger) and quantization error, and
-    retrain when either warrants. Returns the appended count.
+    write it as batch *batch_id*'s ``list_id=<L>/ingest_batch=<id>``
+    cells — one linear scan of the batch, zero shuffle, O(batch)
+    write of m-byte codes. Content-identical to building over the
+    union (both halves' frozen contracts compose, pinned in tests).
+    The shared trade: pivots AND codebooks drift from the
+    distribution over time — monitor list skew (rebalance_ivf_index's
+    trigger) and quantization error, and retrain when either
+    warrants. Returns the appended count.
 
-    On a VERSIONED-INGEST index (built with versioned_ingest=True),
-    *batch_id* is required and the write becomes replay-IDEMPOTENT:
-    dynamic partition overwrite replaces exactly this batch's
-    (list_id, ingest_batch=batch_id) cells, so an at-least-once
+    The write is replay-IDEMPOTENT: dynamic partition overwrite
+    replaces exactly this batch's cells, so an at-least-once
     redelivery overwrites its own rows instead of duplicating them —
-    the exactly-once contract streaming ingest needs. On the plain
-    layout, parquet append applies (a replay duplicates the batch;
-    see the module docstring's trade #1)."""
+    the exactly-once contract streaming ingest needs. A batch at or
+    below the compaction watermark is already folded into the base
+    and is dropped (returns 0). The build owns ``ingest_batch=0``."""
     spark = new_corpus.sparkSession
     # frozen artifacts read driver-side (util.load_pivot_rows /
     # pyarrow codebooks): appends re-read them per batch, and the
@@ -562,21 +557,14 @@ def append_ivfpq_index(
         # entries, which shrink when clusters empty and could flip the
         # encode path (one-ulp tie divergence) near the 256 boundary
         arrow = bool(meta["arrow"])
-    versioned = bool(meta["versioned_ingest"])
-    if versioned and batch_id is None:
-        raise ValueError(
-            "append_ivfpq_index: index at "
-            f"{path} is versioned-ingest — pass batch_id"
-        )
-    if versioned:
-        w = ivfpq_ingest_watermark(path)
-        if w is not None and int(batch_id) <= w:
-            # the batch is already FOLDED into the compacted base — a
-            # redelivery must be dropped, not re-appended (re-writing
-            # its (list, batch) cells would double its rows against
-            # the base copy; this drop is the post-compaction half of
-            # the exactly-once contract)
-            return 0
+    w = ivfpq_ingest_watermark(path)
+    if w is not None and int(batch_id) <= w:
+        # the batch is already FOLDED into the compacted base — a
+        # redelivery must be dropped, not re-appended (re-writing its
+        # (list, batch) cells would double its rows against the base
+        # copy; this drop is the post-compaction half of the
+        # exactly-once contract)
+        return 0
     residual = bool(meta["residual"])
     attrs = tuple(_ivfpq_stored_attrs(spark, path))
     if meta["opq"]:
@@ -605,30 +593,25 @@ def append_ivfpq_index(
     )
     # ONE encode scan feeds the write; the appended count comes from
     # the written footers driver-side (count_parquet_rows) — no
-    # checkpoint job, no re-scan of the batch. Versioned layout: the
-    # batch's own (list_id, ingest_batch=batch_id) cells ARE the batch
-    # (exact even under a replay overwrite); plain layout: footer-sum
-    # delta under the single-writer store contract.
-    if versioned:
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        old = spark.conf.get(mode_key, "static")
-        spark.conf.set(mode_key, "dynamic")
-        try:
-            enc.select(
-                "*", F.lit(int(batch_id)).alias("ingest_batch")
-            ).write.partitionBy("list_id", "ingest_batch").mode(
-                "overwrite"
-            ).parquet(path)
-        finally:
-            spark.conf.set(mode_key, old)
-        return sum(
-            count_parquet_rows(d)
-            for b, d in store.ingest_cells(path)
-            if b == int(batch_id)
-        )
-    before = count_parquet_rows(path)
-    enc.write.partitionBy("list_id").mode("append").parquet(path)
-    return count_parquet_rows(path) - before
+    # checkpoint job, no re-scan of the batch. The batch's own
+    # (list_id, ingest_batch=batch_id) cells ARE the batch (exact even
+    # under a replay overwrite).
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(mode_key, "static")
+    spark.conf.set(mode_key, "dynamic")
+    try:
+        enc.select(
+            "*", F.lit(int(batch_id)).alias("ingest_batch")
+        ).write.partitionBy("list_id", "ingest_batch").mode(
+            "overwrite"
+        ).parquet(path)
+    finally:
+        spark.conf.set(mode_key, old)
+    return sum(
+        count_parquet_rows(d)
+        for b, d in store.ingest_cells(path)
+        if b == int(batch_id)
+    )
 
 
 def rebalance_ivfpq_index(
@@ -656,12 +639,12 @@ def rebalance_ivfpq_index(
     re-encode against the new pivots (frozen codebooks — the append
     contract's artifacts never change here).
 
-    On a VERSIONED-INGEST index the rebalance requires a compacted
-    base covering every delivered batch (compact_ivfpq_ingest first —
-    the operational order a production loop runs anyway): moved rows
-    land in the base, and the watermark fences replayed batches that
-    would otherwise resurrect rows into deleted lists. Raises if the
-    versioned layout has live cells above the watermark or no base.
+    The rebalance requires a compacted base covering every delivered
+    batch (compact_ivfpq_ingest first — the operational order a
+    production loop runs anyway): moved rows land in the base, and the
+    watermark fences replayed batches that would otherwise resurrect
+    rows into deleted lists. Raises if the index has live cells above
+    the watermark or no base.
 
     NOT crash-atomic, same contract as rebalance_ivf_index: new
     partitions land before the pivot rewrite and old-directory
@@ -712,20 +695,18 @@ def _ivfpq_rebalance_pass(
 
     meta = _read_ivfpq_meta(spark, path)
     residual = bool(meta["residual"])
-    versioned = bool(meta["versioned_ingest"])
     versions = store.ibase_versions(path)
-    if versioned:
-        if not versions:
-            raise ValueError(
-                "rebalance_ivfpq_index: versioned-ingest index has no "
-                "compacted base — run compact_ivfpq_ingest first"
-            )
-        w = versions[-1][2]
-        if any(b > w for b, _d in store.ingest_cells(path)):
-            raise ValueError(
-                "rebalance_ivfpq_index: live ingest cells above the "
-                f"watermark {w} — compact them into the base first"
-            )
+    if not versions:
+        raise ValueError(
+            "rebalance_ivfpq_index: index has no compacted base — run "
+            "compact_ivfpq_ingest first"
+        )
+    base, w = versions[-1][1], versions[-1][2]
+    if any(b > w for b, _d in store.ingest_cells(path)):
+        raise ValueError(
+            "rebalance_ivfpq_index: live ingest cells above the "
+            f"watermark {w} — compact them into the base first"
+        )
     # per-list sizes from parquet footers driver-side: the writes this
     # pass follows (build/append/compact/previous pass) are complete,
     # so the footers ARE the table — the groupBy(list_id).count() scan
@@ -871,17 +852,14 @@ def _ivfpq_rebalance_pass(
         moved = moved.select(
             "vec_id", F.col("new_list").alias("list_id"), "codes"
         )
-    target = versions[-1][1] if versioned else path
     moved.select("vec_id", "codes", "list_id").write.partitionBy(
         "list_id"
-    ).mode("append").parquet(target)
+    ).mode("append").parquet(base)
     # driver-known pivot set: persist driver-side (one fewer Spark
     # write job per rebalance pass — util.write_pivot_rows)
     write_pivot_rows(pivots_path, keep_pivots.items())
     for L in doomed:
-        store.remove(os.path.join(path, f"list_id={L}"))
-        if versioned:
-            store.remove(os.path.join(versions[-1][1], f"list_id={L}"))
+        store.remove(os.path.join(base, f"list_id={L}"))
     return len(doomed)
 
 
@@ -924,7 +902,6 @@ def _effective_list_sizes(path: str) -> dict[int, int]:
                 continue
             if (
                 watermark is not None
-                and "ingest_batch" in parts
                 and int(parts["ingest_batch"]) <= watermark
             ):
                 continue  # folded into the base: invisible
@@ -958,7 +935,7 @@ def read_ivfpq_rows(spark: SparkSession, path: str) -> DataFrame:
         )
     if cells_exist:
         live = read_parquet_state(spark, path)
-        if versions and "ingest_batch" in live.columns:
+        if versions:
             live = live.where(
                 F.col("ingest_batch") > F.lit(int(versions[-1][2]))
             )
@@ -993,11 +970,7 @@ def compact_ivfpq_ingest(
 
     Returns the number of partition cells folded away. Watermarks are
     monotone: raises if *watermark* is below the current one."""
-    if not _read_ivfpq_meta(spark, path)["versioned_ingest"]:
-        raise ValueError(
-            f"compact_ivfpq_ingest: index at {path} is not "
-            "versioned-ingest (build with versioned_ingest=True)"
-        )
+    _read_ivfpq_meta(spark, path)  # refuses a plain-layout index
     w = int(watermark)
     versions = store.ibase_versions(path)
     w_prev = versions[-1][2] if versions else None
@@ -1048,8 +1021,7 @@ def streaming_ivfpq_ingest(
     ingest batch (the build owns ingest_batch=0). A redelivered
     micro-batch therefore overwrites exactly its own rows — the
     replay-idempotent ledger (streaming_dedup_exact's contract applied
-    to the index). Requires an index built with
-    versioned_ingest=True. Starts and drains an availableNow query."""
+    to the index). Starts and drains an availableNow query."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

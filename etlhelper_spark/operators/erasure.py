@@ -66,6 +66,7 @@ from ..state.store import (
     fold,
     has_cells,
     ibase_versions,
+    partitions,
     purge_superseded,
     read_live,
     remove,
@@ -365,7 +366,7 @@ def forget_from_ann_index(spark, path: str, ids) -> int:
 
 def forget_from_ivfpq_index(spark, path: str, ids) -> int:
     """Erase vectors from a persisted IVFPQ index — both layers: live
-    ``(list_id[, ingest_batch])`` partition cells AND the newest
+    ``(list_id, ingest_batch)`` partition cells AND the newest
     compacted ``_ibase_v<k>`` base, each rewritten partition-locally.
     A forgotten document's codes are its content (PQ codes
     reconstruct an approximation of the vector), so they must go.
@@ -374,21 +375,20 @@ def forget_from_ivfpq_index(spark, path: str, ids) -> int:
     from ..functions.ivfpq import _read_ivfpq_meta
 
     versions = ibase_versions(path)
-    if not versions and not has_cells(path):
+    if not versions and not partitions(path, "list_id"):
         return 0
-    doomed = _doomed_frame(spark, ids)
-    total = 0
-    versioned = bool(_read_ivfpq_meta(spark, path)["versioned_ingest"])
-    if versioned and versions:
+    _read_ivfpq_meta(spark, path)  # refuses a plain-layout index
+    if versions:
         # finish any interrupted compaction cleanup first: cells at or
         # below the watermark are dead (their rows live in the base) —
         # erasing "from" them would double-count the erased rows
         sweep_cells(path, versions[-1][2])
+    doomed = _doomed_frame(spark, ids)
+    total = 0
     if has_cells(path):
-        part_cols = (
-            ["list_id", "ingest_batch"] if versioned else ["list_id"]
+        total += _partition_local_erase(
+            spark, path, doomed, ["list_id", "ingest_batch"]
         )
-        total += _partition_local_erase(spark, path, doomed, part_cols)
     if versions:
         total += _partition_local_erase(
             spark, versions[-1][1], doomed, ["list_id"]

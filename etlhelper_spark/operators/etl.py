@@ -19,7 +19,13 @@ etlhelper/etl.py) on Spark's execution model:
   distributed by Spark's batch writer.
 - copy: distributed read -> transform -> write; Spark turns the
   reference's sequential chunk alternation (etl.py:368-421) into
-  partition-parallel pipelines.
+  partition-parallel pipelines on a files source. A JDBC source is
+  read as ONE partition (one task on one cursor): neither
+  ``dataframe(sql)`` nor ``copy_table_rows`` passes Spark's JDBC
+  partition options. To split such a read, build the source with
+  ``table_dataframe(table, partition_column=..., lower_bound=...,
+  upper_bound=..., num_partitions=...)`` and write it with
+  ``load(target, dest_conn, df)``.
 """
 
 from __future__ import annotations
@@ -695,13 +701,20 @@ def copy_rows(
     Architecturally upgraded per SURVEY §3.3: instead of the
     reference's sequential driver-pumped chunk alternation, the
     DataFrame flows executor-side from source scan through transform to
-    the destination batch writer — partition-parallel end to end, and
-    the write is the only pass over the source (see
-    :func:`observed_write`; a plain-callable transform adds its ≤100-row
-    schema sample). The (processed, failed) contract is preserved;
-    ``on_error`` is called once, after the write commits, with the rows
-    the existing target rejects — the reference's write-then-on_error
-    order per chunk (etl.py:305-320).
+    the destination batch writer, and the write is the only pass over
+    the source (see :func:`observed_write`; a plain-callable transform
+    adds its ≤100-row schema sample). On a files source that pipeline
+    is partition-parallel end to end. On a JDBC source it is not:
+    ``dataframe(sql)`` passes no partition options, so the source is
+    read as one partition on one cursor; to split a large JDBC read,
+    use ``source_conn.table_dataframe(table, partition_column=...,
+    lower_bound=..., upper_bound=..., num_partitions=...)`` and pass
+    that DataFrame to ``load(target, dest_conn, df)``.
+
+    The (processed, failed) contract is preserved; ``on_error`` is
+    called once, after the write commits, with the rows the existing
+    target rejects — the reference's write-then-on_error order per
+    chunk (etl.py:305-320).
     """
     clear_abort_event()
     _register_session(source_conn.spark)
@@ -807,6 +820,9 @@ def copy_table_rows(
     """Whole-table copy; target defaults to the source name
     (reference: etl.py:456-506). One pass over the source, with
     ``on_error`` called after the write commits — as :func:`copy_rows`.
+    The source is ``table_dataframe(table)`` with no partition options,
+    so a JDBC source is read as one partition (see :func:`copy_rows`
+    for the split read).
     """
     validate_identifier(table)
     target = target or table

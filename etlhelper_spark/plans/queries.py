@@ -12424,9 +12424,9 @@ def q234_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_ivfpq_index / append_ivfpq_index) — both halves' frozen-
     artifact contracts composed and restated from scratch: pivots AND
     codebooks train on the %3<2 vintage only; the %3>=2 batch encodes
-    against the FROZEN artifacts and appends into the existing
-    list_id partitions (one linear scan, zero shuffle, O(batch) write
-    of m-byte codes). The result read back must equal the oracle's
+    against the FROZEN artifacts and lands as ingest batch 1's own
+    (list_id, ingest_batch) cells (one linear scan, zero shuffle,
+    O(batch) write of m-byte codes). The result read back must equal the oracle's
     union encode — q198's codebook chain plus q180's coarse
     assignment, so any drift in either half's append path (stale
     pivots, wrong codebooks, missed/doubled rows) breaks the hash.
@@ -12439,7 +12439,7 @@ def q234_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     b0 = e.where(F.pmod("vec_id", F.lit(3)) < 2)
     b1 = e.where(F.pmod("vec_id", F.lit(3)) >= 2)
     build_ivfpq_index(b0, work, nlist=8, m_sub=4, k_codes=8, iterations=2)
-    append_ivfpq_index(b1, work)
+    append_ivfpq_index(b1, work, batch_id=1)
     idx = read_parquet_state(spark, work)
     return idx.select(
         "vec_id",
@@ -12885,7 +12885,7 @@ def q240_stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING ANN ingest with EXACTLY-ONCE semantics (functions/
     ivfpq.py::streaming_ivfpq_ingest) — continuously-arriving
     embeddings become searchable without rebuilds: the index builds
-    VERSIONED on the %3=0 vintage (pivots + codebooks frozen,
+    on the %3=0 vintage (pivots + codebooks frozen,
     ingest_batch=0), then the %3=1 and %3=2 vintages arrive as two
     mtime-ordered files (q181's feed construction) and each
     availableNow micro-batch encodes against the frozen artifacts and
@@ -12913,7 +12913,6 @@ def q240_stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         m_sub=4,
         k_codes=8,
         iterations=2,
-        versioned_ingest=True,
     )
     parts_seen: set = set()
     t0 = time.time() - 1000
@@ -13058,7 +13057,6 @@ def q241_ivfpq_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         m_sub=4,
         k_codes=8,
         iterations=2,
-        versioned_ingest=True,
     )
     parts_seen: set = set()
     t0 = time.time() - 1000
@@ -13225,7 +13223,6 @@ def q242_forget_everywhere(spark: SparkSession, sf_dir: str) -> DataFrame:
         m_sub=4,
         k_codes=8,
         iterations=2,
-        versioned_ingest=True,
     )
     append_ivfpq_index(
         v.where(F.pmod("vec_id", F.lit(2)) == 1), ivfpq, batch_id=1
@@ -13510,7 +13507,7 @@ def q244_ivfpq_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes real: codes-only storage means the k-means split must fetch
     the hot lists' float vectors from the ROW STORE by vec_id (cold
     lists are never read or rewritten). The lifecycle exercised here
-    is the production one: build VERSIONED, stream-style append, fold
+    is the production one: build, stream-style batch-id append, fold
     into the compacted base (the rebalance requires it — the watermark
     fences replays that would resurrect rows into deleted lists),
     split every hot list (cap = ceil(n/12) makes all 8 initial lists
@@ -13542,7 +13539,6 @@ def q244_ivfpq_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         m_sub=4,
         k_codes=8,
         iterations=2,
-        versioned_ingest=True,
     )
     append_ivfpq_index(
         e.where(F.pmod("vec_id", F.lit(2)) == 1), path, batch_id=1
@@ -14750,7 +14746,7 @@ def q256_ivfpq_adaptive_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/ivfpq.py::query_ivfpq_index_adaptive — VERDICT r8 #3:
     q245 built the widening loop for the float IVF index; the
     production codes-only index still took a fixed nprobe). Full
-    lifecycle on the q243/q245 clustered corpus: build a VERSIONED
+    lifecycle on the q243/q245 clustered corpus: build a
     COVERING index (attr_cols=['cat'] — the 1/50 attribute rides the
     code rows, so the filter applies inside the pruned scan with no
     row-store join) on the %3!=2 slice, append the %3==2 slice as
@@ -14804,7 +14800,6 @@ def q256_ivfpq_adaptive_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             nlist=16,
             m_sub=4,
             k_codes=8,
-            versioned_ingest=True,
             attr_cols=["cat"],
         )
         append_ivfpq_index(
@@ -15201,7 +15196,7 @@ def q259_opq_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rotated space), the APPEND path re-rotates batches with the SAME
     matrix (append-equivalence hash pinned in tests/test_ivfpq_opq),
     and probes rotate the bounded query side driver-side —
-    partition pruning, the versioned-ingest ledger, and the two-tier
+    partition pruning, the ingest-batch ledger, and the two-tier
     refine contract are all unchanged. Orthogonality preserves
     cosine, so both variants chase the SAME truth set (restated by
     the oracle) and the recall delta is pure quantization quality.

@@ -39,7 +39,7 @@ folded appends: a crash before the marker leaves an invisible partial
 dir that the next fold overwrites; a crash after it leaves rows twice,
 which every reader collapses.
 
-**IVFPQ ingest** (functions/ivfpq.py, versioned ingest)::
+**IVFPQ indexes** (functions/ivfpq.py)::
 
     list_id=<L>/ingest_batch=<b>   live cells
     _ibase_v<k>                    base whose ``_COMPACTED`` marker
@@ -428,16 +428,11 @@ def ingest_cells(path: str) -> list[tuple[int, str]]:
 
 
 def has_cells(path: str) -> bool:
-    """Whether any list partition holds data: an ingest cell or, on the
-    plain layout, a parquet file."""
-    for _L, ld in partitions(path, "list_id"):
-        _fs, _scheme, infos = _children(ld)
-        for i in infos:
-            if i.base_name.startswith("ingest_batch=") or (
-                i.is_file and i.base_name.endswith(".parquet")
-            ):
-                return True
-    return False
+    """Whether any list partition holds an ingest cell."""
+    return any(
+        partitions(ld, "ingest_batch")
+        for _L, ld in partitions(path, "list_id")
+    )
 
 
 def remove_empty_partitions(path: str, key: str) -> None:

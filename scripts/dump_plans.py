@@ -1,15 +1,31 @@
-"""Regenerate PLANS.md: formatted physical plans of representative
-queries at sf0.1 — the artifact for reviewing shuffle/pushdown/codegen
-properties without running anything.
+"""Dump formatted physical plans of queries at sf0.1.
 
-Usage: python scripts/dump_plans.py
+Usage:
+  python scripts/dump_plans.py
+      Regenerate PLANS.md: the plans of the representative queries
+      below — the artifact for reviewing shuffle/pushdown/codegen
+      properties without running anything.
+  python scripts/dump_plans.py --round rNN <before|after> <query> [...]
+      Write each named query's full ``.explain('formatted')`` output to
+      ``plans/rNN/<query>_<before|after>.txt``, the before/after
+      evidence of an optimization round. For multi-action lifecycle
+      queries the dumped plan is the FINAL returned frame's (the only
+      plan a DataFrame can carry); job-count evidence for
+      lifecycle-internal changes comes from scripts/profile_query.py.
+
+SPARK_GRAFT_SF_DIR overrides the data directory.
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import sys
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 REPRESENTATIVE = [
     ("q01_pricing_summary", "scan + filter pushdown + hash aggregate"),
@@ -79,13 +95,28 @@ REPRESENTATIVE = [
 ]
 
 
-def main() -> None:
-    from etlhelper_spark.plans import QUERIES
-    from etlhelper_spark.session import get_session
+def _formatted_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
 
-    spark = get_session("dump_plans")
-    spark.sparkContext.setLogLevel("ERROR")
-    sf_dir = "/root/testdata/sf0.1"
+
+def dump_round(spark, rnd: str, suffix: str, names: list[str]) -> None:
+    """Write each query's formatted plan to plans/<rnd>/."""
+    from etlhelper_spark.plans import QUERIES
+
+    out_dir = os.path.join(ROOT, "plans", rnd)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        plan = _formatted_plan(QUERIES[name](spark, SF_DIR))
+        out = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(out, "w") as fh:
+            fh.write(plan)
+        print(f"wrote {out}", file=sys.stderr)
+
+
+def write_plans_md(spark) -> None:
+    from etlhelper_spark.plans import QUERIES
 
     out = [
         "# PLANS — physical plans of representative queries (sf0.1)",
@@ -98,10 +129,7 @@ def main() -> None:
         "",
     ]
     for name, note in REPRESENTATIVE:
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = _formatted_plan(QUERIES[name](spark, SF_DIR))
         tree = plan.split("\n\n")[0]
         scans = [
             block
@@ -126,9 +154,34 @@ def main() -> None:
             ))
         out.append("```")
         out.append("")
-    with open("PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument(
+        "--round",
+        metavar="rNN",
+        help="dump the named queries into plans/rNN/ instead of PLANS.md",
+    )
+    ap.add_argument("suffix", nargs="?", choices=("before", "after"))
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if args.round and not (args.suffix and args.queries):
+        ap.error("--round needs <before|after> and at least one query")
+    if not args.round and (args.suffix or args.queries):
+        ap.error("<before|after> and queries need --round")
+
+    from etlhelper_spark.session import get_session
+
+    spark = get_session("dump_plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    if args.round:
+        dump_round(spark, args.round, args.suffix, args.queries)
+    else:
+        write_plans_md(spark)
 
 
 if __name__ == "__main__":

@@ -4,9 +4,11 @@
 # Runs (1) pytest --collect-only over the whole suite (~2s; catches the
 # r8 class of failure where a bad decorator kills collection for ALL
 # tests), (2) the filesystem-layer I/O gate, (3) the check of the
-# Spark-internal JVM members the driver-side JDBC path calls, and (4)
-# the full test files touched in the index / working tree, so the code
-# a commit modifies is actually executed before it ships.
+# Spark-internal JVM members the driver-side JDBC path calls, (4)
+# the full test files touched in the index / working tree, and (5) the
+# test files of each touched library module (``etlhelper_spark/**/
+# <name>.py`` runs ``tests/test_<name>*.py``), so the code a commit
+# modifies is actually executed before it ships.
 # Usage:  scripts/preflight.sh   (then commit if exit 0)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -35,6 +37,24 @@ if [ -n "$touched" ]; then
     python -m pytest $touched -q
 else
     echo "== preflight: no touched test files =="
+fi
+
+# A library edit runs its module's own test files even when no test
+# file changed: functions/ivfpq.py runs test_ivfpq.py,
+# test_ivfpq_adaptive.py and test_ivfpq_opq.py. Files step (4) already
+# ran are skipped.
+touched_src=$( (git diff --name-only --diff-filter=d HEAD -- 'etlhelper_spark/*.py';
+                git ls-files --others --exclude-standard -- 'etlhelper_spark/*.py') | sort -u)
+module_tests=$(for f in $touched_src; do
+                   ls tests/test_"$(basename "$f" .py)"*.py 2>/dev/null || true
+               done | sort -u | grep -vxF -f <(printf '%s\n' "$touched") || true)
+if [ -n "$module_tests" ]; then
+    echo "== preflight: running the tests of touched modules =="
+    echo "$module_tests"
+    # shellcheck disable=SC2086
+    python -m pytest $module_tests -q
+else
+    echo "== preflight: no tests of touched modules =="
 fi
 
 # The Arrow/pandas-UDF hot paths (applyInPandas/mapInPandas folds in

@@ -1057,8 +1057,8 @@ def main() -> None:
     # --- round-8 additions: IVFPQ lifecycle at scale ---------------
     ivfpq_ing = os.path.join(tmp, "ivfpq_ing")
 
-    def _ivfpq_versioned_ingest_probe():
-        # 8 ingest batches onto a versioned index: one (list, batch)
+    def _ivfpq_ingest_probe():
+        # 8 ingest batches onto the index: one (list, batch)
         # parquet cell per touched list per batch — the small-file
         # accumulation the compactor exists for
         from etlhelper_spark.functions.ivfpq import (
@@ -1068,7 +1068,7 @@ def main() -> None:
 
         build_ivfpq_index(
             vecs.where(F.col("vec_id") % 9 == 0), ivfpq_ing,
-            nlist=32, m_sub=8, k_codes=64, versioned_ingest=True,
+            nlist=32, m_sub=8, k_codes=64,
         )
         total = 0
         for b in range(1, 9):
@@ -1079,7 +1079,7 @@ def main() -> None:
         return total
 
     probe("IVFPQ versioned ingest (build + 8 micro-batches)", n_vecs,
-          _ivfpq_versioned_ingest_probe)
+          _ivfpq_ingest_probe)
 
     def _ivfpq_probe_only():
         from etlhelper_spark.functions.ivfpq import query_ivfpq_index

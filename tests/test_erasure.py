@@ -250,7 +250,6 @@ def test_forget_ivfpq_cells_and_base(spark, tmp_path):
         m_sub=4,
         k_codes=8,
         iterations=2,
-        versioned_ingest=True,
     )
     append_ivfpq_index(
         v.where(F.pmod("vec_id", F.lit(3)) == 1), idx, batch_id=1

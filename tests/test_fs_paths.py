@@ -235,7 +235,6 @@ def test_ivfpq_compact_and_forget_over_file_uri(spark, tmp_path):
     def run(root):
         build_ivfpq_index(
             part(0), root, nlist=4, m_sub=4, k_codes=8, iterations=2,
-            versioned_ingest=True,
         )
         for b in (1, 2):
             append_ivfpq_index(part(b), root, batch_id=b)

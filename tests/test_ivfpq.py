@@ -13,6 +13,7 @@ from etlhelper_spark.functions.ivfpq import (
     append_ivfpq_index,
     build_ivfpq_index,
     query_ivfpq_index,
+    read_ivfpq_rows,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -37,10 +38,11 @@ def index_dir(spark, vecs):
 
 
 def test_index_stores_codes_only(spark, index_dir):
-    """The compression claim: the partitioned table carries (vec_id,
-    codes, list_id) and nothing else — the float payload must not
-    exist in the index."""
-    idx = spark.read.parquet(index_dir)
+    """The compression claim: the index rows carry (vec_id, codes,
+    list_id) and nothing else — the float payload must not exist in
+    the index (a stored float column would read back as a covering
+    attribute)."""
+    idx = read_ivfpq_rows(spark, index_dir)
     assert sorted(idx.columns) == ["codes", "list_id", "vec_id"]
     row = idx.first()
     assert len(row["codes"]) == 4
@@ -83,7 +85,7 @@ def test_adc_probe_equals_composed_halves(spark, vecs, index_dir):
     books = load_pq_codebooks(spark, index_dir)
     pivots = spark.read.parquet(f"{index_dir}/_pivots")
     pivot_rows = collect_pivot_rows(pivots, "list_id", "pivot")
-    idx = spark.read.parquet(index_dir)
+    idx = read_ivfpq_rows(spark, index_dir)
     want = {}
     for qrow in q.collect():
         probes = [
@@ -120,11 +122,11 @@ def test_append_is_content_identical_to_union_encode(spark, vecs):
     d = tempfile.mkdtemp(prefix="ehs_ivfpq_app_")
     try:
         build_ivfpq_index(b0, d, nlist=4, m_sub=4, k_codes=4)
-        n1 = append_ivfpq_index(b1, d)
+        n1 = append_ivfpq_index(b1, d, batch_id=1)
         assert n1 == b1.count()
         got = sorted(
             (r["vec_id"], r["list_id"], tuple(r["codes"]))
-            for r in spark.read.parquet(d).collect()
+            for r in read_ivfpq_rows(spark, d).collect()
         )
         pivots = spark.read.parquet(f"{d}/_pivots")
         pivot_rows = collect_pivot_rows(pivots, "list_id", "pivot")
@@ -222,20 +224,18 @@ def test_arrow_train_matches_literal_train(spark, vecs):
     assert arr == lit
 
 
-def test_versioned_ingest_replay_is_idempotent(spark, vecs):
-    """The versioned-ingest layout: an append redelivered with the
-    same batch id must overwrite exactly its own (list_id,
-    ingest_batch) cells — the final table is identical to the
-    single-delivery run, and other batches' rows are untouched."""
+def test_ingest_replay_is_idempotent(spark, vecs):
+    """An append redelivered with the same batch id must overwrite
+    exactly its own (list_id, ingest_batch) cells — the final table is
+    identical to the single-delivery run, and other batches' rows are
+    untouched."""
     import tempfile
 
     d = tempfile.mkdtemp(prefix="ehs_ivfpq_ver_")
     try:
         b0 = vecs.where(F.col("vec_id") % 3 == 0)
         b1 = vecs.where(F.col("vec_id") % 3 == 1)
-        build_ivfpq_index(
-            b0, d, nlist=4, m_sub=4, k_codes=4, versioned_ingest=True
-        )
+        build_ivfpq_index(b0, d, nlist=4, m_sub=4, k_codes=4)
         n = append_ivfpq_index(b1, d, batch_id=1)
         assert n == b1.count()
         once = sorted(
@@ -252,8 +252,8 @@ def test_versioned_ingest_replay_is_idempotent(spark, vecs):
         # batch lineage is intact
         batches = {r["ingest_batch"] for r in spark.read.parquet(d).collect()}
         assert batches == {0, 1}
-        # a versioned index refuses an unversioned append
-        with pytest.raises(ValueError, match="pass batch_id"):
+        # an append without a batch id is refused
+        with pytest.raises(TypeError, match="batch_id"):
             append_ivfpq_index(b1, d)
     finally:
         shutil.rmtree(d, ignore_errors=True)
@@ -262,8 +262,8 @@ def test_versioned_ingest_replay_is_idempotent(spark, vecs):
 # ------------------------------------------------- watermarked compaction
 @pytest.fixture()
 def versioned_index(spark, vecs, tmp_path):
-    """Versioned-ingest index: build on %3==0, append %3==1 as batch 1
-    and %3==2 as batch 2."""
+    """Index built on %3==0, with %3==1 appended as batch 1 and %3==2
+    as batch 2."""
     d = str(tmp_path / "vidx")
     build_ivfpq_index(
         vecs.where(F.pmod("vec_id", F.lit(3)) == 0),
@@ -272,7 +272,6 @@ def versioned_index(spark, vecs, tmp_path):
         m_sub=4,
         k_codes=8,
         iterations=2,
-        versioned_ingest=True,
     )
     append_ivfpq_index(
         vecs.where(F.pmod("vec_id", F.lit(3)) == 1), d, batch_id=1
@@ -480,7 +479,7 @@ def test_residual_codebook_not_collapsed(spark, vecs, tmp_path):
     for j in books:
         assert len(books[j]) >= 4  # multiple surviving codes
     # and the codes column actually uses more than one code
-    idx = spark.read.parquet(d)
+    idx = read_ivfpq_rows(spark, d)
     n_codes = idx.select(
         F.count_distinct(F.col("codes")[0]).alias("n")
     ).first()["n"]
@@ -506,18 +505,18 @@ def test_residual_append_equals_frozen_union_encode(spark, vecs, tmp_path):
     build_ivfpq_index(
         b0, d, nlist=8, m_sub=4, k_codes=8, iterations=2, residual=True
     )
-    append_ivfpq_index(b1, d)
+    append_ivfpq_index(b1, d, batch_id=1)
     got = {
         (r["vec_id"], r["list_id"], tuple(r["codes"]))
-        for r in spark.read.parquet(d).collect()
+        for r in read_ivfpq_rows(spark, d).collect()
     }
     os.makedirs(d2, exist_ok=True)
     for sub in ("_pivots", "_codebooks", "_meta"):
         sh.copytree(os.path.join(d, sub), os.path.join(d2, sub))
-    append_ivfpq_index(vecs, d2)
+    append_ivfpq_index(vecs, d2, batch_id=1)
     want = {
         (r["vec_id"], r["list_id"], tuple(r["codes"]))
-        for r in spark.read.parquet(d2).collect()
+        for r in read_ivfpq_rows(spark, d2).collect()
     }
     assert got == want
 
@@ -548,7 +547,7 @@ def test_residual_adc_matches_numpy_reconstruction(spark, vecs, tmp_path):
     }
     codes = {
         r["vec_id"]: (r["list_id"], list(r["codes"]))
-        for r in spark.read.parquet(d).collect()
+        for r in read_ivfpq_rows(spark, d).collect()
     }
     cmap = {j: dict(books[j]) for j in books}
     V = {
@@ -603,7 +602,6 @@ def test_rebalance_residual_membership_and_reencode(spark, vecs, tmp_path):
         k_codes=8,
         iterations=2,
         residual=True,
-        versioned_ingest=True,
     )
     append_ivfpq_index(b1, d, batch_id=1)
     compact_ivfpq_ingest(spark, d, watermark=1)
@@ -688,7 +686,99 @@ def test_index_without_meta_sidecar_raises(spark, vecs, tmp_path):
     build_ivfpq_index(vecs, d, nlist=4, m_sub=4, k_codes=8, iterations=2)
     shutil.rmtree(os.path.join(d, "_meta"))
     with pytest.raises(ValueError, match="_meta"):
-        append_ivfpq_index(vecs.limit(5), d)
+        append_ivfpq_index(vecs.limit(5), d, batch_id=1)
     with pytest.raises(ValueError, match="_meta"):
         forget_from_ivfpq_index(spark, d, [1])
     assert forget_from_ivfpq_index(spark, str(tmp_path / "none"), [1]) == 0
+
+
+def test_effective_list_sizes_match_read_rows(spark, vecs, versioned_index):
+    """The footer-read per-list sizes rebalance decides hot lists from
+    equal read_ivfpq_rows' per-list counts on the hardest view: a
+    compacted base, live cells above the watermark, and leftover
+    folded cells at or below it (a crash between the ``_COMPACTED``
+    marker and sweep_cells)."""
+    import os
+    import shutil as sh
+
+    from etlhelper_spark.functions.ivfpq import (
+        _effective_list_sizes,
+        compact_ivfpq_ingest,
+    )
+
+    snap = tempfile.mkdtemp(prefix="ehs_snap_")
+    try:
+        sh.copytree(versioned_index, snap, dirs_exist_ok=True)
+        compact_ivfpq_ingest(spark, versioned_index, watermark=1)
+        for p in os.listdir(snap):
+            if p.startswith("list_id="):
+                sh.copytree(
+                    os.path.join(snap, p),
+                    os.path.join(versioned_index, p),
+                    dirs_exist_ok=True,
+                )
+    finally:
+        sh.rmtree(snap, ignore_errors=True)
+    batches = {
+        int(c.split("=")[1])
+        for p in os.listdir(versioned_index)
+        if p.startswith("list_id=")
+        for c in os.listdir(os.path.join(versioned_index, p))
+    }
+    assert batches == {0, 1, 2}  # folded leftovers next to live cells
+    want = {
+        int(r["list_id"]): int(r["count"])
+        for r in read_ivfpq_rows(spark, versioned_index)
+        .groupBy("list_id")
+        .count()
+        .collect()
+    }
+    assert _effective_list_sizes(versioned_index) == want
+    assert sum(want.values()) == vecs.count()
+
+
+def test_plain_layout_meta_is_refused_before_any_write(
+    spark, vecs, versioned_index
+):
+    """A ``_meta`` sidecar with ``versioned_ingest=False`` marks a
+    plain-layout index from an earlier version: append, compaction and
+    erasure each raise the rebuild error, and none writes first."""
+    import os
+
+    import pyarrow as pa
+
+    from etlhelper_spark.functions.ivfpq import compact_ivfpq_ingest
+    from etlhelper_spark.functions.util import (
+        read_sidecar_table,
+        write_sidecar_table,
+    )
+    from etlhelper_spark.operators.erasure import forget_from_ivfpq_index
+
+    meta_dir = os.path.join(versioned_index, "_meta")
+    tbl = read_sidecar_table(meta_dir)
+    write_sidecar_table(
+        meta_dir,
+        tbl.append_column(
+            "versioned_ingest", pa.array([False], pa.bool_())
+        ),
+    )
+
+    def tree():
+        return sorted(
+            (os.path.relpath(os.path.join(r, f), versioned_index),
+             os.stat(os.path.join(r, f)).st_mtime_ns)
+            for r, _ds, fs in os.walk(versioned_index)
+            for f in fs
+        )
+
+    before = tree()
+    calls = [
+        lambda: append_ivfpq_index(vecs.limit(5), versioned_index,
+                                   batch_id=3),
+        lambda: compact_ivfpq_ingest(spark, versioned_index, watermark=2),
+        lambda: forget_from_ivfpq_index(spark, versioned_index, [0, 1]),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="plain-layout.*rebuild it"):
+            call()
+        assert tree() == before

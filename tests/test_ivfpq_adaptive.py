@@ -49,7 +49,6 @@ def covering_index(spark, vecs):
         nlist=NLIST,
         m_sub=4,
         k_codes=8,
-        versioned_ingest=True,
         attr_cols=["cat"],
     )
     appended = append_ivfpq_index(

@@ -52,7 +52,7 @@ def opq_index(spark, aniso):
         k_codes=16,
         opq=True,
     )
-    append_ivfpq_index(aniso.where(F.col("vec_id") % 3 == 2), d)
+    append_ivfpq_index(aniso.where(F.col("vec_id") % 3 == 2), d, batch_id=1)
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
@@ -82,7 +82,9 @@ def test_append_uses_frozen_rotation(spark, aniso, opq_index):
             k_codes=16,
             opq=True,
         )
-        append_ivfpq_index(aniso.where(F.col("vec_id") % 3 == 2), d2)
+        append_ivfpq_index(
+            aniso.where(F.col("vec_id") % 3 == 2), d2, batch_id=1
+        )
         a = sorted(
             tuple(r)
             for r in read_ivfpq_rows(spark, opq_index)

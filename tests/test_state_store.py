@@ -168,7 +168,6 @@ def test_ivfpq_fold_crash_before_marker(spark, tmp_path, monkeypatch):
         build_ivfpq_index(
             vecs.where(F.pmod("vec_id", F.lit(2)) == 0), root,
             nlist=4, m_sub=4, k_codes=8, iterations=2,
-            versioned_ingest=True,
         )
         append_ivfpq_index(
             vecs.where(F.pmod("vec_id", F.lit(2)) == 1), root, batch_id=1
