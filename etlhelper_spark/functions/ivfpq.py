@@ -80,7 +80,7 @@ from .util import (
     read_parquet_state,
     in_values,
     load_pivot_rows,
-    parquet_schema_names,
+    parquet_data_files,
     write_pivot_rows,
     write_sidecar_table,
 )
@@ -293,11 +293,12 @@ def build_ivfpq_index(
     build_ivf_index contract applied to the codes layout): the named
     corpus columns ride each code row, so 'nearest WHERE cat = ...'
     filters inside the pruned scan instead of joining back to a row
-    store. Appends/ingest discover the attributes from the stored
-    schema (batches must carry the same columns); compaction folds
-    them through; query_ivfpq_index takes attr_filter. Rebalance on a
-    covering index is rejected (the row-store re-encode path does not
-    thread attributes — rebuild instead).
+    store. The names persist in the ``_meta`` sidecar, where
+    appends/ingest read them (batches must carry the same columns);
+    compaction folds them through; query_ivfpq_index takes
+    attr_filter. Rebalance on a covering index is rejected (the
+    row-store re-encode path does not thread attributes — rebuild
+    instead).
 
     *opq* composes the learned OPQ rotation (functions/opq.py, Ge et
     al. 2013 — FAISS's ``OPQ..,IVF..,PQ..`` factory layering) in
@@ -416,6 +417,7 @@ def build_ivfpq_index(
         arrow=arrow,
         residual=residual,
         opq=opq,
+        attr_cols=list(attr_cols or ()),
     )
     # footer-sum count (util.count_parquet_rows): the write above is
     # complete, so the footers ARE the table — no listing + scan job
@@ -426,7 +428,10 @@ def build_ivfpq_index(
 def _write_ivfpq_meta(spark, path: str, **meta) -> None:
     """Persist the build-time decisions appends/probes must reuse
     (``_meta``, one row): m_sub, k_codes, the arrow encode-path
-    choice, and the residual and OPQ flags. Written DRIVER-SIDE
+    choice, the residual and OPQ flags, and the covering attribute
+    columns (attr_cols, empty for a non-covering index). Keeping the
+    attributes here, not in the data files' schema, lets an index
+    whose rows were all erased still take appends. Written DRIVER-SIDE
     (util.write_sidecar_table): one row of driver-known scalars never
     needs a Spark write job — the literal_frame form this replaces
     still paid a scheduled job + commit per build (~0.2s), and the
@@ -447,38 +452,12 @@ def _write_ivfpq_meta(spark, path: str, **meta) -> None:
                 "opq": _pa.array(
                     [bool(meta.get("opq", False))], _pa.bool_()
                 ),
+                "attr_cols": _pa.array(
+                    [list(meta["attr_cols"])], _pa.list_(_pa.string())
+                ),
             }
         ),
     )
-
-
-def _ivfpq_stored_attrs(spark, path: str) -> list[str]:
-    """Covering-attribute columns of a persisted IVFPQ index,
-    discovered from the stored schema (the append_ivf_index
-    convention) — everything beyond the core (vec_id, list_id, codes)
-    layout and the ingest_batch partition column. Empty for
-    non-covering indexes, so every non-covering code path is
-    byte-identical. Reads ONE parquet footer driver-side — a
-    spark.read of the partitioned table here would re-list the whole
-    directory tree on every append/probe (measured ~2s per call at
-    10^2 cells, growing with the cell count). An index that HAS
-    partitions or a compacted base but no locatable data file raises
-    loudly: silently returning [] there would let an append write
-    attr-less rows into a covering index, and attr-filtered probes
-    would then drop those rows with no error (missing neighbors)."""
-    core = {"vec_id", "list_id", "codes", "ingest_batch"}
-    versions = store.ibase_versions(path)
-    if not versions and not store.partitions(path, "list_id"):
-        return []  # no rows written yet: only the frozen artifacts
-    src = versions[-1][1] if versions else path
-    names = parquet_schema_names(src)
-    if names is None:
-        raise ValueError(
-            f"_ivfpq_stored_attrs: index at {path} has partitions but "
-            f"no locatable parquet data file under {src} — cannot "
-            "discover covering attributes (corrupt or in-flight index)"
-        )
-    return [n for n in names if n not in core]
 
 
 def _read_ivfpq_meta(spark, path: str) -> dict:
@@ -486,10 +465,11 @@ def _read_ivfpq_meta(spark, path: str) -> dict:
     read — one tiny footer+page, no Spark job (this runs on EVERY
     append/probe; the Spark read cost ~0.3s per call). Raises if the
     sidecar is missing: build_ivfpq_index writes it, so a built index
-    never lacks one. Also raises for a sidecar whose
-    ``versioned_ingest`` flag is false: earlier versions wrote that
-    flag, and false marks their plain ``list_id=<L>/`` layout, which
-    no reader here understands."""
+    never lacks one. Also raises for a sidecar from an earlier
+    version: one whose ``versioned_ingest`` flag is false marks the
+    plain ``list_id=<L>/`` layout, which no reader here understands,
+    and one without ``attr_cols`` does not say which columns an append
+    must carry."""
     from .util import read_sidecar_table
 
     tbl = read_sidecar_table(os.path.join(path, "_meta"))
@@ -500,6 +480,11 @@ def _read_ivfpq_meta(spark, path: str) -> dict:
         raise ValueError(
             f"_read_ivfpq_meta: index at {path} is a plain-layout index "
             "from an earlier version; rebuild it"
+        )
+    if "attr_cols" not in meta:
+        raise ValueError(
+            f"_read_ivfpq_meta: index at {path} has a _meta sidecar "
+            "without attr_cols from an earlier version; rebuild it"
         )
     return meta
 
@@ -566,7 +551,7 @@ def append_ivfpq_index(
         # exactly-once contract)
         return 0
     residual = bool(meta["residual"])
-    attrs = tuple(_ivfpq_stored_attrs(spark, path))
+    attrs = tuple(meta["attr_cols"])
     if meta["opq"]:
         # frozen-artifact contract: batches rotate with the BUILD's R
         from .opq import rotate_embeddings
@@ -651,13 +636,14 @@ def rebalance_ivfpq_index(
     removal, so a crash can transiently show a vector in both lists
     (duplicate neighbors, never missing ones); re-running converges.
     Returns the number of lists split across passes."""
-    if _ivfpq_stored_attrs(spark, path):
+    meta = _read_ivfpq_meta(spark, path)
+    if meta["attr_cols"]:
         raise ValueError(
             "rebalance_ivfpq_index: index at "
             f"{path} is covering (attr_cols); the row-store re-encode "
             "path does not thread attribute columns — rebuild instead"
         )
-    if _read_ivfpq_meta(spark, path)["opq"]:
+    if meta["opq"]:
         raise ValueError(
             "rebalance_ivfpq_index: index at "
             f"{path} is OPQ-rotated; the rebalance pivot recompute "
@@ -917,6 +903,15 @@ def _effective_list_sizes(path: str) -> dict[int, int]:
     return sizes
 
 
+def _base_frames(spark, versions: list, cols: list[str]) -> list[DataFrame]:
+    """The newest compacted base's *cols* as a list of at most one
+    frame: none without a base, or once erasure has removed every row
+    of it (a base with no data file has no schema to read)."""
+    if not versions or not parquet_data_files(versions[-1][1])[1]:
+        return []
+    return [read_parquet_state(spark, versions[-1][1]).select(*cols)]
+
+
 def read_ivfpq_rows(spark: SparkSession, path: str) -> DataFrame:
     """The index's EFFECTIVE code rows ``(vec_id, list_id, codes)`` —
     the newest complete compacted base plus every live partition cell
@@ -927,12 +922,9 @@ def read_ivfpq_rows(spark: SparkSession, path: str) -> DataFrame:
     ``ingest_batch <= W`` and are filtered out, never double-read."""
     versions = store.ibase_versions(path)
     cells_exist = store.has_cells(path)
-    cols = ["vec_id", "list_id", "codes"] + _ivfpq_stored_attrs(spark, path)
-    frames = []
-    if versions:
-        frames.append(
-            read_parquet_state(spark, versions[-1][1]).select(*cols)
-        )
+    attrs = _read_ivfpq_meta(spark, path)["attr_cols"]
+    cols = ["vec_id", "list_id", "codes"] + attrs
+    frames = _base_frames(spark, versions, cols)
     if cells_exist:
         live = read_parquet_state(spark, path)
         if versions:
@@ -970,7 +962,7 @@ def compact_ivfpq_ingest(
 
     Returns the number of partition cells folded away. Watermarks are
     monotone: raises if *watermark* is below the current one."""
-    _read_ivfpq_meta(spark, path)  # refuses a plain-layout index
+    meta = _read_ivfpq_meta(spark, path)  # refuses an earlier-version index
     w = int(watermark)
     versions = store.ibase_versions(path)
     w_prev = versions[-1][2] if versions else None
@@ -979,12 +971,8 @@ def compact_ivfpq_ingest(
             f"compact_ivfpq_ingest: watermark {w} is below the "
             f"current watermark {w_prev} (watermarks are monotone)"
         )
-    cols = ["vec_id", "list_id", "codes"] + _ivfpq_stored_attrs(spark, path)
-    frames = []
-    if versions:
-        frames.append(
-            read_parquet_state(spark, versions[-1][1]).select(*cols)
-        )
+    cols = ["vec_id", "list_id", "codes"] + meta["attr_cols"]
+    frames = _base_frames(spark, versions, cols)
     if any(
         b <= w and (w_prev is None or b > w_prev)
         for b, _d in store.ingest_cells(path)

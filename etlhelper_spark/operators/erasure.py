@@ -377,7 +377,7 @@ def forget_from_ivfpq_index(spark, path: str, ids) -> int:
     versions = ibase_versions(path)
     if not versions and not partitions(path, "list_id"):
         return 0
-    _read_ivfpq_meta(spark, path)  # refuses a plain-layout index
+    _read_ivfpq_meta(spark, path)  # refuses an earlier-version index
     if versions:
         # finish any interrupted compaction cleanup first: cells at or
         # below the watermark are dead (their rows live in the base) —

@@ -159,9 +159,12 @@ def read_events_stream(
     same footer-driven conversion used by the batch reader restores
     TimestampType before the watermark is applied.
 
-    Pass a stable ``stream_dir`` when the query will RESTART from a
-    checkpoint: source offsets record the path, so a fresh tempdir per
-    call would break resume (Wrong basePath)."""
+    A single-file events table is exposed through a symlink dir:
+    *stream_dir* when given, else one ``ehs_stream_*`` dir per events
+    file under the temp dir, reused by every call. Either way the path
+    is stable, as resuming from a checkpoint needs (source offsets
+    record it; a fresh dir per call fails with Wrong basePath)."""
+    import hashlib
     import os
     import tempfile
 
@@ -176,13 +179,20 @@ def read_events_stream(
     if fs.get_file_info(local_path).type == FileType.File:
         # FileStreamSource requires a directory; expose the single
         # file through a symlink dir (read-only testdata untouched)
+        local_path = os.path.abspath(local_path)
         if stream_dir is None:
-            stream_dir = tempfile.mkdtemp(prefix="ehs_stream_")
+            key = hashlib.sha1(local_path.encode()).hexdigest()[:16]
+            stream_dir = os.path.join(
+                tempfile.gettempdir(), f"ehs_stream_{key}"
+            )
         link = os.path.join(stream_dir, "events.parquet")
         link_fs, link_path = parquet_fs(link)
         if link_fs.get_file_info(link_path).type == FileType.NotFound:
             os.makedirs(stream_dir, exist_ok=True)
-            os.symlink(local_path, link)
+            try:
+                os.symlink(local_path, link)
+            except FileExistsError:
+                pass  # a concurrent call linked it first
     elif stream_dir is None:
         stream_dir = path
     # the feed schema resolves from one footer driver-side; the bare

@@ -7,8 +7,9 @@
 # Spark-internal JVM members the driver-side JDBC path calls, (4)
 # the full test files touched in the index / working tree, and (5) the
 # test files of each touched library module (``etlhelper_spark/**/
-# <name>.py`` runs ``tests/test_<name>*.py``), so the code a commit
-# modifies is actually executed before it ships.
+# <name>.py`` runs ``tests/test_<name>*.py``, or ``tests/test_<dir>*.py``
+# of its parent dir when it has none), so the code a commit modifies
+# is actually executed before it ships.
 # Usage:  scripts/preflight.sh   (then commit if exit 0)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -41,12 +42,14 @@ fi
 
 # A library edit runs its module's own test files even when no test
 # file changed: functions/ivfpq.py runs test_ivfpq.py,
-# test_ivfpq_adaptive.py and test_ivfpq_opq.py. Files step (4) already
-# ran are skipped.
+# test_ivfpq_adaptive.py and test_ivfpq_opq.py. A module with no test
+# file of its own runs its parent dir's: plans/queries.py runs
+# test_plans.py. Files step (4) already ran are skipped.
 touched_src=$( (git diff --name-only --diff-filter=d HEAD -- 'etlhelper_spark/*.py';
                 git ls-files --others --exclude-standard -- 'etlhelper_spark/*.py') | sort -u)
 module_tests=$(for f in $touched_src; do
-                   ls tests/test_"$(basename "$f" .py)"*.py 2>/dev/null || true
+                   ls tests/test_"$(basename "$f" .py)"*.py 2>/dev/null ||
+                   ls tests/test_"$(basename "$(dirname "$f")")"*.py 2>/dev/null || true
                done | sort -u | grep -vxF -f <(printf '%s\n' "$touched") || true)
 if [ -n "$module_tests" ]; then
     echo "== preflight: running the tests of touched modules =="

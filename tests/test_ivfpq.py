@@ -782,3 +782,44 @@ def test_plain_layout_meta_is_refused_before_any_write(
         with pytest.raises(ValueError, match="plain-layout.*rebuild it"):
             call()
         assert tree() == before
+
+
+def test_meta_without_attr_cols_is_refused_before_any_write(
+    spark, vecs, versioned_index
+):
+    """A ``_meta`` sidecar without ``attr_cols`` comes from an earlier
+    version that kept the covering attributes only in the data files'
+    schema: append, compaction and erasure each raise the rebuild
+    error, and none writes first."""
+    import os
+
+    from etlhelper_spark.functions.ivfpq import compact_ivfpq_ingest
+    from etlhelper_spark.functions.util import (
+        read_sidecar_table,
+        write_sidecar_table,
+    )
+    from etlhelper_spark.operators.erasure import forget_from_ivfpq_index
+
+    meta_dir = os.path.join(versioned_index, "_meta")
+    meta = read_sidecar_table(meta_dir)
+    write_sidecar_table(meta_dir, meta.drop_columns(["attr_cols"]))
+
+    def tree():
+        return sorted(
+            (os.path.relpath(os.path.join(r, f), versioned_index),
+             os.stat(os.path.join(r, f)).st_mtime_ns)
+            for r, _ds, fs in os.walk(versioned_index)
+            for f in fs
+        )
+
+    before = tree()
+    calls = [
+        lambda: append_ivfpq_index(vecs.limit(5), versioned_index,
+                                   batch_id=3),
+        lambda: compact_ivfpq_ingest(spark, versioned_index, watermark=2),
+        lambda: forget_from_ivfpq_index(spark, versioned_index, [0, 1]),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="without attr_cols.*rebuild it"):
+            call()
+        assert tree() == before

@@ -249,3 +249,31 @@ def test_plain_index_has_no_attrs_and_adaptive_works_unfiltered(spark, vecs):
         assert got and got <= fx
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_fully_erased_covering_index_takes_appends(spark, vecs, tmp_path):
+    """A covering index whose compacted base lost every row to erasure
+    still takes appends: the attribute columns come from ``_meta``, not
+    from a data file that is no longer there. Attr-less rows are still
+    refused."""
+    from etlhelper_spark.operators.erasure import forget_from_ivfpq_index
+
+    d = str(tmp_path / "idx")
+    even = vecs.where(F.col("vec_id") % 2 == 0)
+    odd = vecs.where(F.col("vec_id") % 2 == 1)
+    build_ivfpq_index(
+        even, d, nlist=NLIST, m_sub=4, k_codes=8, attr_cols=["cat"]
+    )
+    compact_ivfpq_ingest(spark, d, watermark=0)
+    ids = [r["vec_id"] for r in even.select("vec_id").collect()]
+    assert forget_from_ivfpq_index(spark, d, ids) == len(ids)
+
+    assert append_ivfpq_index(odd, d, batch_id=1) == odd.count()
+    want = {(r["vec_id"], r["cat"]) for r in odd.collect()}
+    rows = read_ivfpq_rows(spark, d)
+    assert {(r["vec_id"], r["cat"]) for r in rows.collect()} == want
+    assert compact_ivfpq_ingest(spark, d, watermark=1) > 0
+    rows = read_ivfpq_rows(spark, d)
+    assert {(r["vec_id"], r["cat"]) for r in rows.collect()} == want
+    with pytest.raises(Exception, match="cat"):
+        append_ivfpq_index(odd.drop("cat"), d, batch_id=2)

@@ -522,3 +522,124 @@ def test_dedup_exact_partial_window_group_limit(spark):
     assert re.search(
         r"row_number\(\), 1, Partial", plan
     ), plan
+
+
+# -- query work dirs (plans/queries.py::_work_dir) ----------------------
+
+# the state and index lifecycle queries of perfbench's query_state
+# workload
+LIFECYCLE_QUERIES = [
+    "q170_ivm_retraction",
+    "q176_dedup_incremental",
+    "q234_ivfpq_append",
+    "q185_incremental_index",
+    "q264_forget_golden",
+]
+
+
+def _new_work_dirs(run):
+    from etlhelper_spark.plans import queries
+
+    before = set(queries._WORK_DIRS)
+    run()
+    return [d for d in queries._WORK_DIRS if d not in before]
+
+
+def test_clear_removes_query_work_dirs_but_keeps_cached_indexes(spark):
+    import os
+
+    from etlhelper_spark.plans import queries
+
+    idx = queries.ivf_index_cached(spark, SF)
+    (work,) = _new_work_dirs(
+        lambda: queries.QUERIES["q234_ivfpq_append"](spark, SF).collect()
+    )
+    assert os.path.basename(work).startswith("ehs_ivfpq_app_")
+    assert os.listdir(work)
+    queries.clear_stage_caches()
+    assert not os.path.exists(work)
+    assert os.listdir(idx) and queries.ivf_index_cached(spark, SF) == idx
+    assert idx in queries._WORK_DIRS
+
+
+def test_threads_running_queries_get_distinct_work_dirs(spark):
+    from concurrent.futures import ThreadPoolExecutor
+
+    from etlhelper_spark.plans import queries
+
+    q = queries.QUERIES["q176_dedup_incremental"]
+
+    def run(_):
+        return sorted(map(tuple, q(spark, SF).collect()))
+
+    def both():
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            a, b = pool.map(run, range(2))
+        assert a == b
+
+    dirs = _new_work_dirs(both)
+    assert len(dirs) == len(set(dirs)) == 2
+    queries.clear_stage_caches()
+
+
+def test_lifecycle_queries_leave_no_temp_dirs(tmp_path):
+    """A process that runs the lifecycle queries and exits leaves no
+    ``ehs_*`` entry in its temp dir: every query work dir lives under
+    one root that goes at exit."""
+    import os
+    import subprocess
+    import sys
+
+    script = (
+        "from etlhelper_spark import get_session\n"
+        "from etlhelper_spark.plans import QUERIES\n"
+        "spark = get_session('leak', master='local[2]', "
+        "shuffle_partitions=2)\n"
+        f"for name in {LIFECYCLE_QUERIES!r}:\n"
+        f"    QUERIES[name](spark, {SF!r}).collect()\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, env=env, check=True,
+        capture_output=True, timeout=600,
+    )
+    assert [e for e in os.listdir(tmp_path) if e.startswith("ehs_")] == []
+
+
+def test_work_dir_is_thread_safe(monkeypatch):
+    """More threads than cores, switching often, all making work dirs
+    from a fresh state: one root, and every dir distinct and
+    registered."""
+    import os
+    import sys
+    import threading
+
+    from etlhelper_spark.plans import queries
+
+    monkeypatch.setattr(queries, "_WORK_ROOT", None)
+    monkeypatch.setattr(queries, "_WORK_DIRS", [])
+    made: list[str] = []
+    start = threading.Barrier(16)
+
+    def make():
+        start.wait(timeout=60)
+        for _ in range(20):
+            made.append(queries._work_dir("ehs_t_"))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=make) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(set(made)) == len(made) == 320
+    assert sorted(queries._WORK_DIRS) == sorted(made)
+    assert {os.path.dirname(d) for d in made} == {queries._WORK_ROOT}
+    queries.clear_stage_caches()
+    assert os.listdir(queries._WORK_ROOT) == []

@@ -5,8 +5,10 @@ etlhelper_spark/state/store.py, which sits on them — so the
 object-storage claim holds on every path. This AST gate fails on a
 local-only call — ``glob.*``, ``os.rename``, ``os.listdir``,
 ``os.walk``, ``os.path.exists``/``isdir``, builtin ``open``,
-``shutil.rmtree`` — anywhere in the package except the query bodies
-of plans/queries.py. Those calls return nothing (or silently do
+``shutil.rmtree`` — anywhere in the package, the query bodies of
+plans/queries.py included, under whatever name the module imported
+them (``import shutil as _s``, ``from glob import glob``,
+``__import__("glob")``). Those calls return nothing (or silently do
 nothing) on a ``file://``, ``s3://`` or ``gs://`` URI.
 
 A second gate keeps every rewrite-store version on the one commit
@@ -58,9 +60,6 @@ EXCLUDED: dict[str, str] = {
     ),
 }
 
-# query bodies, swept with the split of plans/queries.py
-UNGATED_MODULES = {"plans/queries.py"}
-
 BANNED_ATTRS = {
     ("os", "rename"),
     ("os", "listdir"),
@@ -91,26 +90,60 @@ def _calls(tree: ast.AST, skip: set[str]):
         yield from _calls(node, skip)
 
 
-def _violations(path: str) -> list[str]:
-    with open(path) as f:
-        tree = ast.parse(f.read())
+def _aliases(tree: ast.AST) -> dict[str, str]:
+    """Each name the module's imports bind, mapped to the dotted name
+    it stands for: ``import shutil as _s`` binds ``_s`` to ``shutil``,
+    ``from os import path as p`` binds ``p`` to ``os.path``."""
+    out = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname:
+                    out[a.asname] = a.name
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            for a in node.names:
+                out[a.asname or a.name] = f"{node.module}.{a.name}"
+    return out
+
+
+def _dotted(node: ast.AST, aliases: dict[str, str]) -> str:
+    """The dotted name *node* refers to, import aliases resolved;
+    ``__import__("glob")`` is ``glob``, any other expression ``?``."""
+    if isinstance(node, ast.Name):
+        return aliases.get(node.id, node.id)
+    if isinstance(node, ast.Attribute):
+        return f"{_dotted(node.value, aliases)}.{node.attr}"
+    if (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "__import__"
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+    ):
+        return str(node.args[0].value)
+    return "?"
+
+
+def _source_violations(source: str, label: str, skip=()) -> list[str]:
+    tree = ast.parse(source)
+    aliases = _aliases(tree)
     out = []
-    for node in _calls(tree, _excluded_functions(path)):
+    for node in _calls(tree, set(skip)):
         fn = node.func
         if isinstance(fn, ast.Name) and fn.id == "open":
-            out.append(f"{path}:{node.lineno}: open()")
-        elif isinstance(fn, ast.Attribute):
-            base = fn.value
-            name = (
-                base.id
-                if isinstance(base, ast.Name)
-                else base.attr
-                if isinstance(base, ast.Attribute)
-                else None
-            )
-            if name in ("glob", "_glob") or (name, fn.attr) in BANNED_ATTRS:
-                out.append(f"{path}:{node.lineno}: {name}.{fn.attr}()")
+            out.append(f"{label}:{node.lineno}: open()")
+            continue
+        parts = _dotted(fn, aliases).split(".")
+        if len(parts) > 1 and (
+            parts[-2] == "glob" or tuple(parts[-2:]) in BANNED_ATTRS
+        ):
+            out.append(f"{label}:{node.lineno}: {'.'.join(parts)}()")
     return out
+
+
+def _violations(path: str) -> list[str]:
+    with open(path) as f:
+        return _source_violations(f.read(), path, _excluded_functions(path))
 
 
 def test_state_modules_do_io_through_the_store():
@@ -149,17 +182,47 @@ def test_gate_covers_every_module_doing_path_io():
 
 
 def test_every_module_does_io_through_the_fs_layer():
-    """The package-wide gate: every module of etlhelper_spark/ (not
-    only the state modules) except UNGATED_MODULES."""
+    """The package-wide gate: every module of etlhelper_spark/, not
+    only the state modules."""
     bad = []
     for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
-        if os.path.relpath(path, PKG) not in UNGATED_MODULES:
-            bad += _violations(path)
+        bad += _violations(path)
     assert not bad, (
         "local-only path I/O — use the pyarrow.fs helpers of "
         "etlhelper_spark/functions/util.py (parquet_fs, list_fileinfos, "
         "parquet_data_files) instead:\n" + "\n".join(bad)
     )
+
+
+def test_io_gate_resolves_import_aliases():
+    """The gate is not fooled by a renamed import: an aliased module,
+    a name imported from the module, ``__import__`` and ``os.path``
+    under another name all trip it, as does ``path.isdir`` on any
+    expression, and the fs-layer calls do not."""
+    src = (
+        "import glob\n"
+        "import glob as _g\n"
+        "import shutil as _shutil\n"
+        "from glob import glob as find\n"
+        "from os import path as osp\n"
+        "from shutil import rmtree\n"
+        "def body(d):\n"
+        "    glob.glob(d)\n"
+        "    _g.glob(d)\n"
+        "    _shutil.rmtree(d)\n"
+        "    find(d)\n"
+        "    osp.exists(d)\n"
+        "    dirs[0].path.isdir(d)\n"
+        "    rmtree(d)\n"
+        "    __import__('glob').iglob(d)\n"
+        "    open(d)\n"
+        "    list_fileinfos(d)\n"
+        "    store.remove(d)\n"
+        "    osp.join(d, 'x')\n"
+    )
+    assert [
+        int(v.split(":")[1]) for v in _source_violations(src, "m")
+    ] == list(range(8, 17))
 
 
 # -- rewrite-store versions are written only by store.commit_version --

@@ -50,3 +50,23 @@ def test_tws_equals_batch_aggregate(spark):
     got = sorted(tuple(r) for r in out.collect())
     want = sorted(tuple(r) for r in batch.collect())
     assert got == want
+
+
+def test_events_stream_reuses_one_link_dir(spark, tmp_path, monkeypatch):
+    """read_events_stream without a stream_dir links the single events
+    file from one dir per events file, reused across calls, so repeated
+    calls leak nothing and a checkpointed stream keeps its path."""
+    import os
+
+    from etlhelper_spark.streaming.windows import read_events_stream
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for _ in range(3):
+        read_events_stream(spark, SF_DIR)
+    (link_dir,) = os.listdir(tmp_path)
+    assert link_dir.startswith("ehs_stream_")
+    assert os.listdir(tmp_path / link_dir) == ["events.parquet"]
+    assert os.path.samefile(
+        tmp_path / link_dir / "events.parquet",
+        os.path.join(SF_DIR, "events.parquet"),
+    )
