@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..state import store
+from .clustering import _rebalance_rounds, _split_hot_lists
 from .similarity import (
     collect_pivot_rows,
     cosine_similarity,
@@ -457,19 +458,16 @@ def rebalance_ivf_index(
     balance degrades as the data distribution drifts; a hot list makes
     every probe that touches it scan-heavy).
 
-    Per hot list: its members are read back through partition pruning
-    (ONLY the hot directories are ever scanned — cold lists are not
-    read, not moved, not rewritten), split with ceil(size/cap)-way
-    spherical k-means (clustering.py's shuffle-free literal-centroid
-    assignment; deterministic lowest-id seeds), written out as fresh
-    ``list_id=`` partitions under ids above the current maximum, and
-    the split list's pivot is replaced by the 6dp-rounded sub-cluster
-    centroids. Probes and appends pick up the new pivot set on their
-    next ``_pivots`` read — assignment semantics are unchanged
-    (cosine argmax over whatever pivots exist). k-means splits are not
-    perfectly balanced, so a sub-list can still exceed the cap; passes
-    repeat (each re-reads only the still-hot directories) until no
-    splittable list is hot or *max_rounds* is reached.
+    Each pass reads the hot lists' members back through partition
+    pruning (ONLY the hot directories are ever scanned — cold lists
+    are not read, not moved, not rewritten), splits them with
+    clustering._split_hot_lists (the suite's one hot-list splitter),
+    writes the moved rows as fresh ``list_id=`` partitions, rewrites
+    ``_pivots`` and removes the split lists' directories. Probes and
+    appends pick up the new pivot set on their next ``_pivots`` read —
+    assignment semantics are unchanged (cosine argmax over whatever
+    pivots exist). Passes repeat until no splittable list is hot or
+    *max_rounds* is reached.
 
     Progress guarantee: with >= 2 distinct seed vectors each seed's own
     vector stays with its seed (self-cosine = 1), so every sub-list is
@@ -485,13 +483,10 @@ def rebalance_ivf_index(
     results may transiently contain duplicate neighbors, never missing
     ones. Re-running the rebalance converges. Returns the total number
     of lists split across passes."""
-    total = 0
-    for _ in range(max_rounds):
-        n = _rebalance_pass(spark, path, max_list_size, iterations)
-        total += n
-        if n == 0:
-            break
-    return total
+    return _rebalance_rounds(
+        lambda: _rebalance_pass(spark, path, max_list_size, iterations),
+        max_rounds,
+    )
 
 
 def _rebalance_pass(
@@ -500,16 +495,9 @@ def _rebalance_pass(
     max_list_size: int,
     iterations: int,
 ) -> int:
-    """One splitting pass over every hot list JOINTLY: the per-list
-    spherical k-means rounds share one scan — each list's assignment
-    is a literal-centroid fold selected by a CASE on list_id, so a
-    pass costs O(rounds) jobs total instead of O(rounds x hot lists)
-    (the serial per-list form spent ~6 jobs per hot list on fixed
-    Spark overhead)."""
-    import math
-
-    from .similarity import _round6_py
-
+    """One splitting pass: the hot lists' members come from ONE pruned
+    index scan and their moved rows carry ``vec`` and any covering
+    attributes."""
     # per-list sizes from parquet footers driver-side (util.
     # parquet_partition_counts): the writes this pass follows are
     # complete, so the footers ARE the table — the groupBy(list_id)
@@ -523,114 +511,24 @@ def _rebalance_pass(
     if not hot:
         return 0
     pivots_path = os.path.join(path, "_pivots")
-    pivot_rows = load_pivot_rows(pivots_path)
-    next_id = max(pid for pid, _ in pivot_rows) + 1
-    keep_pivots = {pid: vec for pid, vec in pivot_rows}
     # ONE pruned scan feeds every hot list's k-means (cold lists are
-    # never read); pinned so the Lloyd rounds and the rewrite reuse it
+    # never read); pinned so the Lloyd rounds and the rewrite reuse it.
+    # Every index column rides along, so the moved rows of a covering
+    # index keep their attributes
     members = (
         read_parquet_state(spark, path)
         .where(in_values("list_id", sorted(hot)))
-        .select("list_id", "vec_id", "vec")
         .localCheckpoint()
     )
-    k_split = {
-        L: max(2, int(math.ceil(n / max_list_size))) for L, n in hot.items()
-    }
-    w = Window.partitionBy("list_id").orderBy(F.asc("vec_id"))
-    seed_rows = (
-        members.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= max(k_split.values()))
-        .collect()
+    moved, pivots, split = _split_hot_lists(
+        members, hot, max_list_size, iterations, load_pivot_rows(pivots_path)
     )
-    books: dict[int, list] = {L: [] for L in hot}
-    for r in sorted(seed_rows, key=lambda r: (r["list_id"], r["rn"])):
-        L = int(r["list_id"])
-        if len(books[L]) < k_split[L]:
-            books[L].append(
-                (len(books[L]), [_round6_py(float(x)) for x in r["vec"]])
-            )
-
-    def assign_col():
-        # per-list literal argmax behind a CASE: one projection, all
-        # hot lists, zero shuffle (clustering.py's assignment, grouped)
-        expr = None
-        for L in sorted(books):
-            c = nearest_pivot("`vec`", books[L])["pid"]
-            cond = F.col("list_id") == L
-            expr = F.when(cond, c) if expr is None else expr.when(cond, c)
-        return expr
-
-    def recompute(frame):
-        return (
-            frame.select(
-                "list_id", "sub", F.posexplode("vec").alias("pos", "val")
-            )
-            .groupBy("list_id", "sub", "pos")
-            .agg(
-                F.round(F.avg("val").cast("decimal(30,10)"), 6)
-                .cast("double")
-                .alias("cv")
-            )
-            .groupBy("list_id", "sub")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                    lambda st: st["cv"],
-                ).alias("centroid")
-            )
-            .collect()
-        )
-
-    for _ in range(iterations - 1):
-        rows = recompute(members.withColumn("sub", assign_col()))
-        books = {L: [] for L in hot}
-        for r in sorted(rows, key=lambda r: (r["list_id"], r["sub"])):
-            books[int(r["list_id"])].append(
-                (int(r["sub"]), [float(x) for x in r["centroid"]])
-            )
-    final = members.withColumn("sub", assign_col()).localCheckpoint()
-    # post-assignment means become the new pivots (the list's true
-    # representative); also reveals which (list, sub) cells are present
-    cents = recompute(final)
-    present: dict[int, list] = {}
-    for r in cents:
-        present.setdefault(int(r["list_id"]), []).append(
-            (int(r["sub"]), [float(x) for x in r["centroid"]])
-        )
-    id_map: dict[tuple[int, int], int] = {}
-    doomed_dirs = []
-    for L in sorted(hot):
-        cells = sorted(present.get(L, []))
-        if len(cells) < 2:
-            continue  # degenerate (identical vectors): cannot split
-        for s, cent in cells:
-            id_map[(L, s)] = next_id
-            keep_pivots[next_id] = cent
-            next_id += 1
-        del keep_pivots[L]
-        doomed_dirs.append(os.path.join(path, f"list_id={L}"))
-    if not id_map:
+    if not split:
         return 0
-    mapping = F.create_map(
-        *[
-            F.lit(x)
-            for (L, s), nid in id_map.items()
-            for x in (f"{L}_{s}", nid)
-        ]
-    )
-    mkey = F.concat_ws("_", F.col("list_id"), F.col("sub"))
-    (
-        final.withColumn("new_list", mapping[mkey])
-        .where(F.col("new_list").isNotNull())  # degenerate lists stay
-        .select("vec_id", "vec", F.col("new_list").alias("list_id"))
-        .write.partitionBy("list_id")
-        .mode("append")
-        .parquet(path)
-    )
+    moved.write.partitionBy("list_id").mode("append").parquet(path)
     # driver-known pivot set: persist driver-side (one fewer Spark
     # write job per rebalance pass — util.write_pivot_rows)
-    write_pivot_rows(pivots_path, keep_pivots.items())
-    for d in doomed_dirs:
-        store.remove(d)
-    return len(doomed_dirs)
+    write_pivot_rows(pivots_path, pivots)
+    for L in split:
+        store.remove(os.path.join(path, f"list_id={L}"))
+    return len(split)

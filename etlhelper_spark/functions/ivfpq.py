@@ -67,9 +67,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .clustering import _rebalance_rounds, _split_hot_lists
 from .pq import (
     _adc_sim_col,
     _codebook_table,
+    _codes_col,
     load_pq_codebooks,
     pq_train,
 )
@@ -102,33 +104,15 @@ def _encode_cols(
     books: dict, pivot_rows: list, vec_col: str, arrow: bool = False
 ):
     """(list_id, codes) columns for one corpus row — the coarse argmax
-    and all m subspace argmaxes in ONE projection, zero shuffle, zero
-    expansion (clustering.py's literal-fold discipline applied to both
-    halves at once). With *arrow*, the m subspace argmaxes route
-    through the Arrow-batched numpy kernel (the deployed parameter
-    range k=64+ codes x m=8+ subspaces makes the literal fold
-    interpreted-op-bound — pq._assign's measurement); the coarse
-    argmax stays literal (nlist is small by design)."""
-    sd = len(books[0][0][1])
-    if arrow:
-        from .similarity import nearest_pivot_batched
-
-        code_cols = [
-            nearest_pivot_batched(books[j])(
-                F.slice(vec_col, j * sd + 1, sd)
-            )["pid"].cast("int")
-            for j in sorted(books)
-        ]
-    else:
-        code_cols = [
-            nearest_pivot(
-                f"slice(`{vec_col}`, {j * sd + 1}, {sd})", books[j]
-            )["pid"].cast("int")
-            for j in sorted(books)
-        ]
+    and all m subspace argmaxes (pq._subspace_argmax) in ONE
+    projection, zero shuffle, zero expansion. *arrow* routes the m
+    subspace argmaxes through the Arrow-batched numpy kernel (the
+    deployed parameter range k=64+ codes x m=8+ subspaces makes the
+    literal fold interpreted-op-bound); the coarse argmax stays
+    literal (nlist is small by design)."""
     return [
         nearest_pivot(f"`{vec_col}`", pivot_rows)["pid"].alias("list_id"),
-        F.array(*code_cols).alias("codes"),
+        _codes_col(vec_col, books, "cosine", arrow),
     ]
 
 
@@ -177,7 +161,6 @@ def _encode_frame(
             *_encode_cols(books, pivot_rows, vec_col, arrow=arrow),
             *extra,
         )
-    sd = len(books[0][0][1])
     assigned = corpus.select(
         F.col(corpus_id).alias("vec_id"),
         F.col(vec_col).alias("__v"),
@@ -199,26 +182,11 @@ def _encode_frame(
     # assignment pairs small residuals with large centroids and the
     # ADC scores collapse (measured: recall WORSE than raw mode) —
     # the FAISS-standard metric for exactly this reason
-    if arrow:
-        from .similarity import nearest_pivot_l2_batched
-
-        code_cols = [
-            nearest_pivot_l2_batched(books[j])(
-                F.slice("__res", j * sd + 1, sd)
-            )["pid"].cast("int")
-            for j in sorted(books)
-        ]
-    else:
-        from .similarity import nearest_pivot_l2
-
-        code_cols = [
-            nearest_pivot_l2(
-                f"slice(__res, {j * sd + 1}, {sd})", books[j]
-            )["pid"].cast("int")
-            for j in sorted(books)
-        ]
     return with_res.select(
-        "vec_id", "list_id", F.array(*code_cols).alias("codes"), *extra_cols
+        "vec_id",
+        "list_id",
+        _codes_col("__res", books, "l2", arrow),
+        *extra_cols,
     )
 
 
@@ -581,17 +549,12 @@ def append_ivfpq_index(
     # checkpoint job, no re-scan of the batch. The batch's own
     # (list_id, ingest_batch=batch_id) cells ARE the batch (exact even
     # under a replay overwrite).
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        enc.select(
-            "*", F.lit(int(batch_id)).alias("ingest_batch")
-        ).write.partitionBy("list_id", "ingest_batch").mode(
-            "overwrite"
-        ).parquet(path)
-    finally:
-        spark.conf.set(mode_key, old)
+    # dynamic overwrite as a per-write option, never the session conf:
+    # a set-and-restore of the session-wide key races with any other
+    # thread writing through the same session
+    enc.select("*", F.lit(int(batch_id)).alias("ingest_batch")).write.option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("list_id", "ingest_batch").mode("overwrite").parquet(path)
     return sum(
         count_parquet_rows(d)
         for b, d in store.ingest_cells(path)
@@ -614,15 +577,12 @@ def rebalance_ivfpq_index(
     stores no float payload, so the k-means split reads the hot
     lists' vectors back from *row_store* by vec_id (a partition-pruned
     id fetch on any vec_id-partitioned store; cold lists are never
-    read, never moved, never rewritten). Each hot list splits with
-    ceil(size/cap)-way spherical k-means (ann_index's
-    rebalance discipline: deterministic lowest-id seeds, one shared
-    scan per Lloyd round behind a CASE on list_id), its rows land
-    under fresh list ids above the current maximum, and the split
-    pivot is replaced by the 6dp-rounded sub-centroids. RAW-mode codes
-    are list-independent and move untouched; RESIDUAL-mode codes
-    re-encode against the new pivots (frozen codebooks — the append
-    contract's artifacts never change here).
+    read, never moved, never rewritten). The split itself is
+    clustering._split_hot_lists, the splitter rebalance_ivf_index
+    runs. RAW-mode codes are list-independent and move untouched;
+    RESIDUAL-mode codes re-encode against the new pivots with the
+    frozen codebooks on the build's encode path (the ``_meta`` arrow
+    decision — the append contract's artifacts never change here).
 
     The rebalance requires a compacted base covering every delivered
     batch (compact_ivfpq_ingest first — the operational order a
@@ -649,9 +609,8 @@ def rebalance_ivfpq_index(
             f"{path} is OPQ-rotated; the rebalance pivot recompute "
             "runs in raw row-store space — rebuild instead"
         )
-    total = 0
-    for _ in range(max_rounds):
-        n = _ivfpq_rebalance_pass(
+    return _rebalance_rounds(
+        lambda: _ivfpq_rebalance_pass(
             spark,
             path,
             row_store,
@@ -659,11 +618,9 @@ def rebalance_ivfpq_index(
             iterations,
             corpus_id,
             vec_col,
-        )
-        total += n
-        if n == 0:
-            break
-    return total
+        ),
+        max_rounds,
+    )
 
 
 def _ivfpq_rebalance_pass(
@@ -675,12 +632,10 @@ def _ivfpq_rebalance_pass(
     corpus_id: str,
     vec_col: str,
 ) -> int:
-    import math
-
-    from .similarity import _round6_py
-
+    """One splitting pass: the hot lists' members are their code rows
+    joined to *row_store*'s vectors, moved rows carry ``codes`` and land
+    in the compacted base."""
     meta = _read_ivfpq_meta(spark, path)
-    residual = bool(meta["residual"])
     versions = store.ibase_versions(path)
     if not versions:
         raise ValueError(
@@ -705,148 +660,57 @@ def _ivfpq_rebalance_pass(
     }
     if not hot:
         return 0
-    rows = read_ivfpq_rows(spark, path)
     pivots_path = os.path.join(path, "_pivots")
     pivot_rows = load_pivot_rows(pivots_path)
-    next_id = max(pid for pid, _ in pivot_rows) + 1
-    keep_pivots = {pid: vec for pid, vec in pivot_rows}
     # the row-store fetch: hot code rows keyed by vec_id pick up their
     # float vectors — the ONLY contact with floats in this module
     row_vecs = row_store.select(
         F.col(corpus_id).alias("vec_id"), F.col(vec_col).alias("vec")
     )
     members = (
-        rows.where(in_values("list_id", sorted(hot)))
+        read_ivfpq_rows(spark, path)
+        .where(in_values("list_id", sorted(hot)))
         .select("list_id", "vec_id", "codes")
         .join(row_vecs, "vec_id")
         .localCheckpoint()
     )
-    k_split = {
-        L: max(2, int(math.ceil(n / max_list_size))) for L, n in hot.items()
-    }
-    w = Window.partitionBy("list_id").orderBy(F.asc("vec_id"))
-    seed_rows = (
-        members.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= max(k_split.values()))
-        .collect()
+    moved, pivots, split = _split_hot_lists(
+        members, hot, max_list_size, iterations, pivot_rows
     )
-    books: dict[int, list] = {L: [] for L in hot}
-    for r in sorted(seed_rows, key=lambda r: (r["list_id"], r["rn"])):
-        L = int(r["list_id"])
-        if len(books[L]) < k_split[L]:
-            books[L].append(
-                (len(books[L]), [_round6_py(float(x)) for x in r["vec"]])
-            )
-
-    def assign_col():
-        expr = None
-        for L in sorted(books):
-            c = nearest_pivot("`vec`", books[L])["pid"]
-            cond = F.col("list_id") == L
-            expr = F.when(cond, c) if expr is None else expr.when(cond, c)
-        return expr
-
-    def recompute(frame):
-        return (
-            frame.select(
-                "list_id", "sub", F.posexplode("vec").alias("pos", "val")
-            )
-            .groupBy("list_id", "sub", "pos")
-            .agg(
-                F.round(F.avg("val").cast("decimal(30,10)"), 6)
-                .cast("double")
-                .alias("cv")
-            )
-            .groupBy("list_id", "sub")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                    lambda st: st["cv"],
-                ).alias("centroid")
-            )
-            .collect()
-        )
-
-    for _ in range(iterations - 1):
-        crows = recompute(members.withColumn("sub", assign_col()))
-        books = {L: [] for L in hot}
-        for r in sorted(crows, key=lambda r: (r["list_id"], r["sub"])):
-            books[int(r["list_id"])].append(
-                (int(r["sub"]), [float(x) for x in r["centroid"]])
-            )
-    final = members.withColumn("sub", assign_col()).localCheckpoint()
-    cents = recompute(final)
-    present: dict[int, list] = {}
-    for r in cents:
-        present.setdefault(int(r["list_id"]), []).append(
-            (int(r["sub"]), [float(x) for x in r["centroid"]])
-        )
-    id_map: dict[tuple[int, int], int] = {}
-    doomed: list[int] = []
-    for L in sorted(hot):
-        cells = sorted(present.get(L, []))
-        if len(cells) < 2:
-            continue  # degenerate (identical vectors): cannot split
-        for s, cent in cells:
-            id_map[(L, s)] = next_id
-            keep_pivots[next_id] = cent
-            next_id += 1
-        del keep_pivots[L]
-        doomed.append(L)
-    if not id_map:
+    if not split:
         return 0
-    mapping = F.create_map(
-        *[
-            F.lit(x)
-            for (L, s), nid in id_map.items()
-            for x in (f"{L}_{s}", nid)
-        ]
-    )
-    mkey = F.concat_ws("_", F.col("list_id"), F.col("sub"))
-    moved = final.withColumn("new_list", mapping[mkey]).where(
-        F.col("new_list").isNotNull()
-    )
-    if residual:
+    if meta["residual"]:
         # residual codes are pivot-relative: re-encode moved rows
-        # against their NEW pivot (frozen codebooks, L2 assignment —
-        # build/append's exact kernel)
-        from .similarity import nearest_pivot_l2
-
-        pq_books = load_pq_codebooks(spark, path)
-        sd = len(pq_books[0][0][1])
-        new_pivot_rows = sorted(
-            (nid, keep_pivots[nid]) for nid in id_map.values()
-        )
+        # against their NEW pivot with the frozen codebooks on the
+        # build's own encode path (the _meta arrow decision)
+        old_ids = {pid for pid, _ in pivot_rows}
         res = F.zip_with(
             "vec",
-            F.element_at(_pivot_map_col(new_pivot_rows), F.col("new_list")),
+            F.element_at(
+                _pivot_map_col([p for p in pivots if p[0] not in old_ids]),
+                F.col("list_id"),
+            ),
             lambda a, b: a.cast("double") - b,
         )
         moved = moved.withColumn("__res", res).select(
             "vec_id",
-            F.col("new_list").alias("list_id"),
-            F.array(
-                *[
-                    nearest_pivot_l2(
-                        f"slice(__res, {j * sd + 1}, {sd})", pq_books[j]
-                    )["pid"].cast("int")
-                    for j in sorted(pq_books)
-                ]
-            ).alias("codes"),
-        )
-    else:
-        moved = moved.select(
-            "vec_id", F.col("new_list").alias("list_id"), "codes"
+            "list_id",
+            _codes_col(
+                "__res",
+                load_pq_codebooks(spark, path),
+                "l2",
+                bool(meta["arrow"]),
+            ),
         )
     moved.select("vec_id", "codes", "list_id").write.partitionBy(
         "list_id"
     ).mode("append").parquet(base)
     # driver-known pivot set: persist driver-side (one fewer Spark
     # write job per rebalance pass — util.write_pivot_rows)
-    write_pivot_rows(pivots_path, keep_pivots.items())
-    for L in doomed:
+    write_pivot_rows(pivots_path, pivots)
+    for L in split:
         store.remove(os.path.join(base, f"list_id={L}"))
-    return len(doomed)
+    return len(split)
 
 
 def ivfpq_ingest_watermark(path: str) -> int | None:

@@ -14,14 +14,17 @@ state):
   ONE corpus scan per Lloyd round — the per-subspace assignment is m
   independent literal-pivot folds inside a single projection, so the
   corpus is never scanned per subspace and never shuffles for
-  assignment. Centroid recompute is one combinable aggregate over
-  (sub, code, pos) for every subspace at once; the m x k x sub_dim
-  result collects to the driver (the bounded-driver contract
-  collect_pivot_rows already makes). Components round through
-  DECIMAL(30,10) to 6dp per round — the cross-engine contract that
-  makes training hash-verifiable (q141's discipline).
+  assignment. Centroid recompute is clustering.py's Lloyd update
+  (_centroid_rows) over (sub, code) groups for every subspace at
+  once; the m x k x sub_dim result collects to the driver (the
+  bounded-driver contract collect_pivot_rows already makes).
+  Components round through DECIMAL(30,10) to 6dp per round — the
+  cross-engine contract that makes training hash-verifiable (q141's
+  discipline).
 - ENCODE: one scan, m literal folds, output (id, array<int> codes).
   The corpus's float payload is read once and never moves again.
+  Every per-subspace code choice — training rounds, encoding, and
+  the IVFPQ encode and rebalance re-encode — is _subspace_argmax.
 - ADC SEARCH: per query, an m x k table of subspace dot products and
   a k-entry norm table per subspace become LITERALS (queries are the
   bounded side, like query_ivf_index's probe list); every encoded row
@@ -46,7 +49,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _dlit, nearest_pivot
+from .clustering import _centroid_rows, _round6
+from .similarity import _dlit
 from .util import literal_frame
 
 __all__ = [
@@ -59,10 +63,6 @@ __all__ = [
     "pq_train",
     "read_pq_codes",
 ]
-
-
-def _round6(col):
-    return F.round(col.cast("decimal(30,10)"), 6).cast("double")
 
 
 def _sub_dim(df: DataFrame, vec_col: str, m_sub: int) -> int:
@@ -146,105 +146,91 @@ def pq_train(
         for j in range(m_sub)
     }
     for _ in range(iterations - 1):
-        assigned = _assign(vecs, books, sd, arrow=arrow, metric=metric)
-        # every subspace's members in ONE combinable aggregate:
-        # (sub, code, pos) -> mean component, rounded per the contract
+        assigned = _assign(vecs, books, arrow=arrow, metric=metric)
+        # every subspace's members in ONE centroid update over
+        # (sub, code) groups of the subvectors
         trips = assigned.select(
             F.explode(
                 F.array(
                     *[
                         F.struct(
                             F.lit(j).alias("sub"),
-                            F.col(f"__b{j}.pid").alias("code"),
+                            F.col(f"__b{j}").alias("code"),
                             F.slice("vec", j * sd + 1, sd).alias("sv"),
                         )
                         for j in range(len(books))
                     ]
                 )
             ).alias("t")
-        ).select("t.sub", "t.code", F.posexplode("t.sv").alias("pos", "val"))
-        rows = (
-            trips.groupBy("sub", "code", "pos")
-            .agg(_round6(F.avg("val")).alias("cv"))
-            .groupBy("sub", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                    lambda s: s["cv"],
-                ).alias("centroid")
-            )
-            .collect()
         )
         books = {j: [] for j in range(m_sub)}
-        for r in sorted(rows, key=lambda r: (r["sub"], r["code"])):
-            books[r["sub"]].append(
-                (int(r["code"]), [float(x) for x in r["centroid"]])
-            )
+        for (j, code), centroid in _centroid_rows(
+            trips, ["t.sub", "t.code"], "t.sv"
+        ):
+            books[j].append((code, centroid))
     return books
+
+
+def _subspace_argmax(
+    vec_col: str, books: dict, metric: str = "cosine", arrow: bool = False
+) -> list:
+    """The m per-subspace nearest-code columns (code ids, long) of
+    *vec_col* against *books* — the one place a subvector picks its
+    code. Literal folds by default (zero shuffle, zero expansion), or
+    with *arrow* the Arrow-batched numpy argmax (nearest_pivot_batched's
+    rationale: the literal fold does k x sub_dim interpreted
+    higher-order ops per row per subspace, so at k=64 x m=8 it is ~4k
+    interpreted ops/row — measured 58s/Lloyd round at 200k vectors vs
+    ~3s batched; one numpy matmul per Arrow batch per subspace scores
+    every (row, code) pair at once). Tie-break parity modulo one ulp —
+    oracle-pinned PQ queries keep the literal path. *metric* as in
+    pq_train — ``l2`` swaps in the Euclidean kernels, same shape."""
+    from . import similarity as sim
+
+    sd = len(next(iter(books.values()))[0][1])
+    if arrow:
+        kernel = (
+            sim.nearest_pivot_l2_batched
+            if metric == "l2"
+            else sim.nearest_pivot_batched
+        )
+        return [
+            kernel(books[j])(F.slice(vec_col, j * sd + 1, sd))["pid"]
+            for j in sorted(books)
+        ]
+    kernel = sim.nearest_pivot_l2 if metric == "l2" else sim.nearest_pivot
+    return [
+        kernel(f"slice(`{vec_col}`, {j * sd + 1}, {sd})", books[j])["pid"]
+        for j in sorted(books)
+    ]
+
+
+def _codes_col(
+    vec_col: str, books: dict, metric: str = "cosine", arrow: bool = False
+):
+    """The ``codes`` array<int> column of *vec_col* (_subspace_argmax's
+    codes in subspace order)."""
+    return F.array(
+        *[c.cast("int") for c in _subspace_argmax(vec_col, books, metric, arrow)]
+    ).alias("codes")
 
 
 def _assign(
     vecs: DataFrame,
     books: dict,
-    sd: int,
     arrow: bool = False,
     metric: str = "cosine",
 ) -> DataFrame:
-    """One projection computing every subspace's nearest code — m
-    literal folds (zero shuffle, zero expansion), or with *arrow* the
-    Arrow-batched numpy argmax (nearest_pivot_batched's rationale: the
-    literal fold does k x sub_dim interpreted higher-order ops per row
-    per subspace, so at k=64 x m=8 it is ~4k interpreted ops/row —
-    measured 58s/Lloyd round at 200k vectors vs ~3s batched; one numpy
-    matmul per Arrow batch per subspace scores every (row, code) pair
-    at once). Tie-break parity modulo one ulp — oracle-pinned PQ
-    queries keep the literal path (pq_train's default). *metric* as in
-    pq_train — ``l2`` swaps in the Euclidean kernels, same shape."""
-    if metric == "l2":
-        from .similarity import nearest_pivot_l2, nearest_pivot_l2_batched
-
-        if not arrow:
-            return vecs.select(
-                "id",
-                "vec",
-                *[
-                    nearest_pivot_l2(
-                        f"slice(vec, {j * sd + 1}, {sd})", books[j]
-                    ).alias(f"__b{j}")
-                    for j in sorted(books)
-                ],
-            )
-        return vecs.select(
-            "id",
-            "vec",
-            *[
-                nearest_pivot_l2_batched(books[j])(
-                    F.slice("vec", j * sd + 1, sd)
-                ).alias(f"__b{j}")
-                for j in sorted(books)
-            ],
-        )
-    if not arrow:
-        return vecs.select(
-            "id",
-            "vec",
-            *[
-                nearest_pivot(
-                    f"slice(vec, {j * sd + 1}, {sd})", books[j]
-                ).alias(f"__b{j}")
-                for j in sorted(books)
-            ],
-        )
-    from .similarity import nearest_pivot_batched
-
+    """(id, vec, __b0..__b{m-1}): every subspace's nearest code in one
+    projection (_subspace_argmax)."""
     return vecs.select(
         "id",
         "vec",
         *[
-            nearest_pivot_batched(books[j])(
-                F.slice("vec", j * sd + 1, sd)
-            ).alias(f"__b{j}")
-            for j in sorted(books)
+            c.alias(f"__b{j}")
+            for j, c in zip(
+                sorted(books), _subspace_argmax("vec", books, metric, arrow)
+            )
         ],
     )
 
@@ -298,18 +284,9 @@ def pq_encode(
     literal folds (or the Arrow-batched argmax with *arrow* — the
     large-codebook path) — after this the float payload never moves
     again."""
-    sd = _sub_dim(df, vec_col, len(books))
+    _sub_dim(df, vec_col, len(books))  # raises on a dim m cannot split
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    assigned = _assign(vecs, books, sd, arrow=arrow)
-    return assigned.select(
-        "id",
-        F.array(
-            *[
-                F.col(f"__b{j}.pid").cast("int")
-                for j in sorted(books)
-            ]
-        ).alias("codes"),
-    )
+    return vecs.select("id", _codes_col("vec", books, arrow=arrow))
 
 
 def _adc_query_frame(

@@ -329,16 +329,11 @@ def _partition_local_erase(
     survivors = {
         tuple(r) for r in kept.select(*part_cols).distinct().collect()
     }
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        if survivors:
-            kept.write.partitionBy(*part_cols).mode("overwrite").parquet(
-                data_dir
-            )
-    finally:
-        spark.conf.set(mode_key, old)
+    if survivors:
+        # per-write option, not the session conf (no cross-thread race)
+        kept.write.option("partitionOverwriteMode", "dynamic").partitionBy(
+            *part_cols
+        ).mode("overwrite").parquet(data_dir)
     for vals in affected:
         if tuple(vals) in survivors:
             continue

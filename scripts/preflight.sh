@@ -6,10 +6,11 @@
 # tests), (2) the filesystem-layer I/O gate, (3) the check of the
 # Spark-internal JVM members the driver-side JDBC path calls, (4)
 # the full test files touched in the index / working tree, and (5) the
-# test files of each touched library module (``etlhelper_spark/**/
-# <name>.py`` runs ``tests/test_<name>*.py``, or ``tests/test_<dir>*.py``
-# of its parent dir when it has none), so the code a commit modifies
-# is actually executed before it ships.
+# test files of each touched library module and of the library modules
+# that import it (``etlhelper_spark/**/<name>.py`` runs
+# ``tests/test_<name>*.py``, or ``tests/test_<dir>*.py`` of its parent
+# dir when it has none), so the code a commit modifies is actually
+# executed before it ships.
 # Usage:  scripts/preflight.sh   (then commit if exit 0)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -44,10 +45,21 @@ fi
 # file changed: functions/ivfpq.py runs test_ivfpq.py,
 # test_ivfpq_adaptive.py and test_ivfpq_opq.py. A module with no test
 # file of its own runs its parent dir's: plans/queries.py runs
-# test_plans.py. Files step (4) already ran are skipped.
+# test_plans.py. The modules that import a touched module (one level:
+# ``from .<name> import`` beside it, ``from ..<dir>.<name> import``
+# elsewhere) run theirs too, so an edit to functions/clustering.py
+# also runs the rebalance tests of test_ann_index.py and
+# test_ivfpq*.py. Files step (4) already ran are skipped.
 touched_src=$( (git diff --name-only --diff-filter=d HEAD -- 'etlhelper_spark/*.py';
                 git ls-files --others --exclude-standard -- 'etlhelper_spark/*.py') | sort -u)
-module_tests=$(for f in $touched_src; do
+importers=$(for f in $touched_src; do
+                name=$(basename "$f" .py)
+                dir=$(dirname "$f")
+                grep -lE "^[[:space:]]*from \.${name} import" "$dir"/*.py || true
+                grep -rlE "^[[:space:]]*from \.\.$(basename "$dir")\.${name} import" \
+                    etlhelper_spark --include='*.py' || true
+            done | sort -u)
+module_tests=$(for f in $touched_src $importers; do
                    ls tests/test_"$(basename "$f" .py)"*.py 2>/dev/null ||
                    ls tests/test_"$(basename "$(dirname "$f")")"*.py 2>/dev/null || true
                done | sort -u | grep -vxF -f <(printf '%s\n' "$touched") || true)

@@ -204,6 +204,26 @@ def test_rebalance_splits_hot_lists_and_preserves_membership(spark, vecs):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_rebalance_keeps_covering_attributes(spark, vecs, tmp_path):
+    """Rows a rebalance moves keep a covering index's attribute
+    columns, so filtered search still works after the split."""
+    from etlhelper_spark.functions.ann_index import rebalance_ivf_index
+
+    d = str(tmp_path / "cov")
+    corpus = vecs.withColumn("cat", (F.col("vec_id") % 5).cast("int"))
+    n, _ = build_ivf_index(corpus, d, nlist=4, attr_cols=["cat"])
+    assert rebalance_ivf_index(spark, d, max_list_size=-(-n // 6)) > 0
+    got = spark.read.parquet(d).select("vec_id", "cat").collect()
+    assert sorted(map(tuple, got)) == sorted(
+        map(tuple, corpus.select("vec_id", "cat").collect())
+    )
+    out = query_ivf_index(
+        spark, d, vecs.where("vec_id < 5"), k=3, nprobe=8,
+        attr_filter="cat = 1",
+    ).collect()
+    assert out and all(r["neighbor_id"] % 5 == 1 for r in out)
+
+
 def test_rebalance_leaves_degenerate_identical_lists(spark):
     """A hot list of bit-identical vectors cannot split (one k-means
     cell) — it must stay in place, not loop forever, not lose rows."""

@@ -106,7 +106,7 @@ def test_exact_replay_is_idempotent(spark, state_dir):
     assert v2[5]["survivor_id"] == 4 and not v2[5]["kept"]
 
 
-def test_bucketed_state_equals_path_state(spark, state_dir):
+def test_bucketed_state_equals_path_state(spark, state_dir, tmp_path):
     """The bucketed-table layout must produce identical verdicts to
     the path-based layout over the same batch sequence, its state join
     must read the state Bucketed with ZERO Exchange above the scan
@@ -124,7 +124,7 @@ def test_bucketed_state_equals_path_state(spark, state_dir):
     batches = [docs.where(F.pmod("doc_id", F.lit(3)) == i) for i in range(3)]
     table = "ehs_test_bucketed_state"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    loc = tempfile.mkdtemp(prefix="ehs_bktstate_")
+    loc = str(tmp_path)
     got_b: dict = {}
     for i, b in enumerate(batches):
         for r in dedup_exact_incremental_bucketed(
@@ -690,7 +690,7 @@ def test_span_state_replay_is_idempotent(spark, tmp_path):
     ) == [(1, 3, 0, 0.0)]
 
 
-def test_forget_from_dedup_state(spark):
+def test_forget_from_dedup_state(spark, tmp_path):
     """Erasure semantics: rows whose survivor is forgotten vanish
     (future duplicates re-admit as new first-seen); retained content
     still dedups to its historical survivor; the rewrite lands as a
@@ -735,7 +735,7 @@ def test_forget_from_dedup_state(spark):
         assert forget_from_dedup_state(spark, work, [99999]) == 0
         with pytest.raises(ValueError, match="no state under"):
             forget_from_dedup_state(
-                spark, tempfile.mkdtemp(prefix="ehs_empty_"), [1]
+                spark, str(tmp_path), [1]
             )
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -11,7 +11,6 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -47,8 +46,8 @@ def _run(batch_id: int, rows, state: str) -> list:
     return json.loads(line[0][len("VERDICT:"):])
 
 
-def test_state_survives_process_boundary():
-    state = tempfile.mkdtemp(prefix="ehs_crossrun_")
+def test_state_survives_process_boundary(tmp_path):
+    state = str(tmp_path)
     v0 = _run(0, [(10, "same text"), (11, "other")], state)
     assert v0 == [[10, 10, True], [11, 11, True]]
     # fresh process, fresh JVM: doc 1 must still resolve to doc 10,

@@ -3,14 +3,13 @@ accounting. The 'API' is a local directory each executor writes to."""
 
 import json
 import os
-import tempfile
 
 from etlhelper_spark.operators.foreach_sink import foreach_batch_sink
 
 
-def test_foreach_batch_sink_delivers_everything(spark, src_conn):
+def test_foreach_batch_sink_delivers_everything(spark, src_conn, tmp_path):
     df = src_conn.table_dataframe("nation")
-    out_dir = tempfile.mkdtemp(prefix="ehs_sink_")
+    out_dir = str(tmp_path)
 
     def send(batch):
         # stand-in for an HTTP POST: one file per batch

@@ -622,9 +622,14 @@ def test_rebalance_residual_membership_and_reencode(spark, vecs, tmp_path):
     # moved rows' codes re-encode against their ASSIGNED pivot (the
     # split keeps members within the old list's sub-pivots, so the
     # global nearest-pivot may differ — q193's contract is membership,
-    # not re-assignment): verify internal consistency row by row in
-    # numpy — codes == L2-argmin of (vec - pivot[list_id]) per
-    # subspace under the engine's (dist asc, code asc) tie-break
+    # not re-assignment)
+    _assert_codes_are_residual_l2_argmin(spark, vecs, d)
+
+
+def _assert_codes_are_residual_l2_argmin(spark, vecs, d):
+    """Every stored row's codes == the L2-argmin of (vec -
+    pivot[list_id]) per subspace under the engine's (dist asc, code
+    asc) tie-break, recomputed row by row in numpy."""
     import os
 
     import numpy as np
@@ -650,6 +655,117 @@ def test_rebalance_residual_membership_and_reencode(spark, vecs, tmp_path):
                 for code, c in books[j]
             ]
             assert min(dists)[1] == r["codes"][j]
+
+
+def test_rebalance_reencodes_on_the_frozen_arrow_path(
+    spark, vecs, tmp_path, monkeypatch
+):
+    """A residual index built with ``arrow=True`` re-encodes its moved
+    rows through the batched L2 kernel, as build and append do (the
+    ``_meta`` arrow decision is part of the frozen contract), and the
+    codes are still the numpy L2-argmin against the new pivots."""
+    from etlhelper_spark.functions import similarity
+    from etlhelper_spark.functions.ivfpq import (
+        compact_ivfpq_ingest,
+        rebalance_ivfpq_index,
+    )
+
+    d = str(tmp_path / "aidx")
+    build_ivfpq_index(
+        vecs, d, nlist=4, m_sub=4, k_codes=8, residual=True, arrow=True
+    )
+    compact_ivfpq_ingest(spark, d, watermark=0)
+    kernel_calls = []
+    batched = similarity.nearest_pivot_l2_batched
+
+    def spy(pivot_rows):
+        kernel_calls.append(len(pivot_rows))
+        return batched(pivot_rows)
+
+    monkeypatch.setattr(similarity, "nearest_pivot_l2_batched", spy)
+    n = read_ivfpq_rows(spark, d).count()
+    split = rebalance_ivfpq_index(
+        spark, d, row_store=vecs, max_list_size=-(-n // 8)
+    )
+    assert split > 0
+    # one kernel per subspace per pass that moved rows
+    assert kernel_calls and len(kernel_calls) % 4 == 0
+    monkeypatch.undo()
+    _assert_codes_are_residual_l2_argmin(spark, vecs, d)
+
+
+def test_ivf_and_ivfpq_rebalance_split_identically(spark, vecs, tmp_path):
+    """The two rebalances share one splitter: over the same vectors,
+    an IVF index and a raw-mode IVFPQ index with the same nlist start
+    from the same lists, so the same cap splits the same lists into
+    the same new pivots with the same members in each new list."""
+    import os
+
+    from etlhelper_spark.functions.ann_index import (
+        build_ivf_index,
+        rebalance_ivf_index,
+    )
+    from etlhelper_spark.functions.ivfpq import (
+        compact_ivfpq_ingest,
+        rebalance_ivfpq_index,
+    )
+    from etlhelper_spark.functions.util import load_pivot_rows
+
+    ivf, pq = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    n, _ = build_ivf_index(vecs, ivf, nlist=4)
+    build_ivfpq_index(vecs, pq, nlist=4, m_sub=4, k_codes=8)
+    compact_ivfpq_ingest(spark, pq, watermark=0)
+
+    def lists(frame):
+        out = {}
+        for r in frame.select("list_id", "vec_id").collect():
+            out.setdefault(int(r["list_id"]), set()).add(int(r["vec_id"]))
+        return out
+
+    assert lists(spark.read.parquet(ivf)) == lists(read_ivfpq_rows(spark, pq))
+    cap = -(-n // 6)
+    split = rebalance_ivf_index(spark, ivf, max_list_size=cap, max_rounds=4)
+    assert split > 0
+    assert split == rebalance_ivfpq_index(
+        spark, pq, row_store=vecs, max_list_size=cap, max_rounds=4
+    )
+    assert load_pivot_rows(os.path.join(ivf, "_pivots")) == load_pivot_rows(
+        os.path.join(pq, "_pivots")
+    )
+    members = lists(spark.read.parquet(ivf))
+    assert members == lists(read_ivfpq_rows(spark, pq))
+    assert max(len(m) for m in members.values()) <= cap
+
+
+def test_dynamic_overwrite_never_touches_the_session_conf(
+    spark, vecs, tmp_path, monkeypatch
+):
+    """An IVFPQ append and an IVFPQ erase take dynamic partition
+    overwrite as a per-write option: neither sets the session-wide
+    ``partitionOverwriteMode`` (a set-and-restore there races with
+    other threads on the session), and both still overwrite only the
+    partitions they write."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from etlhelper_spark.operators.erasure import forget_from_ivfpq_index
+
+    d = str(tmp_path / "idx")
+    b0 = vecs.where(F.col("vec_id") % 2 == 0)
+    b1 = vecs.where(F.col("vec_id") % 2 == 1)
+    build_ivfpq_index(b0, d, nlist=4, m_sub=4, k_codes=8)
+    keys = []
+    conf_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        keys.append(key)
+        return conf_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    assert append_ivfpq_index(b1, d, batch_id=1) == b1.count()
+    assert forget_from_ivfpq_index(spark, d, [0, 1]) == 2
+    assert "spark.sql.sources.partitionOverwriteMode" not in keys
+    ids = {r["vec_id"] for r in read_ivfpq_rows(spark, d).collect()}
+    assert ids == {r["vec_id"] for r in vecs.collect()} - {0, 1}
 
 
 def test_compacted_probe_still_prunes_partitions(spark, vecs, versioned_index):

@@ -202,13 +202,11 @@ def test_insert_with_output_in_literal_still_returns_key(derby_conn):
     assert int(gen) == 1
 
 
-def test_streaming_exactly_once_into_derby(spark, derby_conn):
+def test_streaming_exactly_once_into_derby(spark, derby_conn, tmp_path):
     """End-to-end: Structured Streaming drains the events table into a
     LIVE Derby database through the batch-ledger exactly-once sink.
     A second drain on the same checkpoint must add nothing, and a
     manual replay of an already-committed batch must be a no-op."""
-    import tempfile
-
     from etlhelper_spark.streaming.exactly_once import (
         exactly_once_jdbc_sink,
         idempotent_jdbc_batch_writer,
@@ -219,7 +217,7 @@ def test_streaming_exactly_once_into_derby(spark, derby_conn):
     sf = "/root/testdata/sf0.001"
     n_src = spark.read.parquet(f"{sf}/events.parquet").count()
 
-    src_dir = tempfile.mkdtemp(prefix="ehs_eo_src_")
+    src_dir = str(tmp_path / "src")
 
     def drain(ckpt):
         stream = read_events_stream(spark, sf, stream_dir=src_dir).select(
@@ -229,7 +227,7 @@ def test_streaming_exactly_once_into_derby(spark, derby_conn):
             stream, derby_conn, "eo_events", ckpt, ledger_table="eo_ledger"
         )
 
-    ckpt = tempfile.mkdtemp(prefix="ehs_eo_ckpt_")
+    ckpt = str(tmp_path / "ckpt")
     drain(ckpt)
     count_sql = 'SELECT count(*) AS "n" FROM eo_events'
     assert fetchone(count_sql, derby_conn)["n"] == n_src

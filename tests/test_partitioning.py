@@ -1,15 +1,13 @@
 """Partitioned writes + partition pruning: the data-lake layout that
 makes time/category-sliced scans touch only relevant directories."""
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from etlhelper_spark import connect_files
 
 
-def test_partitioned_write_and_pruning(spark, src_conn):
-    d = tempfile.mkdtemp(prefix="ehs_part_")
+def test_partitioned_write_and_pruning(spark, src_conn, tmp_path):
+    d = str(tmp_path)
     dest = connect_files(d, spark=spark)
     events = src_conn.table_dataframe("events").withColumn(
         "event_date", F.to_date("ts")

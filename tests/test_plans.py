@@ -397,7 +397,7 @@ def test_heavy_hitters_recount_is_broadcast_semi(spark):
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 
 
-def test_pq_adc_scan_touches_codes_only(spark):
+def test_pq_adc_scan_touches_codes_only(spark, tmp_path):
     """ADC search must not join or scan the vector payload: the plan
     reads the encoded (id, codes) frame and the broadcast query side
     only — no second embeddings scan on the corpus path."""
@@ -410,9 +410,7 @@ def test_pq_adc_scan_touches_codes_only(spark):
     # a FRESH parquet path: other modules cache the shared testdata
     # embeddings (module fixtures), and Spark's cache manager would
     # substitute InMemoryTableScan for our parquet scan assertion
-    import tempfile
-
-    fresh = tempfile.mkdtemp(prefix="ehs_plan_pq_")
+    fresh = str(tmp_path / "embeddings")
     spark.read.parquet(f"{SF}/embeddings.parquet").write.mode(
         "overwrite"
     ).parquet(fresh)

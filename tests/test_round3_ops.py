@@ -333,7 +333,7 @@ def test_winnow_xxhash64_fast_path(spark):
         assert 0 < len(r["x"]) <= 2 * len(r["m"]) + 2
 
 
-def test_skyline_matches_bruteforce(spark):
+def test_skyline_matches_bruteforce(spark, tmp_path):
     """Bucketed skyline equals the O(n^2) definition on random points."""
     import random
 
@@ -343,9 +343,8 @@ def test_skyline_matches_bruteforce(spark):
     pts = [(i, round(900 + rng.random() * 100, 2), rng.randint(1, 50))
            for i in range(300)]
     df = spark.createDataFrame(pts, "p_partkey long, p_retailprice double, p_size int")
-    import tempfile, os
-    d = tempfile.mkdtemp()
-    df.write.parquet(os.path.join(d, "part.parquet"))
+    d = str(tmp_path)
+    df.write.parquet(f"{d}/part.parquet")
     got = {(r["price"], r["size"]) for r in q164_skyline(spark, d).collect()}
     dedup = {}
     for i, pr, sz in pts:

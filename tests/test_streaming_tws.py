@@ -24,21 +24,19 @@ SF_DIR = "/root/testdata/sf0.001"
     transform_with_state_available(),
     reason="protobuf present - guidance path unreachable",
 )
-def test_missing_protobuf_raises_with_guidance(spark):
+def test_missing_protobuf_raises_with_guidance(spark, tmp_path):
     with pytest.raises(ImportError, match="running_user_totals"):
-        running_user_totals_tws(spark, SF_DIR, tempfile.mkdtemp())
+        running_user_totals_tws(spark, SF_DIR, str(tmp_path))
 
 
 @pytest.mark.skipif(
     not transform_with_state_available(),
     reason="google.protobuf not installed in this container",
 )
-def test_tws_equals_batch_aggregate(spark):
+def test_tws_equals_batch_aggregate(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    out = running_user_totals_tws(
-        spark, SF_DIR, tempfile.mkdtemp(prefix="ehs_tws_")
-    )
+    out = running_user_totals_tws(spark, SF_DIR, str(tmp_path))
     batch = (
         spark.read.parquet(f"{SF_DIR}/events.parquet")
         .groupBy("user_id")

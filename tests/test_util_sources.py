@@ -1,7 +1,5 @@
 """salted_join equivalence, ensure_parallelism, CSV/JSON backends."""
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from etlhelper_spark import connect_files, copy_table_rows, fetchall
@@ -43,8 +41,8 @@ def test_ensure_parallelism_expands_single_partition(spark):
     assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
-def test_csv_backend_roundtrip(spark, src_conn):
-    d = tempfile.mkdtemp(prefix="ehs_csv_")
+def test_csv_backend_roundtrip(spark, src_conn, tmp_path):
+    d = str(tmp_path)
     dest = connect_files(d, file_format="csv", spark=spark)
     copy_table_rows("region", src_conn, dest)
     rows = fetchall("SELECT * FROM region ORDER BY r_regionkey", dest)
@@ -52,16 +50,16 @@ def test_csv_backend_roundtrip(spark, src_conn):
     assert rows[0]["r_name"] == "AFRICA"
 
 
-def test_json_backend_roundtrip(spark, src_conn):
-    d = tempfile.mkdtemp(prefix="ehs_json_")
+def test_json_backend_roundtrip(spark, src_conn, tmp_path):
+    d = str(tmp_path)
     dest = connect_files(d, file_format="json", spark=spark)
     copy_table_rows("nation", src_conn, dest)
     rows = fetchall("SELECT count(*) AS n FROM nation", dest)
     assert rows[0]["n"] == 25
 
 
-def test_orc_backend_roundtrip_preserves_types(spark, src_conn):
-    d = tempfile.mkdtemp(prefix="ehs_orc_")
+def test_orc_backend_roundtrip_preserves_types(spark, src_conn, tmp_path):
+    d = str(tmp_path)
     dest = connect_files(d, file_format="orc", spark=spark)
     copy_table_rows("orders", src_conn, dest)
     src = src_conn.table_dataframe("orders")
@@ -80,11 +78,11 @@ def test_orc_backend_roundtrip_preserves_types(spark, src_conn):
     assert a == b
 
 
-def test_xml_backend_roundtrip(spark, src_conn):
+def test_xml_backend_roundtrip(spark, src_conn, tmp_path):
     """Spark 4's built-in XML source as a files backend: write
     region out as <rows><row>...</row></rows>, read it back through
     the same connection machinery as csv/json/orc."""
-    d = tempfile.mkdtemp(prefix="ehs_xml_")
+    d = str(tmp_path)
     dest = connect_files(d, file_format="xml", spark=spark)
     copy_table_rows("region", src_conn, dest)
     rows = fetchall(
