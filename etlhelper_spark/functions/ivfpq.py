@@ -79,10 +79,12 @@ from ..state import store
 from .similarity import collect_pivot_rows, nearest_pivot
 from .util import (
     count_parquet_rows,
+    drain,
     read_parquet_state,
     in_values,
     load_pivot_rows,
     parquet_data_files,
+    parquet_file_rows,
     write_pivot_rows,
     write_sidecar_table,
 )
@@ -729,25 +731,13 @@ def _effective_list_sizes(path: str) -> dict[int, int]:
     base plus live cells ABOVE its watermark) — from parquet footers,
     read driver-side: no listing + scan job. Callers run this between
     completed writes, so the footers are authoritative."""
-    import pyarrow.parquet as _pq
-
-    from .util import list_fileinfos
-
     versions = store.ibase_versions(path)
-    w = versions[-1][2] if versions else None
-
-    def _accumulate(root: str, watermark, sizes: dict) -> None:
-        fs, infos = list_fileinfos(root, recursive=True)
-        base_len = len(str(root).rstrip("/").split("://")[-1].split("/"))
-        for i in infos:
-            if not (i.is_file and i.base_name.endswith(".parquet")):
-                continue
-            rel = i.path.rstrip("/").split("/")[base_len:]
-            if any(p.startswith(("_", ".")) for p in rel):
-                continue
-            parts = dict(
-                seg.split("=", 1) for seg in rel[:-1] if "=" in seg
-            )
+    roots = [(path, None)]
+    if versions:
+        roots = [(versions[-1][1], None), (path, versions[-1][2])]
+    sizes: dict[int, int] = {}
+    for root, watermark in roots:
+        for parts, n in parquet_file_rows(root):
             if "list_id" not in parts:
                 continue
             if (
@@ -755,15 +745,8 @@ def _effective_list_sizes(path: str) -> dict[int, int]:
                 and int(parts["ingest_batch"]) <= watermark
             ):
                 continue  # folded into the base: invisible
-            with fs.open_input_file(i.path) as f:
-                n = _pq.ParquetFile(f).metadata.num_rows
             L = int(parts["list_id"])
             sizes[L] = sizes.get(L, 0) + n
-
-    sizes: dict[int, int] = {}
-    if versions:
-        _accumulate(versions[-1][1], None, sizes)
-    _accumulate(path, w, sizes)
     return sizes
 
 
@@ -882,13 +865,7 @@ def streaming_ivfpq_ingest(
             batch_df, path, corpus_id, vec_col, batch_id=int(batch_id) + 1
         )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def _collected_query_probes(

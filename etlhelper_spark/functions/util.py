@@ -1,6 +1,17 @@
-"""Shared helpers for the extension operators."""
+"""Shared helpers for the extension operators.
+
+This module owns every driver-side parquet metadata read. One listing,
+``_data_files``, applies Spark's visibility rule and records each
+file's partition values; one footer read, ``_file_footer``, memoized
+per file identity ``(filesystem type, path, mtime_ns, size)``, gives
+any data file's arrow schema and row count. The table-level schema
+readers take the first data file's footer through it, and the
+row-count readers sum it over the listing.
+"""
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import DataFrame
 
@@ -736,69 +747,109 @@ def load_pivot_rows(path_dir: str) -> list[tuple[int, list[float]]]:
     return rows
 
 
-def parquet_schema_names(path: str):
-    """Column names of the first data file of *path* (see
-    :func:`parquet_data_files`; the file :func:`footer_spark_schema`
-    reads), from its footer driver-side. Partition columns live in
-    directory names, never in the footer. Returns None when *path*
-    has no data file. Paths may be local or any pyarrow.fs URI."""
-    import pyarrow.parquet as _pq
-
-    fs, infos = parquet_data_files(path)
-    if not infos:
-        return None
-    with fs.open_input_file(min(i.path for i in infos)) as f:
-        return list(_pq.ParquetFile(f).schema_arrow.names)
-
-
 def parquet_data_files(path: str):
     """``(fs, [FileInfo…])`` of the parquet data files Spark reads for
-    *path*: a single ``.parquet`` file is its own data file; under a
-    directory, every ``*.parquet`` at any depth except where a path
-    segment below *path* starts with ``_`` or ``.`` (Spark's
-    visibility rule: ``_SUCCESS``, ``_pivots``, ``.crc`` and staging
-    dirs never count). Paths may be local or any pyarrow.fs URI."""
+    *path*, in listing order (see :func:`_data_files`). Paths may be
+    local or any pyarrow.fs URI."""
+    fs, files = _data_files(path)
+    return fs, [i for i, _parts in files]
+
+
+def _data_files(path: str):
+    """``(fs, [(FileInfo, partition values)…])`` of the parquet data
+    files Spark reads for *path* — the one listing every driver-side
+    parquet metadata read goes through. A single ``.parquet`` file is
+    its own data file. Under a directory, every ``*.parquet`` at any
+    depth counts except where a path segment below *path* starts with
+    ``_`` or ``.`` (Spark's visibility rule: ``_SUCCESS``, ``_pivots``,
+    ``.crc``, ``_temporary`` and staging dirs never count). A file's
+    partition values are the ``key=value`` dirs between *path* and
+    it."""
     fs, p = parquet_fs(path)
     try:
         own = fs.get_file_info(p)
     except OSError:
         return fs, []
     if own.is_file:
-        return fs, [own] if own.base_name.endswith(".parquet") else []
+        return fs, [(own, {})] if own.base_name.endswith(".parquet") else []
     fs, infos = list_fileinfos(path, recursive=True)
-    base_len = len(str(path).rstrip("/").split("://")[-1].split("/"))
-    return fs, [
-        i
-        for i in infos
-        if i.is_file
-        and i.base_name.endswith(".parquet")
-        and not any(
-            seg.startswith(("_", "."))
-            for seg in i.path.rstrip("/").split("/")[base_len:]
-        )
-    ]
+    base_len = len(p.rstrip("/").split("/"))
+    files = []
+    for i in infos:
+        rel = i.path.rstrip("/").split("/")[base_len:]
+        if (
+            i.is_file
+            and i.base_name.endswith(".parquet")
+            and not any(seg.startswith(("_", ".")) for seg in rel)
+        ):
+            parts = dict(seg.split("=", 1) for seg in rel[:-1] if "=" in seg)
+            files.append((i, parts))
+    return fs, files
+
+
+_FOOTERS: dict[tuple, tuple] = {}
+_FOOTERS_LOCK = threading.Lock()
+
+
+def _file_footer(fs, info):
+    """``(arrow schema, row count)`` of one parquet data file, from its
+    footer — the one driver-side footer read, memoized per file
+    identity ``(filesystem type, path, mtime_ns, size)``. A rewritten
+    or replaced file has a new identity, and a deleted file is never
+    listed again, so no reader is served facts about a file that is
+    gone. At most 512 footers are kept (oldest out first). The memo
+    holds no Spark schema: that depends on the session's confs."""
+    key = (fs.type_name, info.path, info.mtime_ns, info.size)
+    facts = _FOOTERS.get(key)
+    if facts is None:
+        import pyarrow.parquet as _pq
+
+        with fs.open_input_file(info.path) as f:
+            pf = _pq.ParquetFile(f)
+            facts = (pf.schema_arrow, pf.metadata.num_rows)
+        with _FOOTERS_LOCK:
+            while len(_FOOTERS) >= 512:
+                del _FOOTERS[next(iter(_FOOTERS))]
+            _FOOTERS[key] = facts
+    return facts
+
+
+def parquet_arrow_schema(path: str):
+    """Arrow schema of the first data file (by path) of *path*, the
+    footer ``spark.read.parquet`` infers its schema from, or None when
+    *path* has no data file. One listing; the footer comes from the
+    per-file memo (:func:`_file_footer`). Partition columns live in
+    directory names, never in the footer."""
+    fs, infos = parquet_data_files(path)
+    if not infos:
+        return None
+    return _file_footer(fs, min(infos, key=lambda i: i.path))[0]
+
+
+def parquet_schema_names(path: str):
+    """Column names of :func:`parquet_arrow_schema`, or None when
+    *path* has no data file. Paths may be local or any pyarrow.fs
+    URI."""
+    schema = parquet_arrow_schema(path)
+    return None if schema is None else list(schema.names)
 
 
 def footer_spark_schema(*paths: str, spark=None):
     """Spark schema of a parquet table or STATE directory, derived
-    DRIVER-SIDE from the first data file's footer (see
-    :func:`arrow_spark_schema`) — the schema ``spark.read.parquet``
-    would infer, without the per-call inference job a bare read
-    schedules (one job at zero information gain on every state
-    fold/probe; the packing read-back measured it at ~0.1-0.2 s per
-    call locally and strictly more on a busy cluster). Returns None
-    (callers fall back to the inferring read) when no data file exists
-    or the conversion is not exact. Searches *paths* in order; the
-    first data file wins (state stores are schema-uniform by
-    construction)."""
-    import pyarrow.parquet as _pq
-
+    DRIVER-SIDE from the first data file's footer
+    (:func:`parquet_arrow_schema`, then :func:`arrow_spark_schema`) —
+    the schema ``spark.read.parquet`` would infer, without the per-call
+    inference job a bare read schedules (one job at zero information
+    gain on every state fold/probe; the packing read-back measured it
+    at ~0.1-0.2 s per call locally and strictly more on a busy
+    cluster). Returns None (callers fall back to the inferring read)
+    when no data file exists or the conversion is not exact. Searches
+    *paths* in order; the first data file wins (state stores are
+    schema-uniform by construction)."""
     for path in paths:
-        fs, infos = parquet_data_files(path)
-        if not infos:
-            continue
-        with fs.open_input_file(min(i.path for i in infos)) as f:
-            return arrow_spark_schema(_pq.ParquetFile(f).schema_arrow, spark)
+        schema = parquet_arrow_schema(path)
+        if schema is not None:
+            return arrow_spark_schema(schema, spark)
     return None
 
 
@@ -888,45 +939,68 @@ def read_parquet_state(spark, *paths: str):
     return spark.read.schema(schema).parquet(*paths)
 
 
+def parquet_file_rows(path: str) -> list[tuple[dict[str, str], int]]:
+    """``[(partition values, row count)…]``, one per data file of
+    *path* that Spark's scan reads (:func:`_data_files`), row counts
+    from the memoized file footers (:func:`_file_footer`) — the kernel
+    of every driver-side row count. Once any file sits under a
+    ``key=value`` dir the table is partitioned, and Spark's scan skips
+    the files outside every such dir (its schema inference does not).
+    Callers run it between completed writes, so the footers are the
+    table."""
+    fs, files = _data_files(path)
+    if any(parts for _i, parts in files):
+        files = [(i, parts) for i, parts in files if parts]
+    return [(parts, _file_footer(fs, i)[1]) for i, parts in files]
+
+
 def parquet_partition_counts(path: str, key: str) -> dict[int, int]:
     """Per-partition row counts of a ``key=value``-partitioned parquet
     table from the file FOOTERS, read driver-side — exactly what
     ``spark.read.parquet(path).groupBy(key).count()`` returns once the
     writes are complete, without the listing + full-scan job (the
     rebalance hot-list probe paid that scan on EVERY pass, including
-    the terminal pass that finds nothing hot). Spark's visibility rule
-    applies (``_``/``.`` entries are invisible); files outside any
+    the terminal pass that finds nothing hot). Files outside any
     ``key=`` directory are ignored. Paths may be local or any
     pyarrow.fs URI."""
-    import pyarrow.parquet as _pq
-
-    fs, infos = parquet_data_files(path)
-    base_len = len(str(path).rstrip("/").split("://")[-1].split("/"))
     out: dict[int, int] = {}
-    prefix = f"{key}="
-    for i in infos:
-        rel_dirs = i.path.rstrip("/").split("/")[base_len:-1]
-        vals = [p for p in rel_dirs if p.startswith(prefix)]
-        if not vals:
-            continue
-        k = int(vals[0][len(prefix):])
-        with fs.open_input_file(i.path) as f:
-            out[k] = out.get(k, 0) + _pq.ParquetFile(f).metadata.num_rows
+    for parts, n in parquet_file_rows(path):
+        if key in parts:
+            k = int(parts[key])
+            out[k] = out.get(k, 0) + n
     return out
 
 
 def count_parquet_rows(path: str) -> int:
     """Row count of a parquet table directory from the file FOOTERS,
     read driver-side — the count ``spark.read.parquet(path).count()``
-    would return, without the listing + scan job. Mirrors Spark's
-    visibility rule: files and directories whose name starts with
-    ``_`` or ``.`` are invisible (sidecars like ``_pivots`` never
-    count). Paths may be local or any pyarrow.fs URI."""
+    would return, without the listing + scan job. Paths may be local
+    or any pyarrow.fs URI."""
+    return sum(n for _parts, n in parquet_file_rows(path))
+
+
+def first_parquet_row(path: str, columns: list[str]) -> dict | None:
+    """*columns* of the first row of *path*'s first non-empty data file
+    (by path), read DRIVER-SIDE from its first row group — a per-batch
+    parameter probe (fold edges, a store's build distance) without the
+    listing + ``first()`` job a Spark read pays. None when no data
+    file holds a row."""
     import pyarrow.parquet as _pq
 
     fs, infos = parquet_data_files(path)
-    total = 0
-    for i in infos:
+    for i in sorted(infos, key=lambda i: i.path):
         with fs.open_input_file(i.path) as f:
-            total += _pq.ParquetFile(f).metadata.num_rows
-    return total
+            pf = _pq.ParquetFile(f)
+            if pf.metadata.num_rows:
+                t = pf.read_row_group(0, columns=columns)
+                return {c: t[c][0].as_py() for c in columns}
+    return None
+
+
+def drain(writer, checkpoint_dir: str) -> None:
+    """Start *writer* (a configured ``DataStreamWriter``) on an
+    availableNow trigger with its checkpoint at *checkpoint_dir*, and
+    wait until it has processed every input available at start."""
+    writer.option("checkpointLocation", checkpoint_dir).trigger(
+        availableNow=True
+    ).start().awaitTermination()

@@ -64,7 +64,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.util import in_values, read_parquet_state
+from ..functions.util import drain, in_values, read_parquet_state
 from ..state.store import (
     append_path,
     appends_below,
@@ -1025,13 +1025,7 @@ def streaming_dedup_exact(
             append_path(out_dir, batch_id)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def streaming_dedup_embedding(
@@ -1078,13 +1072,7 @@ def streaming_dedup_embedding(
             append_path(out_dir, batch_id)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def read_dedup_verdicts(spark, out_dir: str) -> DataFrame:

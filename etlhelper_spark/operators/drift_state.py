@@ -32,7 +32,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.util import read_parquet_state
+from ..functions.util import drain, first_parquet_row, read_parquet_state
 from ..state.store import commit_version, latest_below, read_latest
 
 __all__ = [
@@ -59,29 +59,16 @@ def _latest_version_meta(
     fold used to pay on every apply. None when no version exists;
     raises loudly on a version with no rows (nothing to validate
     against — the .first() form would have crashed there too)."""
-    import pyarrow.parquet as _pq
-
-    from ..functions.util import list_fileinfos
-
     latest = latest_below(subdir, batch_id)
     if latest is None:
         return None
-    vdir = latest[1]
-    fs, infos = list_fileinfos(vdir)
-    for p in sorted(
-        i.path
-        for i in infos
-        if i.is_file and i.base_name.endswith(".parquet")
-    ):
-        with fs.open_input_file(p) as f:
-            pf = _pq.ParquetFile(f)
-            if pf.metadata.num_rows:
-                t = pf.read_row_group(0, columns=columns)
-                return {c: t[c][0].as_py() for c in columns}
-    raise ValueError(
-        f"state version {vdir} has no rows — cannot validate "
-        "fold parameters against an empty state"
-    )
+    row = first_parquet_row(latest[1], columns)
+    if row is None:
+        raise ValueError(
+            f"state version {latest[1]} has no rows — cannot validate "
+            "fold parameters against an empty state"
+        )
+    return row
 
 
 def histogram_incremental(
@@ -503,13 +490,7 @@ def streaming_category_gate(
             )
         category_counts_incremental(batch_df, state_dir, batch_id, col)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def psi_against_state(

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.util import read_parquet_state
+from ..functions.util import drain, read_parquet_state
 from ..state import store
 
 
@@ -149,13 +149,7 @@ def streaming_incremental_rollup(
             merged.repartition(state_partitions), state_dir, batch_id
         )
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(upsert), checkpoint_dir)
     return store.read_latest(spark, state_dir)
 
 
@@ -393,13 +387,7 @@ def streaming_cdc_rollup(
             merged.repartition(state_partitions), state_dir, batch_id
         )
 
-    q = (
-        signed.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(signed.writeStream.foreachBatch(upsert), checkpoint_dir)
 
 
 def sketch_rollup_incremental(

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.dedup import _deletion_variants
+from ..functions.util import drain, first_parquet_row
 from ..state.store import append_path, live_sources
 
 __all__ = [
@@ -71,26 +72,10 @@ def _existing_dist(spark, state_dir: str) -> int | None:
     enforces per-store consistency at write time, so any piece's d is
     THE store's d; a full-store distinct here would make every append
     and link O(state) just to read a parameter."""
-    import pyarrow.parquet as _pq
-
-    from ..functions.util import list_fileinfos
-
     for p in _sources(state_dir):
-        # driver-side pyarrow read of ONE value — the spark.read +
-        # first() form paid a listing + scan job per append/link call
-        # just to fetch a parameter; object-store-ready (pyarrow.fs)
-        fs, infos = list_fileinfos(p)
-        for fp in sorted(
-            i.path
-            for i in infos
-            if i.is_file and i.base_name.endswith(".parquet")
-        ):
-            with fs.open_input_file(fp) as f:
-                pf = _pq.ParquetFile(f)
-                if pf.metadata.num_rows:
-                    return int(
-                        pf.read_row_group(0, columns=["d"])["d"][0].as_py()
-                    )
+        row = first_parquet_row(p, ["d"])
+        if row is not None:
+            return int(row["d"])
     return None
 
 
@@ -199,17 +184,9 @@ def streaming_link(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         link_batch(
             batch_df, state_dir, id_col, str_col, include_phonetic
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={int(batch_id)}")
-        )
+        ).write.mode("overwrite").parquet(append_path(out_dir, batch_id))
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def forget_from_linkage_state(

@@ -56,7 +56,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.packing import _next_fit
-from ..functions.util import in_values, literal_frame, read_parquet_state
+from ..functions.util import (
+    drain,
+    in_values,
+    literal_frame,
+    read_parquet_state,
+)
 from ..state.store import (
     commit_version,
     erase_cutover,
@@ -544,13 +549,7 @@ def streaming_pack(
             oversize=oversize,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def read_pack_cursor(

@@ -37,6 +37,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.util import drain
 from ..state.store import commit_version, read_latest
 
 __all__ = [
@@ -301,13 +302,7 @@ def streaming_golden(
             source_priority,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def read_golden_state(spark, state_dir: str) -> DataFrame:

@@ -6,6 +6,11 @@ column arrives as BIGINT nanoseconds. This reader detects such
 columns from the parquet footer (pyarrow, driver-side, metadata-only —
 no data read) and converts them to TimestampType by integer division
 to microseconds, so downstream operators see real timestamps.
+
+The footer is the table's first data file's, read through the one
+footer memo in functions/util.py (``_file_footer``, keyed on the
+file's filesystem type, path, mtime_ns and size): the schema and the
+nanosecond columns of a read come from one listing and one footer.
 """
 
 from __future__ import annotations
@@ -13,54 +18,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.util import arrow_spark_schema, parquet_data_files
+from ..functions.util import arrow_spark_schema, parquet_arrow_schema
 
 
 def nanos_timestamp_columns(path: str) -> tuple[str, ...]:
     """Names of timestamp[ns] columns in a parquet file/directory."""
-    return _footer(path)[1]
+    return _nanos_columns(parquet_arrow_schema(path))
 
 
-_FOOTERS: dict[tuple, tuple] = {}
+def _nanos_columns(arrow_schema) -> tuple[str, ...]:
+    if arrow_schema is None:
+        return ()
+    import pyarrow as pa
 
-
-def _footer(path: str):
-    """``(arrow schema or None, nanosecond-timestamp column names)`` of
-    the table at *path*, both from ONE footer: its first data file's,
-    the file functions/util.py ``footer_spark_schema`` reads.
-
-    Memoized per ``(path, stamp)``, where the stamp is the newest data
-    file with its mtime and size: an overwrite replaces every data file
-    and an append adds a newer one, so either re-reads the footer
-    instead of serving facts about files that are gone. One listing
-    per call; a footer open only on a miss. The memo holds no Spark
-    schema: that depends on the session's confs, and a caller without
-    a session must not decide it for the readers that have one. A
-    path with no data file yet is not memoized."""
-    fs, infos = parquet_data_files(path)
-    if not infos:
-        return None, ()
-    newest = max(infos, key=lambda i: (i.mtime_ns or 0, i.path))
-    key = (path, newest.path, newest.mtime_ns, newest.size)
-    facts = _FOOTERS.get(key)
-    if facts is None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        with fs.open_input_file(min(i.path for i in infos)) as f:
-            schema = pq.ParquetFile(f).schema_arrow
-        facts = (
-            schema,
-            tuple(
-                f.name
-                for f in schema
-                if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-            ),
-        )
-        while len(_FOOTERS) >= 512:
-            _FOOTERS.pop(next(iter(_FOOTERS)))
-        _FOOTERS[key] = facts
-    return facts
+    return tuple(
+        f.name
+        for f in arrow_schema
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    )
 
 
 def read_parquet_table(
@@ -85,7 +60,8 @@ def read_parquet_table(
     leave it off for stable-schema tables: at 100 TB the footer sweep
     alone touches millions of files."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    arrow_schema, nanos_cols = _footer(path)
+    arrow_schema = parquet_arrow_schema(path)
+    nanos_cols = _nanos_columns(arrow_schema)
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")

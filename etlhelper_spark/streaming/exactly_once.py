@@ -33,7 +33,7 @@ import re
 from pyarrow.fs import FileType
 from pyspark.sql import DataFrame
 
-from ..functions.util import parquet_fs
+from ..functions.util import drain, parquet_fs
 
 __all__ = [
     "exactly_once_parquet_sink",
@@ -73,13 +73,10 @@ def exactly_once_parquet_sink(
     RE-WRITING a replayed in-flight batch within a restart."""
     fs, root = parquet_fs(out_dir)
     fs.create_dir(root, recursive=True)
-    q = (
-        stream.writeStream.foreachBatch(idempotent_batch_writer(out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(idempotent_batch_writer(out_dir)),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 # Missing-table signatures across the dialect family: a cleanup DELETE
@@ -193,12 +190,9 @@ def exactly_once_jdbc_sink(
     """Drain ``stream`` (availableNow) into a JDBC table exactly once:
     checkpoint prevents re-reading source data across restarts, the
     batch ledger prevents re-writing replayed batches within one."""
-    q = (
+    drain(
         stream.writeStream.foreachBatch(
             idempotent_jdbc_batch_writer(conn, table, ledger_table)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.util import drain
+
 
 def running_user_totals(
     spark: SparkSession,
@@ -62,15 +64,12 @@ def running_user_totals(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    query = (
+    drain(
         updates.writeStream.format("memory")
         .queryName("running_user_totals")
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
     emitted = spark.table("running_user_totals")
     # update mode emits once per key per batch; the final state per
     # user is the emission with the highest n_events
@@ -166,15 +165,12 @@ def running_user_totals_tws(
         outputMode="Update",
         timeMode="None",
     )
-    query = (
+    drain(
         updates.writeStream.format("memory")
         .queryName("running_user_totals_tws")
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
     emitted = spark.table("running_user_totals_tws")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (

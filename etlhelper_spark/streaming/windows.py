@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.util import drain
+
 
 def hourly_counts(events: DataFrame) -> DataFrame:
     """Tumbling 1-hour windows per event_type: count + value sum.
@@ -114,15 +116,12 @@ def streaming_dedup_events(
     deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    query = (
+    drain(
         deduped.writeStream.format("memory")
         .queryName("deduped_events")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
     return spark.table("deduped_events")
 
 
@@ -250,15 +249,12 @@ def streaming_hourly_counts(
             "sum_value",
         )
     )
-    query = (
+    drain(
         agg.writeStream.format("memory")
         .queryName("hourly_counts_stream")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
     return spark.table("hourly_counts_stream")
 
 
@@ -310,15 +306,12 @@ def stream_stream_view_purchase_join(
         ),
         "inner",
     )
-    query = (
+    drain(
         joined.writeStream.format("memory")
         .queryName("ss_join")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
     out = spark.table("ss_join")
     return (
         out.groupBy("p_user")
@@ -368,15 +361,12 @@ def stream_static_enrichment(
         )
     )
     sink_name = f"enrich_{abs(hash(checkpoint_dir)) % 10**8}"
-    q = (
+    drain(
         enriched.writeStream.outputMode("complete")
         .format("memory")
-        .queryName(sink_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .queryName(sink_name),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return spark.table(sink_name)
 
 
@@ -409,15 +399,12 @@ def streaming_session_totals(
     # correctness check); the per-user rollup is stateless and runs in
     # batch over the drained sessions — on a live pipeline it would be
     # the foreachBatch/downstream aggregation.
-    query = (
+    drain(
         per_session.writeStream.format("memory")
         .queryName("sessions_stream")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        checkpoint_dir,
     )
-    query.awaitTermination()
     return (
         spark.table("sessions_stream")
         .groupBy("user_id")

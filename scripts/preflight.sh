@@ -6,10 +6,8 @@
 # tests), (2) the filesystem-layer I/O gate, (3) the check of the
 # Spark-internal JVM members the driver-side JDBC path calls, (4)
 # the full test files touched in the index / working tree, and (5) the
-# test files of each touched library module and of the library modules
-# that import it (``etlhelper_spark/**/<name>.py`` runs
-# ``tests/test_<name>*.py``, or ``tests/test_<dir>*.py`` of its parent
-# dir when it has none), so the code a commit modifies is actually
+# test files that import each touched library module or a library
+# module that imports it, so the code a commit modifies is actually
 # executed before it ships.
 # Usage:  scripts/preflight.sh   (then commit if exit 0)
 set -euo pipefail
@@ -41,15 +39,35 @@ else
     echo "== preflight: no touched test files =="
 fi
 
-# A library edit runs its module's own test files even when no test
-# file changed: functions/ivfpq.py runs test_ivfpq.py,
-# test_ivfpq_adaptive.py and test_ivfpq_opq.py. A module with no test
-# file of its own runs its parent dir's: plans/queries.py runs
-# test_plans.py. The modules that import a touched module (one level:
-# ``from .<name> import`` beside it, ``from ..<dir>.<name> import``
-# elsewhere) run theirs too, so an edit to functions/clustering.py
-# also runs the rebalance tests of test_ann_index.py and
-# test_ivfpq*.py. Files step (4) already ran are skipped.
+# A library edit runs the test files that import its module: by dotted
+# path (functions/dedup.py runs every test naming
+# ``etlhelper_spark.functions.dedup``), or by package when the
+# package's __init__ re-exports it (sources/parquet.py also runs the
+# tests importing ``etlhelper_spark.sources``). A module no test
+# imports runs ``tests/test_<name>*.py``, or its parent dir's
+# ``tests/test_<dir>*.py``: plans/queries.py runs test_plans.py. The
+# modules that import a touched module (one level: ``from .<name>
+# import`` beside it, ``from ..<dir>.<name> import`` elsewhere) run
+# theirs too, so an edit to functions/clustering.py also runs the
+# rebalance tests of test_ann_index.py and test_ivfpq*.py. Files step
+# (4) already ran are skipped.
+tests_of() {
+    local f=$1 name dir mod pkg re
+    name=$(basename "$f" .py)
+    dir=$(dirname "$f")
+    mod=$(echo "${f%.py}" | tr / .)
+    pkg=${mod%.*}
+    pkg="from ${pkg//./\\.} import|import ${pkg//./\\.}([^.[:alnum:]_]|\$)"
+    re="${mod//./\\.}([^[:alnum:]_]|\$)"
+    if [ "$name" = __init__ ]; then
+        re=$pkg
+    elif grep -qE "^[[:space:]]*from \.${name} import" "$dir/__init__.py" 2>/dev/null; then
+        re="$re|$pkg"
+    fi
+    grep -lE "$re" tests/test_*.py ||
+        ls tests/test_"$name"*.py 2>/dev/null ||
+        ls tests/test_"$(basename "$dir")"*.py 2>/dev/null || true
+}
 touched_src=$( (git diff --name-only --diff-filter=d HEAD -- 'etlhelper_spark/*.py';
                 git ls-files --others --exclude-standard -- 'etlhelper_spark/*.py') | sort -u)
 importers=$(for f in $touched_src; do
@@ -60,8 +78,7 @@ importers=$(for f in $touched_src; do
                     etlhelper_spark --include='*.py' || true
             done | sort -u)
 module_tests=$(for f in $touched_src $importers; do
-                   ls tests/test_"$(basename "$f" .py)"*.py 2>/dev/null ||
-                   ls tests/test_"$(basename "$(dirname "$f")")"*.py 2>/dev/null || true
+                   tests_of "$f"
                done | sort -u | grep -vxF -f <(printf '%s\n' "$touched") || true)
 if [ -n "$module_tests" ]; then
     echo "== preflight: running the tests of touched modules =="

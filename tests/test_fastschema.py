@@ -274,6 +274,118 @@ def test_rewritten_base_table_is_not_served_a_stale_schema(spark, tmp_path):
     assert row["ts"].year == 2001  # a timestamp again, not raw nanos
 
 
+def test_deleted_first_file_is_not_served_a_stale_schema(spark, tmp_path):
+    """Every table-level reader takes the first data file's footer
+    through one memo keyed on that file, not on the table's newest
+    file: once the first file is deleted, the readers move to the next
+    one, as Spark's own read does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etlhelper_spark.functions.util import parquet_schema_names
+    from etlhelper_spark.sources import (
+        nanos_timestamp_columns,
+        read_parquet_table,
+    )
+
+    d = str(tmp_path / "t")
+    os.makedirs(d)
+    pq.write_table(
+        pa.table({"a": [1], "c": [1.5]}), os.path.join(d, "part-0.parquet")
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "a": [2],
+                "b": ["x"],
+                "ts": pa.array([10**18], pa.timestamp("ns")),
+            }
+        ),
+        os.path.join(d, "part-1.parquet"),
+    )
+
+    def assert_readers_agree_with_spark():
+        bare = spark.read.parquet(d)  # nanosAsLong: ts arrives as bigint
+        nanos = ("ts",) if "ts" in bare.columns else ()
+        want = bare
+        for c in nanos:
+            want = want.withColumn(
+                c, F.expr(f"timestamp_micros(CAST({c} DIV 1000 AS BIGINT))")
+            )
+        got = read_parquet_table(spark, d)
+        assert got.schema == want.schema
+        assert sorted(map(str, got.collect())) == sorted(
+            map(str, want.collect())
+        )
+        assert parquet_schema_names(d) == bare.columns
+        assert nanos_timestamp_columns(d) == nanos
+        # a nanosecond column's Spark type follows the session conf,
+        # which the footer cannot decide: the readers fall back
+        schema = footer_spark_schema(d, spark=spark)
+        assert schema == (None if nanos else bare.schema)
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    assert_readers_agree_with_spark()
+    os.remove(os.path.join(d, "part-0.parquet"))
+    assert_readers_agree_with_spark()
+    rows = read_parquet_table(spark, d).collect()
+    assert [(r.a, r.b, r.ts.year) for r in rows] == [(2, "x", 2001)]
+
+
+def test_footer_memo_evicts_safely_across_threads(tmp_path):
+    """Every state read fills the one footer memo, from as many threads
+    as a caller runs ops on. With the memo full, each miss evicts; two
+    threads evicting at once must neither raise nor overfill it, and
+    every caller gets its file's footer."""
+    import sys
+    import threading
+    import types
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    from etlhelper_spark.functions import util
+
+    p = str(tmp_path / "part-0.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), p)
+    size = os.path.getsize(p)
+    local = pafs.LocalFileSystem()
+    errors, counts = [], []
+
+    def probe(worker: int) -> None:
+        try:
+            for k in range(300):
+                # a new mtime per call: every call misses and evicts
+                info = types.SimpleNamespace(
+                    path=p, mtime_ns=worker * 1000 + k, size=size
+                )
+                counts.append(util._file_footer(local, info)[1])
+        except (KeyError, RuntimeError) as e:  # the eviction race
+            errors.append(e)
+
+    saved = dict(util._FOOTERS)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        util._FOOTERS.update(((i,), None) for i in range(512))
+        threads = [
+            threading.Thread(target=probe, args=(w,)) for w in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert errors == []
+        assert counts == [3] * 8 * 300
+        assert len(util._FOOTERS) <= 512
+    finally:
+        sys.setswitchinterval(interval)
+        util._FOOTERS.clear()
+        util._FOOTERS.update(saved)
+
+
 def test_sessionless_footer_probe_leaves_reads_zero_job(spark, tmp_path):
     """nanos_timestamp_columns takes no session. Probing a table with
     it first, from a thread with no active Spark session, must not

@@ -18,6 +18,7 @@ import pyarrow.parquet as pq
 from etlhelper_spark.functions.util import (
     count_parquet_rows,
     list_fileinfos,
+    parquet_partition_counts,
     parquet_schema_names,
     read_sidecar_table,
 )
@@ -26,27 +27,48 @@ from etlhelper_spark.state.store import newest_epochs, scan_versions
 
 
 def _mk_index(tmp_path) -> str:
+    """A list_id-partitioned table beside every entry Spark's read
+    skips: the ``_pivots`` sidecar, ``_SUCCESS``, a ``.crc``,
+    ``_temporary/`` and ``.staging/`` dirs holding parquet files, and
+    a data file outside any ``list_id=`` dir."""
     d = str(tmp_path / "idx")
-    os.makedirs(os.path.join(d, "_pivots"))
-    pq.write_table(
+
+    def put(rel: str, table) -> None:
+        os.makedirs(os.path.dirname(os.path.join(d, rel)), exist_ok=True)
+        pq.write_table(table, os.path.join(d, rel))
+
+    put(
+        "_pivots/part-0.parquet",
         pa.table({"list_id": [1, 2], "pivot": [[1.0, 2.0], [3.0, 4.0]]}),
-        os.path.join(d, "_pivots", "part-0.parquet"),
     )
-    os.makedirs(os.path.join(d, "list_id=1"))
-    pq.write_table(
+    put(
+        "list_id=1/part-0.parquet",
         pa.table({"vec_id": [1, 2, 3], "codes": [[1], [2], [3]]}),
-        os.path.join(d, "list_id=1", "part-0.parquet"),
     )
+    put("list_id=2/part-0.parquet", pa.table({"vec_id": [4], "codes": [[4]]}))
+    hidden = pa.table({"vec_id": [9, 9], "codes": [[9], [9]]})
+    put("_temporary/0/list_id=1/part-9.parquet", hidden)
+    put(".staging/list_id=2/part-9.parquet", hidden)
+    put("part-9.parquet", pa.table({"vec_id": [7, 7, 7], "codes": [[7]] * 3}))
+    pathlib.Path(d, "_SUCCESS").touch()
+    pathlib.Path(d, "list_id=1", ".part-0.parquet.crc").write_bytes(b"x")
     return d
 
 
-def test_sidecar_and_counts_over_file_uri(tmp_path):
+def test_sidecar_and_counts_over_file_uri(spark, tmp_path):
     d = _mk_index(tmp_path)
     uri = "file://" + d
+    bare = spark.read.parquet(d)
+    want_counts = {
+        r["list_id"]: r["count"]
+        for r in bare.groupBy("list_id").count().collect()
+    }
+    assert bare.count() == 4 and want_counts == {1: 3, 2: 1}
     for p in (d, uri):
         t = read_sidecar_table(p + "/_pivots")
         assert t is not None and t.num_rows == 2
-        assert count_parquet_rows(p) == 3  # _pivots invisible
+        assert count_parquet_rows(p) == bare.count()
+        assert parquet_partition_counts(p, "list_id") == want_counts
         assert parquet_schema_names(p) == ["vec_id", "codes"]
     # missing directories behave like empty globs, not errors
     assert read_sidecar_table(uri + "/nope") is None
