@@ -2,11 +2,13 @@
 
 This module owns every driver-side parquet metadata read. One listing,
 ``_data_files``, applies Spark's visibility rule and records each
-file's partition values; one footer read, ``_file_footer``, memoized
-per file identity ``(filesystem type, path, mtime_ns, size)``, gives
-any data file's arrow schema and row count. The table-level schema
-readers take the first data file's footer through it, and the
-row-count readers sum it over the listing.
+file's partition values; ``parquet_scan_files`` is its view as Spark's
+scan reads it (a partitioned table's files outside every ``key=value``
+dir dropped). One footer read, ``_file_footer``, memoized per file
+identity ``(filesystem type, path, mtime_ns, size)``, gives any data
+file's arrow schema and row count. The table-level schema readers take
+the first data file's footer through it, and the row-count readers sum
+it over the scan view.
 """
 
 from __future__ import annotations
@@ -748,11 +750,25 @@ def load_pivot_rows(path_dir: str) -> list[tuple[int, list[float]]]:
 
 
 def parquet_data_files(path: str):
-    """``(fs, [FileInfo…])`` of the parquet data files Spark reads for
-    *path*, in listing order (see :func:`_data_files`). Paths may be
-    local or any pyarrow.fs URI."""
+    """``(fs, [FileInfo…])`` of the parquet data files Spark's schema
+    inference reads for *path*, in listing order (see
+    :func:`_data_files`); :func:`parquet_scan_files` is the view of its
+    scan. Paths may be local or any pyarrow.fs URI."""
     fs, files = _data_files(path)
     return fs, [i for i, _parts in files]
+
+
+def parquet_scan_files(path: str):
+    """``(fs, [(FileInfo, partition values)…])`` of the parquet data
+    files Spark's scan reads for *path*: :func:`_data_files`, except
+    that once any file sits under a ``key=value`` dir the table is
+    partitioned, and the scan skips the files outside every such dir
+    (schema inference does not). Every driver-side row count and table
+    size is taken over this view."""
+    fs, files = _data_files(path)
+    if any(parts for _i, parts in files):
+        files = [(i, parts) for i, parts in files if parts]
+    return fs, files
 
 
 def _data_files(path: str):
@@ -941,16 +957,11 @@ def read_parquet_state(spark, *paths: str):
 
 def parquet_file_rows(path: str) -> list[tuple[dict[str, str], int]]:
     """``[(partition values, row count)…]``, one per data file of
-    *path* that Spark's scan reads (:func:`_data_files`), row counts
-    from the memoized file footers (:func:`_file_footer`) — the kernel
-    of every driver-side row count. Once any file sits under a
-    ``key=value`` dir the table is partitioned, and Spark's scan skips
-    the files outside every such dir (its schema inference does not).
-    Callers run it between completed writes, so the footers are the
-    table."""
-    fs, files = _data_files(path)
-    if any(parts for _i, parts in files):
-        files = [(i, parts) for i, parts in files if parts]
+    *path* that Spark's scan reads (:func:`parquet_scan_files`), row
+    counts from the memoized file footers (:func:`_file_footer`) — the
+    kernel of every driver-side row count. Callers run it between
+    completed writes, so the footers are the table."""
+    fs, files = parquet_scan_files(path)
     return [(parts, _file_footer(fs, i)[1]) for i, parts in files]
 
 

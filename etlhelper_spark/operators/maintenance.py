@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..abort import raise_for_abort
 from ..exceptions import ETLHelperAtomicSwapError
-from ..functions.util import count_parquet_rows, parquet_data_files, parquet_fs
+from ..functions.util import count_parquet_rows, parquet_fs, parquet_scan_files
 from ..state.store import remove
 
 __all__ = [
@@ -93,9 +93,9 @@ def replace_table(df: DataFrame, target_path: str, op: str) -> int:
 
 
 def _spark_visible(path: str) -> tuple[int, int]:
-    """(data files, bytes) of the table as Spark reads it."""
-    _fs, infos = parquet_data_files(path)
-    return len(infos), sum(i.size for i in infos)
+    """(data files, bytes) of the table as Spark's scan reads it."""
+    _fs, files = parquet_scan_files(path)
+    return len(files), sum(i.size for i, _parts in files)
 
 
 def compact_parquet_table(
@@ -113,9 +113,11 @@ def compact_parquet_table(
     ``sort_within_by`` sorts rows inside each output file (no extra
     shuffle) so per-file min/max stats tighten for single-column
     predicates.  Returns {files_before, files_after, bytes, rows}; file
-    and byte counts cover only the data files Spark reads (never
-    ``_``/``.`` entries such as a stray ``_temporary``). The new layout
-    is staged in a sibling directory of the table (see
+    and byte counts cover only the data files Spark's scan reads
+    (never ``_``/``.`` entries such as a stray ``_temporary``, nor a
+    file outside every ``key=value`` dir of a partitioned table; see
+    :func:`~etlhelper_spark.functions.util.parquet_scan_files`). The
+    new layout is staged in a sibling directory of the table (see
     :func:`replace_table`).
     """
     from ..sources import read_parquet_table

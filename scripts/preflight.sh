@@ -41,9 +41,11 @@ fi
 
 # A library edit runs the test files that import its module: by dotted
 # path (functions/dedup.py runs every test naming
-# ``etlhelper_spark.functions.dedup``), or by package when the
-# package's __init__ re-exports it (sources/parquet.py also runs the
-# tests importing ``etlhelper_spark.sources``). A module no test
+# ``etlhelper_spark.functions.dedup``), by name from its package
+# (state/store.py runs the tests doing ``from etlhelper_spark.state
+# import store``), or by package when the package's __init__
+# re-exports it (sources/parquet.py also runs the tests importing
+# ``etlhelper_spark.sources``). A module no test
 # imports runs ``tests/test_<name>*.py``, or its parent dir's
 # ``tests/test_<dir>*.py``: plans/queries.py runs test_plans.py. The
 # modules that import a touched module (one level: ``from .<name>
@@ -57,8 +59,10 @@ tests_of() {
     dir=$(dirname "$f")
     mod=$(echo "${f%.py}" | tr / .)
     pkg=${mod%.*}
-    pkg="from ${pkg//./\\.} import|import ${pkg//./\\.}([^.[:alnum:]_]|\$)"
+    pkg=${pkg//./\\.}
     re="${mod//./\\.}([^[:alnum:]_]|\$)"
+    re="$re|from $pkg import ([^#]*[ ,(])?$name([^[:alnum:]_]|\$)"
+    pkg="from $pkg import|import $pkg([^.[:alnum:]_]|\$)"
     if [ "$name" = __init__ ]; then
         re=$pkg
     elif grep -qE "^[[:space:]]*from \.${name} import" "$dir/__init__.py" 2>/dev/null; then

@@ -144,6 +144,23 @@ def test_compact_counts_only_spark_visible_files(spark, tmp_path):
     assert stats["rows"] == 100 == spark.read.parquet(path).count()
 
 
+def test_compact_sizes_a_partitioned_table_as_spark_scans_it(spark, tmp_path):
+    """In a partitioned table, a data file outside every ``key=value``
+    dir is skipped by Spark's scan, so it must not count toward
+    files_before or the bytes that size the rewrite."""
+    path = str(tmp_path / "t")
+    df = spark.range(100).withColumn("k", F.col("id") % 2)
+    df.coalesce(1).write.partitionBy("k").parquet(path)
+    visible = _data_files(path)
+    size = sum(os.path.getsize(f) for f in visible)
+    shutil.copy(visible[0], os.path.join(path, "part-loose.parquet"))
+    assert spark.read.parquet(path).count() == 100
+    stats = compact_parquet_table(spark, path, target_file_bytes=1 << 30)
+    assert stats["files_before"] == len(visible) == 2
+    assert stats["bytes"] == size
+    assert stats["rows"] == 100
+
+
 def test_compact_over_file_uri(spark, small_files_table):
     """Compaction over a ``file://`` table: the swap moves through
     pyarrow.fs and leaves no staging or backup directory behind."""
