@@ -128,37 +128,24 @@ def test_compact_swap_preserves_data_on_failure(spark, tmp_path, monkeypatch):
 
 
 def test_compact_counts_only_spark_visible_files(spark, tmp_path):
-    """A leftover ``_temporary`` part file is invisible to Spark, so it
-    must not count toward files_before or the bytes that size the
-    rewrite."""
-    path = str(tmp_path / "t")
-    spark.range(100).coalesce(1).write.parquet(path)
-    (visible,) = _data_files(path)
-    size = os.path.getsize(visible)
-    stray = os.path.join(path, "_temporary", "0")
-    os.makedirs(stray)
-    shutil.copy(visible, os.path.join(stray, os.path.basename(visible)))
-    stats = compact_parquet_table(spark, path, target_file_bytes=1 << 30)
-    assert stats["files_before"] == 1
-    assert stats["bytes"] == size
-    assert stats["rows"] == 100 == spark.read.parquet(path).count()
-
-
-def test_compact_sizes_a_partitioned_table_as_spark_scans_it(spark, tmp_path):
-    """In a partitioned table, a data file outside every ``key=value``
-    dir is skipped by Spark's scan, so it must not count toward
-    files_before or the bytes that size the rewrite."""
+    """Spark's scan reads neither a leftover ``_temporary`` part file
+    nor, in a partitioned table, a data file outside every
+    ``key=value`` dir, so neither may count toward files_before or the
+    bytes that size the rewrite."""
     path = str(tmp_path / "t")
     df = spark.range(100).withColumn("k", F.col("id") % 2)
     df.coalesce(1).write.partitionBy("k").parquet(path)
     visible = _data_files(path)
     size = sum(os.path.getsize(f) for f in visible)
+    stray = os.path.join(path, "_temporary", "0", "k=0")
+    os.makedirs(stray)
+    shutil.copy(visible[0], os.path.join(stray, os.path.basename(visible[0])))
     shutil.copy(visible[0], os.path.join(path, "part-loose.parquet"))
     assert spark.read.parquet(path).count() == 100
     stats = compact_parquet_table(spark, path, target_file_bytes=1 << 30)
     assert stats["files_before"] == len(visible) == 2
     assert stats["bytes"] == size
-    assert stats["rows"] == 100
+    assert stats["rows"] == 100 == spark.read.parquet(path).count()
 
 
 def test_compact_over_file_uri(spark, small_files_table):
